@@ -16,7 +16,8 @@ object Fs {
     * per-file failure and the walk itself swallowed — callers use this
     * in finally blocks where a leaked temp dir is preferable to a
     * masked primary exception. */
-  def deleteTree(root: Path): Unit =
+  def deleteTree(root: Path): Unit = {
+    scratchDirs.remove(root)
     try {
       import scala.jdk.CollectionConverters._
       if (Files.exists(root)) {
@@ -25,6 +26,7 @@ object Fs {
           try { Files.deleteIfExists(p); () } catch { case _: Exception => () })
       }
     } catch { case _: Exception => () }
+  }
 
   def deleteTree(root: String): Unit = deleteTree(Paths.get(root))
 
@@ -39,12 +41,28 @@ object Fs {
     * scratch root instead; fall back to the JVM default when the rig
     * has no tmpfs. Production translation: all engine scratch belongs
     * on the fast local volume (`spark.local.dir`'s NVMe), never the
-    * root disk. */
-  def scratchTempDir(prefix: String): Path =
-    Sessions.scratchDir match {
+    * root disk. Every dir made here is deleted at JVM exit unless
+    * [[deleteTree]] removed it first. */
+  def scratchTempDir(prefix: String): Path = {
+    val p = Sessions.scratchDir match {
       case Some(d) => Files.createTempDirectory(Paths.get(d), prefix)
       case None => Files.createTempDirectory(prefix)
     }
+    scratchDirs.add(p)
+    p
+  }
+
+  // File.deleteOnExit cannot remove a NON-EMPTY directory, so relying
+  // on it leaked every still-populated scratch dir (final sink dirs,
+  // staged symlink dirs) per JVM — observed as >1000 stale graft-*
+  // entries accumulating across a day of runs. One recursive-delete
+  // shutdown hook over the still-live set instead.
+  private val scratchDirs =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
+  locally {
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      scratchDirs.forEach(p => deleteTree(p))))
+  }
 
   /** Scratch temp FILE on the pinned RAM-backed scratch root — same
     * rationale as [[scratchTempDir]]. */

@@ -105,60 +105,6 @@ object ScaleGen {
     nDocs
   }
 
-  /** SKEWED documents variant for the skew rehearsal: same rows as
-    * `src`'s documents, but doc_ids REMAPPED so ~`share` of them are
-    * ≡ 0 (mod 35) — the fixture synthesis derives sender as u{id%7}
-    * and mailbox user as user{id%5} (FixtureCorpus), so those rows all
-    * land on sender u0 AND mailbox user0: one hot sender/user owning a
-    * double-digit share of the corpus, the Enron-like power-law head
-    * (ingest_enron.py:126 from-field). Ids stay unique (hot ids walk
-    * 0,35,70,…; the rest walk the non-zero residues), every other
-    * column is untouched, and since every email-surface oracle derives
-    * from doc_id arithmetic the skewed dir remains a fully valid
-    * fixture corpus. */
-  def generateSkewed(spark: SparkSession, src: String, out: String,
-      share: Double = 0.3): Unit = {
-    val outDir = java.nio.file.Paths.get(out)
-    java.nio.file.Files.createDirectories(outDir)
-    import org.apache.spark.sql.expressions.Window
-    val docs = spark.read.parquet(s"$src/documents.parquet")
-      .withColumn("rank",
-        row_number().over(Window.orderBy("doc_id")) - 1L)
-    val n = docs.count()
-    val nHot = math.round(n * share)
-    // hot rows: ids 0,35,70,… ; cold rows: 35*q + (1 + r%6)·5·? — use
-    // residues 1..34 excluding multiples of 35: id = 35*(k div 34) +
-    // 1 + (k mod 34) never ≡ 0 (mod 35) and never collides with hot
-    val remapped = docs.withColumn("doc_id",
-      when(col("rank") < nHot, col("rank") * 35L)
-        .otherwise {
-          val k = col("rank") - nHot
-          (k / 34L).cast("long") * 35L + (k % 34L) + 1L
-        })
-      .drop("rank")
-    writeSingleFile(remapped, outDir, "documents")
-    println(s"[scalegen] wrote skewed docs to $out: n=$n hot=$nHot")
-  }
-
-  /** Skewed-EVENTS variant: remap user_id so ONE user owns ~`share`
-    * of all events (the power-law head of any real activity stream) —
-    * a deterministic hash gate on event_id; ts/event_id/type/value/
-    * props stay byte-identical, so a timing delta on the per-user
-    * window tiers (e82/e93/e113) is attributable to the key
-    * distribution alone. */
-  def generateSkewedEvents(spark: SparkSession, src: String, out: String,
-      share: Double = 0.3): Unit = {
-    val outDir = java.nio.file.Paths.get(out)
-    java.nio.file.Files.createDirectories(outDir)
-    val ev = spark.read.parquet(s"$src/events.parquet")
-    val pct = math.round(share * 100).toInt
-    val skewed = ev.withColumn("user_id",
-      when(pmod(xxhash64(col("event_id")), lit(100)) < pct, lit(0L))
-        .otherwise(col("user_id")))
-    writeSingleFile(skewed, outDir, "events")
-    println(s"[scalegen] wrote skewed events to $out (share=$share)")
-  }
-
   def generate(spark: SparkSession, src: String, out: String,
       factor: Int): Unit = {
     val outDir = java.nio.file.Paths.get(out)

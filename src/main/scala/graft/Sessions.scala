@@ -20,7 +20,8 @@ object Sessions {
     * scratch with RAM (production: NVMe via `spark.local.dir`), so pin
     * scratch to the still-tmpfs `/dev/shm` when present — restoring the
     * environment all recorded numbers share — and fall back silently to
-    * the JVM default otherwise. */
+    * the JVM default otherwise (one stderr line says so when creating
+    * the dir fails). */
   private[graft] lazy val scratchDir: Option[String] = {
     val base = java.nio.file.Paths.get("/dev/shm")
     try {
@@ -38,7 +39,12 @@ object Sessions {
         System.setProperty("java.io.tmpdir", dir.toString)
         Some(dir.toString)
       } else None
-    } catch { case _: Throwable => None }
+    } catch {
+      case e @ (_: java.io.IOException | _: SecurityException) =>
+        System.err.println(s"[graft] scratch root $base unusable ($e); " +
+          "using the JVM temp dir")
+        None
+    }
   }
 
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),

@@ -1764,21 +1764,10 @@ object DedupOps {
   def lshBandingEval(s: SparkSession, d: String): DataFrame = {
     val (sigs, _, _) = lshPipeline(s, d,
       shardDict = estShingles(s, d) > dictBroadcastCeiling)
-    // volume-derived shuffle width for the whole eval (§2.1, round-17):
-    // every stage after the cached signature frame (bucket self-join,
-    // candidate distinct, truth join, final aggregate) is
-    // fixture-tiny — 15 bucket rows per doc — but ran at session
-    // width, paying 32-way scheduling per stage (the one >2× c8<c32
-    // entry in PERF_r16's scaling block). The count is the cached
-    // frame's, effectively free; at real scale the formula returns
-    // the session width unchanged. Result is materialized inside
-    // (localCheckpoint) per the withVolumeShuffle contract; the
-    // trailing orderBy on 4 rows runs under the restored conf.
-    val nBucketRows =
-      sigs.count() * bandingSettings.map(_._1).sum
-    graft.operators.Salting.withVolumeShuffle(s, nBucketRows) {
-      lshBandingEvalBody(s, d, sigs).localCheckpoint(true)
-    }.orderBy("rows_per_band")
+    // every stage after the cached signature frame is fixture-tiny
+    // (15 bucket rows per doc); AQE partition coalescing narrows those
+    // shuffles, so the plan runs as built, under the session's conf
+    lshBandingEvalBody(s, d, sigs).orderBy("rows_per_band")
   }
 
   private def lshBandingEvalBody(s: SparkSession, d: String,

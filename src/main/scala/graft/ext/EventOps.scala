@@ -639,13 +639,11 @@ object EventOps {
     * Spark 4 plans `row_number() ≤ k` with `WindowGroupLimit …
     * Partial` BELOW the exchange, so every map task forwards at most
     * k rows per key and a hot key cannot flood its reducer — the same
-    * native skew immunity partial aggregation gives aggregates. The
-    * explicit salt decomposition
-    * ([[graft.operators.Salting.saltedTopK]]) was measured 1.97×
-    * SLOWER on a 5M-row 60%-hot corpus (SKEW_DETAIL
-    * topk_window_plain_vs_salted) and is kept only as the recorded
-    * rejected alternative; PlanAudit pins the Partial group-limit in
-    * this entry's executed plan. The ordering (value desc, event_id
+    * native skew immunity partial aggregation gives aggregates. An
+    * explicit salt decomposition was measured 1.97× SLOWER on a
+    * 5M-row 60%-hot corpus and removed (SCALE.md, SKEW_DETAIL.json
+    * topk_window_plain_vs_salted); PlanAudit pins the Partial
+    * group-limit in this entry's executed plan. The ordering (value desc, event_id
     * asc) is total, so the oracle's single-sort semantics hash-match
     * exactly. */
   def topkPerKeyEvents(s: SparkSession, d: String): DataFrame = {

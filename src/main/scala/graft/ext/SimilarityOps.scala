@@ -527,19 +527,19 @@ object SimilarityOps {
     // identity hash can alias after the session is GC'd
     kmCache.computeIfAbsent(
       s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d", _ => {
-      val e = quantized(s, d).cache()
-      // the training loop shuffles ~corpus×K rows many times; size the
-      // stages to that volume (full width at real scale, narrow on the
-      // fixtures) and materialize the cached model inside the scope
-      graft.operators.Salting.withVolumeShuffle(s, e.count() * kmK) {
-        var cent = e.filter(col("vec_id") < kmK)
-          .select(col("vec_id").as("cid"), col("qv").as("cv"))
-        for (_ <- 1 to kmIters) cent = kmMeans(kmAssign(e, cent))
-        val model = (cent.cache(), kmAssign(e, cent).cache())
-        model._1.count(); model._2.count()
-        e.unpersist()
-        model
-      }
+      // hash-partitioned by vec_id at the scan's own width: every
+      // kmAssign over it (broadcast cross join + per-vector argmin)
+      // then runs with no exchange, leaving the loop only the tiny
+      // centroid-mean shuffles
+      val q = quantized(s, d)
+      val e = q.repartition(q.rdd.getNumPartitions, col("vec_id")).cache()
+      var cent = e.filter(col("vec_id") < kmK)
+        .select(col("vec_id").as("cid"), col("qv").as("cv"))
+      for (_ <- 1 to kmIters) cent = kmMeans(kmAssign(e, cent))
+      val model = (cent.cache(), kmAssign(e, cent).cache())
+      model._1.count(); model._2.count()
+      e.unpersist()
+      model
     })
 
   /** Final (post-iteration) assignment of every vector. */

@@ -24,11 +24,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 case class DotProductD(left: Expression, right: Expression)
     extends BinaryExpression with ImplicitCastInputTypes {
 
-  // declared input types: the SQL surface (dot_d registered by
-  // GraftExtensions) would otherwise hand ArrayData of the wrong
-  // element width to getDouble, silently reinterpreting the buffer;
-  // with these, analysis inserts casts (array<int> → array<double>)
-  // or rejects the call outright
+  // declared input types: a caller passing an int array would
+  // otherwise hand ArrayData of the wrong element width to getDouble,
+  // silently reinterpreting the buffer; with these, analysis inserts
+  // casts (array<int> → array<double>) or rejects the call outright
   override def inputTypes: Seq[AbstractType] =
     Seq(ArrayType(DoubleType), ArrayType(DoubleType))
   override def dataType: DataType = DoubleType

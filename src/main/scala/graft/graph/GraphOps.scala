@@ -239,22 +239,6 @@ object GraphOps {
         .select("src", "dst", "deg")
     }
 
-  /** g94: PageRank over the co-purchase graph in FIXED-POINT integer
-    * arithmetic — contributions use integer division by out-degree and
-    * the damping step is (85·x) div 100, so every iteration is exact
-    * BIGINT math and the ten-step loop is bit-reproducible in the
-    * DuckDB oracle (measured: double PageRank lands values exactly on
-    * round() tie boundaries, so no float formulation can hash-check).
-    * Quantization error ≤ 1e-6·deg per step — far below rank gaps.
-    *
-    * DataFrame iteration with an eager localCheckpoint per step: the
-    * checkpoint breaks lineage so the plan stays constant-size across
-    * iterations (and avoids self-join ambiguity) — the standard shape
-    * for iterative DataFrame algorithms at scale. GraphX double-typed
-    * PageRank remains available as [[EmailGraph.pageRank]]. */
-  private def withVolumeShuffle[T](s: SparkSession, rows: Long)(body: => T): T =
-    graft.operators.Salting.withVolumeShuffle(s, rows)(body)
-
   /** The fixed-point PR iteration loop shared by g94/g97/g105/g106:
     * from a (id, rank) frame, `iters` exact-integer steps over the
     * degree-joined edge frame `ed`, per-vertex teleport mass given by
@@ -298,20 +282,26 @@ object GraphOps {
       id: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     lit(prScale * 15 / 100)
 
-  def pagerankFixed(s: SparkSession, d: String): DataFrame = {
+  /** g94: PageRank over the co-purchase graph in FIXED-POINT integer
+    * arithmetic — contributions use integer division by out-degree and
+    * the damping step is (85·x) div 100, so every iteration is exact
+    * BIGINT math and the ten-step loop is bit-reproducible in the
+    * DuckDB oracle (measured: double PageRank lands values exactly on
+    * round() tie boundaries, so no float formulation can hash-check).
+    * Quantization error ≤ 1e-6·deg per step — far below rank gaps.
+    *
+    * DataFrame iteration with an eager localCheckpoint per step: the
+    * checkpoint breaks lineage so the plan stays constant-size across
+    * iterations (and avoids self-join ambiguity) — the standard shape
+    * for iterative DataFrame algorithms at scale. GraphX double-typed
+    * PageRank remains available as [[EmailGraph.pageRank]]. */
+  def pagerankFixed(s: SparkSession, d: String): DataFrame =
     // registry-cached shared operands; the rename projection on top is
     // free — a second .cache() here held a duplicate copy
-    val ed = prEdgeDeg(s, d)
-    withVolumeShuffle(s, ed.count()) {
-      val verts = prVerts(s, d)
-      prSteps(verts.withColumn("rank", lit(prScale)).localCheckpoint(true),
-          ed, prIters, uniformTeleport)
-        .select(col("id").as("part_id"), col("rank").as("rank_fp"))
-        .orderBy("part_id")
-    }
-  }
-  // (the returned plan reads only the final checkpointed RDD, so the
-  // restored shuffle setting applies just to the trivial orderBy)
+    prSteps(prVerts(s, d).withColumn("rank", lit(prScale))
+        .localCheckpoint(true), prEdgeDeg(s, d), prIters, uniformTeleport)
+      .select(col("id").as("part_id"), col("rank").as("rank_fp"))
+      .orderBy("part_id")
 
   /** g97: PERSONALIZED PageRank — the teleport mass lands only on a
     * seed set (part_id % 50 == 0) instead of uniformly, ranking every
@@ -320,18 +310,14 @@ object GraphOps {
     * arithmetic and checkpointed DataFrame loop as g94, so the whole
     * 10-iteration personalized walk is oracle-checked bit-for-bit. */
   def personalizedPagerankFixed(s: SparkSession, d: String): DataFrame = {
-    val ed = prEdgeDeg(s, d)
     def teleport(id: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       when(id % 50 === 0, lit(prScale * 15 / 100)).otherwise(lit(0L))
-    withVolumeShuffle(s, ed.count()) {
-      val verts = prVerts(s, d)
-      prSteps(verts.withColumn("rank",
-            when(col("id") % 50 === 0, lit(prScale)).otherwise(lit(0L)))
-          .localCheckpoint(true),
-          ed, prIters, teleport)
-        .select(col("id").as("part_id"), col("rank").as("pprank_fp"))
-        .orderBy("part_id")
-    }
+    prSteps(prVerts(s, d).withColumn("rank",
+          when(col("id") % 50 === 0, lit(prScale)).otherwise(lit(0L)))
+        .localCheckpoint(true),
+        prEdgeDeg(s, d), prIters, teleport)
+      .select(col("id").as("part_id"), col("rank").as("pprank_fp"))
+      .orderBy("part_id")
   }
 
   val personalizedPagerankSql: String = {
@@ -419,14 +405,10 @@ object GraphOps {
     * maintained, never recomputed; per-batch cost is warmIters ×
     * (one edge join + one label join), the same plan shape g94's
     * exponent already measured at 0.10–0.16/decade. */
-  def warmStartPagerank(s: SparkSession, d: String): DataFrame = {
-    val ed = prEdgeDeg(s, d)
-    withVolumeShuffle(s, ed.count()) {
-      warmRanks(s, d, ed)
-        .select(col("id").as("part_id"), col("rank").as("rank_fp"))
-        .orderBy("part_id")
-    }
-  }
+  def warmStartPagerank(s: SparkSession, d: String): DataFrame =
+    warmRanks(s, d, prEdgeDeg(s, d))
+      .select(col("id").as("part_id"), col("rank").as("rank_fp"))
+      .orderBy("part_id")
 
   private def warmRanks(s: SparkSession, d: String,
       ed: DataFrame): DataFrame = {
@@ -451,27 +433,26 @@ object GraphOps {
     * numbers, and a regression ships loudly). */
   def warmStartGain(s: SparkSession, d: String): DataFrame = {
     val ed = prEdgeDeg(s, d)
-    withVolumeShuffle(s, ed.count()) {
-      val verts = prVerts(s, d)
-      val uni = verts.withColumn("rank", lit(prScale)).localCheckpoint(true)
-      // cold (warmIters from uniform) IS the reference chain's
-      // warmIters-th iterate — tap it instead of paying those
-      // iterations twice (round-16: 4 of 23 iterations removed,
-      // identical integer arithmetic either way)
-      val (ref0, coldTap) =
-        prStepsTap(uni, ed, refIters, uniformTeleport, warmIters)
-      val ref = ref0.toDF("id", "ref")
-      val cold = coldTap.get.toDF("id", "cold")
-      val warm = warmRanks(s, d, ed).toDF("id", "warm")
-      val a = ref.join(cold, "id").join(warm, "id")
-        .agg(sum(abs(col("cold") - col("ref"))).as("cold_l1"),
-          sum(abs(col("warm") - col("ref"))).as("warm_l1"))
-        .localCheckpoint(true)
-      a.select(lit("cold").as("strategy"), col("cold_l1").as("l1_u"))
-        .unionByName(
-          a.select(lit("warm").as("strategy"), col("warm_l1").as("l1_u")))
-        .orderBy("strategy")
-    }
+    val uni = prVerts(s, d).withColumn("rank", lit(prScale))
+      .localCheckpoint(true)
+    // cold (warmIters from uniform) IS the reference chain's
+    // warmIters-th iterate — tap it instead of paying those
+    // iterations twice (round-16: 4 of 23 iterations removed,
+    // identical integer arithmetic either way)
+    val (ref0, coldTap) =
+      prStepsTap(uni, ed, refIters, uniformTeleport, warmIters)
+    val ref = ref0.toDF("id", "ref")
+    val cold = coldTap.get.toDF("id", "cold")
+    val warm = warmRanks(s, d, ed).toDF("id", "warm")
+    // one checkpointed row feeds both output rows
+    val a = ref.join(cold, "id").join(warm, "id")
+      .agg(sum(abs(col("cold") - col("ref"))).as("cold_l1"),
+        sum(abs(col("warm") - col("ref"))).as("warm_l1"))
+      .localCheckpoint(true)
+    a.select(lit("cold").as("strategy"), col("cold_l1").as("l1_u"))
+      .unionByName(
+        a.select(lit("warm").as("strategy"), col("warm_l1").as("l1_u")))
+      .orderBy("strategy")
   }
 
   /** Generated iteration CTEs for the oracle replays (the

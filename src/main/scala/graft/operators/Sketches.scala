@@ -45,23 +45,15 @@ object Sketches {
 
   /** The CM counter table of a token frame (col `tok`) — the mergeable
     * sketch state: merging two corpora = cell-wise sum of their tables
-    * (pinned by Round16Spec). */
+    * (pinned by Round16Spec). Its use as a hot-key skew guard was
+    * measured and removed; SCALE.md and SKEW_DETAIL.json keep the
+    * record. */
   private[graft] def cmCellsOf(toks: DataFrame): DataFrame = toks
     .select(explode(array((0 until cmDepth).map(j =>
       struct(lit(j).as("j"), cmPos(j, col("tok"), cmWidth).as("c"))): _*))
       .as("s"))
     .select(col("s.j").as("j"), col("s.c").as("c"))
     .groupBy("j", "c").agg(count(lit(1)).as("v"))
-
-  /** The (tok, j, c) probe cells of a candidate-key frame (col `tok`)
-    * — join against [[cmCellsOf]] and take min(v) per tok for the CM
-    * estimate. Shared by k80's exact-top-10 scoring and the
-    * Salting.cmHotKeys skew guard. */
-  private[graft] def cmProbeOf(cand: DataFrame): DataFrame = cand
-    .select(col("tok"), explode(array((0 until cmDepth).map(j =>
-      struct(lit(j).as("j"), cmPos(j, col("tok"), cmWidth).as("c"))): _*))
-      .as("s"))
-    .select(col("tok"), col("s.j").as("j"), col("s.c").as("c"))
 
   /** k80: count-min heavy hitters over the document token stream.
     *

@@ -28,37 +28,13 @@ object StreamingOps {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** Streaming scratch root: tmpfs when available. Checkpoint commits
-    * fsync on every micro-batch (offset log, commit log, one state
-    * delta per store partition) — on a disk-backed /tmp those fsyncs
-    * are the dominant fixed cost of a short drain, on tmpfs they are
-    * memory writes. Everything placed here is small (commit logs,
-    * window/session-bounded sink files) and deleted per drain or at
-    * JVM exit. */
-  private val scratchRoot: java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (Files.isDirectory(shm) && Files.isWritable(shm)) shm
-    else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-  }
-
-  // File.deleteOnExit cannot remove a NON-EMPTY directory, so relying
-  // on it leaked every still-populated scratch dir (final sink dirs,
-  // staged symlink dirs) per JVM — observed as >1000 stale graft-*
-  // entries accumulating under /tmp and /dev/shm across a day of runs.
-  // One recursive-delete shutdown hook over the tracked set instead.
-  private val scratchDirs =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[java.nio.file.Path, java.lang.Boolean]())
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      scratchDirs.forEach(p => deleteRecursively(p))))
-  }
-
-  private def scratchTempDir(prefix: String): java.nio.file.Path = {
-    val p = Files.createTempDirectory(scratchRoot, prefix)
-    scratchDirs.add(p)
-    p
-  }
+  /** Streaming scratch (checkpoints, sink dirs, staged sources) goes
+    * through the shared scratch policy: tmpfs when available, since
+    * checkpoint commits fsync on every micro-batch (offset log, commit
+    * log, one state delta per store partition), and a recursive delete
+    * at JVM exit for whatever a drain does not delete itself. */
+  private def scratchTempDir(prefix: String): java.nio.file.Path =
+    graft.Fs.scratchTempDir(prefix)
 
   /** Stage a single parquet file behind a temp directory — the
     * file-stream source requires a DIRECTORY, not a file. Staging dirs
@@ -103,18 +79,38 @@ object StreamingOps {
   private def deleteRecursively(root: java.nio.file.Path): Unit =
     graft.Fs.deleteTree(root)
 
-  /** Drain a streaming frame into a named memory sink, with the state
-    * partitioning sized to `nIn` input rows: streaming state-store
-    * partitioning is fixed by shuffle.partitions at the first batch,
-    * and fixture-scale runs would otherwise commit 32 near-empty
-    * state stores per micro-batch (a stream-stream join maintains four
-    * per side per partition). At real scale the volume formula returns
-    * the session width unchanged. (Profiled: raising the drain's
-    * partition count 4× does not move addBatch — the per-drain cost is
-    * fixed streaming machinery, not aggregation parallelism.) */
+  private val drainWidthLock = new Object
+
+  /** Run a drain with the state partitioning sized to `nIn` input
+    * rows (~50k rows per partition, floored at 1, capped at the session
+    * setting), restoring the session value after. Streaming state-store
+    * partitioning is fixed by shuffle.partitions at the first batch and
+    * AQE does not coalesce inside micro-batches, so fixture-scale runs
+    * would otherwise commit 32 near-empty state stores per micro-batch
+    * (a stream-stream join maintains four per side per partition). At
+    * real scale the formula returns the session width unchanged.
+    * (Profiled: raising the drain's partition count 4× does not move
+    * addBatch — the per-drain cost is fixed streaming machinery, not
+    * aggregation parallelism.)
+    *
+    * The setting is session-global, and an overlapping call from
+    * another thread would read the narrowed value as its "previous" and
+    * restore it for good, so the save-set-restore window is serialized.
+    * Batch paths never write this setting; they rely on AQE. */
+  private[graft] def withDrainWidth[T](spark: SparkSession, nIn: Long)
+      (body: => T): T = drainWidthLock.synchronized {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    val p = math.max(1L, math.min(prev.toLong, (nIn + 49999) / 50000))
+    spark.conf.set(key, p.toString)
+    try body finally spark.conf.set(key, prev)
+  }
+
+  /** Drain a streaming frame into a named memory sink, state
+    * partitioning sized by [[withDrainWidth]]. */
   private def drainToMemorySink(spark: SparkSession, sink: String,
       mode: String, nIn: Long)(buildQuery: => DataFrame): Unit =
-    graft.operators.Salting.withVolumeShuffle(spark, nIn) {
+    withDrainWidth(spark, nIn) {
       val ckpt = scratchTempDir("graft-ckpt")
       val q = buildQuery.writeStream
         .outputMode(mode)
@@ -174,7 +170,7 @@ object StreamingOps {
     * the scale ceiling. Returns the committed files read back. */
   private def drainToFileSink(spark: SparkSession, key: String, nIn: Long)
       (buildQuery: => DataFrame): DataFrame =
-    graft.operators.Salting.withVolumeShuffle(spark, nIn) {
+    withDrainWidth(spark, nIn) {
       val ckpt = scratchTempDir("graft-ckpt")
       val out = scratchTempDir("graft-file-sink")
       val streamDf = buildQuery
@@ -199,7 +195,7 @@ object StreamingOps {
     * as [[drainToFileSink]]: nothing driver-resident. */
   private def drainUpdateToFiles(spark: SparkSession, key: String, nIn: Long)
       (buildQuery: => DataFrame): DataFrame =
-    graft.operators.Salting.withVolumeShuffle(spark, nIn) {
+    withDrainWidth(spark, nIn) {
       val ckpt = scratchTempDir("graft-ckpt")
       val out = scratchTempDir("graft-update-sink")
       val streamDf = buildQuery
@@ -840,7 +836,7 @@ object StreamingOps {
   private def drainFileSinkWithRestart(spark: SparkSession, key: String,
       nIn: Long, addPhase2: () => Unit)
       (buildQuery: => DataFrame): DataFrame =
-    graft.operators.Salting.withVolumeShuffle(spark, nIn) {
+    withDrainWidth(spark, nIn) {
       val ckpt = scratchTempDir("graft-ckpt")
       val out = scratchTempDir("graft-file-sink")
       val schema = buildQuery.schema
@@ -1049,7 +1045,7 @@ object StreamingOps {
         .schema(documentsSchema)
         .parquet(srcDir.toString)
         .select(explode(graft.ext.TextOps.tokens(col("text"))).as("tok")))
-    graft.operators.Salting.withVolumeShuffle(spark, nIn) {
+    withDrainWidth(spark, nIn) {
       val ckpt = scratchTempDir("graft-ckpt")
       def drainOnce(): String = {
         val sink = newSink()

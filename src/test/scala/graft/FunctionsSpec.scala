@@ -1,13 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{GraftExtensions, RollingHash64}
+import graft.functions.RollingHash64
 import graft.functions.RollingHash64.rolling_hash64
 
-/** Native Expression + SparkSessionExtensions tier. */
+/** Native Expression tier, exercised through the Column API. */
 class FunctionsSpec extends AnyFunSuite with SparkSpec {
 
   test("rolling_hash64 matches the reference on both eval paths") {
@@ -56,6 +55,18 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
     val one = spark.range(1).select(
       dot_d(typedLit(Seq(1.0, 2.0)), typedLit(Seq(3.0, 4.0)))).collect().head
     assert(one.getDouble(0) == 11.0)
+    // declared inputTypes: int-array args are implicitly CAST to the
+    // declared element widths (ArrayData.getDouble/getLong would
+    // otherwise reinterpret the narrower buffer), and non-array args
+    // are rejected at analysis
+    val ints = Seq((Array(1, 2), Array(3, 4), Array(1, 5), Array(4, 1)))
+      .toDF("a", "b", "c", "e")
+    val castVec = ints.select(dot_d(col("a"), col("b")),
+      dist_sq_l(col("c"), col("e"))).collect().head
+    assert(castVec.getDouble(0) == 11.0 && castVec.getLong(1) == 25L)
+    intercept[org.apache.spark.sql.AnalysisException] {
+      spark.range(1).select(dot_d(lit(1.0), lit(2.0))).collect()
+    }
     // the kernel stays inside whole-stage codegen (no CodegenFallback);
     // repartition first or ConvertToLocalRelation folds the projection
     // into a LocalTableScan and no stage exists to inspect
@@ -63,55 +74,5 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
     staged.collect()
     val plan = staged.queryExecution.executedPlan.toString
     assert(plan.contains("*("), s"expected codegen stage, got:\n$plan")
-  }
-
-  test("extensions register the SQL function and the optimizer rule") {
-    // force the shared SparkSpec session to materialize FIRST, then
-    // build a sibling session (same SparkContext) with extensions:
-    // getOrCreate only applies withExtensions when no default session
-    // is active, so clear and restore around it
-    val base = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      // SQL-registered native functions
-      val viaSql = s2.sql("SELECT rolling_hash64('abc') AS h")
-        .collect().head.getLong(0)
-      assert(viaSql == RollingHash64.reference("abc".getBytes("UTF-8")))
-      val vec = s2.sql(
-        """SELECT dot_d(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d,
-          |  dist_sq_l(array(1L, 5L), array(4L, 1L)) AS q""".stripMargin)
-        .collect().head
-      assert(vec.getDouble(0) == 11.0 && vec.getLong(1) == 25L)
-      // declared inputTypes: int-array args are implicitly CAST to the
-      // declared element widths (previously ArrayData.getDouble/getLong
-      // reinterpreted the narrower buffer and returned garbage), and
-      // non-array args are rejected at analysis
-      val castVec = s2.sql(
-        "SELECT dot_d(array(1, 2), array(3, 4)) AS d, " +
-          "dist_sq_l(array(1, 5), array(4, 1)) AS q")
-        .collect().head
-      assert(castVec.getDouble(0) == 11.0 && castVec.getLong(1) == 25L)
-      intercept[org.apache.spark.sql.AnalysisException] {
-        s2.sql("SELECT dot_d(1.0D, 2.0D)").collect()
-      }
-      // optimizer rule: nested array_distinct over NON-foldable input
-      // (constant folding would otherwise hide the rewrite)
-      s2.range(3).createOrReplaceTempView("ext_r")
-      val plan = s2.sql(
-        """SELECT array_distinct(array_distinct(array(id, id))) AS a
-          |FROM ext_r""".stripMargin)
-        .queryExecution.optimizedPlan
-      val n = "array_distinct".r.findAllIn(plan.toString).length
-      assert(n == 1, s"rule did not collapse nested array_distinct: $plan")
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
-    }
   }
 }

@@ -257,31 +257,6 @@ class Round17Spec extends AnyFunSuite with SparkSpec {
       "the gate is batch-vs-corpus; intra-batch dup is d65's symmetric pass")
   }
 
-  // ------------------------------------------ CM-guarded skew split
-
-  test("skew guard: cmHotKeys detects exactly the planted hot key, stays dormant below threshold, and the guarded aggregate equals the plain one") {
-    import spark.implicits._
-    // key "hot" owns 40% of 1000 rows; six cold keys own 10% each
-    val df = (1 to 1000).map(i =>
-      (if (i % 10 < 4) "hot" else s"c${i % 10}", i.toLong)).toDF("k", "v")
-    val hot = graft.operators.Salting.cmHotKeys(df, "k", sharePpm = 300000L)
-    assert(hot.collect().map(_.getString(0)).toSeq == Seq("hot"),
-      "a 40% key must be detected at a 30% threshold, and nothing else")
-    assert(graft.operators.Salting
-      .cmHotKeys(df, "k", sharePpm = 500000L).count() == 0,
-      "the guard must stay dormant when no key reaches the threshold")
-    def asMap(out: Array[org.apache.spark.sql.Row]) =
-      out.map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val plain = asMap(df.groupBy("k")
-      .agg(sum("v").as("s"), count(lit(1)).as("n")).collect())
-    val guarded = asMap(graft.operators.Salting.hotKeySaltedAggregate(
-      df, "k", hot, numSalts = 16,
-      partials = Seq(sum("v").as("__ps"), count(lit(1)).as("__pn")),
-      finals = Seq(sum("__ps").as("s"), sum("__pn").as("n"))).collect())
-    assert(guarded == plain,
-      "splitting a hot key must not change the aggregate")
-  }
-
   test("k85: the fixture estimate genuinely approximates (nonzero rank_err) and never leaves the bound") {
     val fx = graft.operators.Sketches
       .quantileSketch(spark, "/root/testdata/sf0.001").collect()

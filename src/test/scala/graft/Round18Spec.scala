@@ -3,16 +3,14 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Salting, Sketches}
+import graft.operators.Sketches
 
 /** Round-18: the round-12 ADVICE closures and the substring
   * detect→gate→apply ladder's final rung (d68). Pins (1) the Bloom
   * semi-join's empty-dim edge (an all-zero filter, never an
-  * annihilated result), (2) hot-key candidate sampling that survives
-  * a key-CLUSTERED layout (the `limit()` partition-prefix trap), and
-  * (3) d68's keep-first / overlap-merge / token-boundary cut
-  * semantics plus the window-length composition algebra the d69 eval
-  * measures. */
+  * annihilated result) and (2) d68's keep-first / overlap-merge /
+  * token-boundary cut semantics plus the window-length composition
+  * algebra the d69 eval measures. */
 class Round18Spec extends AnyFunSuite with SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -31,118 +29,6 @@ class Round18Spec extends AnyFunSuite with SparkSpec {
       assert(r.getAs[Long]("filter_bits") === 64L,
         "ndv=0 must floor the filter at one 64-bit word")
     }
-  }
-
-  // ------------------------- hot-key candidate sample vs clustering
-
-  /** 4 range partitions clustered by key: partitions 0–2 hold 30k
-    * rows of cold keys (10k distinct), partition 3 holds the hot key
-    * ("zzz_hot", 10k rows = 25% share). A partition-prefix limit(4096)
-    * reads only partition 0 and cannot see the hot key; the
-    * per-partition candidateSample must. */
-  private def clusteredToks() = {
-    import spark.implicits._
-    val rows = (0 until 30000).map(i => f"cold_${i % 10000}%05d") ++
-      Seq.fill(10000)("zzz_hot")
-    rows.toDF("tok").repartitionByRange(4, col("tok"))
-  }
-
-  test("candidateSample: finds the hot key on a key-clustered layout where limit() misses it") {
-    val toks = clusteredToks()
-    val sampled = Salting.candidateSample(toks, 4096)
-      .collect().map(_.getString(0)).toSet
-    assert(sampled.contains("zzz_hot"),
-      "per-partition sample must cover the hot key's partition")
-    // the trap the fix closes: a global limit takes a partition
-    // prefix — on this layout it reads only cold keys
-    val prefix = toks.limit(4096).distinct()
-      .collect().map(_.getString(0)).toSet
-    assert(!prefix.contains("zzz_hot"),
-      "fixture must actually exhibit the partition-prefix trap")
-  }
-
-  test("candidateSample: a SINGLE-partition frame with the hot key clustered at the tail is still covered (the stride closes the prefix trap one level down)") {
-    import spark.implicits._
-    val rows = (0 until 30000).map(i => f"cold_${i % 10000}%05d") ++
-      Seq.fill(10000)("zzz_hot")
-    val toks = rows.toDF("tok").coalesce(1)
-    val sampled = Salting.candidateSample(toks, 4096)
-      .collect().map(_.getString(0)).toSet
-    assert(sampled.contains("zzz_hot"),
-      "a tail-clustered hot key in one partition must be stride-sampled")
-  }
-
-  test("cmHotKeys: detects the clustered 25%-share key end-to-end at a 20% threshold") {
-    val hot = Salting.cmHotKeys(clusteredToks(), "tok", sharePpm = 200000L)
-      .collect().map(_.getString(0)).toSet
-    assert(hot === Set("zzz_hot"),
-      s"exactly the planted hot key must be detected, got $hot")
-  }
-
-  // ------------------------------- the skew-guard benefit gate
-
-  test("splitPays: map-side-combinable aggregates never split; non-combinable per-key work needs the row floor AND the payload cap") {
-    // every Spark aggregate partial-combines map-side (the measured
-    // A+B loss regimes) — the gate must never engage for them
-    assert(!Salting.splitPays(1L << 40, 8L, mapSideCombinable = true),
-      "a combinable aggregate must never split, whatever the skew")
-    // non-combinable (window-sort shape) below the row floor
-    assert(!Salting.splitPays(100000L, 20L, mapSideCombinable = false),
-      "too few hot rows must gate OFF (extra stage never amortizes)")
-    // non-combinable above the payload cap
-    assert(!Salting.splitPays(3000000L, 300L, mapSideCombinable = false),
-      "large elements must gate OFF — the re-exchange re-handles bytes")
-    // the win shape: many rows of small elements, no partial mode
-    assert(Salting.splitPays(3000000L, 13L, mapSideCombinable = false),
-      "millions of small-element rows in a non-combinable op engage")
-  }
-
-  test("saltedTopK: identical row set and ranks to the plain window top-k, on a skewed frame") {
-    import spark.implicits._
-    val df = ((0 until 5000).map(i => ("hot", f"p$i%05d")) ++
-      (0 until 300).map(i => (s"c${i % 7}", f"q$i%05d")))
-      .toDF("k", "p")
-      .repartition(8)
-    val ord = Seq(col("p").desc)
-    val plain = df.withColumn("rank",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy("k").orderBy(ord: _*)))
-      .filter(col("rank") <= 10)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2)))
-      .toSet
-    val salted = Salting.saltedTopK(df, "k", ord, k = 10, numSalts = 4)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2)))
-      .toSet
-    assert(salted === plain,
-      "salted per-key top-k must equal the single-sort window plan")
-    // groups smaller than k keep all their rows, ranked
-    assert(salted.count(_._1 == "c0") ===
-      plain.count(_._1 == "c0"))
-  }
-
-  test("gatedHotSetAggregate: an unprofitable hot set degrades to the literal plain plan; a profitable one splits and matches it") {
-    import spark.implicits._
-    val df = (0 until 2000).map(i =>
-      (if (i % 2 == 0) "hot" else s"c${i % 7}", s"p$i")).toDF("k", "v")
-    val plainOut = df.groupBy(col("k"))
-      .agg(sort_array(collect_list(col("v"))).as("vs"))
-    def viaGate(minRows: Long) = Salting.gatedHotSetAggregate(
-      df, "k", hotEst = Seq(("hot", 1000L)), avgPayloadBytes = 4L,
-      mapSideCombinable = false, numSalts = 4,
-      partials = Seq(collect_list(col("v")).as("__pl")),
-      finals = Seq(sort_array(flatten(collect_list(col("__pl")))).as("vs")),
-      plain = Seq(sort_array(collect_list(col("v"))).as("vs")),
-      minHotRows = minRows)
-    // unprofitable (1000 est rows < the 1M floor): the plain plan
-    assert(viaGate(1000000L).queryExecution.optimizedPlan.canonicalized ===
-      plainOut.queryExecution.optimizedPlan.canonicalized,
-      "gated-off must return the literal single-phase plan")
-    // profitable (floor 1 row): split engages, same result set
-    val split = viaGate(1L).collect()
-      .map(r => r.getString(0) -> r.getSeq[String](1)).toMap
-    val plain = plainOut.collect()
-      .map(r => r.getString(0) -> r.getSeq[String](1)).toMap
-    assert(split === plain, "engaged split must be result-identical")
   }
 
   // --------------------------- d68 substring APPLY (planted corpus)

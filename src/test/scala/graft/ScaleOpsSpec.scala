@@ -3,25 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Salting
 import graft.store.Bucketing
 
-/** Scale utilities: salted aggregation correctness, bucketed joins
-  * eliminating exchanges. */
+/** Scale utilities: alternative physical plans with identical output,
+  * partition pruning, bucketed joins eliminating exchanges. */
 class ScaleOpsSpec extends AnyFunSuite with SparkSpec {
-
-  test("salted aggregation equals plain aggregation (skew path)") {
-    val d = "/root/testdata/sf0.001"
-    val li = Tables.lineitem(spark, d)
-    val salted = Salting.saltedSumCount(li, Seq("l_returnflag"), "l_quantity")
-      .orderBy("l_returnflag").collect()
-      .map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
-    val plain = li.groupBy("l_returnflag")
-      .agg(sum("l_quantity").as("s"), count(lit(1)).as("n"))
-      .orderBy("l_returnflag").collect()
-      .map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
-    assert(salted.toSeq == plain.toSeq)
-  }
 
   test("scored-pairs broadcast-array plan equals the exchange plan") {
     // d51/d55's shared pair frame has two physical strategies (the

@@ -15,6 +15,10 @@ object SparkSpec {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    // Spark 4.1 defaults, pinned: specs that count output files per
+    // partition (Round23Spec) depend on AQE's coalesce target
+    .config("spark.sql.adaptive.enabled", "true")
+    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
+    .config("spark.ui.enabled", "false")
     .getOrCreate()
 }
