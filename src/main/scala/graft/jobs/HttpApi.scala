@@ -28,7 +28,11 @@ import graft.ingest.ZipStaging
   *    dispatch (app/main.py:29).
   *  - `GET /jobs/{id}` — the current job document, or
   *    `{"error":"not_found"}` (HTTP 200 either way, matching the
-  *    reference MVP's no-exception handler, app/main.py:33-35).
+  *    reference MVP's no-exception handler, app/main.py:33-35). Served
+  *    by [[JobTracker.lookup]]: a job this server created is answered
+  *    from in-process state with no Spark job; the parquet job log is
+  *    the durable record, read only for jobs from before a restart or
+  *    from another process.
   *
   * Ingest jobs are serialized on a single worker thread: the store
   * upsert is a batch read-merge-write, so concurrent jobs against one
@@ -147,7 +151,16 @@ class HttpApi(spark: SparkSession, tracker: JobTracker,
               return (400, HttpApi.json("error" -> "bad_archive",
                 "detail" -> String.valueOf(e.getMessage)))
           }
-        val jobId = tracker.create(filename, staged.toString)
+        val jobId =
+          try tracker.create(filename, staged.toString)
+          catch {
+            case e: Exception =>
+              // no job row to hand the worker: the upload copies are
+              // ours to drop (the 500 reply comes from `exchange`)
+              ZipStaging.cleanup(staged)
+              Files.deleteIfExists(tmp)
+              throw e
+          }
         // the FAILED write is itself a store write; if it throws the
         // job would strand in PARSING while looking in-flight — retry
         // once, then log the stranded state loudly so an operator can
@@ -209,19 +222,16 @@ class HttpApi(spark: SparkSession, tracker: JobTracker,
     val id = path.stripPrefix("/jobs").stripPrefix("/")
     if (id.isEmpty || id.contains("/"))
       return (404, HttpApi.json("error" -> "not_found"))
-    import org.apache.spark.sql.functions.col
-    tracker.currentState().filter(col("job_id") === id)
-      .collect().headOption match {
+    tracker.lookup(id) match {
       case None => (200, HttpApi.json("error" -> "not_found"))
-      case Some(row) =>
+      case Some(doc) =>
         (200, HttpApi.json(
-          "job_id" -> row.getAs[String]("job_id"),
-          "status" -> row.getAs[String]("status"),
-          "source" -> row.getAs[String]("source"),
-          "input_dir" -> row.getAs[String]("input_dir"),
-          "file_count" -> row.getAs[Long]("file_count"),
-          "updated_at" -> String.valueOf(row.getAs[java.sql.Timestamp](
-            "updated_at"))))
+          "job_id" -> doc.jobId,
+          "status" -> doc.status,
+          "source" -> doc.source,
+          "input_dir" -> doc.inputDir,
+          "file_count" -> doc.fileCount,
+          "updated_at" -> String.valueOf(doc.updatedAt)))
     }
   }
 }

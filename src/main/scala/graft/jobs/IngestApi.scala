@@ -23,6 +23,7 @@ class IngestApi(spark: SparkSession, tracker: JobTracker, store: graft.store.Doc
     finally ZipStaging.cleanup(staged)
   }
 
-  /** GET /jobs/{id} analogue (ref: app/main.py:33-35). */
+  /** GET /jobs/{id} analogue (ref: app/main.py:33-35), served by
+    * [[JobTracker.lookup]]. */
   def pollJob(jobId: String): Option[String] = tracker.status(jobId)
 }

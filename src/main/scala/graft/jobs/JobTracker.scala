@@ -2,13 +2,16 @@ package graft.jobs
 
 import java.sql.Timestamp
 import java.time.Instant
+import java.time.temporal.ChronoUnit
 import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.ingest.EmailIngest
 import graft.store.EmailStore
@@ -21,38 +24,61 @@ import graft.store.EmailStore
   * row_number view — point updates become immutable appends, which is
   * the shape that scales (no read-modify-write races, natural audit
   * trail).
+  *
+  * The log is the durable record; polls are served from in-process
+  * state. Every event this tracker appends is folded, after its append
+  * has committed, into a write-through map of job id → [[JobDoc]] with
+  * exactly [[currentState]]'s rules, so [[lookup]] answers a live job
+  * without planning or running a Spark job (the reference's Mongo point
+  * read, app/main.py:33-35). Ids this tracker did not create — a
+  * restarted server, a log written by another process — fall back to
+  * the log view.
   */
 class JobTracker(spark: SparkSession, root: String) {
   import spark.implicits._
+  import JobTracker._
 
   private val fs = new Path(root)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  private val live = new ConcurrentHashMap[String, Folded]()
+
+  /** Event time, in micros: the precision the log stores, so a folded
+    * doc's `updated_at` equals the one read back from parquet. */
+  protected def now(): Timestamp =
+    Timestamp.from(Instant.now().truncatedTo(ChronoUnit.MICROS))
+
   private def append(jobId: String, status: String, source: String,
-      inputDir: String, fileCount: Long): Unit = {
-    val row = Seq((jobId, Timestamp.from(Instant.now()), status, source,
-      inputDir, fileCount))
-      .toDF("job_id", "event_ts", "status", "source", "input_dir", "file_count")
-    row.coalesce(1).write.mode("append").parquet(root)
+      inputDir: String, fileCount: Long): Event = {
+    val ev = Event(now(), status, source, inputDir, fileCount)
+    Seq((jobId, ev.ts, status, source, inputDir, fileCount))
+      .toDF(eventSchema.fieldNames.toIndexedSeq: _*)
+      .coalesce(1).write.mode("append").parquet(root)
+    ev
   }
 
   /** Insert a job row with status QUEUED (ref: app/main.py:21-28). */
   def create(source: String, inputDir: String): String = {
     val jobId = UUID.randomUUID().toString
-    append(jobId, "QUEUED", source, inputDir, -1L)
+    val ev = append(jobId, "QUEUED", source, inputDir, -1L)
+    live.put(jobId, Folded(ev, ev, ev.fileCount))
     jobId
   }
 
-  /** Point status update (ref: app/orchestrator.py:16,54,58-60). */
-  def setStatus(jobId: String, status: String, fileCount: Long = -1L): Unit =
-    append(jobId, status, "", "", fileCount)
+  /** Point status update (ref: app/orchestrator.py:16,54,58-60). An id
+    * this tracker did not create stays out of the map: its earlier
+    * events are only in the log, which [[lookup]] then reads. */
+  def setStatus(jobId: String, status: String, fileCount: Long = -1L): Unit = {
+    val ev = append(jobId, status, "", "", fileCount)
+    live.computeIfPresent(jobId, (_, f) => f + ev)
+    ()
+  }
 
-  /** Full event log. */
+  /** Full event log, read with its fixed schema (no inference job). */
   def events(): DataFrame =
     if (!fs.exists(new Path(root)))
-      Seq.empty[(String, Timestamp, String, String, String, Long)]
-        .toDF("job_id", "event_ts", "status", "source", "input_dir", "file_count")
-    else spark.read.parquet(root)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), eventSchema)
+    else spark.read.schema(eventSchema).parquet(root)
 
   /** Latest-state view: one row per job (S8's read path). `source` and
     * `input_dir` come from the first event, status/file_count from the
@@ -65,9 +91,9 @@ class JobTracker(spark: SparkSession, root: String) {
     // (and the asc window would pick a non-create event's empty
     // source/input_dir). Terminal states outrank PARSING outranks
     // QUEUED; unknown statuses sort last defensively.
-    val stateRank = expr(
-      """CASE status WHEN 'QUEUED' THEN 0 WHEN 'PARSING' THEN 1
-        |  WHEN 'PARSED' THEN 2 WHEN 'EMPTY' THEN 2 ELSE 3 END""".stripMargin)
+    val stateRank = expr(stateRanks
+      .map { case (s, r) => s"WHEN '$s' THEN $r" }
+      .mkString("CASE status ", " ", s" ELSE $unknownRank END"))
     val desc = byJob.orderBy(col("event_ts").desc, stateRank.desc)
     val asc = byJob.orderBy(col("event_ts").asc, stateRank.asc)
     events()
@@ -83,13 +109,52 @@ class JobTracker(spark: SparkSession, root: String) {
         col("event_ts").as("updated_at"))
   }
 
-  /** Q7: job status point read (ref: app/main.py:33-35). */
-  def status(jobId: String): Option[String] =
-    currentState().filter(col("job_id") === jobId)
-      .select("status").collect().headOption.map(_.getString(0))
+  /** Q7: the current job document (ref: app/main.py:33-35) — from the
+    * in-process map for jobs this tracker created, else from the log. */
+  def lookup(jobId: String): Option[JobDoc] =
+    Option(live.get(jobId)).map(_.doc(jobId)).orElse(
+      currentState().filter(col("job_id") === jobId).collect().headOption
+        .map(r => JobDoc(r.getString(0), r.getString(1), r.getString(2),
+          r.getString(3), r.getLong(4), r.getTimestamp(5))))
+
+  /** Job status point read. */
+  def status(jobId: String): Option[String] = lookup(jobId).map(_.status)
 }
 
+/** One job's current document, as [[JobTracker.currentState]] reports it. */
+final case class JobDoc(jobId: String, status: String, source: String,
+    inputDir: String, fileCount: Long, updatedAt: Timestamp)
+
 object JobTracker {
+
+  private val eventSchema = StructType.fromDDL("job_id STRING, " +
+    "event_ts TIMESTAMP, status STRING, source STRING, input_dir STRING, " +
+    "file_count BIGINT")
+
+  /** State-machine rank of a status, the tie-break at equal timestamps. */
+  private val stateRanks =
+    Seq("QUEUED" -> 0, "PARSING" -> 1, "PARSED" -> 2, "EMPTY" -> 2)
+  private val unknownRank = 3
+
+  private def rank(status: String): Int =
+    stateRanks.collectFirst { case (`status`, r) => r }.getOrElse(unknownRank)
+
+  private final case class Event(ts: Timestamp, status: String,
+      source: String, inputDir: String, fileCount: Long) {
+    def before(o: Event): Boolean = {
+      val c = ts.compareTo(o.ts)
+      c < 0 || (c == 0 && rank(status) < rank(o.status))
+    }
+  }
+
+  /** The fold of one job's events: `first` and `last` by
+    * (event_ts, state rank), the max file_count. */
+  private final case class Folded(first: Event, last: Event, fileCount: Long) {
+    def +(e: Event): Folded = Folded(if (e.before(first)) e else first,
+      if (last.before(e)) e else last, math.max(fileCount, e.fileCount))
+    def doc(jobId: String): JobDoc = JobDoc(jobId, last.status, first.source,
+      first.inputDir, fileCount, last.ts)
+  }
 
   /** E1/E3 lifecycle end-to-end (SURVEY.md §3): create job → scan →
     * EMPTY short-circuit | PARSING(file_count) → parse+merge into the

@@ -2,8 +2,9 @@ package graft.store
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Bucketed co-located joins: pre-shuffle both sides of a repeated
   * fact-fact join ONCE at write time so every subsequent join on the
@@ -50,6 +51,9 @@ object Bucketing {
 class KeyIndex(spark: SparkSession, val path: String, numBuckets: Int = 64) {
 
   private def kb(c: Column): Column = pmod(hash(c), lit(numBuckets))
+
+  private val schema =
+    StructType.fromDDL("dedupe_key STRING, date_month STRING, kb INT")
 
   private val fs =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -98,28 +102,44 @@ class KeyIndex(spark: SparkSession, val path: String, numBuckets: Int = 64) {
 
   /** The index restricted to `keys`' buckets — a planning-time-pruned
     * read (`PartitionFilters: [kb IN ...]`), never a full-index scan.
-    * The collected bucket-id list is bounded by `numBuckets`. */
+    * The collected bucket-id list is bounded by `numBuckets`. One
+    * driver-side listing of the index root picks the touched `kb=` dirs
+    * that exist, read with the fixed schema: listing the whole root
+    * (64 dirs, above `parallelPartitionDiscovery.threshold`) would start
+    * a parallel-listing job, and schema inference one more. */
   private[store] def prunedFor(keys: DataFrame): DataFrame = {
     val kbs = keys.select(kb(col("dedupe_key")).as("kb")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    spark.read.parquet(path).filter(col("kb").isin(kbs: _*))
+    val dirs = kbs.map(b => s"kb=$b").toSet
+    val touched = fs.listStatus(new Path(path))
+      .filter(st => st.isDirectory && dirs(st.getPath.getName))
+      .map(_.getPath.toString)
+    if (touched.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema).option("basePath", path)
+      .parquet(touched.toIndexedSeq: _*).filter(col("kb").isin(kbs: _*))
   }
 
   /** Months holding any of `keys` (bucket-pruned probe). */
-  def monthsFor(keys: DataFrame): DataFrame =
-    prunedFor(keys).join(keys, Seq("dedupe_key"), "left_semi")
+  def monthsFor(keys: DataFrame): DataFrame = monthsFor(keys, prunedFor(keys))
+
+  /** [[monthsFor]] over an already pruned read of `keys`' buckets. */
+  private[store] def monthsFor(keys: DataFrame, pruned: DataFrame): DataFrame =
+    pruned.join(keys, Seq("dedupe_key"), "left_semi")
       .select("date_month").distinct()
 
   /** Replace the entries of `keys` with `entries` (the post-merge
     * (dedupe_key, date_month) rows for those keys), rewriting only the
     * touched buckets (dynamic overwrite: every touched bucket appears
-    * in the written frame because each batch key carries an entry). */
-  def refresh(keys: DataFrame, entries: DataFrame): Unit = {
+    * in the written frame because each batch key carries an entry).
+    * `pruned` is [[prunedFor]]`(keys)`, read before any index write. */
+  private[store] def refresh(keys: DataFrame, pruned: DataFrame,
+      entries: DataFrame): Unit = {
     // materialize `kept` BEFORE the overwrite: the frame reads the same
     // parquet path the write then rewrites, and relying on deferred
     // commit-time deletes would break under task retry/speculation
     // re-reading a source file the commit already removed
-    val kept = prunedFor(keys)
+    val kept = pruned
       .join(keys, Seq("dedupe_key"), "left_anti")
       .select("dedupe_key", "date_month")
       .localCheckpoint()

@@ -73,9 +73,13 @@ class PartitionedEmailStore(spark: SparkSession, root: String)
           // one-time bootstrap for stores created before the index
           if (!index.exists)
             index.rebuild(read().select(col("dedupe_key"), col("date_month")))
+          // the batch's kb dirs, read once for both the month probe and
+          // the refresh below: the store write in between never touches
+          // index files
+          val pruned = index.prunedFor(batchKeys)
           // months already holding any batch key: bucket-pruned index
           // probe — reads the batch's kb dirs, not the store
-          val keyMonths = index.monthsFor(batchKeys)
+          val keyMonths = index.monthsFor(batchKeys, pruned)
           // months the batch itself lands in
           val batchMonths = compact.select(monthCol.as("date_month")).distinct()
           val affected = keyMonths.union(batchMonths).distinct()
@@ -106,7 +110,7 @@ class PartitionedEmailStore(spark: SparkSession, root: String)
           val entries = merged
             .join(batchKeys, Seq("dedupe_key"), "left_semi")
             .select("dedupe_key", "date_month")
-          index.refresh(batchKeys, entries)
+          index.refresh(batchKeys, pruned, entries)
         } finally { batchKeys.unpersist(); () }
       }
     } finally { compact.unpersist(); () }

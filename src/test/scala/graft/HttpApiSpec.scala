@@ -5,6 +5,8 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.jobs.{HttpApi, JobTracker}
@@ -322,6 +324,89 @@ class HttpApiSpec extends AnyFunSuite with SparkSpec {
       import org.apache.spark.sql.functions.{col, size => asize}
       assert(store.read().filter(col("dedupe_key") === "<s1@x>")
         .select(asize(col("mailboxes"))).collect().head.getInt(0) == 2)
+    }
+  }
+
+  test("POST /ingest with an unwritable job log → 500, nothing leaked") {
+    // the tracker root is a regular FILE, so tracker.create throws after
+    // the upload was copied and staged: the reply is the 500 error JSON
+    // and both scratch copies are gone
+    val dir = Files.createTempDirectory("graft-http-nolog")
+    val jobsRoot = dir.resolve("jobs")
+    Files.write(jobsRoot, "not a directory".getBytes)
+    val tracker = new JobTracker(spark, jobsRoot.toString)
+    val store = new EmailStore(spark, dir.resolve("store").toString)
+    val scratch = java.nio.file.Paths.get(
+      Sessions.scratchDir.getOrElse(System.getProperty("java.io.tmpdir")))
+    def uploadCopies(): Set[String] = {
+      val s = Files.list(scratch)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("graft-zip-stage") ||
+          n.startsWith("graft-upload-")).toSet
+      finally s.close()
+    }
+    val before = uploadCopies()
+    val api = new HttpApi(spark, tracker, store)
+    val port = api.start()
+    try {
+      val (ctype, body) = multipart("corpus.zip",
+        buildZip("u1/inbox/1_" -> msg("n1")))
+      val resp = client.send(
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/ingest"))
+          .header("Content-Type", ctype)
+          .POST(HttpRequest.BodyPublishers.ofByteArray(body)).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(resp.statusCode() == 500, resp.body())
+      assert(field(resp.body(), "error").contains("internal"), resp.body())
+      assert(field(resp.body(), "job_id").isEmpty, resp.body())
+    } finally api.stop()
+    // no job row: the log root is still the file it was
+    assert(new String(Files.readAllBytes(jobsRoot)) == "not a directory")
+    assert((uploadCopies() -- before).isEmpty)
+  }
+
+  test("polls of a job this server created run no Spark job") {
+    withApi { (_, port, _, _) =>
+      val (ctype, body) = multipart("poll.zip",
+        buildZip("u1/inbox/1_" -> msg("q1")))
+      val resp = client.send(
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/ingest"))
+          .header("Content-Type", ctype)
+          .POST(HttpRequest.BodyPublishers.ofByteArray(body)).build(),
+        HttpResponse.BodyHandlers.ofString())
+      val jobId = field(resp.body(), "job_id").get
+      assert(awaitTerminal(port, jobId) == "PARSED")
+
+      // job starts reach the listener asynchronously, in order: marker
+      // jobs run before and after the polls bound the window
+      val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          groups.add(String.valueOf(
+            Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+      }
+      def marker(name: String): Unit = {
+        spark.sparkContext.setJobGroup(name, name)
+        try spark.range(1).count()
+        finally spark.sparkContext.clearJobGroup()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        marker("polls-begin")
+        (1 to 20).foreach { _ =>
+          assert(field(get(port, s"/jobs/$jobId"), "status").contains("PARSED"))
+        }
+        marker("polls-end")
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (!groups.contains("polls-end") && System.nanoTime() < deadline)
+          Thread.sleep(20)
+        val window = groups.asScala.toSeq
+          .dropWhile(_ != "polls-begin").dropWhile(_ == "polls-begin")
+          .takeWhile(_ != "polls-end")
+        assert(groups.contains("polls-end"))
+        assert(window.isEmpty, s"polls started Spark jobs: $groups")
+      } finally spark.sparkContext.removeSparkListener(listener)
     }
   }
 }
