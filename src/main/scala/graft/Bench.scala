@@ -243,13 +243,7 @@ object Bench {
       } catch { case e: Throwable =>
         System.err.println(s"[bench] JIT pre-warm failed (non-fatal): $e")
       }
-      graft.ext.DedupOps.clearCaches()
-      graft.ext.SimilarityOps.clearCaches()
-      graft.graph.GraphOps.clearCaches()
-      graft.ext.Multimodal.clearCaches()
-      graft.operators.Sketches.clearCaches()
-      graft.ext.TextOps.clearModelSegs()
-      graft.query.FixtureCorpus.clear()
+      graft.Registries.clearAll()
     }
     shuffleProbeSecs(spark) // discard: first probe run carries its JIT
     val probeStart = shuffleProbeSecs(spark)
@@ -323,34 +317,34 @@ object Bench {
       ("cache_s81_incr_index",
         () => { graft.ext.SimilarityOps.ivfPqIncremental(spark, sfDir)
           .count(); () },
-        () => graft.ext.SimilarityOps.clearSavedIndexes("|incr")),
+        () => graft.ext.SimilarityOps.clearSavedIndex("incr")),
       // s80's artifact write (build-once half of build-once/serve-many;
       // model training is already inside cache_kmeans_model)
       ("cache_s80_index",
         () => { graft.ext.SimilarityOps.ivfPqKnnServed(spark, sfDir)
           .count(); () },
-        () => graft.ext.SimilarityOps.clearSavedIndexes(sfDir)),
+        () => graft.ext.SimilarityOps.clearSavedIndex("ivfpq")),
       // the sparse-tier artifact builds: s87's one-shot inverted index
       // and s88's base-build + append-absorb (both leave the artifact
       // their query line items serve from)
       ("cache_s87_bm25_index",
         () => { graft.ext.SimilarityOps.bm25Served(spark, sfDir)
           .count(); () },
-        () => graft.ext.SimilarityOps.clearSavedIndexes("|bm25")),
+        () => graft.ext.SimilarityOps.clearSavedIndex("bm25")),
       ("cache_s88_bm25_incr",
         () => { graft.ext.SimilarityOps.bm25Incremental(spark, sfDir)
           .count(); () },
-        () => graft.ext.SimilarityOps.clearSavedIndexes("|bm25incr")),
+        () => graft.ext.SimilarityOps.clearSavedIndex("bm25incr")),
       // the two compaction rewrites (sparse s96, dense s97): their
       // query line items then time the pure single-segment serve
       ("cache_s96_compact",
         () => { graft.ext.SimilarityOps.bm25Compacted(spark, sfDir)
           .count(); () },
-        () => graft.ext.SimilarityOps.clearSavedIndexes("|bm25compact")),
+        () => graft.ext.SimilarityOps.clearSavedIndex("bm25compact")),
       ("cache_s97_compact",
         () => { graft.ext.SimilarityOps.ivfPqCompacted(spark, sfDir)
           .count(); () },
-        () => graft.ext.SimilarityOps.clearSavedIndexes("|ivfpqcompact")),
+        () => graft.ext.SimilarityOps.clearSavedIndex("ivfpqcompact")),
       // k83's persisted census artifact (base build + batch absorb);
       // the k83 query line item then times the pure serve + eval
       ("cache_k83_census",
@@ -642,14 +636,7 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":"adaptive","contended":$contended,"probe_shuffle":${fmt(probeSecs)}$driftJson$baselineJson,"failed":$failedJson,"rerun":$rerunJson,"queries":$qsTop,"sf":"$sfDir"}""")
-    graft.ext.DedupOps.clearCaches()
-    graft.ext.SimilarityOps.clearCaches()
-    graft.graph.GraphOps.clearCaches()
-    graft.ext.Multimodal.clearCaches()
-    graft.operators.Sketches.clearCaches()
-    graft.ext.TextOps.clearModelSegs()
-    graft.query.FixtureCorpus.clear()
-    graft.ingest.Validation.clearJsonl()
+    graft.Registries.clearAll()
     spark.stop()
   }
 }

@@ -1,38 +1,34 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-(session, dir) cached-DataFrame registry shared by the query
   * tiers that reuse expensive frames across driver queries (dedup
-  * shingles/pairs, graph edges, PQ model frames).
+  * shingles/pairs, graph edges, PQ model frames, the fixture store).
   *
   * get-then-putIfAbsent rather than computeIfAbsent: builders nest
   * (one cached frame may be built inside another's builder), and
   * ConcurrentHashMap throws "Recursive update" on reentrant
-  * computeIfAbsent. The losing side of a putIfAbsent race unpersists
-  * its duplicate. Callers expose their own `clearCaches()` delegating
-  * to [[clear]] so the harness epilogue can release storage.
+  * computeIfAbsent; nor does a multi-second build hold a map bin lock.
+  * The losing side of a putIfAbsent race unpersists its duplicate.
+  * Each instance registers with [[Registries.clearAll]] when
+  * constructed; tiers keep only their targeted clears.
   */
 final class FrameRegistry {
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val cache = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, String), DataFrame]()
+  Registries.onClearFrames(() => clear())
 
-  /** Session+dir-scoped lookup — the scoping lives HERE so no call
-    * site can forget the session component and leak one session's
-    * cached plan into another. Keyed on `sessionUUID` (stable and
-    * unique per session), not identityHashCode: a hash can alias after
-    * the session is GC'd, handing out a cached frame bound to a dead
-    * session. */
-  def cached(s: org.apache.spark.sql.SparkSession, d: String, name: String)
-      (build: => DataFrame): DataFrame =
-    cached(s"$name|${sessionKey(s)}|$d")(build)
-
-  /** `sessionUUID` is `private[sql]`; the Bridge exposes it (with an
-    * identity-hash fallback for non-classic sessions). */
-  private def sessionKey(s: org.apache.spark.sql.SparkSession): String =
-    org.apache.spark.sql.graft.Bridge.sessionUUID(s)
-
-  def cached(key: String)(build: => DataFrame): DataFrame = {
+  /** The cached frame of entry `name` for (session, dir). The scoping
+    * lives HERE so no call site can forget the session component and
+    * leak one session's cached plan into another. Keyed on
+    * `sessionUUID` (stable and unique per session; the Bridge exposes
+    * the `private[sql]` field), not identityHashCode: a hash can alias
+    * after the session is GC'd, handing out a cached frame bound to a
+    * dead session. */
+  def cached(s: SparkSession, d: String, name: String)
+      (build: => DataFrame): DataFrame = {
+    val key = FrameRegistry.key(s, d, name)
     val existing = cache.get(key)
     if (existing != null) existing
     else {
@@ -47,15 +43,23 @@ final class FrameRegistry {
     cache.clear()
   }
 
-  /** Drop (and unpersist) only the entries whose key starts with
-    * `prefix` — the targeted clear a bench warm's rebuild cycle needs
-    * so re-timing one cached frame can never evict another registry
-    * entry that was already measured. */
-  def drop(prefix: String): Unit = {
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey.startsWith(prefix)) { e.getValue.unpersist(); it.remove() }
+  /** Drop (and unpersist) only the frames of entry `name` — the
+    * targeted clear a bench warm's rebuild cycle needs so re-timing one
+    * cached frame can never evict another registry entry that was
+    * already measured. */
+  def drop(name: String): Unit =
+    cache.entrySet().removeIf { e =>
+      val hit = e.getKey._1 == name
+      if (hit) e.getValue.unpersist()
+      hit
     }
-  }
+}
+
+object FrameRegistry {
+  /** The (name, session UUID, dir) key of both registries — also used
+    * by the one frame memo kept outside them (SimilarityOps' k-means
+    * pair). */
+  private[graft] def key(s: SparkSession, d: String, name: String)
+      : (String, String, String) =
+    (name, org.apache.spark.sql.graft.Bridge.sessionUUID(s), d)
 }

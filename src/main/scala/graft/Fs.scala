@@ -17,7 +17,7 @@ object Fs {
     * in finally blocks where a leaked temp dir is preferable to a
     * masked primary exception. */
   def deleteTree(root: Path): Unit = {
-    scratchDirs.remove(root)
+    scratchPaths.remove(root)
     try {
       import scala.jdk.CollectionConverters._
       if (Files.exists(root)) {
@@ -43,34 +43,33 @@ object Fs {
     * on the fast local volume (`spark.local.dir`'s NVMe), never the
     * root disk. Every dir made here is deleted at JVM exit unless
     * [[deleteTree]] removed it first. */
-  def scratchTempDir(prefix: String): Path = {
-    val p = Sessions.scratchDir match {
-      case Some(d) => Files.createTempDirectory(Paths.get(d), prefix)
-      case None => Files.createTempDirectory(prefix)
-    }
-    scratchDirs.add(p)
-    p
-  }
+  def scratchTempDir(prefix: String): Path = track(Sessions.scratchDir match {
+    case Some(d) => Files.createTempDirectory(Paths.get(d), prefix)
+    case None => Files.createTempDirectory(prefix)
+  })
 
   // File.deleteOnExit cannot remove a NON-EMPTY directory, so relying
   // on it leaked every still-populated scratch dir (final sink dirs,
   // staged symlink dirs) per JVM — observed as >1000 stale graft-*
   // entries accumulating across a day of runs. One recursive-delete
-  // shutdown hook over the still-live set instead.
-  private val scratchDirs =
+  // shutdown hook over the still-live set (dirs and files) instead.
+  private val scratchPaths =
     java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      scratchDirs.forEach(p => deleteTree(p))))
+      scratchPaths.forEach(p => deleteTree(p))))
   }
 
+  private def track(p: Path): Path = { scratchPaths.add(p); p }
+
   /** Scratch temp FILE on the pinned RAM-backed scratch root — same
-    * rationale as [[scratchTempDir]]. */
+    * rationale and the same exit-time delete as [[scratchTempDir]];
+    * remove it early with [[deleteTree]]. */
   def scratchTempFile(prefix: String, suffix: String): Path =
-    Sessions.scratchDir match {
+    track(Sessions.scratchDir match {
       case Some(d) => Files.createTempFile(Paths.get(d), prefix, suffix)
       case None => Files.createTempFile(prefix, suffix)
-    }
+    })
 
   /** Write `df` as ONE parquet file at exactly `target` (the driver's
     * single-file-per-table layout): coalesce(1) into a scratch dir,

@@ -102,17 +102,11 @@ object PlanAudit {
       println(SparkEntry.queries(name)(spark, d).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode).take(4000))
     }
-    // the Bench epilogue clears: executing the audited queries builds
-    // the same session caches and PERSISTED artifacts (saved indexes,
-    // the d70 window index, census dirs) — without these every
-    // dev-loop audit run leaked one set of temp artifact dirs
-    graft.ext.DedupOps.clearCaches()
-    graft.ext.SimilarityOps.clearCaches()
-    graft.graph.GraphOps.clearCaches()
-    graft.ext.Multimodal.clearCaches()
-    graft.operators.Sketches.clearCaches()
-    graft.ext.TextOps.clearModelSegs()
-    graft.query.FixtureCorpus.clear()
+    // executing the audited queries builds the same session caches and
+    // PERSISTED artifacts (saved indexes, the d70 window index, census
+    // dirs) — without this every dev-loop audit run leaked one set of
+    // temp artifact dirs
+    graft.Registries.clearAll()
     spark.stop()
   }
 }

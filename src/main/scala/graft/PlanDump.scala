@@ -26,13 +26,7 @@ object PlanDump {
         System.err.println(s"[plandump] $n FAILED: $e")
       }
     }
-    graft.ext.DedupOps.clearCaches()
-    graft.ext.SimilarityOps.clearCaches()
-    graft.graph.GraphOps.clearCaches()
-    graft.ext.Multimodal.clearCaches()
-    graft.operators.Sketches.clearCaches()
-    graft.ext.TextOps.clearModelSegs()
-    graft.query.FixtureCorpus.clear()
+    graft.Registries.clearAll()
     spark.stop()
   }
 }

@@ -16,10 +16,7 @@ object QProbe {
       }
       println(f"[qprobe] $n: ${ts.map(t => f"$t%.2f").mkString(" ")}")
     }
-    graft.ext.DedupOps.clearCaches()
-    graft.ext.TextOps.clearModelSegs()
-    graft.operators.Sketches.clearCaches()
-    graft.query.FixtureCorpus.clear()
+    graft.Registries.clearAll()
     spark.stop()
   }
 }

@@ -310,16 +310,6 @@ object ScaleBench {
     // contribution branches into one drain
     "e135_stream_release_gate" -> "docs")
 
-  private def clearAll(): Unit = {
-    graft.ext.DedupOps.clearCaches()
-    graft.ext.SimilarityOps.clearCaches()
-    graft.graph.GraphOps.clearCaches()
-    graft.ext.Multimodal.clearCaches()
-    graft.operators.Sketches.clearCaches()
-    graft.ext.TextOps.clearModelSegs()
-    graft.query.FixtureCorpus.clear()
-  }
-
   /** (cache line items, query line items) for one volume. `only`
     * (dev): restrict to named line items — cuts the add-one-operator
     * rehearsal loop from the full ~30-item suite to the new entries;
@@ -328,7 +318,7 @@ object ScaleBench {
   private def measure(spark: SparkSession, dir: String,
       only: Option[Set[String]])
       : (Seq[(String, Double)], Seq[(String, Double)]) = {
-    clearAll()
+    graft.Registries.clearAll()
     // MIN of 3 clear-and-rebuild cycles per warm — the Bench warm
     // discipline (one-shot build timings swung 2× between clean runs
     // in round 9, and these numbers feed published exponents). The
@@ -365,7 +355,7 @@ object ScaleBench {
       // absorb — its exponent vs embedding growth is the update-path
       // scale claim (serving is the s80 line item)
       ("cache_s81_incr_index",
-        () => graft.ext.SimilarityOps.clearSavedIndexes("|incr"),
+        () => graft.ext.SimilarityOps.clearSavedIndex("incr"),
         () => {
           graft.ext.SimilarityOps.ivfPqIncremental(spark, dir).count(); () }),
       // the s87 inverted-index build (one corpus scan → postings/df/
@@ -373,7 +363,7 @@ object ScaleBench {
       // BUILD-path scale claim (serving is the s87 query line item,
       // which runs against the artifact this warm leaves behind)
       ("cache_s87_bm25_index",
-        () => graft.ext.SimilarityOps.clearSavedIndexes("|bm25"),
+        () => graft.ext.SimilarityOps.clearSavedIndex("bm25"),
         () => {
           graft.ext.SimilarityOps.bm25Served(spark, dir).count(); () }),
       // em73's store build + compaction rewrite is cachedAux per
@@ -402,13 +392,13 @@ object ScaleBench {
       // the compact path (the s96 query line item measures the
       // serve over the result)
       ("cache_s96_compact",
-        () => graft.ext.SimilarityOps.clearSavedIndexes("|bm25compact"),
+        () => graft.ext.SimilarityOps.clearSavedIndex("bm25compact"),
         () => {
           graft.ext.SimilarityOps.bm25Compacted(spark, dir).count(); () }),
       // the s97 ANN compaction rewrite (members/codes anti-join +
       // frozen-model copy into a fresh artifact)
       ("cache_s97_compact",
-        () => graft.ext.SimilarityOps.clearSavedIndexes("|ivfpqcompact"),
+        () => graft.ext.SimilarityOps.clearSavedIndex("ivfpqcompact"),
         () => {
           graft.ext.SimilarityOps.ivfPqCompacted(spark, dir).count(); () }),
       ("cache_semantic_cc",
@@ -526,11 +516,11 @@ object ScaleBench {
           SparkEntry.queries(n)(spark, jit).count() }
     } catch { case e: Throwable =>
       System.err.println(s"[scale] JIT pre-warm failed (non-fatal): $e") }
-    clearAll()
+    graft.Registries.clearAll()
 
     val (cachesA, queriesA) = measure(spark, dirA, only)
     val (cachesB, queriesB) = measure(spark, dirB, only)
-    clearAll()
+    graft.Registries.clearAll()
 
     def fmt(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))

@@ -38,12 +38,7 @@ object Verify {
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    graft.ext.DedupOps.clearCaches()
-    graft.ext.SimilarityOps.clearCaches()
-    graft.graph.GraphOps.clearCaches()
-    graft.ext.TextOps.clearModelSegs()
-    graft.query.FixtureCorpus.clear()
-    graft.ingest.Validation.clearJsonl()
+    graft.Registries.clearAll()
     spark.stop()
   }
 }

@@ -49,16 +49,17 @@ object DedupOps {
   // ---------------------------------------- shared cached shingle frame
 
   // d51/d53/d55 all start from the same (doc_id, md5Long(shingle)) rows;
-  // materialize it once per (session, dir) and unpersist via clearCaches()
-  // from the harness epilogue — per-query .cache() calls leaked storage
-  // for the session lifetime (round-1 ADVICE).
+  // materialize it once per (session, dir) in a registry that
+  // Registries.clearAll releases — per-query .cache() calls leaked
+  // storage for the session lifetime (round-1 ADVICE).
   private val frames = new graft.FrameRegistry
 
   /** Unpersist every frame this object materialized and delete the
-    * persisted window-index artifacts — the clear-EVERYTHING call for
-    * harness epilogues. Bench cache line items must use the TARGETED
-    * clears instead ([[clearFrames]] / [[clearWindowIndexes]]) so one
-    * warm's re-cycle cannot evict another's already-measured cache. */
+    * persisted window-index artifacts (the dedup probes' reset; a
+    * main's full clear is [[graft.Registries.clearAll]]). Bench cache
+    * line items must use the TARGETED clears instead ([[clearFrames]] /
+    * [[clearWindowIndexes]]) so one warm's re-cycle cannot evict
+    * another's already-measured cache. */
   def clearCaches(): Unit = {
     clearFrames()
     clearWindowIndexes()
@@ -70,7 +71,7 @@ object DedupOps {
 
   // ------------- persisted window-index artifact (d70's serve side)
 
-  private val windowIndexes = new graft.ArtifactRegistry("graft-windex")
+  private val windowIndexes = new graft.ArtifactRegistry
 
   /** The full-corpus (doc_id, pos, hw) window-hash frame, cached per
     * (session, dir) — round-17: the substring tier computed
@@ -96,19 +97,17 @@ object DedupOps {
     * table the ingest maintains; here it is built once per
     * (session, dir) and d70 serves from it. */
   private[graft] def windowIndexDir(s: SparkSession, d: String): String =
-    windowIndexes.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|windex") {
-      dir =>
-        baseWindowIndex(s, d).write.mode("overwrite")
-          .parquet(s"$dir/windex")
-        // the PRE-cap per-hash doc-count census — the mergeable state
-        // d73's absorb maintains (hot-cap re-derivation over segment
-        // sums); the index rows alone cannot serve this: capped hashes
-        // have no rows left but their counts must keep accumulating
-        corpusWindows(s, d).filter(col("doc_id") % 5 =!= 4)
-          .groupBy("hw")
-          .agg(count_distinct(col("doc_id")).as("nd"))
-          .write.mode("overwrite").parquet(s"$dir/census")
+    windowIndexes.getOrBuild(s, d, "windex") { dir =>
+      baseWindowIndex(s, d).write.mode("overwrite")
+        .parquet(s"$dir/windex")
+      // the PRE-cap per-hash doc-count census — the mergeable state
+      // d73's absorb maintains (hot-cap re-derivation over segment
+      // sums); the index rows alone cannot serve this: capped hashes
+      // have no rows left but their counts must keep accumulating
+      corpusWindows(s, d).filter(col("doc_id") % 5 =!= 4)
+        .groupBy("hw")
+        .agg(count_distinct(col("doc_id")).as("nd"))
+        .write.mode("overwrite").parquet(s"$dir/census")
     }
 
   /** Targeted clear: only the persisted window-index artifacts (the
@@ -127,11 +126,9 @@ object DedupOps {
     * discipline, cost attributed in the cache_d70_window_index warm's
     * `substring_clean` sub-build). */
   private[graft] def substringCleanDir(s: SparkSession, d: String): String =
-    windowIndexes.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|sclean") {
-      dir =>
-        substringCleanDerive(s, d).write.mode("overwrite")
-          .parquet(s"$dir/clean")
+    windowIndexes.getOrBuild(s, d, "sclean") { dir =>
+      substringCleanDerive(s, d).write.mode("overwrite")
+        .parquet(s"$dir/clean")
     }
 
   private[graft] def substringCleanCached(s: SparkSession, d: String)
@@ -2201,12 +2198,10 @@ object DedupOps {
     * the cache_d70 warm now charges this build like its siblings and
     * [[windexTombstoneGate]] only reads. Returns the artifact dir. */
   private[graft] def windexTombstonesDir(s: SparkSession, d: String): String =
-    windowIndexes.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|windex-tomb") {
-      dir =>
-        documents(s, d).select(col("doc_id").as("base_id"))
-          .filter(col("base_id") % 10 === 3)
-          .write.mode("overwrite").parquet(s"$dir/tombstones")
+    windowIndexes.getOrBuild(s, d, "windex-tomb") { dir =>
+      documents(s, d).select(col("doc_id").as("base_id"))
+        .filter(col("base_id") % 10 === 3)
+        .write.mode("overwrite").parquet(s"$dir/tombstones")
     }
 
   /** d71: the substring ingest gate served from the TOMBSTONED window
@@ -2242,14 +2237,12 @@ object DedupOps {
     * anti-join rewrite of the standing rows, O(index), never
     * O(corpus). */
   private[graft] def compactedWindexDir(s: SparkSession, d: String): String =
-    windowIndexes.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|windex-compact") {
-      dir =>
-        s.read.parquet(s"${windowIndexDir(s, d)}/windex")
-          .join(s.read
-            .parquet(s"${windexTombstonesDir(s, d)}/tombstones").distinct(),
-            Seq("base_id"), "left_anti")
-          .write.mode("overwrite").parquet(s"$dir/windex")
+    windowIndexes.getOrBuild(s, d, "windex-compact") { dir =>
+      s.read.parquet(s"${windowIndexDir(s, d)}/windex")
+        .join(s.read
+          .parquet(s"${windexTombstonesDir(s, d)}/tombstones").distinct(),
+          Seq("base_id"), "left_anti")
+        .write.mode("overwrite").parquet(s"$dir/windex")
     }
 
   /** d72: the gate served from the COMPACTED window index — the
@@ -2277,16 +2270,14 @@ object DedupOps {
     * Raw rows, deliberately un-capped: the hot decision is GLOBAL and
     * belongs to serve time, where the merged census is authoritative. */
   private[graft] def windexDeltaDir(s: SparkSession, d: String): String =
-    windowIndexes.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|windex-delta") {
-      dir =>
-        val batchW = corpusWindows(s, d).filter(col("doc_id") % 10 === 4)
-        batchW.select(col("hw"), col("doc_id").as("base_id"),
-          col("pos").as("pa"))
-          .write.mode("overwrite").parquet(s"$dir/windex")
-        batchW.groupBy("hw")
-          .agg(count_distinct(col("doc_id")).as("nd"))
-          .write.mode("overwrite").parquet(s"$dir/census")
+    windowIndexes.getOrBuild(s, d, "windex-delta") { dir =>
+      val batchW = corpusWindows(s, d).filter(col("doc_id") % 10 === 4)
+      batchW.select(col("hw"), col("doc_id").as("base_id"),
+        col("pos").as("pa"))
+        .write.mode("overwrite").parquet(s"$dir/windex")
+      batchW.groupBy("hw")
+        .agg(count_distinct(col("doc_id")).as("nd"))
+        .write.mode("overwrite").parquet(s"$dir/census")
     }
 
   /** d73: the substring gate served from the ABSORBED index — the
@@ -2362,30 +2353,28 @@ object DedupOps {
     * stays capped, and the oracle reproduces this by filtering the
     * index AFTER the full hot CTE. */
   private[graft] def foldedWindexDir(s: SparkSession, d: String): String =
-    windowIndexes.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|windex-fold") {
-      dir =>
-        val base = windowIndexDir(s, d)
-        val delta = windexDeltaDir(s, d)
-        val tomb = s.read
-          .parquet(s"${windexTombstonesDir(s, d)}/tombstones").distinct()
-        // the census is written FIRST so a reader that races the
-        // registry's publish never sees an index without its mergeable
-        // state — and the hot set is derived by READING IT BACK, so it
-        // comes from exactly the published artifact (and the summing
-        // group-by runs once, not re-evaluated through lazy lineage
-        // for each downstream reference)
-        s.read.parquet(s"$base/census")
-          .unionByName(s.read.parquet(s"$delta/census"))
-          .groupBy("hw").agg(sum("nd").as("nd"))
-          .write.mode("overwrite").parquet(s"$dir/census")
-        val hot = s.read.parquet(s"$dir/census")
-          .filter(col("nd") > runDocCap).select("hw")
-        s.read.parquet(s"$base/windex")
-          .unionByName(s.read.parquet(s"$delta/windex"))
-          .join(hot, Seq("hw"), "left_anti")
-          .join(tomb, Seq("base_id"), "left_anti")
-          .write.mode("overwrite").parquet(s"$dir/windex")
+    windowIndexes.getOrBuild(s, d, "windex-fold") { dir =>
+      val base = windowIndexDir(s, d)
+      val delta = windexDeltaDir(s, d)
+      val tomb = s.read
+        .parquet(s"${windexTombstonesDir(s, d)}/tombstones").distinct()
+      // the census is written FIRST so a reader that races the
+      // registry's publish never sees an index without its mergeable
+      // state — and the hot set is derived by READING IT BACK, so it
+      // comes from exactly the published artifact (and the summing
+      // group-by runs once, not re-evaluated through lazy lineage
+      // for each downstream reference)
+      s.read.parquet(s"$base/census")
+        .unionByName(s.read.parquet(s"$delta/census"))
+        .groupBy("hw").agg(sum("nd").as("nd"))
+        .write.mode("overwrite").parquet(s"$dir/census")
+      val hot = s.read.parquet(s"$dir/census")
+        .filter(col("nd") > runDocCap).select("hw")
+      s.read.parquet(s"$base/windex")
+        .unionByName(s.read.parquet(s"$delta/windex"))
+        .join(hot, Seq("hw"), "left_anti")
+        .join(tomb, Seq("base_id"), "left_anti")
+        .write.mode("overwrite").parquet(s"$dir/windex")
     }
 
   /** d74: the substring gate served from the FOLDED artifact — d70's
@@ -2415,16 +2404,14 @@ object DedupOps {
     * artifact's generation. Same O(batch) write as [[windexDeltaDir]]:
     * raw windows + own census, the folded base never touched. */
   private[graft] def windexDelta2Dir(s: SparkSession, d: String): String =
-    windowIndexes.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|windex-delta2") {
-      dir =>
-        val batchW = corpusWindows(s, d).filter(col("doc_id") % 20 === 9)
-        batchW.select(col("hw"), col("doc_id").as("base_id"),
-          col("pos").as("pa"))
-          .write.mode("overwrite").parquet(s"$dir/windex")
-        batchW.groupBy("hw")
-          .agg(count_distinct(col("doc_id")).as("nd"))
-          .write.mode("overwrite").parquet(s"$dir/census")
+    windowIndexes.getOrBuild(s, d, "windex-delta2") { dir =>
+      val batchW = corpusWindows(s, d).filter(col("doc_id") % 20 === 9)
+      batchW.select(col("hw"), col("doc_id").as("base_id"),
+        col("pos").as("pa"))
+        .write.mode("overwrite").parquet(s"$dir/windex")
+      batchW.groupBy("hw")
+        .agg(count_distinct(col("doc_id")).as("nd"))
+        .write.mode("overwrite").parquet(s"$dir/census")
     }
 
   /** d75: the substring gate one generation AFTER the fold — the

@@ -23,7 +23,8 @@ object Multimodal {
 
   private val frames = new graft.FrameRegistry
 
-  /** Release the cached signature frame (bench harness epilogue). */
+  /** Release the cached signature frame (the cache_media_sigs re-time
+    * clear). */
   def clearCaches(): Unit = frames.clear()
 
   /** Media row: payload + envelope metadata. */

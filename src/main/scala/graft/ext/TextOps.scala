@@ -1722,7 +1722,7 @@ object TextOps {
     * segments (the s88/d73 LSM discipline applied to the two model
     * artifacts that — round-14 verdict — were the last place the repo
     * answered a new batch with a full corpus rescan). */
-  private val modelSegs = new graft.ArtifactRegistry("graft-modelsegs")
+  private val modelSegs = new graft.ArtifactRegistry
   def clearModelSegs(): Unit = modelSegs.clear()
 
   /** The BASE count segment: [[dsirCountsOf]] over the standing corpus
@@ -1741,8 +1741,7 @@ object TextOps {
     * O(batch)/O(cohort) slice scans — an absorb-only lifecycle still
     * never pays a corpus scan. */
   private[graft] def dsirCountsBaseDir(s: SparkSession, d: String): String = {
-    val uuid = org.apache.spark.sql.graft.Bridge.sessionUUID(s)
-    modelSegs.getOrBuild(s"$uuid|$d|dsir-base") { dir =>
+    modelSegs.getOrBuild(s, d, "dsir-base") { dir =>
       val cohorts = Seq(
         "base" -> (col("doc_id") % 5 =!= 4),
         "delta" -> (col("doc_id") % 5 === 4),
@@ -1760,8 +1759,8 @@ object TextOps {
             col(s"t_$tag").as("tcnt"))
           .write.mode("overwrite").parquet(s"$target/counts")
       wr(dir, "base")
-      modelSegs.getOrBuild(s"$uuid|$d|dsir-delta")(wr(_, "delta"))
-      modelSegs.getOrBuild(s"$uuid|$d|dsir-retract")(wr(_, "retr"))
+      modelSegs.getOrBuild(s, d, "dsir-delta")(wr(_, "delta"))
+      modelSegs.getOrBuild(s, d, "dsir-retract")(wr(_, "retr"))
       ()
     }
   }
@@ -1771,12 +1770,10 @@ object TextOps {
     * O(batch): the scan reads the batch slice only, the base segment
     * is never touched. */
   private[graft] def dsirCountsDeltaDir(s: SparkSession, d: String): String =
-    modelSegs.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|dsir-delta") {
-      dir =>
-        dsirCountsOf(dsirFeaturesOf(
-          documents(s, d).filter(col("doc_id") % 5 === 4)))
-          .write.mode("overwrite").parquet(s"$dir/counts")
+    modelSegs.getOrBuild(s, d, "dsir-delta") { dir =>
+      dsirCountsOf(dsirFeaturesOf(
+        documents(s, d).filter(col("doc_id") % 5 === 4)))
+        .write.mode("overwrite").parquet(s"$dir/counts")
     }
 
   /** The model re-derived from the SUMMED segments: read both ≤ m-row
@@ -1821,12 +1818,10 @@ object TextOps {
     * the model tier. */
   private[graft] def dsirCountsRetractDir(s: SparkSession, d: String)
       : String =
-    modelSegs.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|dsir-retract") {
-      dir =>
-        dsirCountsOf(dsirFeaturesOf(
-          documents(s, d).filter(col("doc_id") % 10 === 7)))
-          .write.mode("overwrite").parquet(s"$dir/counts")
+    modelSegs.getOrBuild(s, d, "dsir-retract") { dir =>
+      dsirCountsOf(dsirFeaturesOf(
+        documents(s, d).filter(col("doc_id") % 10 === 7)))
+        .write.mode("overwrite").parquet(s"$dir/counts")
     }
 
   /** t82: MODEL RETRACTION — an erasure request honored at the model
@@ -1902,19 +1897,17 @@ object TextOps {
     * scan. */
   private[graft] def dsirCountsFoldedDir(s: SparkSession, d: String)
       : String =
-    modelSegs.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|dsir-folded") {
-      dir =>
-        s.read.parquet(s"${dsirCountsBaseDir(s, d)}/counts")
-          .unionByName(s.read.parquet(s"${dsirCountsDeltaDir(s, d)}/counts"))
-          .unionByName(s.read
-            .parquet(s"${dsirCountsRetractDir(s, d)}/counts")
-            .select(col("bucket"),
-              col("rcnt").unary_-.as("rcnt"), col("tcnt").unary_-.as("tcnt")))
-          .groupBy("bucket")
-          .agg(sum("rcnt").as("rcnt"), sum("tcnt").as("tcnt"))
-          .filter(col("rcnt") > 0)
-          .write.mode("overwrite").parquet(s"$dir/counts")
+    modelSegs.getOrBuild(s, d, "dsir-folded") { dir =>
+      s.read.parquet(s"${dsirCountsBaseDir(s, d)}/counts")
+        .unionByName(s.read.parquet(s"${dsirCountsDeltaDir(s, d)}/counts"))
+        .unionByName(s.read
+          .parquet(s"${dsirCountsRetractDir(s, d)}/counts")
+          .select(col("bucket"),
+            col("rcnt").unary_-.as("rcnt"), col("tcnt").unary_-.as("tcnt")))
+        .groupBy("bucket")
+        .agg(sum("rcnt").as("rcnt"), sum("tcnt").as("tcnt"))
+        .filter(col("rcnt") > 0)
+        .write.mode("overwrite").parquet(s"$dir/counts")
     }
 
   /** t84: the model-tier GENERATION TURNOVER — the d75 proof shape on
@@ -2078,27 +2071,25 @@ object TextOps {
     * attributed `cache_dsir_manifest` warm line item; t74 remains the
     * honest from-scratch estimator+scorer entry. */
   private[graft] def dsirManifestDir(s: SparkSession, d: String): String =
-    modelSegs.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|dsir-manifest") {
-      dir =>
-        dsirLr(s, d).write.mode("overwrite").parquet(s"$dir/lr")
-        // score with the model collected from the just-written lr
-        // table — one estimator pass feeds both artifacts
-        val model = dsirModelOf(s.read.parquet(s"$dir/lr"))
-        // checkpoint: the weight frame feeds THREE consumers (the
-        // manifest rows, the normalization max, and the sketch's
-        // segment pass), and the references prune to different columns
-        // so ReuseExchange does not unify them — without this the
-        // corpus tokenizes three times (the t54 counts lesson;
-        // measured 3.3 s → ~2 s at sf0.1)
-        val w = dsirScoreOf(documents(s, d), model)
-          .select("doc_id", "lang", "w_micro").localCheckpoint()
-        val wmax = w.agg(max("w_micro").as("__wmax"))
-        val cut = dsirCutFrame(w)
-        dsirManifestStage(
-          w.crossJoin(broadcast(wmax)).crossJoin(broadcast(cut)),
-          col("__wmax"), col("cut_w"), col("cut_uid"))
-          .write.mode("overwrite").parquet(s"$dir/manifest")
+    modelSegs.getOrBuild(s, d, "dsir-manifest") { dir =>
+      dsirLr(s, d).write.mode("overwrite").parquet(s"$dir/lr")
+      // score with the model collected from the just-written lr
+      // table — one estimator pass feeds both artifacts
+      val model = dsirModelOf(s.read.parquet(s"$dir/lr"))
+      // checkpoint: the weight frame feeds THREE consumers (the
+      // manifest rows, the normalization max, and the sketch's
+      // segment pass), and the references prune to different columns
+      // so ReuseExchange does not unify them — without this the
+      // corpus tokenizes three times (the t54 counts lesson;
+      // measured 3.3 s → ~2 s at sf0.1)
+      val w = dsirScoreOf(documents(s, d), model)
+        .select("doc_id", "lang", "w_micro").localCheckpoint()
+      val wmax = w.agg(max("w_micro").as("__wmax"))
+      val cut = dsirCutFrame(w)
+      dsirManifestStage(
+        w.crossJoin(broadcast(wmax)).crossJoin(broadcast(cut)),
+        col("__wmax"), col("cut_w"), col("cut_uid"))
+        .write.mode("overwrite").parquet(s"$dir/manifest")
     }
 
   /** The [[dsirModel]] dense array served from the persisted lr table
@@ -2109,7 +2100,7 @@ object TextOps {
 
   /** Targeted clear for the selection artifact alone (the warm
     * re-time contract — see [[clearPplScored]]). */
-  def clearDsirManifest(): Unit = modelSegs.clearMatching("|dsir-manifest")
+  def clearDsirManifest(): Unit = modelSegs.clear("dsir-manifest")
 
   /** The full-corpus trained-tokenizer VOCABULARY (w, n) persisted per
     * (session, dir) — the t66 merge induction's input, shared by the
@@ -2117,20 +2108,18 @@ object TextOps {
     * tokenizer (t80's apply, t85's release census). Same attributed-
     * warm discipline as [[dsirManifestDir]]. */
   private[graft] def bpeVocabDir(s: SparkSession, d: String): String =
-    modelSegs.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|bpe-vocab") {
-      dir =>
-        documents(s, d)
-          .select(explode(tokens(col("text"))).as("w"))
-          .groupBy("w").agg(count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$dir/vocab")
+    modelSegs.getOrBuild(s, d, "bpe-vocab") { dir =>
+      documents(s, d)
+        .select(explode(tokens(col("text"))).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(s"$dir/vocab")
     }
 
   private[graft] def bpeVocabCached(s: SparkSession, d: String): DataFrame =
     s.read.parquet(s"${bpeVocabDir(s, d)}/vocab")
 
   /** Targeted clear for the vocabulary artifact alone. */
-  def clearBpeVocab(): Unit = modelSegs.clearMatching("|bpe-vocab")
+  def clearBpeVocab(): Unit = modelSegs.clear("bpe-vocab")
 
   /** Oracle: re-derives the weights (t74's CTEs), the max-normalized
     * acceptance ppm, the md5 coin, and the ENTIRE fixed-schedule rank
@@ -2623,27 +2612,25 @@ object TextOps {
     * served to its four consumers (t75's verdict, t77's calibration,
     * t78's calibrated filter, e130's batch-side τ derivation). */
   private[graft] def pplScoredDir(s: SparkSession, d: String): String =
-    modelSegs.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|ppl-scored") {
-      dir =>
-        // the reference LM tables land in the same artifact: the
-        // stream twins (e127/e128/e130/e135) pin their vocab-bounded
-        // literal sidecars from here instead of re-running the
-        // reference aggregation per call, and the scoring pass below
-        // reads them back so the ref slice aggregates once, not once
-        // per model table
-        val (c2, c1, v) = pplRefLm(s, d)
-        c2.write.mode("overwrite").parquet(s"$dir/lm_c2")
-        c1.write.mode("overwrite").parquet(s"$dir/lm_c1")
-        v.write.mode("overwrite").parquet(s"$dir/lm_v")
-        val (c2r, c1r, vr) = pplRefLmCachedFrom(s, dir)
-        val bcast = DedupOps.estShingles(s, d) <= DedupOps.dictBroadcastCeiling
-        def dict(df: DataFrame): DataFrame =
-          if (bcast) broadcast(df) else df.hint("shuffle_hash")
-        pplScoredDocs(s, d,
-          pplScoreRows(bigramRows(s, d), c2r, c1r, vr, dict)
-            .select("doc_id", "lpm"))
-          .write.mode("overwrite").parquet(s"$dir/scored")
+    modelSegs.getOrBuild(s, d, "ppl-scored") { dir =>
+      // the reference LM tables land in the same artifact: the
+      // stream twins (e127/e128/e130/e135) pin their vocab-bounded
+      // literal sidecars from here instead of re-running the
+      // reference aggregation per call, and the scoring pass below
+      // reads them back so the ref slice aggregates once, not once
+      // per model table
+      val (c2, c1, v) = pplRefLm(s, d)
+      c2.write.mode("overwrite").parquet(s"$dir/lm_c2")
+      c1.write.mode("overwrite").parquet(s"$dir/lm_c1")
+      v.write.mode("overwrite").parquet(s"$dir/lm_v")
+      val (c2r, c1r, vr) = pplRefLmCachedFrom(s, dir)
+      val bcast = DedupOps.estShingles(s, d) <= DedupOps.dictBroadcastCeiling
+      def dict(df: DataFrame): DataFrame =
+        if (bcast) broadcast(df) else df.hint("shuffle_hash")
+      pplScoredDocs(s, d,
+        pplScoreRows(bigramRows(s, d), c2r, c1r, vr, dict)
+          .select("doc_id", "lpm"))
+        .write.mode("overwrite").parquet(s"$dir/scored")
     }
 
   private def pplRefLmCachedFrom(s: SparkSession, dir: String)
@@ -2666,7 +2653,7 @@ object TextOps {
   /** Targeted clear for the scored artifact alone — the warm re-time
     * contract (a full [[clearModelSegs]] would also drop the t79/t81
     * segment artifacts other line items already paid for). */
-  def clearPplScored(): Unit = modelSegs.clearMatching("|ppl-scored")
+  def clearPplScored(): Unit = modelSegs.clear("ppl-scored")
 
   /** The UNORDERED per-doc scored frame (doc_id, lang, n_bigrams,
     * avg_nlp_micro) — t75's whole scoring pass without the
@@ -2759,8 +2746,7 @@ object TextOps {
     // one corpus bigram pass fills all three cohort segments — the
     // [[dsirCountsBaseDir]] rationale verbatim (the en-filter commutes
     // with the cohort split; a cohort keeps exactly its nonzero rows)
-    val uuid = org.apache.spark.sql.graft.Bridge.sessionUUID(s)
-    modelSegs.getOrBuild(s"$uuid|$d|ppl-base") { dir =>
+    modelSegs.getOrBuild(s, d, "ppl-base") { dir =>
       val cohorts = Seq(
         "base" -> (col("doc_id") % 5 =!= 4),
         "delta" -> (col("doc_id") % 5 === 4),
@@ -2776,8 +2762,8 @@ object TextOps {
           .select(col("w1"), col("w2"), col(s"c_$tag").as("c2"))
           .write.mode("overwrite").parquet(s"$target/c2")
       wr(dir, "base")
-      modelSegs.getOrBuild(s"$uuid|$d|ppl-delta")(wr(_, "delta"))
-      modelSegs.getOrBuild(s"$uuid|$d|ppl-retract")(wr(_, "retr"))
+      modelSegs.getOrBuild(s, d, "ppl-delta")(wr(_, "delta"))
+      modelSegs.getOrBuild(s, d, "ppl-retract")(wr(_, "retr"))
       ()
     }
   }
@@ -2785,13 +2771,11 @@ object TextOps {
   /** The DELTA LM segment: the new batch's en-slice bigram counts
     * (doc_id % 5 == 4) — the absorb step, O(batch). */
   private[graft] def pplC2DeltaDir(s: SparkSession, d: String): String =
-    modelSegs.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|ppl-delta") {
-      dir =>
-        bigramRowsOf(documents(s, d).filter(col("doc_id") % 5 === 4))
-          .filter(col("lang") === "en")
-          .groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-          .write.mode("overwrite").parquet(s"$dir/c2")
+    modelSegs.getOrBuild(s, d, "ppl-delta") { dir =>
+      bigramRowsOf(documents(s, d).filter(col("doc_id") % 5 === 4))
+        .filter(col("lang") === "en")
+        .groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
+        .write.mode("overwrite").parquet(s"$dir/c2")
     }
 
   /** t81: t75's perplexity filter served from the INCREMENTALLY-
@@ -2834,13 +2818,11 @@ object TextOps {
     * artifact its documents contributed to, so the two retract
     * segments share the cohort by design. */
   private[graft] def pplC2RetractDir(s: SparkSession, d: String): String =
-    modelSegs.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|ppl-retract") {
-      dir =>
-        bigramRowsOf(documents(s, d).filter(col("doc_id") % 10 === 7))
-          .filter(col("lang") === "en")
-          .groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-          .write.mode("overwrite").parquet(s"$dir/c2")
+    modelSegs.getOrBuild(s, d, "ppl-retract") { dir =>
+      bigramRowsOf(documents(s, d).filter(col("doc_id") % 10 === 7))
+        .filter(col("lang") === "en")
+        .groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
+        .write.mode("overwrite").parquet(s"$dir/c2")
     }
 
   /** t83: t82's retraction on the SECOND model artifact — the
@@ -2917,17 +2899,15 @@ object TextOps {
     * shift every add-one-smoothed score. O(segments · vocab²) count
     * rows, never the corpus text. */
   private[graft] def pplC2FoldedDir(s: SparkSession, d: String): String =
-    modelSegs.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|ppl-folded") {
-      dir =>
-        s.read.parquet(s"${pplC2BaseDir(s, d)}/c2")
-          .unionByName(s.read.parquet(s"${pplC2DeltaDir(s, d)}/c2"))
-          .unionByName(s.read
-            .parquet(s"${pplC2RetractDir(s, d)}/c2")
-            .select(col("w1"), col("w2"), col("c2").unary_-.as("c2")))
-          .groupBy("w1", "w2").agg(sum("c2").as("c2"))
-          .filter(col("c2") > 0)
-          .write.mode("overwrite").parquet(s"$dir/c2")
+    modelSegs.getOrBuild(s, d, "ppl-folded") { dir =>
+      s.read.parquet(s"${pplC2BaseDir(s, d)}/c2")
+        .unionByName(s.read.parquet(s"${pplC2DeltaDir(s, d)}/c2"))
+        .unionByName(s.read
+          .parquet(s"${pplC2RetractDir(s, d)}/c2")
+          .select(col("w1"), col("w2"), col("c2").unary_-.as("c2")))
+        .groupBy("w1", "w2").agg(sum("c2").as("c2"))
+        .filter(col("c2") > 0)
+        .write.mode("overwrite").parquet(s"$dir/c2")
     }
 
   /** t86: t84's generation turnover on the SECOND model artifact —

@@ -154,7 +154,7 @@ object GraphOps {
         baseEdges(s, d).toDF("src", "dst"))
     }
 
-  private[graft] def clearIncrCcBase(): Unit = frames.drop("incr_cc_base|")
+  private[graft] def clearIncrCcBase(): Unit = frames.drop("incr_cc_base")
 
   /** The g104 absorb: fold a new edge batch into an existing
     * component labeling WITHOUT recomputing over the corpus. New
@@ -384,7 +384,7 @@ object GraphOps {
         ed, prIters, uniformTeleport)
     }
 
-  private[graft] def clearIncrPrBase(): Unit = frames.drop("incr_pr_base|")
+  private[graft] def clearIncrPrBase(): Unit = frames.drop("incr_pr_base")
 
   /** g105: WARM-START PageRank maintenance — the g104/s81 absorb
     * contract on the rank tier: a new day of orders perturbs the
@@ -585,7 +585,7 @@ object GraphOps {
     }
 
   private[graft] def clearEmailThreads(): Unit =
-    frames.drop("email_threads|")
+    frames.drop("email_threads")
 
   val emailThreadsSql: String =
     s"""${graft.query.FixtureCorpus.sqlPrelude}
@@ -1054,7 +1054,7 @@ object GraphOps {
         .select(col("id").as("vec_id"), col("component"))
     }
 
-  def clearSemanticCc(): Unit = frames.drop("semantic_cc|")
+  def clearSemanticCc(): Unit = frames.drop("semantic_cc")
 
   // LAZY: composed from SimilarityOps' SQL and read by DedupOps'
   // d62 oracle during ITS initializer — a plain val here closes an

@@ -259,19 +259,7 @@ object Validation {
 
   // ------------------------------------------------- v75 JSONL ingest
 
-  private val jsonlDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Drop the staged JSONL corpora (bench/verify epilogue). */
-  def clearJsonl(): Unit = {
-    jsonlDirs.values.forEach { dir =>
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(del)); f.delete(); ()
-      }
-      del(new java.io.File(dir))
-    }
-    jsonlDirs.clear()
-  }
+  private val jsonlDirs = new graft.ArtifactRegistry
 
   /** v75: JSONL corpus ingest with corrupt-record QUARANTINE — the
     * standard LLM-corpus interchange format read the production way:
@@ -287,10 +275,8 @@ object Validation {
   /** The staged JSONL corpus dir for (session, sfdir) — documents as
     * JSONL plus 3 deterministic malformed lines. Shared by v75 and
     * its streaming twin (e110). */
-  private[graft] def stagedJsonl(s: SparkSession, d: String): String = {
-    val key = s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d"
-    Option(jsonlDirs.get(key)).getOrElse {
-      val out = graft.Fs.scratchTempDir("graft-jsonl").toString
+  private[graft] def stagedJsonl(s: SparkSession, d: String): String =
+    jsonlDirs.getOrBuild(s, d, "jsonl") { out =>
       graft.Tables.documents(s, d)
         .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
           col("source"), col("n_chars"))).as("value"))
@@ -299,10 +285,7 @@ object Validation {
         java.nio.file.Paths.get(out, "part-corrupt.txt"),
         "{\"doc_id\": oops\nnot json at all\n[1, 2\n"
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      jsonlDirs.put(key, out)
-      out
     }
-  }
 
   /** The JSONL document schema (the explicit-schema contract both
     * readers share; the batch path appends `_corrupt_record`). */

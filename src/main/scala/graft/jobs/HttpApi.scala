@@ -142,12 +142,13 @@ class HttpApi(spark: SparkSession, tracker: JobTracker,
         // so the returned id is already pollable), then dispatch
         val tmp = graft.Fs.scratchTempFile("graft-upload-", "_" + filename
           .replaceAll("[^A-Za-z0-9._-]", "_"))
-        Files.write(tmp, bytes)
+        try Files.write(tmp, bytes)
+        catch { case e: Exception => graft.Fs.deleteTree(tmp); throw e }
         val staged: Path =
           try ZipStaging.stage(tmp.toString)
           catch {
             case e: Exception =>
-              Files.deleteIfExists(tmp)
+              graft.Fs.deleteTree(tmp)
               return (400, HttpApi.json("error" -> "bad_archive",
                 "detail" -> String.valueOf(e.getMessage)))
           }
@@ -158,7 +159,7 @@ class HttpApi(spark: SparkSession, tracker: JobTracker,
               // no job row to hand the worker: the upload copies are
               // ours to drop (the 500 reply comes from `exchange`)
               ZipStaging.cleanup(staged)
-              Files.deleteIfExists(tmp)
+              graft.Fs.deleteTree(tmp)
               throw e
           }
         // the FAILED write is itself a store write; if it throws the
@@ -194,7 +195,7 @@ class HttpApi(spark: SparkSession, tracker: JobTracker,
           } finally {
             spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
             ZipStaging.cleanup(staged)
-            Files.deleteIfExists(tmp)
+            graft.Fs.deleteTree(tmp)
             ()
           }
         }
@@ -206,7 +207,7 @@ class HttpApi(spark: SparkSession, tracker: JobTracker,
             // stranding it QUEUED forever
             markFailed(e)
             ZipStaging.cleanup(staged)
-            Files.deleteIfExists(tmp)
+            graft.Fs.deleteTree(tmp)
             return (503, HttpApi.json("error" -> "shutting_down",
               "job_id" -> jobId, "status" -> "FAILED"))
         }

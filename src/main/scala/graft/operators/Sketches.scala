@@ -441,51 +441,12 @@ object Sketches {
 
   private val censusK = 8
 
-  /** A build-once slot: the build runs on the FIRST `dir` access
-    * under the slot's own latch (callers racing on the same key share
-    * one build), so the ConcurrentHashMap mutation itself is cheap —
-    * the multi-second Spark job never runs inside a map bin lock, and
-    * an unrelated (session, dir) build is never serialized behind
-    * this one. A FAILED build leaves the slot unbuilt (the next `dir`
-    * access retries, like a lazy val) but, unlike a lazy val, the
-    * clear path can observe "unbuilt" without triggering — or
-    * re-running — the build. */
-  private final class CensusSlot(build: () => String) {
-    private var built: String = null
-    def dir: String = synchronized {
-      if (built == null) built = build()
-      built
-    }
-    /** The artifact dir if the build ever COMPLETED — waits for an
-      * in-flight build (the adopt contract) but never starts one and
-      * never re-runs a failed one. */
-    def adoptBuilt(): Option[String] = synchronized(Option(built))
-  }
-  private val censusDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, CensusSlot]()
+  /** k83's persisted census artifacts per (session, dir). */
+  private val censusDirs = new graft.ArtifactRegistry
 
-  /** Deletes the cached census artifact dirs, not just the pointers —
-    * otherwise every Bench min-of-3 rebuild leaks a temp directory
-    * (the SimilarityOps.clearCaches discipline). In-flight builds are
-    * ADOPTED, not leaked: each entry is removed from the map first,
-    * then `adoptBuilt()` waits for any concurrent build to finish
-    * before deleting — so no rebuild can resurrect the pointer and no
-    * temp dir escapes. A slot whose build FAILED (the putIfAbsent
-    * publish survives a throwing build) reports unbuilt and is simply
-    * dropped — the clear path never launches a Spark job and never
-    * re-throws a warm's failure (that would abort the whole bench
-    * run from inside an epilogue). (A caller racing clearCaches may
-    * observe its just-built artifact deleted — the same contract as
-    * SimilarityOps.clearCaches; Bench and the probes are
-    * single-threaded, so the race is theoretical there.) */
-  private[graft] def clearCaches(): Unit = {
-    val it = censusDirs.entrySet().iterator()
-    while (it.hasNext) {
-      val slot = it.next().getValue
-      it.remove()
-      slot.adoptBuilt().foreach(graft.Fs.deleteTree)
-    }
-  }
+  /** The cache_k83_census re-time clear: deletes the census artifact
+    * dirs (an in-flight build finishes first, then its dir goes). */
+  private[graft] def clearCaches(): Unit = censusDirs.clear()
 
   /** Build-or-get the persisted census artifact: per-source sketch
     * rows — KMV bottom-8 token-hash registers + token/doc counts —
@@ -496,15 +457,8 @@ object Sketches {
     * into the corpus census costs O(batch), never a corpus rescan.
     * `doc_cnt` counts docs with ≥1 token (the census is built from
     * the token stream; an all-whitespace doc contributes nothing). */
-  private[graft] def censusDir(s: SparkSession, d: String): String = {
-    val key = s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|k83"
-    // putIfAbsent of an UNBUILT lazy slot: the map mutation is cheap
-    // (no Spark job ever runs under a bin lock), losers of the race
-    // adopt the winner's slot before anything builds (so a duplicate
-    // build cannot leak a temp dir), and the build itself runs under
-    // the slot's own lazy-val latch on first access.
-    val fresh = new CensusSlot(() => {
-      val dir = graft.Fs.scratchTempDir("graft-census").toString
+  private[graft] def censusDir(s: SparkSession, d: String): String =
+    censusDirs.getOrBuild(s, d, "k83") { dir =>
       val bottomK = udaf(
         new graft.functions.BoundedAggs.BottomKDistinct(censusK),
         Encoders.scalaLong)
@@ -522,11 +476,7 @@ object Sketches {
         .write.mode("overwrite").parquet(s"$dir/census")
       segOf(docs.filter(col("doc_id") % 5 === 4), "batch")
         .write.mode("append").parquet(s"$dir/census")
-      dir
-    })
-    val prior = censusDirs.putIfAbsent(key, fresh)
-    (if (prior == null) fresh else prior).dir
-  }
+    }
 
   /** k83: the corpus census SERVED from the persisted sketch artifact
     * — the incremental-absorb contract on the stats tier. Per source:

@@ -1,7 +1,5 @@
 package graft.query
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -107,38 +105,29 @@ object FixtureCorpus {
   // one materialized store per (session, sf dir): the ~10 email-surface
   // driver queries share a single parse+merge instead of re-running it
   // per query (round-1 bench showed ~2-4 s of re-parse per query)
-  private val cache = new ConcurrentHashMap[String, DataFrame]()
+  private val frames = new graft.FrameRegistry
 
   /** The merged email store derived from `documents` at `dir`, built
     * through the real parse→merge pipeline and cached per session. */
   def store(s: SparkSession, dir: String): DataFrame =
-    cache.computeIfAbsent(s"${System.identityHashCode(s)}|$dir",
-      _ => build(s, dir))
+    frames.cached(s, dir, "store")(
+      EmailStore.mergeBatch(parsedDocs(s, dir).drop("doc_id")))
 
-  /** Unpersist all materialized stores (harness epilogue). */
-  def clear(): Unit = {
-    cache.values.forEach(df => { df.unpersist(); () })
-    cache.clear()
-  }
+  /** The cache_fixture_corpus re-time clear: the store and every aux
+    * frame. */
+  def clear(): Unit = frames.clear()
 
   /** Shared per-(session, dir, tag) frame cache for em-tier entries
-    * whose build has side effects (em71's on-disk ingest) — rides the
-    * same map so every harness clear() site covers them. */
+    * whose build has side effects (em71's on-disk ingest); the build
+    * runs outside any map lock. */
   private[query] def cachedAux(s: SparkSession, dir: String, tag: String)(
       f: => DataFrame): DataFrame =
-    cache.computeIfAbsent(
-      s"${System.identityHashCode(s)}|$dir|$tag", _ => f)
+    frames.cached(s, dir, tag)(f)
 
-  /** Drop only aux-tagged frames (targeted bench re-warm: the shared
+  /** Drop only the aux frame `tag` (targeted bench re-warm: the shared
     * fixture store survives, so rebuilding one aux entry cannot push
     * the store build into an unrelated query). */
-  private[graft] def clearAux(tag: String): Unit = {
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey.endsWith("|" + tag)) { e.getValue.unpersist(); it.remove() }
-    }
-  }
+  private[graft] def clearAux(tag: String): Unit = frames.drop(tag)
 
   private def docRows(s: SparkSession, dir: String) = {
     import s.implicits._
@@ -180,9 +169,6 @@ object FixtureCorpus {
     parsed.toDF("path", "doc_id", "doc")
       .select(col("path"), col("doc_id"), col("doc.*"))
   }
-
-  private def build(s: SparkSession, dir: String): DataFrame =
-    EmailStore.mergeBatch(parsedDocs(s, dir).drop("doc_id")).cache()
 
   /** Materialize the first `cap` synthesized messages as REAL files
     * under `base/<user>/<folder>/<id>_` — the on-disk corpus for the
