@@ -47,16 +47,30 @@ object Sessions {
     }
   }
 
-  def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
-      logLevel: String = "WARN"): SparkSession = {
+  /** Generated classes Spark keeps compiled per JVM. Spark's default
+    * is 100 (`spark.sql.codegen.cache.maxEntries`, a static conf), below
+    * the engine's working set: one run of an ingest or stream workload
+    * makes 127–136 distinct classes, and at 100 such a run compiled 171
+    * to 283 times, 23–64 of them in one HTTP upload. Every recompile is
+    * new bytecode the JIT compiles again. 2000 holds over ten such
+    * working sets. */
+  private val codegenCacheEntries = "2000"
+
+  /** The session builder every main and the test specs start from. */
+  private[graft] def builder(cpus: String): SparkSession.Builder = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries)
       .config("spark.ui.enabled", "false")
-    val spark = scratchDir.fold(b)(d => b.config("spark.local.dir", d))
-      .getOrCreate()
+    scratchDir.fold(b)(d => b.config("spark.local.dir", d))
+  }
+
+  def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
+      logLevel: String = "WARN"): SparkSession = {
+    val spark = builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
     spark
   }

@@ -109,13 +109,9 @@ object EmailIngest {
 
   /** Successfully parsed documents as store-schema rows (one row per
     * physical file — duplicates by dedupe_key are merged by EmailStore). */
-  def docs(spark: SparkSession, parsed: Dataset[ParsedFile]): DataFrame = {
-    import spark.implicits._
-    parsed.filter(_.doc.isDefined)
-      .map(p => (p.path, p.doc.get))
-      .toDF("path", "doc")
+  def docs(spark: SparkSession, parsed: Dataset[ParsedFile]): DataFrame =
+    parsed.toDF().filter(col("doc").isNotNull)
       .select(col("path"), col("doc.*"))
-  }
 
   /** Flattened per-file row for the fast ingest path — one product
     * encoder, no Option[EmailDoc] nesting, no second projection. */
@@ -154,11 +150,9 @@ object EmailIngest {
   }
 
   /** Quarantined failures (D5): path + error, never kills the job. */
-  def quarantine(spark: SparkSession, parsed: Dataset[ParsedFile]): DataFrame = {
-    import spark.implicits._
-    parsed.filter(_.error.isDefined)
-      .map(p => (p.path, p.error.get)).toDF("path", "error")
-  }
+  def quarantine(spark: SparkSession, parsed: Dataset[ParsedFile]): DataFrame =
+    parsed.toDF().filter(col("error").isNotNull)
+      .select(col("path"), col("error"))
 
   /** D8 dry-run: parse everything, write nothing, report counters
     * (ref: ingest_enron.py:154,198-199 + counters :214-216). */

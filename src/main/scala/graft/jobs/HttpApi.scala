@@ -21,8 +21,9 @@ import graft.ingest.ZipStaging
   *  - `POST /ingest` — multipart/form-data zip upload (FastAPI
   *    `UploadFile` shape, app/main.py:14) or a raw `application/zip`
   *    body with an optional `X-Filename` header. Persists the upload,
-  *    stages it ([[ZipStaging]]), inserts the QUEUED job row and
-  *    returns `{"job_id":…,"status":"QUEUED"}` IMMEDIATELY; the
+  *    stages it ([[ZipStaging]]), inserts the QUEUED job row (one
+  *    parquet file, no Spark job) and returns
+  *    `{"job_id":…,"status":"QUEUED"}` IMMEDIATELY; the
   *    scan→parse→upsert phases run on a background worker — the same
   *    submit-then-async split as the reference's `t_start_job.delay`
   *    dispatch (app/main.py:29).

@@ -1,5 +1,6 @@
 package graft.jobs
 
+import java.io.IOException
 import java.sql.Timestamp
 import java.time.Instant
 import java.time.temporal.ChronoUnit
@@ -7,6 +8,10 @@ import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.MessageTypeParser
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -23,7 +28,9 @@ import graft.store.EmailStore
   * parquet event log. Current state = latest event per job via a
   * row_number view — point updates become immutable appends, which is
   * the shape that scales (no read-modify-write races, natural audit
-  * trail).
+  * trail). An append is one single-row parquet file written with
+  * parquet-mr on the calling thread and renamed into place, not a
+  * Spark job; the log stays a parquet dir Spark reads.
   *
   * The log is the durable record; polls are served from in-process
   * state. Every event this tracker appends is folded, after its append
@@ -35,11 +42,10 @@ import graft.store.EmailStore
   * the log view.
   */
 class JobTracker(spark: SparkSession, root: String) {
-  import spark.implicits._
   import JobTracker._
 
-  private val fs = new Path(root)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val conf = spark.sparkContext.hadoopConfiguration
+  private val fs = new Path(root).getFileSystem(conf)
 
   private val live = new ConcurrentHashMap[String, Folded]()
 
@@ -48,12 +54,35 @@ class JobTracker(spark: SparkSession, root: String) {
   protected def now(): Timestamp =
     Timestamp.from(Instant.now().truncatedTo(ChronoUnit.MICROS))
 
+  /** Write one event as its own single-row parquet file, on the calling
+    * thread: under a `_`-prefixed name, which Spark's file listing
+    * skips, then renamed to a unique `part-<uuid>.parquet`. Each append
+    * touches only its own two names, so concurrent appends (HTTP
+    * threads creating jobs while the ingest worker sets statuses)
+    * cannot collide, and a failed append leaves at most a hidden temp
+    * file. */
   private def append(jobId: String, status: String, source: String,
       inputDir: String, fileCount: Long): Event = {
     val ev = Event(now(), status, source, inputDir, fileCount)
-    Seq((jobId, ev.ts, status, source, inputDir, fileCount))
-      .toDF(eventSchema.fieldNames.toIndexedSeq: _*)
-      .coalesce(1).write.mode("append").parquet(root)
+    val row = new SimpleGroupFactory(parquetSchema).newGroup()
+    Seq("job_id" -> jobId, "status" -> status, "source" -> source,
+      "input_dir" -> inputDir).foreach { case (k, v) =>
+        if (v != null) row.append(k, v)
+      }
+    val at = ev.ts.toInstant
+    row.append("event_ts", at.getEpochSecond * 1000000L + at.getNano / 1000)
+    row.append("file_count", fileCount)
+    val name = s"part-${UUID.randomUUID()}.parquet"
+    val tmp = new Path(root, "_" + name)
+    try {
+      val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+        .withConf(conf).withType(parquetSchema).build()
+      try w.write(row) finally w.close()
+      if (!fs.rename(tmp, new Path(root, name)))
+        throw new IOException(s"job event rename failed: $tmp")
+    } catch {
+      case e: Exception => fs.delete(tmp, false); throw e
+    }
     ev
   }
 
@@ -131,6 +160,19 @@ object JobTracker {
     "event_ts TIMESTAMP, status STRING, source STRING, input_dir STRING, " +
     "file_count BIGINT")
 
+  /** [[eventSchema]] as parquet types; `event_ts` is UTC-adjusted
+    * micros, which Spark reads as TIMESTAMP next to the INT96 values of
+    * logs its own writer appended. */
+  private val parquetSchema = MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  optional binary job_id (STRING);
+      |  optional int64 event_ts (TIMESTAMP(MICROS,true));
+      |  optional binary status (STRING);
+      |  optional binary source (STRING);
+      |  optional binary input_dir (STRING);
+      |  optional int64 file_count;
+      |}""".stripMargin)
+
   /** State-machine rank of a status, the tie-break at equal timestamps. */
   private val stateRanks =
     Seq("QUEUED" -> 0, "PARSING" -> 1, "PARSED" -> 2, "EMPTY" -> 2)
@@ -174,17 +216,18 @@ object JobTracker {
     * task body (app/orchestrator.py:14-60). */
   def runPhases(spark: SparkSession, tracker: JobTracker,
       store: graft.store.DocStore, jobId: String, inputDir: String): Unit = {
-    val scanned = EmailIngest.scan(spark, inputDir).cache()
-    try {
-      val n = scanned.count()
-      if (n == 0) {
-        tracker.setStatus(jobId, "EMPTY")
-      } else {
-        tracker.setStatus(jobId, "PARSING", fileCount = n)
-        val docs = EmailIngest.docs(spark, EmailIngest.parse(spark, scanned))
-        store.upsert(docs)
-        tracker.setStatus(jobId, "PARSED", fileCount = n)
-      }
-    } finally { scanned.unpersist(); () }
+    // not cached: a binaryFile count reads no file content, the parse
+    // reads each file once, and no copy of the raw bytes stays pinned
+    // for the whole job
+    val scanned = EmailIngest.scan(spark, inputDir)
+    val n = scanned.count()
+    if (n == 0) {
+      tracker.setStatus(jobId, "EMPTY")
+    } else {
+      tracker.setStatus(jobId, "PARSING", fileCount = n)
+      val docs = EmailIngest.docs(spark, EmailIngest.parse(spark, scanned))
+      store.upsert(docs)
+      tracker.setStatus(jobId, "PARSED", fileCount = n)
+    }
   }
 }

@@ -2,8 +2,10 @@ package graft.store
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.model.EmailDoc
 
 /** Month-partitioned email store with partition-scoped upsert — the
   * 100 TB write path.
@@ -48,6 +50,21 @@ class PartitionedEmailStore(spark: SparkSession, root: String)
     * kept so month predicates prune at planning time). */
   def read(): DataFrame = spark.read.parquet(root)
 
+  /** The stored rows of `months`, without the partition column. One
+    * driver listing of the root picks the month dirs that exist, read
+    * with the fixed store schema: [[read]] would infer the schema with a
+    * job of its own. */
+  private def readMonths(months: Seq[String]): DataFrame = {
+    val dirs = months.map(m => s"date_month=$m").toSet
+    val present = fs.listStatus(new Path(root))
+      .filter(st => st.isDirectory && dirs(st.getPath.getName))
+      .map(_.getPath.toString)
+    if (present.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        EmailDoc.schema)
+    else spark.read.schema(EmailDoc.schema).parquet(present.toIndexedSeq: _*)
+  }
+
   /** Month-pruned date-range scan (Q4 read path). */
   def readDateRange(from: java.sql.Timestamp,
       until: java.sql.Timestamp): DataFrame =
@@ -79,14 +96,12 @@ class PartitionedEmailStore(spark: SparkSession, root: String)
           val pruned = index.prunedFor(batchKeys)
           // months already holding any batch key: bucket-pruned index
           // probe — reads the batch's kb dirs, not the store
-          val keyMonths = index.monthsFor(batchKeys, pruned)
+          val keyMonths = index.monthsFor(batchKeys, pruned.rows)
           // months the batch itself lands in
           val batchMonths = compact.select(monthCol.as("date_month")).distinct()
           val affected = keyMonths.union(batchMonths).distinct()
             .collect().map(_.getString(0))
-          val existing = read()
-            .filter(col("date_month").isin(affected.toSeq: _*))
-            .drop("date_month")
+          val existing = readMonths(affected.toSeq)
           // materialize BEFORE the overwrite: `merged` lazily reads the
           // same parquet path write() then rewrites, and a speculative/
           // retried task re-reading an affected-month file after the

@@ -10,7 +10,7 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.jobs.{HttpApi, JobTracker}
-import graft.store.EmailStore
+import graft.store.{EmailStore, PartitionedEmailStore}
 
 /** The reference's HTTP workflow (app/main.py:13-35) over a real
   * loopback socket: multipart zip upload → immediate QUEUED job id →
@@ -18,6 +18,10 @@ import graft.store.EmailStore
 class HttpApiSpec extends AnyFunSuite with SparkSpec {
 
   private val client = HttpClient.newHttpClient()
+
+  /** Spark jobs one upload's worker starts when it merges 6 files into
+    * a non-empty partitioned store, as measured. */
+  private val WorkerJobs = 18
 
   private def get(port: Int, path: String): String =
     client.send(
@@ -365,6 +369,42 @@ class HttpApiSpec extends AnyFunSuite with SparkSpec {
     assert((uploadCopies() -- before).isEmpty)
   }
 
+  /** The Spark jobs started while `body` runs, as (job group, scheduler
+    * pool) pairs. Job starts reach the listener asynchronously, in
+    * order: marker jobs run before and after `body` bound the window. */
+  private def jobsDuring(body: => Unit): Seq[(String, String)] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        def prop(k: String) =
+          String.valueOf(Option(e.properties).map(_.getProperty(k)).orNull)
+        seen.add((prop("spark.jobGroup.id"), prop("spark.scheduler.pool")))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      marker("jobs-begin")
+      body
+      marker("jobs-end")
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(_._1 == "jobs-end") &&
+          System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val all = seen.asScala.toSeq
+      assert(all.exists(_._1 == "jobs-end"))
+      all.dropWhile(_._1 != "jobs-begin").dropWhile(_._1 == "jobs-begin")
+        .takeWhile(_._1 != "jobs-end")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Marker jobs in their own job group. */
+  private def marker(name: String): Unit = {
+    spark.sparkContext.setJobGroup(name, name)
+    try spark.range(1).count()
+    finally spark.sparkContext.clearJobGroup()
+  }
+
   test("polls of a job this server created run no Spark job") {
     withApi { (_, port, _, _) =>
       val (ctype, body) = multipart("poll.zip",
@@ -377,36 +417,48 @@ class HttpApiSpec extends AnyFunSuite with SparkSpec {
       val jobId = field(resp.body(), "job_id").get
       assert(awaitTerminal(port, jobId) == "PARSED")
 
-      // job starts reach the listener asynchronously, in order: marker
-      // jobs run before and after the polls bound the window
-      val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          groups.add(String.valueOf(
-            Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
-      }
-      def marker(name: String): Unit = {
-        spark.sparkContext.setJobGroup(name, name)
-        try spark.range(1).count()
-        finally spark.sparkContext.clearJobGroup()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        marker("polls-begin")
+      val window = jobsDuring {
         (1 to 20).foreach { _ =>
           assert(field(get(port, s"/jobs/$jobId"), "status").contains("PARSED"))
         }
-        marker("polls-end")
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (!groups.contains("polls-end") && System.nanoTime() < deadline)
-          Thread.sleep(20)
-        val window = groups.asScala.toSeq
-          .dropWhile(_ != "polls-begin").dropWhile(_ == "polls-begin")
-          .takeWhile(_ != "polls-end")
-        assert(groups.contains("polls-end"))
-        assert(window.isEmpty, s"polls started Spark jobs: $groups")
-      } finally spark.sparkContext.removeSparkListener(listener)
+      }
+      assert(window.isEmpty, s"polls started Spark jobs: $window")
     }
+  }
+
+  test("an upload's POST starts no Spark job, its worker a bounded number") {
+    val dir = Files.createTempDirectory("graft-http-jobs")
+    val tracker = new JobTracker(spark, dir.resolve("jobs").toString)
+    val store = new PartitionedEmailStore(spark, dir.resolve("store").toString)
+    val api = new HttpApi(spark, tracker, store)
+    val port = api.start()
+    def upload(name: String, ids: Seq[String]): String = {
+      val (ctype, body) = multipart(name, buildZip(ids.zipWithIndex.map {
+        case (id, i) => s"u${i % 2}/inbox/${i}_" -> msg(id)
+      }: _*))
+      val resp = client.send(
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/ingest"))
+          .header("Content-Type", ctype)
+          .POST(HttpRequest.BodyPublishers.ofByteArray(body)).build(),
+        HttpResponse.BodyHandlers.ofString())
+      field(resp.body(), "job_id").get
+    }
+    try {
+      // the first upload builds the store; the measured one merges into it
+      assert(awaitTerminal(port, upload("a.zip", (0 until 6).map(i => s"w$i")))
+        == "PARSED")
+      var jobId = ""
+      val window = jobsDuring {
+        jobId = upload("b.zip", (3 until 9).map(i => s"w$i"))
+        marker("posted")
+        assert(awaitTerminal(port, jobId) == "PARSED")
+      }
+      val handler = window.takeWhile(_._1 != "posted")
+        .filterNot(_._2 == "ingest")
+      assert(handler.isEmpty, s"the POST handler started Spark jobs: $handler")
+      val worker = window.count(_._2 == "ingest")
+      assert(worker > 0 && worker <= WorkerJobs, s"worker jobs: $worker")
+      assert(store.read().count() == 9)
+    } finally api.stop()
   }
 }

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -63,5 +65,92 @@ class JobTrackerSpec extends AnyFunSuite with SparkSpec {
     assert(tracker.lookup(tie) == logView(tracker, tie))
     assert(tracker.lookup("no-such-job").isEmpty)
     assert(logView(tracker, "no-such-job").isEmpty)
+  }
+
+  private def rows(tracker: JobTracker): Seq[(String, String, Long)] =
+    tracker.events().select("job_id", "status", "file_count").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq.sorted
+
+  test("concurrent appends all land, none throws") {
+    val root = Files.createTempDirectory("graft-jobrace").resolve("jobs")
+    val tracker = new JobTracker(spark, root.toString)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      // each thread creates a job and appends 40 events in all to it
+      val runs = (1 to 2).map { t =>
+        pool.submit { () =>
+          val id = tracker.create(s"t$t.zip", s"/in/t$t")
+          (1 to 39).foreach(i => tracker.setStatus(id, "PARSING", fileCount = i))
+          id
+        }
+      }
+      val ids = runs.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      val appended = ids.flatMap(id =>
+        (id, "QUEUED", -1L) +: (1 to 39).map(i => (id, "PARSING", i.toLong)))
+      assert(rows(tracker) == appended.sorted)
+      ids.foreach { id =>
+        assert(tracker.lookup(id) == logView(tracker, id), id)
+        assert(tracker.lookup(id).map(d => (d.status, d.fileCount))
+          .contains(("PARSING", 39L)))
+      }
+    } finally {
+      // a failed thread must not leave the other appending into later specs
+      pool.shutdown()
+      pool.awaitTermination(120, java.util.concurrent.TimeUnit.SECONDS)
+    }
+  }
+
+  test("a log of Spark-appended and single-file events reads the same after restart") {
+    val root = Files.createTempDirectory("graft-jobmixed").resolve("jobs")
+    // events as a Spark append writes them, INT96 event_ts included
+    val old = "0ld-job"
+    val t0 = Timestamp.valueOf("2001-02-03 04:05:06.123456")
+    val t1 = Timestamp.valueOf("2001-02-03 04:05:07.5")
+    import spark.implicits._
+    Seq((old, t0, "QUEUED", "old.zip", "/in/old", -1L),
+      (old, t1, "PARSING", "", "", 4L))
+      .toDF("job_id", "event_ts", "status", "source", "input_dir", "file_count")
+      .coalesce(1).write.mode("append").parquet(root.toString)
+    val sparkFile = Files.list(root).iterator().asScala
+      .find(_.toString.endsWith(".parquet")).get
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+      spark.sparkContext.hadoopConfiguration,
+      new org.apache.hadoop.fs.Path(sparkFile.toString))
+    assert(footer.getFileMetaData.getSchema.getFields.asScala
+      .find(_.getName == "event_ts").get
+      .asPrimitiveType.getPrimitiveTypeName.name == "INT96")
+
+    val tracker = new JobTracker(spark, root.toString)
+    tracker.setStatus(old, "PARSED", fileCount = 4)
+    val fresh = tracker.create("new.zip", "/in/new")
+    tracker.setStatus(fresh, "EMPTY")
+
+    val restarted = new JobTracker(spark, root.toString)
+    assert(restarted.lookup(fresh) == tracker.lookup(fresh))
+    assert(restarted.lookup(fresh).map(_.status).contains("EMPTY"))
+    assert(restarted.lookup(old) == tracker.lookup(old))
+    val doc = restarted.lookup(old).get
+    assert((doc.status, doc.source, doc.inputDir, doc.fileCount) ==
+      (("PARSED", "old.zip", "/in/old", 4L)))
+    assert(doc.updatedAt.after(t1))
+    assert(restarted.events().filter(col("job_id") === old)
+      .select("event_ts").as[Timestamp].collect().toSet.intersect(Set(t0, t1))
+      == Set(t0, t1))
+  }
+
+  test("a leftover temp file of an unfinished append is not an event") {
+    val dir = Files.createTempDirectory("graft-jobtmp")
+    val root = dir.resolve("jobs")
+    val tracker = new JobTracker(spark, root.toString)
+    val id = tracker.create("a.zip", "/in/a")
+    // a complete single-event file under the temp name, as an append
+    // that stopped before its rename leaves it
+    val other = new JobTracker(spark, dir.resolve("other").toString)
+    other.create("b.zip", "/in/b")
+    val part = Files.list(dir.resolve("other")).iterator().asScala
+      .find(_.getFileName.toString.startsWith("part-")).get
+    Files.copy(part, root.resolve("_" + part.getFileName))
+    assert(rows(tracker) == Seq((id, "QUEUED", -1L)))
+    assert(new JobTracker(spark, root.toString).currentState().count() == 1)
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -12,8 +14,10 @@ import graft.store.{KeyIndex, PartitionedEmailStore}
   * once per batch, reading only the batch's existing `kb=` dirs. Edge
   * cases of that probe: buckets with no dir yet, batches of only new
   * keys, batches wider than Spark's parallel-listing threshold (32
-  * paths). After every upsert the index must equal a full rebuild from
-  * the store it indexes. */
+  * paths). The index sizes its bucket count B to its contents: an
+  * index without a recorded B is rebuilt, and one that outgrows B is
+  * re-bucketed. After every upsert the index must equal a full rebuild
+  * from the store it indexes. */
 class KeyIndexSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
@@ -29,9 +33,11 @@ class KeyIndexSpec extends AnyFunSuite with SparkSpec {
     spark.createDataset(docs).toDF("path", "doc").select(col("path"), col("doc.*"))
   }
 
-  private def bucketOf(ids: Seq[Int]): Map[Int, Int] =
+  private def bucketOf(store: PartitionedEmailStore,
+      ids: Seq[Int]): Map[Int, Int] =
     ids.map(i => (i, s"<k$i@x>")).toDF("id", "dedupe_key")
-      .select(col("id"), pmod(hash(col("dedupe_key")), lit(64)))
+      .select(col("id"), pmod(hash(col("dedupe_key")),
+        lit(store.index.numBuckets)))
       .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
 
   private def kbDirs(store: PartitionedEmailStore): Set[Int] =
@@ -43,13 +49,22 @@ class KeyIndexSpec extends AnyFunSuite with SparkSpec {
     spark.read.parquet(path).select("dedupe_key", "date_month", "kb")
       .as[(String, String, Int)].collect().toSet
 
+  /** The index holds exactly a rebuild's entries, bucketed by its own
+    * B: a rebuild sizes B from scratch, while a refreshed index keeps
+    * the B its history grew to. */
   private def assertIndexIsRebuild(store: PartitionedEmailStore,
       scratch: java.nio.file.Path): Unit = {
     val ref = new KeyIndex(spark,
       Files.createTempDirectory(scratch, "ref").toString)
     ref.rebuild(store.read().select("dedupe_key", "date_month"))
     assert(store.index.exists)
-    assert(entries(store.index.path) == entries(ref.path))
+    val b = store.index.numBuckets
+    val want = spark.read.parquet(ref.path)
+      .select(col("dedupe_key"), col("date_month"),
+        pmod(hash(col("dedupe_key")), lit(b)))
+      .as[(String, String, Int)].collect().toSet
+    assert(entries(store.index.path) == want)
+    assert(kbDirs(store).forall(_ < b))
     // and the store still holds each key once
     assert(store.read().groupBy("dedupe_key").count()
       .filter(col("count") > 1).isEmpty)
@@ -60,15 +75,22 @@ class KeyIndexSpec extends AnyFunSuite with SparkSpec {
     val store = new PartitionedEmailStore(spark, dir.resolve("store").toString)
     store.upsert(batch(Seq(1 -> 0, 2 -> 1, 3 -> 2)))
     assertIndexIsRebuild(store, dir)
+    // three keys fit one bucket at the default advisory size: rebuild
+    // at a tiny one so the steps below probe a many-bucket index
+    withAdvisorySize("8b") {
+      store.index.rebuild(store.read().select("dedupe_key", "date_month"))
+    }
+    assert(store.index.numBuckets >= 64)
+    assertIndexIsRebuild(store, dir)
 
     // keys whose buckets have no kb= dir yet: the probe reads nothing
     val present = kbDirs(store)
-    val absent = bucketOf(100 until 400).toSeq
+    val absent = bucketOf(store, 100 until 400).toSeq
       .filterNot { case (_, b) => present(b) }
       .groupBy(_._2).values.map(_.head._1).toSeq.sorted.take(2)
     assert(absent.length == 2)
     store.upsert(batch(absent.map(_ -> 3)))
-    assert(bucketOf(absent).values.forall(kbDirs(store)))
+    assert(bucketOf(store, absent).values.forall(kbDirs(store)))
     assert(store.index.monthsFor(absent.map(i => s"<k$i@x>").toDF("dedupe_key"))
       .as[String].collect().toSeq == Seq("2001-04"))
     assertIndexIsRebuild(store, dir)
@@ -79,7 +101,7 @@ class KeyIndexSpec extends AnyFunSuite with SparkSpec {
 
     // more buckets than the parallel-listing threshold
     val wide = 600 until 720
-    assert(bucketOf(wide).values.toSet.size > 32)
+    assert(bucketOf(store, wide).values.toSet.size > 32)
     store.upsert(batch(wide.map(i => i -> (i % 4)) :+ (1 -> 3)))
     assertIndexIsRebuild(store, dir)
     // key 1 kept its first writer's month
@@ -87,7 +109,7 @@ class KeyIndexSpec extends AnyFunSuite with SparkSpec {
       .as[String].collect().toSeq == Seq("2001-01"))
     // more EXISTING kb= dirs than the threshold: every wide key
     // redelivered in another month must keep its first month
-    assert((bucketOf(wide).values.toSet intersect kbDirs(store)).size > 32)
+    assert((bucketOf(store, wide).values.toSet intersect kbDirs(store)).size > 32)
     store.upsert(batch(wide.map(i => i -> ((i + 1) % 4))))
     assertIndexIsRebuild(store, dir)
     assert(store.read()
@@ -102,5 +124,73 @@ class KeyIndexSpec extends AnyFunSuite with SparkSpec {
         (rng.nextInt(800), rng.nextInt(4)))))
       assertIndexIsRebuild(store, dir)
     }
+  }
+
+  private def indexFiles(store: PartitionedEmailStore): Long = {
+    def walk(f: java.io.File): Long =
+      if (f.isDirectory) f.listFiles().map(walk).sum
+      else if (f.getName.endsWith(".parquet")) 1L else 0L
+    walk(new java.io.File(store.index.path))
+  }
+
+  test("an index marker without a bucket count reads as absent and is rebuilt") {
+    val dir = Files.createTempDirectory("graft-kidx-legacy")
+    val store = new PartitionedEmailStore(spark, dir.resolve("store").toString)
+    store.upsert(batch(Seq(1 -> 0, 2 -> 1, 3 -> 2)))
+    // the layout of an index written with the fixed 64 buckets: kb dirs
+    // of pmod(hash, 64) and an empty validity marker
+    store.read()
+      .select(col("dedupe_key"), col("date_month"),
+        pmod(hash(col("dedupe_key")), lit(64)).as("kb"))
+      .write.mode("overwrite").partitionBy("kb").parquet(store.index.path)
+    Files.write(Paths.get(store.index.path, "_GRAFT_INDEX_OK"), Array[Byte]())
+    assert(kbDirs(store).exists(_ > 0) && !store.index.exists)
+
+    // key 1 redelivered in another month: the bootstrap rebuild must
+    // still find the month that holds it
+    store.upsert(batch(Seq(4 -> 3, 1 -> 2)))
+    assert(store.index.numBuckets == 1 && kbDirs(store) == Set(0))
+    assertIndexIsRebuild(store, dir)
+    assert(store.index.monthsFor(Seq("<k1@x>").toDF("dedupe_key"))
+      .as[String].collect().toSeq == Seq("2001-01"))
+  }
+
+  test("an index that outgrows its buckets is re-bucketed and still prunes") {
+    val dir = Files.createTempDirectory("graft-kidx-grow")
+    val store = new PartitionedEmailStore(spark, dir.resolve("store").toString)
+    store.upsert(batch((1 to 40).map(i => i -> (i % 4))))
+    assert(store.index.numBuckets == 1 && indexFiles(store) == 1)
+    val bytes = Files.walk(Paths.get(store.index.path)).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).map(Files.size).sum
+    // an advisory size 1/16 of the index: the next refresh leaves the
+    // index above B × advisory, so it re-buckets
+    withAdvisorySize(s"${bytes / 16}b") {
+      store.upsert(batch((35 to 60).map(i => i -> ((i + 1) % 4))))
+    }
+    assert(store.index.numBuckets >= 16)
+    assertIndexIsRebuild(store, dir)
+    // redelivered keys kept their first month
+    assert(store.index.monthsFor(Seq("<k35@x>").toDF("dedupe_key"))
+      .as[String].collect().toSeq == Seq("2001-04"))
+
+    // the probe of one key reads one bucket's file, not the index
+    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val probe = store.index.monthsFor(Seq("<k7@x>").toDF("dedupe_key"))
+      assert(probe.collect().map(_.getString(0)).toSeq == Seq("2001-04"))
+      val scanned = probe.queryExecution.executedPlan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.metrics("numFiles").value
+      }.sum
+      assert(scanned == 1 && indexFiles(store) >= 8,
+        s"scanned=$scanned of ${indexFiles(store)} index files")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+
+    // later upserts at the default size keep the grown B
+    val b = store.index.numBuckets
+    store.upsert(batch(Seq(61 -> 0, 1 -> 3)))
+    assert(store.index.numBuckets == b)
+    assertIndexIsRebuild(store, dir)
   }
 }

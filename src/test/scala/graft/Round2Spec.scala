@@ -145,6 +145,12 @@ class Round2Spec extends AnyFunSuite with SparkSpec {
         .toDF("path", "doc").select(col("path"), col("doc.*"))
 
     store.upsert(batch((1 to 60).map(i => i -> (i % 3))))
+    // 60 keys fit one bucket at the default advisory size: rebuild the
+    // index at a tiny one so its buckets are many, one file each
+    withAdvisorySize("8b") {
+      store.index.rebuild(store.read().select("dedupe_key", "date_month"))
+    }
+    assert(store.index.numBuckets >= 64)
     // incremental path: second upsert exercises probe + bucket refresh
     store.upsert(batch(Seq(61 -> 0, 7 -> 2)))
 
