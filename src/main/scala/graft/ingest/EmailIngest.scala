@@ -1,5 +1,7 @@
 package graft.ingest
 
+import org.apache.hadoop.fs.Path
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,7 +22,8 @@ import graft.model.ParsedFile
   * ref: try/except at ingest_enron.py:181,205-206 → SURVEY.md §2.7 D5).
   * Ordering: the reference's sorted walk gives "first writer" semantics
   * for duplicate keys; here determinism comes from explicit ordering by
-  * `path` in the merge (EmailStore), so scan order is irrelevant.
+  * `path` in the merge (EmailStore.mergeBatch), so scan order is
+  * irrelevant.
   */
 object EmailIngest {
 
@@ -31,7 +34,7 @@ object EmailIngest {
     * intermediate directory becomes "user") and fabricate hierarchy for
     * shallower ones. */
   private[graft] def depth3Pattern(spark: SparkSession, baseDir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(baseDir)
+    val p = new Path(baseDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val base = fs.makeQualified(p).toString.stripSuffix("/")
     "^" + java.util.regex.Pattern.quote(base) + "/([^/]+)/([^/]+)/([^/]+)$"
@@ -47,6 +50,11 @@ object EmailIngest {
         StructField("content", BinaryType))))
   }
 
+  /** `path` with Hadoop glob metacharacters backslash-escaped, so a
+    * glob-expanding reader takes it literally (a folder named `a[1]`). */
+  private def escapeGlob(path: String): String =
+    path.replaceAll("""([\\{}\[\]*?])""", """\\$1""")
+
   /** S1/S2: depth-3 scan + hierarchy columns anchored at `baseDir`.
     * The glob stops at the FOLDER level (`base/&#42;/&#42;`): globbing all the
     * way to files would enumerate every file as its own root path on
@@ -55,25 +63,27 @@ object EmailIngest {
     * pattern filter then keeps exactly `base/<user>/<folder>/<file>`
     * rows — deeper files (inside nested folders) and shallower ones are
     * dropped, matching the reference's exactly-depth-3 walk
-    * (ingest_enron.py:164-178). */
+    * (ingest_enron.py:164-178).
+    *
+    * The glob is expanded here, once, and the reader gets the matched
+    * roots: handed the glob text itself, Spark's file-sink metadata
+    * probe stats that literal path, which never exists, and logs a
+    * WARN with a stack trace on every scan. */
   def scan(spark: SparkSession, baseDir: String): DataFrame = {
     val pat = depth3Pattern(spark, baseDir)
-    val df =
-      try spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(s"$baseDir/*/*")
-      catch {
-        // no depth-2 entries at all → empty ingest (the reference's
-        // EMPTY short-circuit, app/orchestrator.py:53-56). Match ONLY
-        // the path-not-found condition: a permissions failure or bad
-        // scheme also surfaces as AnalysisException, and swallowing it
-        // would record a successful-looking EMPTY job for data that
-        // was silently never ingested.
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" =>
-          return emptyScan(spark)
-      }
-    df.filter(col("path").rlike(pat))
+    val glob = new Path(escapeGlob(baseDir) + "/*/*")
+    val fs = glob.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val roots = Option(fs.globStatus(glob)).toSeq.flatten
+      .map(st => escapeGlob(st.getPath.toString))
+    // no depth-2 entries at all → empty ingest (the reference's EMPTY
+    // short-circuit, app/orchestrator.py:53-56); any other listing
+    // failure throws rather than record an EMPTY job for data that was
+    // never ingested
+    if (roots.isEmpty) return emptyScan(spark)
+    spark.read.format("binaryFile")
+      .option("recursiveFileLookup", "true")
+      .load(roots: _*)
+      .filter(col("path").rlike(pat))
       .select(
         col("path"),
         regexp_extract(col("path"), pat, 1).as("user"),
@@ -108,60 +118,14 @@ object EmailIngest {
     parse(spark, scan(spark, baseDir))
 
   /** Successfully parsed documents as store-schema rows (one row per
-    * physical file — duplicates by dedupe_key are merged by EmailStore). */
+    * physical file — duplicates by dedupe_key are merged by the store's
+    * upsert). */
   def docs(spark: SparkSession, parsed: Dataset[ParsedFile]): DataFrame =
     parsed.toDF().filter(col("doc").isNotNull)
       .select(col("path"), col("doc.*"))
-
-  /** Flattened per-file row for the fast ingest path — one product
-    * encoder, no Option[EmailDoc] nesting, no second projection. */
-  case class EmailRow(
-      path: String, dedupe_key: String, message_id: Option[String],
-      date: Option[java.sql.Timestamp], from: String,
-      to: Seq[String], cc: Seq[String], bcc: Seq[String],
-      subject: String, body: String,
-      attachments: Seq[graft.model.Attachment],
-      mailboxes: Seq[graft.model.Mailbox],
-      headers: Map[String, String],
-      entities: Seq[graft.model.Entity],
-      thread_id: Option[String])
-
-  /** Direct path: scan → store-schema rows in ONE mapPartitions with a
-    * flat encoder. Steady-state cost matches the typed ParsedFile →
-    * flatten route (measured: both ~1.2s/25k files warm); the win is
-    * cold-start (single simpler codegen unit, 1.5s vs 3.0s first run).
-    * Parse failures are silently dropped here — use
-    * `ingest`+`quarantine` when the error stream matters. */
-  def docsFromScan(spark: SparkSession, scanned: DataFrame): DataFrame = {
-    import spark.implicits._
-    scanned
-      .select("path", "user", "folder", "filename", "content")
-      .as[(String, String, String, String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (path, user, folder, filename, content) =>
-          try {
-            val d = Rfc822Parser.parse(content, user, folder, filename)
-            Some(EmailRow(path, d.dedupe_key, d.message_id, d.date, d.from,
-              d.to, d.cc, d.bcc, d.subject, d.body, d.attachments,
-              d.mailboxes, d.headers, d.entities, d.thread_id))
-          } catch { case _: Exception => None }
-        }
-      }.toDF()
-  }
 
   /** Quarantined failures (D5): path + error, never kills the job. */
   def quarantine(spark: SparkSession, parsed: Dataset[ParsedFile]): DataFrame =
     parsed.toDF().filter(col("error").isNotNull)
       .select(col("path"), col("error"))
-
-  /** D8 dry-run: parse everything, write nothing, report counters
-    * (ref: ingest_enron.py:154,198-199 + counters :214-216). */
-  def dryRun(spark: SparkSession, baseDir: String): (Long, Long) = {
-    val parsed = ingest(spark, baseDir).cache()
-    try {
-      val ok = parsed.filter(_.doc.isDefined).count()
-      val failed = parsed.filter(_.error.isDefined).count()
-      (ok, failed)
-    } finally parsed.unpersist()
-  }
 }

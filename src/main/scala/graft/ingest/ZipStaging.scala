@@ -16,7 +16,7 @@ import java.util.zip.ZipInputStream
 object ZipStaging {
 
   /** Extract `zipPath` into a fresh temp directory; returns the staged
-    * root to hand to EmailIngest.scan / JobTracker.runIngestJob. */
+    * root to hand to EmailIngest.scan / JobTracker.runPhases. */
   def stage(zipPath: String): Path = {
     val target = graft.Fs.scratchTempDir("graft-zip-stage")
     try stageInto(zipPath, target)

@@ -178,7 +178,9 @@ class HttpApi(spark: SparkSession, tracker: JobTracker,
                 System.err.println(s"[http-api] job $jobId failed ($cause) " +
                   s"AND the FAILED status write failed twice ($e2) — job " +
                   "may still read as in-flight; manual reconcile needed")
-              case _: Exception => ()
+              case e1: Exception =>
+                System.err.println(s"[http-api] job $jobId: FAILED status " +
+                  s"write failed ($e1); retrying once")
             }
           }
         }

@@ -19,7 +19,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.ingest.EmailIngest
-import graft.store.EmailStore
 
 /** Job control-plane (SURVEY.md §1.3/§2.7 D6): the reference's `jobs`
   * collection (app/main.py:22-28) with its state machine
@@ -198,22 +197,12 @@ object JobTracker {
       first.inputDir, fileCount, last.ts)
   }
 
-  /** E1/E3 lifecycle end-to-end (SURVEY.md §3): create job → scan →
+  /** E1/E3 lifecycle after [[JobTracker.create]] (SURVEY.md §3): scan →
     * EMPTY short-circuit | PARSING(file_count) → parse+merge into the
-    * store → PARSED. Returns the job id. */
-  def runIngestJob(spark: SparkSession, tracker: JobTracker,
-      store: graft.store.DocStore, inputDir: String,
-      source: String = "manual_trigger"): String = {
-    val jobId = tracker.create(source, inputDir)
-    runPhases(spark, tracker, store, jobId, inputDir)
-    jobId
-  }
-
-  /** The post-create phases of the lifecycle, runnable on their own so
-    * an async front end ([[HttpApi]]) can return the QUEUED job id
-    * first and dispatch this afterwards — the split the reference makes
-    * between its endpoint insert (app/main.py:22-28) and the Celery
-    * task body (app/orchestrator.py:14-60). */
+    * store → PARSED. [[HttpApi]] returns the QUEUED job id first and
+    * dispatches this afterwards — the split the reference makes between
+    * its endpoint insert (app/main.py:22-28) and the Celery task body
+    * (app/orchestrator.py:14-60). */
   def runPhases(spark: SparkSession, tracker: JobTracker,
       store: graft.store.DocStore, jobId: String, inputDir: String): Unit = {
     // not cached: a binaryFile count reads no file content, the parse

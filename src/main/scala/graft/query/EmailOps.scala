@@ -243,7 +243,7 @@ object EmailOps {
     * a total function (property-spec'd); the quarantine split still
     * runs in the dataflow. Corpus capped at doc_id < 2000 on both
     * sides: bounded file count at any sf — ingest THROUGHPUT is
-    * IngestBench's surface, this is the correctness twin. */
+    * perfbench `ingest_serve`'s surface, this is the correctness twin. */
   /** Best-effort recursive delete of a temp tree. The ingest twins
     * materialize real corpora/stores in /tmp; without this, repeated
     * bench/verify runs accumulate the full corpus for the machine's

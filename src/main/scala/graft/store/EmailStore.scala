@@ -1,11 +1,9 @@
 package graft.store
 
-import org.apache.hadoop.fs.Path
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Parquet-backed deduplicated email store with upsert-merge semantics.
+/** The email store's upsert-merge rules.
   *
   * Re-expresses the reference's Mongo upsert contract (SURVEY.md §2.4):
   *  - A1 unique-key dedup: at most one row per `dedupe_key`
@@ -21,11 +19,9 @@ import org.apache.spark.sql.functions._
   * (`min_by` for the frozen image + `collect_list`/`flatten`/
   * `array_distinct` for the set-union) — partial aggregation runs
   * map-side, the only shuffle is on the dedup key, and there is no
-  * window sort. Persistence uses versioned snapshot directories with a
-  * `_VERSION` pointer (read-merge-write; no ACID table format available
-  * offline — SURVEY.md §7.4). At 100 TB use [[PartitionedEmailStore]],
-  * which applies the same merge per `date_month` partition and rewrites
-  * only affected months via dynamic partition overwrite.
+  * window sort. [[PartitionedEmailStore]] persists the result: it
+  * applies the same merge per `date_month` partition and rewrites only
+  * affected months via dynamic partition overwrite.
   */
 object EmailStore {
 
@@ -71,102 +67,12 @@ object EmailStore {
     store.groupBy("dedupe_key").count().filter(col("count") > 1)
 }
 
-/** Common contract of the two store backends: the versioned-snapshot
-  * [[EmailStore]] and the month-partitioned [[PartitionedEmailStore]].
-  * The job pipeline (JobTracker/IngestApi/streamIngest) is written
-  * against this, so either write path plugs into the same lifecycle. */
+/** What the job pipeline (JobTracker/HttpApi/streamIngest) needs of a
+  * store. [[PartitionedEmailStore]] is the one backend; a wrapper (a
+  * counting or tracing store in a test or benchmark) plugs into the
+  * same lifecycle through this. */
 trait DocStore {
-  def upsert(batch: org.apache.spark.sql.DataFrame): Unit
-  def read(): org.apache.spark.sql.DataFrame
+  def upsert(batch: DataFrame): Unit
+  def read(): DataFrame
   def isEmpty: Boolean
-}
-
-/** Versioned snapshot persistence for the email store. */
-class EmailStore(spark: SparkSession, root: String) extends DocStore {
-  import EmailStore._
-
-  private val fs = new Path(root)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private val versionFile = new Path(root, "_VERSION")
-
-  def currentVersion: Int =
-    if (!fs.exists(versionFile)) 0
-    else {
-      val in = fs.open(versionFile)
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        "UTF-8").trim.toInt
-      finally in.close()
-    }
-
-  private def versionPath(v: Int) = new Path(root, f"v_$v%05d")
-
-  def isEmpty: Boolean = currentVersion == 0
-
-  /** Current store contents (empty DataFrame with the store schema if
-    * nothing has been written yet). */
-  def read(): DataFrame =
-    if (isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        graft.model.EmailDoc.schema)
-    else spark.read.parquet(versionPath(currentVersion).toString)
-
-  /** Upsert with the reference's ingest counters (A4/A6: upserted vs
-    * matched — ref: ingest_enron.py:159-162,200-202; created/modified
-    * flags parsing_agent.py:84-86). Returns (created, matched): batch
-    * keys new to the store vs batch keys that merged into existing
-    * rows. */
-  def upsertWithCounters(batch: DataFrame): (Long, Long) = {
-    val batchKeys = batch.select("dedupe_key").distinct().cache()
-    try {
-      val created =
-        if (isEmpty) batchKeys.count()
-        else batchKeys.join(read().select("dedupe_key"), Seq("dedupe_key"),
-          "left_anti").count()
-      val matched = batchKeys.count() - created
-      upsert(batch)
-      (created, matched)
-    } finally batchKeys.unpersist()
-  }
-
-  /** Upsert a batch (store schema + `path` column): read-merge-write a
-    * new snapshot version, then flip the `_VERSION` pointer. */
-  def upsert(batch: DataFrame): Unit = {
-    val v = currentVersion
-    val merged =
-      if (v == 0) mergeBatch(batch)
-      else merge(read(), mergeBatch(batch).withColumn("path", lit("")))
-    val next = v + 1
-    merged.write.mode("overwrite").parquet(versionPath(next).toString)
-    val out = fs.create(versionFile, true)
-    try out.write(next.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Time-travel read: the store AS OF snapshot `v` (1-based; each
-    * upsert writes one version). Snapshot isolation falls out of the
-    * write path — a snapshot dir is never rewritten once `_VERSION`
-    * moves past it, so a version-`v` read is immutable until a
-    * [[vacuum]] reclaims it. Reading a vacuumed (or never-written)
-    * version fails loudly rather than returning an empty frame. */
-  def readVersion(v: Int): DataFrame = {
-    require(v >= 1 && v <= currentVersion,
-      s"version $v outside [1, $currentVersion]")
-    val p = versionPath(v)
-    if (!fs.exists(p))
-      throw new IllegalStateException(
-        s"snapshot v$v was vacuumed (current=$currentVersion)")
-    spark.read.parquet(p.toString)
-  }
-
-  /** Drop snapshot versions older than the newest `keepLast` (readers
-    * of the current version are unaffected; concurrent readers of
-    * ancient versions are the caller's coordination problem — same
-    * contract as any snapshot-retention vacuum). Returns dropped count. */
-  def vacuum(keepLast: Int = 2): Int = {
-    require(keepLast >= 1, "must keep at least the current version")
-    val current = currentVersion
-    val dropped = (1 to current - keepLast).count { v =>
-      fs.delete(versionPath(v), true)
-    }
-    dropped
-  }
 }

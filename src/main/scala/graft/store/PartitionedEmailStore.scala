@@ -8,14 +8,14 @@ import org.apache.spark.sql.functions._
 import graft.model.EmailDoc
 
 /** Month-partitioned email store with partition-scoped upsert — the
-  * 100 TB write path.
+  * engine's one store backend.
   *
-  * The snapshot [[EmailStore]] re-reads and rewrites the full store per
-  * batch, which is correct but O(store) per upsert. Here rows live
-  * under `date_month=yyyy-MM/` (nulls under `date_month=unknown`,
-  * layout per [[Partitioning]]) and an upsert rewrites ONLY the
-  * affected months via dynamic partition overwrite; untouched months'
-  * files are never rewritten (spec-asserted). This mirrors the
+  * A whole-store read-merge-write would be O(store) per upsert. Here
+  * rows live under `date_month=yyyy-MM/` (nulls under
+  * `date_month=unknown`, layout per [[Partitioning]]) and an upsert
+  * rewrites ONLY the affected months via dynamic partition overwrite;
+  * untouched months' files are never rewritten (spec-asserted), and
+  * rows merge by [[EmailStore]]'s rules. This mirrors the
   * reference's upsert contract — only matched documents change
   * (parsing_agent.py:67-86) — at partition granularity.
   *

@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.ingest.EmailIngest
-import graft.store.EmailStore
 
 /** Structured Streaming tier (SURVEY.md §2.8): the reference's Celery
   * pipeline is an incremental, out-of-order ingest whose only state is

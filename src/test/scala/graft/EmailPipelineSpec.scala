@@ -75,37 +75,6 @@ class EmailPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(mailboxes == Set(("alice", "sent", "1_"), ("bob", "inbox", "7_")))
   }
 
-  test("merge is idempotent and first-writer-wins across runs (D7/A2)") {
-    val base = maildir()
-    val storeDir = Files.createTempDirectory("graft-store").toString
-    val store = new EmailStore(spark, storeDir)
-    val docs = EmailIngest.docs(spark, EmailIngest.ingest(spark, base.toString))
-
-    store.upsert(docs)
-    val v1 = store.read().orderBy("dedupe_key").collect()
-
-    // re-ingest the same tree: store must converge (no new rows, no field
-    // changes — Mongo $setOnInsert semantics)
-    store.upsert(docs)
-    val v2 = store.read().orderBy("dedupe_key").collect()
-    assert(v1.toSeq == v2.toSeq)
-    assert(store.read().count() == 4)
-
-    // a later conflicting write with the same key must NOT overwrite
-    // frozen fields but MUST union its mailbox position
-    val conflict = docs
-      .filter(docs("dedupe_key") === "<shared@x>")
-      .withColumn("subject", org.apache.spark.sql.functions.lit("CHANGED"))
-      .withColumn("mailboxes", org.apache.spark.sql.functions.expr(
-        "array(named_struct('user','eve','folder','stolen','filename','9_'))"))
-    store.upsert(conflict)
-    val row = store.read().filter("dedupe_key = '<shared@x>'").collect().head
-    assert(row.getAs[String]("subject") == "shared message") // frozen
-    val mbs = row.getAs[Seq[org.apache.spark.sql.Row]]("mailboxes")
-      .map(_.getString(0)).toSet
-    assert(mbs == Set("alice", "bob", "eve")) // set-union grew
-  }
-
   test("query surface Q1-Q5 over the merged store") {
     val base = maildir()
     val merged = EmailStore.mergeBatch(
@@ -135,17 +104,21 @@ class EmailPipelineSpec extends AnyFunSuite with SparkSpec {
   test("partitioned store: same merge contract through the pipeline (D7/A2/A3)") {
     import org.apache.spark.sql.functions._
     val base = maildir()
-    val root = Files.createTempDirectory("graft-pstore-pipe").toString
+    val root = Files.createTempDirectory("graft-pstore-pipe")
+      .resolve("store").toString
     val store = new graft.store.PartitionedEmailStore(spark, root)
     val docs = EmailIngest.docs(spark, EmailIngest.ingest(spark, base.toString))
 
     store.upsert(docs)
-    assert(store.read().count() == 4)
+    val v1 = store.read().orderBy("dedupe_key").collect()
+    assert(v1.length == 4)
     assert(EmailStore.duplicateKeys(store.read()).count() == 0)
 
-    // idempotent re-upsert (D7)
+    // re-ingest the same tree: the store converges — no new rows, no
+    // field changes (Mongo $setOnInsert semantics, D7)
     store.upsert(docs)
-    assert(store.read().count() == 4)
+    val v2 = store.read().orderBy("dedupe_key").collect()
+    assert(v1.toSeq == v2.toSeq)
 
     // conflicting write: frozen fields keep, mailboxes union (A2/A3)
     val conflict = docs.filter(docs("dedupe_key") === "<shared@x>")
@@ -164,25 +137,5 @@ class EmailPipelineSpec extends AnyFunSuite with SparkSpec {
     val ts = java.sql.Timestamp.from(java.time.Instant.parse("2001-05-01T00:00:00Z"))
     val until = java.sql.Timestamp.from(java.time.Instant.parse("2001-06-01T00:00:00Z"))
     assert(store.readDateRange(ts, until).count() == 2)
-  }
-
-  test("upsert counters report created vs matched (A4/A6)") {
-    val base = maildir()
-    val storeDir = Files.createTempDirectory("graft-cnt-store").toString
-    val store = new EmailStore(spark, storeDir)
-    val docs = EmailIngest.docs(spark, EmailIngest.ingest(spark, base.toString))
-    // first run: 4 unique keys, none existing
-    val (c1, m1) = store.upsertWithCounters(docs)
-    assert((c1, m1) == (4L, 0L))
-    // re-run: all 4 keys match, none created (idempotent, D7)
-    val (c2, m2) = store.upsertWithCounters(docs)
-    assert((c2, m2) == (0L, 4L))
-  }
-
-  test("dry-run parses everything, writes nothing (D8)") {
-    val base = maildir()
-    val (ok, failed) = EmailIngest.dryRun(spark, base.toString)
-    assert(ok + failed == 5)
-    assert(ok == 5) // lenient parser: headerless file parses to empty doc
   }
 }

@@ -10,7 +10,7 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.jobs.{HttpApi, JobTracker}
-import graft.store.{EmailStore, PartitionedEmailStore}
+import graft.store.PartitionedEmailStore
 
 /** The reference's HTTP workflow (app/main.py:13-35) over a real
   * loopback socket: multipart zip upload → immediate QUEUED job id →
@@ -72,10 +72,11 @@ class HttpApiSpec extends AnyFunSuite with SparkSpec {
     status
   }
 
-  private def withApi(f: (HttpApi, Int, EmailStore, JobTracker) => Unit): Unit = {
+  private def withApi(
+      f: (HttpApi, Int, PartitionedEmailStore, JobTracker) => Unit): Unit = {
     val dir = Files.createTempDirectory("graft-http")
     val tracker = new JobTracker(spark, dir.resolve("jobs").toString)
-    val store = new EmailStore(spark, dir.resolve("store").toString)
+    val store = new PartitionedEmailStore(spark, dir.resolve("store").toString)
     val api = new HttpApi(spark, tracker, store)
     val port = api.start()
     try f(api, port, store, tracker)
@@ -237,7 +238,7 @@ class HttpApiSpec extends AnyFunSuite with SparkSpec {
     val dir = Files.createTempDirectory("graft-http-fail")
     Files.write(dir.resolve("store"), "not a directory".getBytes)
     val tracker = new JobTracker(spark, dir.resolve("jobs").toString)
-    val store = new EmailStore(spark, dir.resolve("store").toString)
+    val store = new PartitionedEmailStore(spark, dir.resolve("store").toString)
     val api = new HttpApi(spark, tracker, store)
     val port = api.start()
     try {
@@ -262,7 +263,7 @@ class HttpApiSpec extends AnyFunSuite with SparkSpec {
     // freely because Mongo holds the state, app/main.py:33-35)
     val dir = Files.createTempDirectory("graft-http-restart")
     val tracker = new JobTracker(spark, dir.resolve("jobs").toString)
-    val store = new EmailStore(spark, dir.resolve("store").toString)
+    val store = new PartitionedEmailStore(spark, dir.resolve("store").toString)
     val api1 = new HttpApi(spark, tracker, store)
     val port1 = api1.start()
     val jobId =
@@ -280,7 +281,7 @@ class HttpApiSpec extends AnyFunSuite with SparkSpec {
       } finally api1.stop()
     // restart: fresh server + fresh tracker/store objects, same roots
     val tracker2 = new JobTracker(spark, dir.resolve("jobs").toString)
-    val store2 = new EmailStore(spark, dir.resolve("store").toString)
+    val store2 = new PartitionedEmailStore(spark, dir.resolve("store").toString)
     val api2 = new HttpApi(spark, tracker2, store2)
     val port2 = api2.start()
     try {
@@ -339,7 +340,7 @@ class HttpApiSpec extends AnyFunSuite with SparkSpec {
     val jobsRoot = dir.resolve("jobs")
     Files.write(jobsRoot, "not a directory".getBytes)
     val tracker = new JobTracker(spark, jobsRoot.toString)
-    val store = new EmailStore(spark, dir.resolve("store").toString)
+    val store = new PartitionedEmailStore(spark, dir.resolve("store").toString)
     val scratch = java.nio.file.Paths.get(
       Sessions.scratchDir.getOrElse(System.getProperty("java.io.tmpdir")))
     def uploadCopies(): Set[String] = {

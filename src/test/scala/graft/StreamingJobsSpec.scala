@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Multimodal
 import graft.ingest.ZipStaging
 import graft.jobs.JobTracker
-import graft.store.EmailStore
+import graft.store.PartitionedEmailStore
 import graft.streaming.StreamingOps
 
 /** Streaming ingest, job state machine, multimodal plumbing, zip
@@ -27,8 +27,9 @@ class StreamingJobsSpec extends AnyFunSuite with SparkSpec {
 
   test("streaming ingest merges out-of-order duplicate arrivals (§2.8)") {
     val base = Files.createTempDirectory("graft-stream-maildir")
-    val storeDir = Files.createTempDirectory("graft-stream-store").toString
-    val store = new EmailStore(spark, storeDir)
+    val storeDir = Files.createTempDirectory("graft-stream-store")
+      .resolve("store").toString
+    val store = new PartitionedEmailStore(spark, storeDir)
     // batch 1: two files
     writeMsg(base, "alice", "sent", "1_", "m1")
     writeMsg(base, "bob", "inbox", "2_", "m2")
@@ -98,48 +99,6 @@ class StreamingJobsSpec extends AnyFunSuite with SparkSpec {
         .collect().map(_.getString(0)).sorted.toSeq
       assert(keys == Seq("k1", "k2", "k3"))
     } finally q.stop()
-  }
-
-  test("store vacuum drops old snapshots, keeps current readable") {
-    val storeDir = Files.createTempDirectory("graft-vacuum").toString
-    val store = new EmailStore(spark, storeDir)
-    val base = Files.createTempDirectory("graft-vacuum-mail")
-    (1 to 4).foreach { i =>
-      writeMsg(base, s"u$i", "inbox", s"${i}_", s"v$i")
-      store.upsert(graft.ingest.EmailIngest.docs(spark,
-        graft.ingest.EmailIngest.ingest(spark, base.toString)))
-    }
-    assert(store.currentVersion == 4)
-    val dropped = store.vacuum(keepLast = 2)
-    assert(dropped == 2)
-    assert(store.read().count() == 4) // current snapshot intact
-    val dirs = new java.io.File(storeDir).listFiles.map(_.getName)
-      .filter(_.startsWith("v_")).sorted.toSeq
-    assert(dirs == Seq("v_00003", "v_00004"))
-  }
-
-  test("readVersion time-travels to immutable snapshots") {
-    val storeDir = Files.createTempDirectory("graft-tt").toString
-    val store = new EmailStore(spark, storeDir)
-    val base = Files.createTempDirectory("graft-tt-mail")
-    (1 to 3).foreach { i =>
-      writeMsg(base, s"u$i", "inbox", s"${i}_", s"v$i")
-      store.upsert(graft.ingest.EmailIngest.docs(spark,
-        graft.ingest.EmailIngest.ingest(spark, base.toString)))
-    }
-    // snapshot isolation: each version sees exactly the rows that
-    // existed when it was written, unaffected by later upserts
-    assert(store.readVersion(1).count() == 1)
-    assert(store.readVersion(2).count() == 2)
-    assert(store.readVersion(3).count() == 3)
-    assert(store.readVersion(store.currentVersion).count() ==
-      store.read().count())
-    // out-of-range and vacuumed versions fail loudly, not silently empty
-    intercept[IllegalArgumentException](store.readVersion(0))
-    intercept[IllegalArgumentException](store.readVersion(4))
-    store.vacuum(keepLast = 1)
-    intercept[IllegalStateException](store.readVersion(1))
-    assert(store.readVersion(3).count() == 3) // current survives vacuum
   }
 
   test("dropDuplicatesWithinWatermark bounds dedup state by event time") {
@@ -230,9 +189,10 @@ class StreamingJobsSpec extends AnyFunSuite with SparkSpec {
 
   test("streaming ingest resumes from its checkpoint without re-merging") {
     val base = Files.createTempDirectory("graft-restart-maildir")
-    val storeDir = Files.createTempDirectory("graft-restart-store").toString
+    val storeDir = Files.createTempDirectory("graft-restart-store")
+      .resolve("store").toString
     val ckpt = Files.createTempDirectory("graft-restart-ckpt").toString
-    val inner = new EmailStore(spark, storeDir)
+    val inner = new PartitionedEmailStore(spark, storeDir)
     // counts ROWS handed to upsert: the restarted query must merge only
     // the NEW files — "the store converged" alone wouldn't prove that,
     // since the merge is idempotent and re-processing would converge too
@@ -386,14 +346,15 @@ class StreamingJobsSpec extends AnyFunSuite with SparkSpec {
   test("job lifecycle QUEUED→PARSING→PARSED and EMPTY short-circuit (D6)") {
     val trackerDir = Files.createTempDirectory("graft-jobs").toString
     val tracker = new JobTracker(spark, trackerDir)
-    val storeDir = Files.createTempDirectory("graft-job-store").toString
-    val store = new EmailStore(spark, storeDir)
+    val storeDir = Files.createTempDirectory("graft-job-store")
+      .resolve("store").toString
+    val store = new PartitionedEmailStore(spark, storeDir)
 
     val base = Files.createTempDirectory("graft-job-maildir")
     writeMsg(base, "alice", "inbox", "1_", "j1")
     writeMsg(base, "alice", "inbox", "2_", "j2")
-    val jobId = JobTracker.runIngestJob(spark, tracker, store, base.toString,
-      source = "unit-test")
+    val jobId = tracker.create("unit-test", base.toString)
+    JobTracker.runPhases(spark, tracker, store, jobId, base.toString)
     assert(tracker.status(jobId).contains("PARSED"))
     val st = tracker.currentState().filter(s"job_id = '$jobId'").collect().head
     assert(st.getAs[Long]("file_count") == 2L)
@@ -407,7 +368,8 @@ class StreamingJobsSpec extends AnyFunSuite with SparkSpec {
     // EMPTY short-circuit (ref: app/orchestrator.py:53-56)
     val emptyDir = Files.createTempDirectory("graft-empty")
     Files.createDirectories(emptyDir.resolve("nobody").resolve("nothing"))
-    val j2 = JobTracker.runIngestJob(spark, tracker, store, emptyDir.toString)
+    val j2 = tracker.create("unit-test", emptyDir.toString)
+    JobTracker.runPhases(spark, tracker, store, j2, emptyDir.toString)
     assert(tracker.status(j2).contains("EMPTY"))
     assert(store.read().count() == 2) // untouched
   }
