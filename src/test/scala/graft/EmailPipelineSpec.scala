@@ -101,10 +101,10 @@ class EmailPipelineSpec extends AnyFunSuite with SparkSpec {
     merged.unpersist()
   }
 
-  test("partitioned store: same merge contract through the pipeline (D7/A2/A3)") {
+  test("merge is idempotent and first-writer-wins across runs (D7/A2)") {
     import org.apache.spark.sql.functions._
     val base = maildir()
-    val root = Files.createTempDirectory("graft-pstore-pipe")
+    val root = Files.createTempDirectory("graft-store")
       .resolve("store").toString
     val store = new graft.store.PartitionedEmailStore(spark, root)
     val docs = EmailIngest.docs(spark, EmailIngest.ingest(spark, base.toString))
@@ -112,7 +112,6 @@ class EmailPipelineSpec extends AnyFunSuite with SparkSpec {
     store.upsert(docs)
     val v1 = store.read().orderBy("dedupe_key").collect()
     assert(v1.length == 4)
-    assert(EmailStore.duplicateKeys(store.read()).count() == 0)
 
     // re-ingest the same tree: the store converges — no new rows, no
     // field changes (Mongo $setOnInsert semantics, D7)
@@ -120,16 +119,35 @@ class EmailPipelineSpec extends AnyFunSuite with SparkSpec {
     val v2 = store.read().orderBy("dedupe_key").collect()
     assert(v1.toSeq == v2.toSeq)
 
-    // conflicting write: frozen fields keep, mailboxes union (A2/A3)
+    // a later conflicting write with the same key must NOT overwrite
+    // frozen fields but MUST union its mailbox position (A2/A3)
     val conflict = docs.filter(docs("dedupe_key") === "<shared@x>")
       .withColumn("subject", lit("CHANGED"))
       .withColumn("mailboxes", expr(
         "array(named_struct('user','eve','folder','stolen','filename','9_'))"))
     store.upsert(conflict)
     val row = store.read().filter("dedupe_key = '<shared@x>'").collect().head
-    assert(row.getAs[String]("subject") == "shared message")
+    assert(row.getAs[String]("subject") == "shared message") // frozen
     assert(row.getAs[Seq[org.apache.spark.sql.Row]]("mailboxes")
-      .map(_.getString(0)).toSet == Set("alice", "bob", "eve"))
+      .map(_.getString(0)).toSet == Set("alice", "bob", "eve")) // union grew
+  }
+
+  test("partitioned store: same merge contract through the pipeline (D7/A2/A3)") {
+    val base = maildir()
+    val root = Files.createTempDirectory("graft-pstore-pipe")
+      .resolve("store").toString
+    val store = new graft.store.PartitionedEmailStore(spark, root)
+    val docs = EmailIngest.docs(spark, EmailIngest.ingest(spark, base.toString))
+
+    store.upsert(docs)
+    assert(store.read().count() == 4)
+    assert(EmailStore.duplicateKeys(store.read()).count() == 0)
+
+    // idempotent re-upsert (D7); full-row convergence and the conflict
+    // rules are checked in the merge test above
+    store.upsert(docs)
+    assert(store.read().count() == 4)
+    assert(EmailStore.duplicateKeys(store.read()).count() == 0)
 
     // null-date rows land in (and stay in) the unknown partition
     assert(new java.io.File(s"$root/date_month=unknown").exists())
