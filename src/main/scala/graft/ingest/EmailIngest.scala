@@ -52,7 +52,7 @@ object EmailIngest {
 
   /** `path` with Hadoop glob metacharacters backslash-escaped, so a
     * glob-expanding reader takes it literally (a folder named `a[1]`). */
-  private def escapeGlob(path: String): String =
+  private[graft] def escapeGlob(path: String): String =
     path.replaceAll("""([\\{}\[\]*?])""", """\\$1""")
 
   /** S1/S2: depth-3 scan + hierarchy columns anchored at `baseDir`.
@@ -90,6 +90,19 @@ object EmailIngest {
         regexp_extract(col("path"), pat, 2).as("folder"),
         regexp_extract(col("path"), pat, 3).as("filename"),
         col("content"))
+  }
+
+  /** The depth-3 files `scanned`, a [[scan]] of `baseDir`, reads,
+    * counted on the driver from the listing its file relation already
+    * holds: no Spark job. `inputFiles` gives URI strings (`a%5B1%5D`),
+    * decoded here into the path form the `path` column and
+    * [[depth3Pattern]] use. */
+  def fileCount(spark: SparkSession, baseDir: String,
+      scanned: DataFrame): Long = {
+    val pat = java.util.regex.Pattern.compile(depth3Pattern(spark, baseDir))
+    scanned.inputFiles
+      .count(f => pat.matcher(new Path(new java.net.URI(f)).toString).find())
+      .toLong
   }
 
   /** S4 + D5: parse each file into an EmailDoc row with error isolation. */

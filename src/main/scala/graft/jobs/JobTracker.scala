@@ -205,11 +205,10 @@ object JobTracker {
     * (app/orchestrator.py:14-60). */
   def runPhases(spark: SparkSession, tracker: JobTracker,
       store: graft.store.DocStore, jobId: String, inputDir: String): Unit = {
-    // not cached: a binaryFile count reads no file content, the parse
-    // reads each file once, and no copy of the raw bytes stays pinned
-    // for the whole job
+    // counted from the scan's own file listing, with no Spark job; the
+    // parse reads each file once inside the upsert
     val scanned = EmailIngest.scan(spark, inputDir)
-    val n = scanned.count()
+    val n = EmailIngest.fileCount(spark, inputDir, scanned)
     if (n == 0) {
       tracker.setStatus(jobId, "EMPTY")
     } else {

@@ -522,8 +522,9 @@ object EmailOps {
     * surviving row must be exactly the pre-retention row (nothing
     * lost from retained months, nothing surviving from dropped ones).
     * The `unknown` (null-date) partition is always retained by
-    * contract — spec-pinned in Round15Spec, with the KeyIndex
-    * self-heal path for a re-inserted expired key. */
+    * contract — spec-pinned in Round15Spec, with a re-inserted
+    * expired key landing once in its new month (retention drops the
+    * expired months' KeyIndex entries). */
   def retainedStore(s: SparkSession, d: String): DataFrame =
     FixtureCorpus.cachedAux(s, d, "em74") {
       val docs = FixtureCorpus.parsedDocs(s, d)

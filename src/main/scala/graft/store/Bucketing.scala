@@ -3,7 +3,7 @@ package graft.store
 import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.io.IOUtils
 
 import org.apache.spark.network.util.JavaUtils
@@ -50,21 +50,29 @@ object Bucketing {
   * live next to a path-addressed store; `bucketBy` requires the
   * session catalog). A probe for a batch's keys prunes to the batch's
   * bucket dirs at planning time, reading min(|batch keys|, B)/B of an
-  * index that is itself only 2 columns of the store. Maintenance after
-  * an upsert is read-modify-write of ONLY the touched buckets via
-  * dynamic partition overwrite.
+  * index that is itself only 2 columns of the store.
+  *
+  * Maintenance is APPEND-ONLY: an upsert appends one entry per key new
+  * to the store (one small file per touched bucket) and never rewrites
+  * the entry of a stored key, because the merge keeps the stored row
+  * and with it the key's month. That holds only while every entry
+  * names a month that holds its key, so [[dropMonths]] removes the
+  * entries of the months retention deletes, and store rewrites run
+  * with the index distrusted ([[distrustDuring]]). A bucket whose
+  * appends leave more than [[KeyIndex.MaxBucketFiles]] files is
+  * rewritten as one, so the file count stays bounded without an
+  * option.
   *
   * B follows the index's contents: the smallest power of two that keeps
   * a bucket within the session's advisory partition size, the size the
   * write's REBALANCE hint packs files to. A fixed B would leave a small
-  * index as B near-empty files, each touched one rewritten as its own
-  * task and commit per upsert; here a small index is one bucket of one
-  * file. A (re)build starts at one bucket, and any write that leaves
-  * the index larger than B × advisory re-buckets it with a full rebuild
-  * at the B its size asks for. B never shrinks. The validity marker
-  * records B. The size counted is the bytes on disk, fixed per-file
-  * overhead included, so an advisory size below that overhead (about
-  * 1 KB for a small file) would re-bucket on every refresh.
+  * index as B near-empty files; here a small index is one bucket. A
+  * (re)build starts at one bucket, and any write that leaves the index
+  * larger than B × advisory re-buckets it with a full rebuild at the B
+  * its size asks for. B never shrinks. The validity marker records B.
+  * The size counted is the bytes on disk, fixed per-file overhead
+  * included, so an advisory size below that overhead (about 1 KB for a
+  * small file) would re-bucket on every write.
   */
 class KeyIndex(spark: SparkSession, val path: String) {
   import KeyIndex._
@@ -81,8 +89,8 @@ class KeyIndex(spark: SparkSession, val path: String) {
   /** Validity marker, dropped before any mutation and re-created only
     * after a successful commit. Partition-overwrite commits are not
     * atomic (deletes happen file-by-file inside commitJob), so a crash
-    * mid-refresh must leave the index LOOKING absent — the store then
-    * falls back to [[rebuild]] instead of trusting a half-rewritten
+    * mid-write must leave the index LOOKING absent — the store then
+    * falls back to [[rebuild]] instead of trusting a half-written
     * bucket and silently missing a month that holds a batch key. Its
     * content is `buckets=<B>`. */
   private val okMarker = new Path(path, "_GRAFT_INDEX_OK")
@@ -103,6 +111,11 @@ class KeyIndex(spark: SparkSession, val path: String) {
     }
   }
 
+  private def mark(buckets: Int): Unit = {
+    val out = fs.create(okMarker, true)
+    try out.write(s"buckets=$buckets".getBytes(UTF_8)) finally out.close()
+  }
+
   def exists: Boolean = markedBuckets.isDefined
 
   /** The bucket count B of a valid index. */
@@ -112,65 +125,100 @@ class KeyIndex(spark: SparkSession, val path: String) {
   /** Drop the validity marker WITHOUT touching index data — called by
     * the store before it mutates store partitions. The index only
     * becomes stale once the store changes, so the unsafe window is
-    * store-write → refresh-commit, not just refresh itself: a crash
-    * between those must leave the index distrusted (→ bootstrap
+    * store-write → index-commit, not just the index write itself: a
+    * crash between those must leave the index distrusted (→ bootstrap
     * rebuild), or a later upsert probes months from the pre-crash
     * index, misses the month already holding a batch key, and writes a
     * duplicate dedupe_key. */
   def invalidate(): Unit = { fs.delete(okMarker, false); () }
 
-  private def write(entries: DataFrame, overwriteMode: String,
-      buckets: Int): Unit = {
+  /** Run `mutate`, a store rewrite that moves no key to another month
+    * (compaction, fragmentation), with the index distrusted: a crash
+    * inside it can lose a month's rows, and an entry naming a month
+    * that no longer holds its key is unsafe for an append-only index,
+    * so it must leave no valid index (the next upsert rebuilds from
+    * what the store then holds). Success restores the marker. */
+  private[store] def distrustDuring(mutate: => Unit): Unit = {
+    val buckets = markedBuckets
+    invalidate()
+    mutate
+    buckets.foreach(mark)
+  }
+
+  /** Write `entries` bucketed by `buckets`, with `mode` "append" or the
+    * partition overwrite mode ("static" | "dynamic") of an overwrite. */
+  private def write(entries: DataFrame, mode: String, buckets: Int): Unit = {
     fs.delete(okMarker, false)
-    entries
+    val w = entries
       .select(col("dedupe_key"), col("date_month"),
         kb(col("dedupe_key"), buckets).as("kb"))
       // cluster by bucket before the partitioned write: otherwise every
       // task emits a sliver into every touched kb dir — #tasks × #buckets
-      // near-empty files per refresh, pure footer/commit overhead (the
+      // near-empty files per write, pure footer/commit overhead (the
       // small-files rule). REBALANCE packs buckets to the advisory
       // size, so a 2-column index writes ~one file per touched bucket.
       .hint("rebalance", col("kb"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", overwriteMode)
+      .write
+    (if (mode == "append") w.mode("append")
+     else w.mode("overwrite").option("partitionOverwriteMode", mode))
       .partitionBy("kb")
       .parquet(path)
-    val out = fs.create(okMarker, true)
-    try out.write(s"buckets=$buckets".getBytes(UTF_8)) finally out.close()
+    mark(buckets)
   }
 
-  /** Re-bucket with a full rebuild when the index just written with
-    * `buckets` holds more than `buckets` advisory-sized buckets. */
-  private def rebucketIfOutgrown(buckets: Int): Unit = {
-    val advisory = JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-    val bytes = dataBytes()
-    var want = buckets
-    while (want < MaxBuckets && bytes > want.toLong * advisory) want *= 2
-    if (want > buckets) {
-      // materialize BEFORE the static overwrite deletes the files this
-      // frame reads (the `kept` hazard in refresh)
-      val all = spark.read.schema(schema).parquet(path)
-        .select("dedupe_key", "date_month").localCheckpoint()
-      write(all, "static", want)
-    }
-  }
+  /** Rewrite `rows` of the index with `mode` and `buckets`. They are
+    * materialized BEFORE the overwrite deletes the files they read: a
+    * retried or speculative task re-reading a file the commit already
+    * removed would drop entries. */
+  private def rewrite(rows: DataFrame, mode: String, buckets: Int): Unit =
+    write(rows.select("dedupe_key", "date_month").localCheckpoint(), mode,
+      buckets)
 
-  /** Bytes of the index's data files, from driver listings of the root
+  /** The entries under `dirs` (`kb=` dirs of this index), read with the
+    * fixed schema; no dir → an empty local frame. */
+  private def readDirs(dirs: Seq[String]): DataFrame =
+    if (dirs.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema).option("basePath", path)
+      .parquet(dirs: _*)
+
+  /** The data files of each `kb=` dir, from driver listings of the root
     * and its `kb=` dirs. (`listFiles` would build a located status per
     * file, and on the local file system each one forks `ls` to read the
     * file's permissions.) */
-  private def dataBytes(): Long =
-    fs.listStatus(new Path(path)).filter(_.isDirectory)
-      .flatMap(d => fs.listStatus(d.getPath))
-      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
+  private def bucketFiles(): Map[String, Seq[FileStatus]] =
+    fs.listStatus(new Path(path))
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("kb="))
+      .map(d => d.getPath.toString -> fs.listStatus(d.getPath).toSeq
+        .filter(_.getPath.getName.endsWith(".parquet")))
+      .toMap
+
+  /** After a write with `buckets`: if the index holds more than
+    * `buckets` advisory-sized buckets, re-bucket it with a full rebuild;
+    * otherwise rewrite every bucket that holds more than
+    * [[KeyIndex.MaxBucketFiles]] files. */
+  private def settle(buckets: Int): Unit = {
+    val advisory = JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    val files = bucketFiles()
+    val bytes = files.values.flatten.map(_.getLen).sum
+    var want = buckets
+    while (want < MaxBuckets && bytes > want.toLong * advisory) want *= 2
+    if (want > buckets) rewrite(readDirs(files.keys.toSeq), "static", want)
+    else {
+      val crowded = files.collect {
+        case (dir, fl) if fl.length > MaxBucketFiles => dir
+      }.toSeq
+      if (crowded.nonEmpty) rewrite(readDirs(crowded), "dynamic", buckets)
+    }
+  }
 
   /** Full (re)build from (dedupe_key, date_month) rows — bootstrap for
     * stores created before the index existed, or whose index is torn
     * or carries no bucket count. */
   def rebuild(entries: DataFrame): Unit = {
     write(entries, "static", 1)
-    rebucketIfOutgrown(1)
+    settle(1)
   }
 
   /** The index restricted to `keys`' buckets — a planning-time-pruned
@@ -191,48 +239,45 @@ class KeyIndex(spark: SparkSession, val path: String) {
     val touched = fs.listStatus(new Path(path))
       .filter(st => st.isDirectory && dirs(st.getPath.getName))
       .map(_.getPath.toString)
-    Pruned(buckets,
-      if (touched.isEmpty)
-        spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-      else spark.read.schema(schema).option("basePath", path)
-        .parquet(touched.toIndexedSeq: _*).filter(col("kb").isin(kbs: _*)))
+    Pruned(buckets, readDirs(touched.toIndexedSeq)
+      .filter(col("kb").isin(kbs: _*)))
   }
 
   /** Months holding any of `keys` (bucket-pruned probe). */
   def monthsFor(keys: DataFrame): DataFrame =
-    monthsFor(keys, prunedFor(keys).rows)
-
-  /** [[monthsFor]] over an already pruned read of `keys`' buckets. */
-  private[store] def monthsFor(keys: DataFrame, pruned: DataFrame): DataFrame =
-    pruned.join(keys, Seq("dedupe_key"), "left_semi")
+    prunedFor(keys).rows.join(keys, Seq("dedupe_key"), "left_semi")
       .select("date_month").distinct()
 
-  /** Replace the entries of `keys` with `entries` (the post-merge
-    * (dedupe_key, date_month) rows for those keys), rewriting only the
-    * touched buckets (dynamic overwrite: every touched bucket appears
-    * in the written frame because each batch key carries an entry),
-    * then re-bucket if the index outgrew B. `pruned` is
-    * [[prunedFor]]`(keys)`, read before any index write. */
-  private[store] def refresh(keys: DataFrame, pruned: Pruned,
-      entries: DataFrame): Unit = {
-    // materialize `kept` BEFORE the overwrite: the frame reads the same
-    // parquet path the write then rewrites, and relying on deferred
-    // commit-time deletes would break under task retry/speculation
-    // re-reading a source file the commit already removed
-    val kept = pruned.rows
-      .join(keys, Seq("dedupe_key"), "left_anti")
-      .select("dedupe_key", "date_month")
-      .localCheckpoint()
-    write(kept.union(entries.select("dedupe_key", "date_month")), "dynamic",
-      pruned.buckets)
-    rebucketIfOutgrown(pruned.buckets)
+  /** Append `entries`, the (dedupe_key, date_month) rows of keys the
+    * index does not hold yet, bucketed by the B `buckets` the caller's
+    * [[prunedFor]] read (the store drops the marker before its write),
+    * then re-bucket or rewrite crowded buckets as [[settle]] finds. */
+  private[store] def append(entries: DataFrame, buckets: Int): Unit = {
+    write(entries, "append", buckets)
+    settle(buckets)
+  }
+
+  /** Run `deleteMonths`, the store's removal of `months`, with the index
+    * distrusted, then drop the entries naming those months: an entry
+    * naming a month that no longer holds its key would make a later
+    * upsert of that key skip appending its new month. Without a valid
+    * index only `deleteMonths` runs; the next upsert rebuilds. */
+  private[store] def dropMonths(months: Seq[String])(
+      deleteMonths: => Unit): Unit = {
+    val buckets = markedBuckets
+    invalidate()
+    deleteMonths
+    buckets.foreach { b =>
+      rewrite(readDirs(bucketFiles().keys.toSeq)
+        .filter(!col("date_month").isin(months: _*)), "static", b)
+    }
   }
 }
 
 object KeyIndex {
 
   /** [[KeyIndex.prunedFor]]'s read of a batch's buckets, with the B it
-    * was bucketed by: a refresh writes with that B even though the
+    * was bucketed by: an append writes with that B even though the
     * store drops the marker in between. */
   private[store] final case class Pruned(buckets: Int, rows: DataFrame)
 
@@ -240,4 +285,10 @@ object KeyIndex {
 
   /** 2^30 buckets of the default 64 MB advisory size is 64 PB of index. */
   private val MaxBuckets = 1 << 30
+
+  /** Files a bucket may hold before it is rewritten as one. Each upsert
+    * that brings new keys appends about one file per touched bucket, so
+    * a bucket is rewritten about once per this many such upserts; a
+    * small index file carries about 1 KB of footer and checksum. */
+  private[graft] val MaxBucketFiles = 8
 }

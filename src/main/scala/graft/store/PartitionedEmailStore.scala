@@ -26,9 +26,10 @@ import graft.model.EmailDoc
   * (planning-time partition pruning), never the store — the secondary
   * index that makes global key uniqueness affordable when the store is
   * 100 TB and a batch touches a handful of months. The index is
-  * maintained incrementally (touched buckets only) after each upsert,
-  * and bootstrap-built from a one-time 2-column store scan for stores
-  * that predate it.
+  * append-only: an upsert adds the entries of the keys that were new
+  * to the store, since a stored key keeps its month; retention drops
+  * the entries of the months it deletes. It is bootstrap-built from a
+  * one-time 2-column store scan for stores that predate it.
   */
 class PartitionedEmailStore(spark: SparkSession, root: String)
     extends DocStore {
@@ -71,64 +72,68 @@ class PartitionedEmailStore(spark: SparkSession, root: String)
     Partitioning.readDateRange(spark, root, from, until)
 
   /** Upsert a batch (store schema + `path` column) rewriting only the
-    * affected `date_month` partitions. */
+    * affected `date_month` partitions, in four Spark executions once the
+    * store holds rows: materialize the batch, probe the key index,
+    * write the merged months, append the new keys' index entries. (An
+    * index of more than one bucket adds the collect of the batch's
+    * bucket ids, see [[KeyIndex.prunedFor]].)
+    *
+    *  1. The batch is merged within itself (one row per key), stamped
+    *     with its month and checkpointed: every later step reads it, so
+    *     the input is read and parsed once.
+    *  2. One probe joins the batch's (key, month) to the index entries
+    *     of its buckets (key, stored month) and collects the distinct
+    *     months of both columns: the affected months. None means an
+    *     empty batch (a null date stamps `unknown`), and nothing is
+    *     written.
+    *  3. The affected months are read, merged with the batch (the
+    *     stored row wins) and written over themselves straight from the
+    *     plan: the dynamic overwrite deletes the old files only at job
+    *     commit, and nothing reads them after that.
+    *  4. The probe rows with no stored month are the keys new to the
+    *     store; their entries are appended to the index. A matched key
+    *     kept its stored row, hence its month and its entry.
+    *
+    * The index is invalidated before the store write and re-marked by
+    * the append, so a crash in between leaves it distrusted and the
+    * next upsert rebuilds it. */
   def upsert(batch: DataFrame): Unit = {
-    val compact = EmailStore.mergeBatch(batch).cache()
-    try {
-      if (isEmpty) {
+    val compact = EmailStore.mergeBatch(batch)
+      .withColumn("date_month", monthCol).localCheckpoint()
+    if (isEmpty) {
+      // the just-written store's (dedupe_key, date_month) projection
+      // IS the batch's own: build the index from the checkpointed batch
+      // instead of re-listing and re-scanning the store just written
+      if (!compact.isEmpty) {
         write(clusterByMonth(compact))
-        // the just-written store's (dedupe_key, date_month) projection
-        // IS the batch's own: rebuild the index from the cached batch
-        // instead of re-listing and re-scanning the store we just wrote
-        // (round-17: one fewer store read per bootstrap upsert; monthCol
-        // is the same deterministic expression write() stamps)
-        index.rebuild(compact.select(col("dedupe_key"),
-          monthCol.as("date_month")))
-      } else {
-        val batchKeys = compact.select("dedupe_key").cache()
-        try {
-          // one-time bootstrap for stores created before the index
-          if (!index.exists)
-            index.rebuild(read().select(col("dedupe_key"), col("date_month")))
-          // the batch's kb dirs, read once for both the month probe and
-          // the refresh below: the store write in between never touches
-          // index files
-          val pruned = index.prunedFor(batchKeys)
-          // months already holding any batch key: bucket-pruned index
-          // probe — reads the batch's kb dirs, not the store
-          val keyMonths = index.monthsFor(batchKeys, pruned.rows)
-          // months the batch itself lands in
-          val batchMonths = compact.select(monthCol.as("date_month")).distinct()
-          val affected = keyMonths.union(batchMonths).distinct()
-            .collect().map(_.getString(0))
-          val existing = readMonths(affected.toSeq)
-          // materialize BEFORE the overwrite: `merged` lazily reads the
-          // same parquet path write() then rewrites, and a speculative/
-          // retried task re-reading an affected-month file after the
-          // commit deleted it would drop or duplicate store rows (the
-          // KeyIndex.refresh hazard, applied to the store itself)
-          val merged = clusterByMonth(EmailStore.merge(existing,
-            compact.withColumn("path", lit("")))).localCheckpoint()
-          // distrust the index across the store mutation: a crash
-          // between write(merged) and index.refresh must leave
-          // exists=false (bootstrap rebuild) rather than a trusted
-          // index missing the batch's months
-          index.invalidate()
-          write(merged)
-          // refresh the batch keys' index entries from what is now on
-          // disk (merge may keep an existing row's month, not the
-          // batch's). What is on disk for the affected months IS the
-          // checkpointed `merged` frame the overwrite just committed —
-          // project it instead of re-listing and re-scanning the store
-          // (round-17: one fewer store read per upsert; the stamped
-          // date_month string round-trips the partition column exactly)
-          val entries = merged
-            .join(batchKeys, Seq("dedupe_key"), "left_semi")
-            .select("dedupe_key", "date_month")
-          index.refresh(batchKeys, pruned, entries)
-        } finally { batchKeys.unpersist(); () }
+        index.rebuild(compact.select("dedupe_key", "date_month"))
       }
-    } finally { compact.unpersist(); () }
+      return
+    }
+    // one-time bootstrap for stores created before the index
+    if (!index.exists)
+      index.rebuild(read().select(col("dedupe_key"), col("date_month")))
+    val pruned = index.prunedFor(compact)
+    val probe = compact.select("dedupe_key", "date_month")
+      .join(pruned.rows.select(col("dedupe_key"),
+        col("date_month").as("stored_month")), Seq("dedupe_key"), "left")
+    val affected = probe
+      .select(explode(array(col("date_month"), col("stored_month"))).as("m"))
+      .where(col("m").isNotNull).distinct()
+      .collect().map(_.getString(0))
+    if (affected.isEmpty) return
+    val merged = EmailStore.merge(readMonths(affected.toSeq),
+      compact.drop("date_month").withColumn("path", lit("")))
+    // distrust the index across the store mutation: a crash between
+    // the store write and the append must leave exists=false
+    // (bootstrap rebuild) rather than a trusted index missing the
+    // batch's new keys
+    index.invalidate()
+    write(clusterByMonth(merged))
+    // the probe re-reads the same index files: the store write never
+    // touches them, and the append adds files without deleting any
+    index.append(probe.where(col("stored_month").isNull)
+      .select("dedupe_key", "date_month"), pruned.buckets)
   }
 
   /** REHEARSAL fragmenter — rewrite every month into ~`groups` files.
@@ -150,9 +155,8 @@ class PartitionedEmailStore(spark: SparkSession, root: String)
       .repartition(4 * groups,
         expr(s"pmod(xxhash64(dedupe_key), $groups)"), col("date_month"))
       // materialize BEFORE the overwrite deletes the source files
-      // (the same speculative-reread hazard as upsert's merge)
       .localCheckpoint()
-    write(frag)
+    index.distrustDuring(write(frag))
   }
 
   /** Data-file count per month partition — a driver-side metadata walk
@@ -189,12 +193,12 @@ class PartitionedEmailStore(spark: SparkSession, root: String)
     * parity through a compacted store). Scale shape: the planning walk
     * is driver-side FILE METADATA only (O(#partitions + #files), never
     * rows), and data moves only for the months actually compacted.
-    * The [[KeyIndex]] is left untouched: compaction never changes a
-    * (dedupe_key → month) fact, and a crash mid-rewrite can only
-    * strand stale-EXTRA index entries (keys whose rows were lost with
-    * the partial month), which are safe — the index over-approximates
-    * affected months; missing entries would be the unsafe direction
-    * and compaction cannot create those.
+    * The [[KeyIndex]] data is left untouched: compaction never changes
+    * a (dedupe_key → month) fact. The index is distrusted during the
+    * rewrite, though: a crash mid-commit can lose a month's rows, and
+    * an entry naming a month that no longer holds its key would stop
+    * the append-only index from recording the key's next month. So a
+    * crash leaves the index to be rebuilt from the store.
     *
     * Returns the per-month plan it executed (empty = nothing to do),
     * so callers/specs can assert the file-count contract without
@@ -225,9 +229,8 @@ class PartitionedEmailStore(spark: SparkSession, root: String)
         .repartition(col("date_month"), col("fg"))
         .drop("want", "fg")
         // materialize BEFORE the overwrite deletes the source files
-        // (the same speculative-reread hazard as upsert's merge)
         .localCheckpoint()
-      write(packed.drop("date_month"))
+      index.distrustDuring(write(packed.drop("date_month")))
     }
     plan
   }
@@ -247,14 +250,15 @@ class PartitionedEmailStore(spark: SparkSession, root: String)
     * quarantine philosophy applied to deletion; an operator expires it
     * explicitly or repairs the date first.
     *
-    * The [[KeyIndex]] is deliberately left in place: entries for
-    * expired keys now point at months that hold nothing, which is the
-    * SAFE direction (the index over-approximates affected months —
-    * same argument as [[compact]]'s crash story; missing entries would
-    * be unsafe and retention cannot create those), and the entries
-    * self-heal — the next upsert carrying such a key probes the empty
-    * month, finds no existing row, writes the fresh one, and
-    * `index.refresh` rewrites the entry from what is then on disk.
+    * The [[KeyIndex]] entries of the dropped months go with them: the
+    * index is append-only and appends an entry only for a key it does
+    * not hold, so an entry left pointing at an expired month would keep
+    * a re-delivered key's new month out of the index, and the key's
+    * next delivery in a third month would be stored twice. Dropping the
+    * entries rewrites the 2-column index once (a full-index read, no
+    * store row read); the index is distrusted from before the first
+    * month delete until that rewrite commits, so a crash in between
+    * leaves it to be rebuilt from the store.
     *
     * Returns the dropped month names (sorted) so callers/specs can
     * assert the expiry contract without re-listing. */
@@ -268,8 +272,10 @@ class PartitionedEmailStore(spark: SparkSession, root: String)
         val m = p.getName.stripPrefix("date_month=")
         m != "unknown" && m < cutoffMonth
       }
-    dropped.foreach { p => fs.delete(p, true); () }
-    dropped.map(_.getName.stripPrefix("date_month=")).sorted.toSeq
+    val months = dropped.map(_.getName.stripPrefix("date_month=")).sorted.toSeq
+    if (months.nonEmpty)
+      index.dropMonths(months)(dropped.foreach { p => fs.delete(p, true); () })
+    months
   }
 
   /** Cluster an upsert batch by its month before the partitioned

@@ -2137,7 +2137,8 @@ object StreamingOps {
       scratchTempDir("graft-ingest-ckpt").toString)
     // same depth-3 contract as the batch scan (EmailIngest.scan): the
     // glob lists only base/<user>/<folder>/<file>, the anchored pattern
-    // recovers hierarchy relative to baseDir
+    // recovers hierarchy relative to baseDir. The base is escaped, so a
+    // dir named like `in[1]` is read as itself, not as a pattern.
     val pat = EmailIngest.depth3Pattern(spark, baseDir)
     val scanned = spark.readStream
       .format("binaryFile")
@@ -2147,7 +2148,7 @@ object StreamingOps {
         StructField("modificationTime", TimestampType),
         StructField("length", LongType),
         StructField("content", BinaryType))))
-      .load(s"$baseDir/*/*")
+      .load(EmailIngest.escapeGlob(baseDir) + "/*/*")
       .filter(col("path").rlike(pat))
       .select(
         col("path"),
@@ -2158,9 +2159,10 @@ object StreamingOps {
     scanned.writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val docs = EmailIngest.docs(batch.sparkSession,
-          EmailIngest.parse(batch.sparkSession, batch))
-        if (!docs.isEmpty) store.upsert(docs)
+        // no emptiness check: it would parse the batch once more, and
+        // an upsert of no rows writes nothing
+        store.upsert(EmailIngest.docs(batch.sparkSession,
+          EmailIngest.parse(batch.sparkSession, batch)))
       }
       .start()
   }

@@ -21,7 +21,7 @@ class HttpApiSpec extends AnyFunSuite with SparkSpec {
 
   /** Spark jobs one upload's worker starts when it merges 6 files into
     * a non-empty partitioned store, as measured. */
-  private val WorkerJobs = 18
+  private val WorkerJobs = 11
 
   private def get(port: Int, path: String): String =
     client.send(
@@ -371,40 +371,10 @@ class HttpApiSpec extends AnyFunSuite with SparkSpec {
   }
 
   /** The Spark jobs started while `body` runs, as (job group, scheduler
-    * pool) pairs. Job starts reach the listener asynchronously, in
-    * order: marker jobs run before and after `body` bound the window. */
-  private def jobsDuring(body: => Unit): Seq[(String, String)] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        def prop(k: String) =
-          String.valueOf(Option(e.properties).map(_.getProperty(k)).orNull)
-        seen.add((prop("spark.jobGroup.id"), prop("spark.scheduler.pool")))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      marker("jobs-begin")
-      body
-      marker("jobs-end")
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.asScala.exists(_._1 == "jobs-end") &&
-          System.nanoTime() < deadline)
-        Thread.sleep(20)
-      val all = seen.asScala.toSeq
-      assert(all.exists(_._1 == "jobs-end"))
-      all.dropWhile(_._1 != "jobs-begin").dropWhile(_._1 == "jobs-begin")
-        .takeWhile(_._1 != "jobs-end")
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
-  /** Marker jobs in their own job group. */
-  private def marker(name: String): Unit = {
-    spark.sparkContext.setJobGroup(name, name)
-    try spark.range(1).count()
-    finally spark.sparkContext.clearJobGroup()
-  }
+    * pool) pairs. */
+  private def poolsDuring(body: => Unit): Seq[(String, String)] =
+    jobsDuring(body).map(p => (p.getProperty("spark.jobGroup.id"),
+      p.getProperty("spark.scheduler.pool")))
 
   test("polls of a job this server created run no Spark job") {
     withApi { (_, port, _, _) =>
@@ -418,7 +388,7 @@ class HttpApiSpec extends AnyFunSuite with SparkSpec {
       val jobId = field(resp.body(), "job_id").get
       assert(awaitTerminal(port, jobId) == "PARSED")
 
-      val window = jobsDuring {
+      val window = poolsDuring {
         (1 to 20).foreach { _ =>
           assert(field(get(port, s"/jobs/$jobId"), "status").contains("PARSED"))
         }
@@ -449,7 +419,7 @@ class HttpApiSpec extends AnyFunSuite with SparkSpec {
       assert(awaitTerminal(port, upload("a.zip", (0 until 6).map(i => s"w$i")))
         == "PARSED")
       var jobId = ""
-      val window = jobsDuring {
+      val window = poolsDuring {
         jobId = upload("b.zip", (3 until 9).map(i => s"w$i"))
         marker("posted")
         assert(awaitTerminal(port, jobId) == "PARSED")

@@ -16,8 +16,10 @@ import graft.store.{KeyIndex, PartitionedEmailStore}
   * keys, batches wider than Spark's parallel-listing threshold (32
   * paths). The index sizes its bucket count B to its contents: an
   * index without a recorded B is rebuilt, and one that outgrows B is
-  * re-bucketed. After every upsert the index must equal a full rebuild
-  * from the store it indexes. */
+  * re-bucketed. The index is append-only: retention drops the entries
+  * of the months it deletes, and a bucket's appended files are bounded.
+  * After every upsert the index must equal a full rebuild from the
+  * store it indexes. */
 class KeyIndexSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
@@ -50,7 +52,7 @@ class KeyIndexSpec extends AnyFunSuite with SparkSpec {
       .as[(String, String, Int)].collect().toSet
 
   /** The index holds exactly a rebuild's entries, bucketed by its own
-    * B: a rebuild sizes B from scratch, while a refreshed index keeps
+    * B: a rebuild sizes B from scratch, while an appended-to index keeps
     * the B its history grew to. */
   private def assertIndexIsRebuild(store: PartitionedEmailStore,
       scratch: java.nio.file.Path): Unit = {
@@ -64,6 +66,9 @@ class KeyIndexSpec extends AnyFunSuite with SparkSpec {
         pmod(hash(col("dedupe_key")), lit(b)))
       .as[(String, String, Int)].collect().toSet
     assert(entries(store.index.path) == want)
+    // a set hides a repeated entry: no key may have two
+    val keys = spark.read.parquet(store.index.path).select("dedupe_key")
+    assert(keys.count() == keys.distinct().count(), "a key has two entries")
     assert(kbDirs(store).forall(_ < b))
     // and the store still holds each key once
     assert(store.read().groupBy("dedupe_key").count()
@@ -162,7 +167,7 @@ class KeyIndexSpec extends AnyFunSuite with SparkSpec {
     assert(store.index.numBuckets == 1 && indexFiles(store) == 1)
     val bytes = Files.walk(Paths.get(store.index.path)).iterator().asScala
       .filter(_.toString.endsWith(".parquet")).map(Files.size).sum
-    // an advisory size 1/16 of the index: the next refresh leaves the
+    // an advisory size 1/16 of the index: the next append leaves the
     // index above B × advisory, so it re-buckets
     withAdvisorySize(s"${bytes / 16}b") {
       store.upsert(batch((35 to 60).map(i => i -> ((i + 1) % 4))))
@@ -191,6 +196,37 @@ class KeyIndexSpec extends AnyFunSuite with SparkSpec {
     val b = store.index.numBuckets
     store.upsert(batch(Seq(61 -> 0, 1 -> 3)))
     assert(store.index.numBuckets == b)
+    assertIndexIsRebuild(store, dir)
+  }
+
+  test("retention drops its months' entries: an expired key redelivered twice is stored once") {
+    val dir = Files.createTempDirectory("graft-kidx-retain")
+    val store = new PartitionedEmailStore(spark, dir.resolve("store").toString)
+    store.upsert(batch(Seq(1 -> 0, 2 -> 1, 3 -> 2)))
+    assert(store.retain("2001-02") == Seq("2001-01"))
+    // key 1's month is gone. Its first redelivery lands in March; an
+    // entry left naming January would keep March out of the index, and
+    // the second redelivery, dated April, would then be stored again
+    store.upsert(batch(Seq(1 -> 2)))
+    store.upsert(batch(Seq(1 -> 3)))
+    assert(store.read().filter(col("dedupe_key") === "<k1@x>")
+      .select("date_month").as[String].collect().toSeq == Seq("2001-03"))
+    assertIndexIsRebuild(store, dir)
+  }
+
+  test("appended index files stay bounded over 20 small upserts") {
+    val dir = Files.createTempDirectory("graft-kidx-files")
+    val store = new PartitionedEmailStore(spark, dir.resolve("store").toString)
+    store.upsert(batch(Seq(1 -> 0)))
+    val counts = (2 to 21).map { i =>
+      // one new key and one redelivery per upsert
+      store.upsert(batch(Seq(i -> (i % 4), (i - 1) -> ((i + 1) % 4))))
+      indexFiles(store)
+    }
+    assert(store.index.numBuckets == 1)
+    assert(counts.max <= KeyIndex.MaxBucketFiles && counts.max > 1,
+      s"index files after each upsert: $counts")
+    assert(counts.exists(_ < counts.max), s"never rewritten: $counts")
     assertIndexIsRebuild(store, dir)
   }
 }

@@ -208,9 +208,9 @@ class Round15Spec extends AnyFunSuite with SparkSpec {
       assert(store.read()
         .filter(col("date_month") < "2001-11" &&
           col("date_month") =!= "unknown").count() == 0)
-      // self-heal: doc 0 (month 2001-05) was expired; its stale index
-      // entry points at the dropped month — re-inserting the key must
-      // land it cleanly and refresh the index to the new month
+      // doc 0 (month 2001-05) was expired, and its index entry with
+      // it — re-inserting the key must land it cleanly and index it
+      // under the new month
       assert(store.read().filter(col("dedupe_key") === "<d0@corp>")
         .count() == 0)
       val fresh = docs0.filter(col("doc_id") === 0L).drop("doc_id")

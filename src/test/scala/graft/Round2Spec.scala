@@ -202,7 +202,7 @@ class Round2Spec extends AnyFunSuite with SparkSpec {
       store.index.rebuild(store.read().select("dedupe_key", "date_month"))
     }
     assert(store.index.numBuckets >= 64)
-    // incremental path: second upsert exercises probe + bucket refresh
+    // incremental path: second upsert exercises probe + index append
     store.upsert(batch(Seq(61 -> 0, 7 -> 2)))
 
     val keys = Seq("<p7@x>").toDF("dedupe_key")
@@ -255,7 +255,7 @@ class Round2Spec extends AnyFunSuite with SparkSpec {
     store.upsert(batch(Seq(1 -> 0, 2 -> 1)))
     assert(store.index.exists, "successful upsert must leave a valid index")
     // simulate a crash mid-commit: write() drops the marker before any
-    // mutation, so a torn refresh leaves the index looking absent
+    // mutation, so a torn index write leaves the index looking absent
     val marker = new java.io.File(store.index.path, "_GRAFT_INDEX_OK")
     assert(marker.delete())
     assert(!store.index.exists, "missing marker must invalidate the index")
@@ -282,7 +282,7 @@ class Round2Spec extends AnyFunSuite with SparkSpec {
           s"From: a$id@x.com\r\nTo: b@x.com\r\nSubject: s$id\r\n\r\nbody $id").getBytes,
         s"u${id % 4}", "f", s"${id}_")
     // 6 random batches with overlapping keys and shifting months — the
-    // sequence that exercises index refresh, month keeps, and re-keys —
+    // sequence that exercises index appends, month keeps, and re-keys —
     // then one that re-delivers the first stored key dated in another
     // month only, so the month holding it is not among the batch's own
     // and only the key-index probe can bring it into the rewrite

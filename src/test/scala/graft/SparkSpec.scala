@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,6 +19,40 @@ trait SparkSpec { self: AnyFunSuite =>
     val was = spark.conf.get(key)
     spark.conf.set(key, size)
     try body finally spark.conf.set(key, was)
+  }
+
+  /** The properties of the Spark jobs started while `body` runs. Job
+    * starts reach the listener asynchronously, in order: marker jobs
+    * run before and after `body` bound the window. */
+  def jobsDuring(body: => Unit): Seq[java.util.Properties] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).getOrElse(new java.util.Properties()))
+    }
+    def group(p: java.util.Properties) = p.getProperty("spark.jobGroup.id")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      marker("jobs-begin")
+      body
+      marker("jobs-end")
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(group(_) == "jobs-end") &&
+          System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val all = seen.asScala.toSeq
+      assert(all.exists(group(_) == "jobs-end"))
+      all.dropWhile(group(_) != "jobs-begin").dropWhile(group(_) == "jobs-begin")
+        .takeWhile(group(_) != "jobs-end")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** A marker job in its own job group `name`. */
+  def marker(name: String): Unit = {
+    spark.sparkContext.setJobGroup(name, name)
+    try spark.range(1).count()
+    finally spark.sparkContext.clearJobGroup()
   }
 }
 

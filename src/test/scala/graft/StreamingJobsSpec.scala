@@ -4,6 +4,8 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ext.Multimodal
@@ -372,6 +374,136 @@ class StreamingJobsSpec extends AnyFunSuite with SparkSpec {
     JobTracker.runPhases(spark, tracker, store, j2, emptyDir.toString)
     assert(tracker.status(j2).contains("EMPTY"))
     assert(store.read().count() == 2) // untouched
+  }
+
+  test("an ingest job counts exactly its depth-3 files; strays alone are EMPTY") {
+    val tracker = new JobTracker(spark,
+      Files.createTempDirectory("graft-count-jobs").toString)
+    val store = new PartitionedEmailStore(spark,
+      Files.createTempDirectory("graft-count-store").resolve("store").toString)
+    def strays(base: Path): Unit = {
+      Files.write(base.resolve("top_"), "depth 1".getBytes)
+      Files.createDirectories(base.resolve("alice"))
+      Files.write(base.resolve("alice").resolve("loose_"), "depth 2".getBytes)
+      writeMsg(base.resolve("alice").resolve("inbox"), "sub", "deeper",
+        "4_", "deep") // depth 5
+      writeMsg(base.resolve("alice"), "inbox", "sub", "5_", "d4") // depth 4
+    }
+    val base = Files.createTempDirectory("graft-count")
+    writeMsg(base, "alice", "inbox", "1_", "c1")
+    writeMsg(base, "bob", "a[1]", "2_", "c2")
+    writeMsg(base, "bob", "a[1]", "3 x_", "c3")
+    strays(base)
+    val jobId = tracker.create("unit-test", base.toString)
+    JobTracker.runPhases(spark, tracker, store, jobId, base.toString)
+    assert(tracker.lookup(jobId).map(j => (j.status, j.fileCount))
+      .contains(("PARSED", 3L)))
+    assert(store.read().count() == 3)
+
+    val onlyStrays = Files.createTempDirectory("graft-count-strays")
+    strays(onlyStrays)
+    val j2 = tracker.create("unit-test", onlyStrays.toString)
+    JobTracker.runPhases(spark, tracker, store, j2, onlyStrays.toString)
+    assert(tracker.status(j2).contains("EMPTY"))
+    assert(store.read().count() == 3)
+  }
+
+  test("streaming ingest reads a base dir whose name holds glob metacharacters") {
+    val base = Files.createTempDirectory("graft-stream-in[1]")
+    writeMsg(base, "alice", "inbox", "1_", "g1")
+    writeMsg(base, "bob", "sent", "2_", "g2")
+    val store = new PartitionedEmailStore(spark,
+      Files.createTempDirectory("graft-glob-store").resolve("store").toString)
+    val q = StreamingOps.streamIngest(spark, base.toString, store)
+    try {
+      q.processAllAvailable()
+      assert(q.exception.isEmpty)
+      assert(!store.isEmpty, "the stream read no file of its base dir")
+      assert(store.read().select("dedupe_key").collect().map(_.getString(0))
+        .toSet == Set("<g1@x>", "<g2@x>"))
+    } finally q.stop()
+  }
+
+  /** `user`'s folder `folder` with messages `ids`, made elsewhere and
+    * renamed into `base` at once, so one micro-batch sees all of it. */
+  private def landFolder(base: Path, user: String, folder: String,
+      ids: Seq[String]): Unit = {
+    val staging = Files.createTempDirectory("graft-landing")
+    ids.zipWithIndex.foreach { case (id, i) =>
+      writeMsg(staging, user, folder, s"${i}_", id)
+    }
+    Files.move(staging.resolve(user), base.resolve(user),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** Spark jobs a micro-batch of 2 files (one new key, one redelivered)
+    * runs into a non-empty partitioned store, as measured. */
+  private val MicroBatchJobs = 11
+
+  test("a micro-batch into a non-empty store runs a bounded number of Spark jobs") {
+    val base = Files.createTempDirectory("graft-stream-jobs")
+    val store = new PartitionedEmailStore(spark,
+      Files.createTempDirectory("graft-stream-jobs-store").resolve("store")
+        .toString)
+    landFolder(base, "alice", "inbox", Seq("b1", "b2"))
+    val q = StreamingOps.streamIngest(spark, base.toString, store)
+    try {
+      q.processAllAvailable()
+      assert(store.read().count() == 2)
+      val jobs = jobsDuring {
+        landFolder(base, "carol", "inbox", Seq("b3", "b1"))
+        q.processAllAvailable()
+      }.filter(_.getProperty("sql.streaming.queryId") == q.id.toString)
+      val perBatch = jobs.groupBy(_.getProperty("streaming.sql.batchId"))
+        .map { case (b, js) => b -> js.length }
+      assert(perBatch.size == 1, s"jobs per micro-batch: $perBatch")
+      assert(perBatch.values.head <= MicroBatchJobs,
+        s"jobs per micro-batch: $perBatch")
+      // batch checkpoint, key probe, store write, index append
+      val executions = jobs.map(_.getProperty("spark.sql.execution.id"))
+        .distinct
+      assert(executions.length <= 4, s"SQL executions: $executions")
+      assert(q.exception.isEmpty)
+      assert(store.read().count() == 3)
+    } finally q.stop()
+  }
+
+  test("a micro-batch of only a stray file commits and writes no store or index file") {
+    val base = Files.createTempDirectory("graft-stream-stray")
+    val ckpt = Files.createTempDirectory("graft-stream-stray-ckpt")
+    val root = Files.createTempDirectory("graft-stream-stray-store")
+      .resolve("store").toString
+    val store = new PartitionedEmailStore(spark, root)
+    def files(): Set[String] = Seq(root, store.index.path)
+      .map(java.nio.file.Paths.get(_)).filter(Files.exists(_))
+      .flatMap { p =>
+        val s = Files.walk(p)
+        try s.iterator().asScala.map(_.toString).toList finally s.close()
+      }.toSet
+    def commits(): Int = Option(ckpt.resolve("commits").toFile.list())
+      .map(_.count(_.forall(_.isDigit))).getOrElse(0)
+    // a depth-2 file: the stream's glob lists it, the depth-3 filter
+    // drops it, so its micro-batch holds no row
+    def stray(name: String): Unit = {
+      Files.createDirectories(base.resolve("alice"))
+      Files.write(base.resolve("alice").resolve(name), "stray".getBytes)
+    }
+    stray("s1_")
+    val q = StreamingOps.streamIngest(spark, base.toString, store,
+      checkpointDir = Some(ckpt.toString))
+    try {
+      q.processAllAvailable()
+      assert(q.exception.isEmpty && commits() == 1)
+      assert(store.isEmpty && files().isEmpty)
+      writeMsg(base, "alice", "inbox", "1_", "t1")
+      q.processAllAvailable()
+      assert(commits() == 2 && store.read().count() == 1)
+      val before = files()
+      stray("s2_")
+      q.processAllAvailable()
+      assert(q.exception.isEmpty && q.isActive && commits() == 3)
+      assert(files() == before)
+    } finally q.stop()
   }
 
   test("zip staging → ingest (S3), zip-slip rejected") {
