@@ -44,15 +44,13 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Median of 3 timed runs of `f`; -1.0 if any run throws. */
-  private[graft] def median3(f: () => Unit): Double = {
-    var failed = false
-    val times = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      try f() catch { case _: Throwable => failed = true }
-      (System.nanoTime() - t0) / 1e9
-    }
-    if (failed) -1.0 else times.sorted.apply(1)
+  /** Median of 3 timed runs of `f`; -1.0 if any run throws. `once`
+    * times one run (a caller that reports each run passes its own). */
+  private[graft] def median3(f: () => Unit, name: String = "query",
+      once: (String, () => Unit) => (Double, Boolean) = timeOnce)
+      : Double = {
+    val runs = (1 to 3).map(_ => once(name, f))
+    if (runs.exists(!_._2)) -1.0 else runs.map(_._1).sorted.apply(1)
   }
 
   /** Queries whose bare `count()` would time a PRUNED plan: count()
@@ -94,32 +92,6 @@ object Bench {
       df: org.apache.spark.sql.DataFrame): Unit =
     if (fullMaterialize(name)) { df.queryExecution.toRdd.count(); () }
     else { df.count(); () }
-
-  /** Per-build sub-times inside a composite cache warm (the
-    * cache_d70 warm carries five artifact builds): MIN across the
-    * warm's clear-and-rebuild cycles, same estimator as the warm
-    * itself. Emitted as the detail JSON's "warm_builds" field so the
-    * warm's composition growth stays attributable build-by-build. */
-  private val warmBuilds =
-    scala.collection.mutable.LinkedHashMap[String, Double]()
-
-  private def timeBuild[A](name: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val r = f
-    val dt = (System.nanoTime() - t0) / 1e9
-    warmBuilds(name) =
-      math.min(warmBuilds.getOrElse(name, Double.MaxValue), dt)
-    r
-  }
-
-  /** (elapsed, succeeded) — a throwing cache warm must surface in the
-    * JSON (its cost re-smears onto whichever query rebuilds the cache),
-    * not vanish into a quiet catch. */
-  private def timeOnce(f: () => Unit): (Double, Boolean) = {
-    val t0 = System.nanoTime()
-    val ok = try { f(); true } catch { case _: Throwable => false }
-    ((System.nanoTime() - t0) / 1e9, ok)
-  }
 
   /** The round-1 baseline query set (the entries whose per-query times
     * survived BENCH_r01.json's bounded tail capture — the only
@@ -205,69 +177,55 @@ object Bench {
   private[graft] def canonDir(p: String): String =
     try new java.io.File(p).getCanonicalPath catch { case _: Throwable => p }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Sessions.local()
-    val committed = loadCommittedDetail(sfDir)
-    // warm the JVM/codegen/parquet paths once so first-run JIT and
-    // reader init are not charged to whichever query runs first
-    // (observed ±3s of pure warmup noise on a trivial query)
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    // JIT pre-warm at the smallest SF (untimed, standard JMH-style
-    // methodology): the heavy code paths — cache builds and streaming
-    // drains through both sink kinds — compile here instead of inside
-    // the timed line items. Median-of-3 already hides first-run JIT
-    // for ordinary queries, but the cache warms are timed ONCE and
-    // were absorbing ~3.5 s of pure first-build compilation (measured:
-    // dedup warm 9.8 s first build vs 5.1 s rebuilt in the same JVM).
-    // Caches built at the pre-warm SF are cleared so the timed warms
-    // below rebuild everything for the real sfDir from scratch.
-    val jitDir = sys.env.getOrElse("SPARK_GRAFT_JIT_DIR",
-      new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
-        .getPath)
-    if (canonDir(jitDir) != canonDir(sfDir) &&
-        new java.io.File(jitDir).isDirectory) {
-      try {
-        graft.ext.DedupOps.warm(spark, jitDir)
-        graft.ext.SimilarityOps.warm(spark, jitDir)
-        graft.graph.GraphOps.warm(spark, jitDir)
-        graft.query.FixtureCorpus.store(spark, jitDir).count()
-        // one memory-sink drain, one file-sink drain, one outer-join
-        // eviction drain: covers the streaming machinery variants
-        SparkEntry.queries("e84_stream_tumbling")(spark, jitDir).count()
-        SparkEntry.queries("e101_stream_dedup_activity")(spark, jitDir).count()
-        SparkEntry.queries("e100_stream_unmatched")(spark, jitDir).count()
-        graft.ext.TextOps.pplScoredDir(spark, jitDir)
-        graft.ext.TextOps.dsirManifestDir(spark, jitDir)
-        graft.ext.TextOps.bpeVocabDir(spark, jitDir)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] JIT pre-warm failed (non-fatal): $e")
-      }
-      graft.Registries.clearAll()
+  /** Per-build sub-times inside a composite cache warm (the
+    * cache_d70 warm carries seven artifact builds): MIN across the
+    * warm's clear-and-rebuild cycles, same estimator as the warm
+    * itself. Bench emits them as the detail JSON's "warm_builds" field
+    * so the warm's composition growth stays attributable
+    * build-by-build. */
+  private[graft] final class BuildTimes {
+    private val best = scala.collection.mutable.LinkedHashMap[String, Double]()
+
+    def apply[A](name: String)(f: => A): A = {
+      val t0 = System.nanoTime()
+      val r = f
+      val dt = (System.nanoTime() - t0) / 1e9
+      best(name) = math.min(best.getOrElse(name, Double.MaxValue), dt)
+      r
     }
-    shuffleProbeSecs(spark) // discard: first probe run carries its JIT
-    val probeStart = shuffleProbeSecs(spark)
-    // shared caches, each its own line item, timed MIN-of-3 with
-    // targeted clears between cycles (see cacheRuns below)
-    val cacheDefs: Seq[(String, () => Unit, () => Unit)] = Seq(
-      ("cache_dedup_frames",
+
+    def toSeq: Seq[(String, Double)] = best.toSeq
+  }
+
+  /** One shared cache warm: its line-item name, its build and its
+    * TARGETED clear (the entry's own cache only, never the shared
+    * store/models another line item already paid for). */
+  private[graft] final case class Warm(name: String, build: () => Unit,
+      clear: () => Unit)
+
+  /** The one table of shared cache warms, in the order [[main]] times
+    * them. [[ScaleBench]] and [[Dev]] pick entries by name. Building
+    * the table only makes closures; nothing runs until a `build`. */
+  private[graft] def warms(spark: SparkSession, sfDir: String,
+      timeBuild: BuildTimes = new BuildTimes): Seq[Warm] = Seq(
+      Warm("cache_dedup_frames",
         () => graft.ext.DedupOps.warm(spark, sfDir),
         // frames-only targeted clear: clearCaches() would also evict
         // the d70 window index and make list ORDER load-bearing
         () => graft.ext.DedupOps.clearFrames()),
-      ("cache_kmeans_model",
+      Warm("cache_kmeans_model",
         () => graft.ext.SimilarityOps.warm(spark, sfDir),
         () => graft.ext.SimilarityOps.clearCaches()),
-      ("cache_graph_edges",
+      Warm("cache_graph_edges",
         () => graft.graph.GraphOps.warm(spark, sfDir),
         () => graft.graph.GraphOps.clearCaches()),
-      ("cache_fixture_corpus",
+      Warm("cache_fixture_corpus",
         () => { graft.query.FixtureCorpus.store(spark, sfDir).count(); () },
         () => graft.query.FixtureCorpus.clear()),
       // the g90/g107-shared GraphX thread assignment (ONE CC run, the
       // cache_semantic_cc discipline) — placed after the fixture-corpus
       // warm it reads, with a targeted clear
-      ("cache_email_threads",
+      Warm("cache_email_threads",
         () => { graft.graph.GraphOps.emailThreadAssignment(spark, sfDir)
           .count(); () },
         () => graft.graph.GraphOps.clearEmailThreads()),
@@ -278,101 +236,88 @@ object Bench {
       // builds, runs 2-3 hit the cache). The clears are TARGETED: a
       // >2x rebuild drops only the entry's own cache, never the shared
       // store/models.
-      ("cache_em71_ingest",
+      Warm("cache_em71_ingest",
         () => { graft.query.EmailOps.realIngest(spark, sfDir).count(); () },
         () => graft.query.FixtureCorpus.clearAux("em71")),
-      ("cache_em72_http",
+      Warm("cache_em72_http",
         () => { graft.query.EmailOps.httpIngest(spark, sfDir).count(); () },
         () => graft.query.FixtureCorpus.clearAux("em72")),
-      ("cache_em73_compaction",
+      // em73's store build + compaction rewrite and em74's build +
+      // partition-drop retention: timed as builds so a rehearsal
+      // measures the store REWRITE, never a cached-frame read
+      Warm("cache_em73_compaction",
         () => { graft.query.EmailOps.compactedStore(spark, sfDir)
           .count(); () },
         () => graft.query.FixtureCorpus.clearAux("em73")),
-      ("cache_em74_retention",
+      Warm("cache_em74_retention",
         () => { graft.query.EmailOps.retainedStore(spark, sfDir)
           .count(); () },
         () => graft.query.FixtureCorpus.clearAux("em74")),
       // shared semantic-CC assignment (g103 + d62 serve from it) and
       // shared media signature frame (m78/m79/e112)
-      ("cache_semantic_cc",
+      Warm("cache_semantic_cc",
         () => { graft.graph.GraphOps.semanticComponentsCached(spark, sfDir)
           .count(); () },
         () => graft.graph.GraphOps.clearSemanticCc()),
       // g104's deployed base-label table (its query line item then
       // times the absorb alone)
-      ("cache_g104_base_cc",
+      Warm("cache_g104_base_cc",
         () => { graft.graph.GraphOps.incrementalComponents(spark, sfDir)
           .count(); () },
         () => graft.graph.GraphOps.clearIncrCcBase()),
       // g105's deployed base-rank table (its query line item then
       // times the warm-start absorb alone)
-      ("cache_g105_base_pr",
+      Warm("cache_g105_base_pr",
         () => { graft.graph.GraphOps.warmStartPagerank(spark, sfDir)
           .count(); () },
         () => graft.graph.GraphOps.clearIncrPrBase()),
-      ("cache_media_sigs",
+      Warm("cache_media_sigs",
         () => { graft.ext.Multimodal.cachedSignatures(spark, sfDir)
           .count(); () },
         () => graft.ext.Multimodal.clearCaches()),
-      ("cache_s81_incr_index",
+      Warm("cache_s81_incr_index",
         () => { graft.ext.SimilarityOps.ivfPqIncremental(spark, sfDir)
           .count(); () },
         () => graft.ext.SimilarityOps.clearSavedIndex("incr")),
       // s80's artifact write (build-once half of build-once/serve-many;
       // model training is already inside cache_kmeans_model)
-      ("cache_s80_index",
+      Warm("cache_s80_index",
         () => { graft.ext.SimilarityOps.ivfPqKnnServed(spark, sfDir)
           .count(); () },
         () => graft.ext.SimilarityOps.clearSavedIndex("ivfpq")),
       // the sparse-tier artifact builds: s87's one-shot inverted index
       // and s88's base-build + append-absorb (both leave the artifact
       // their query line items serve from)
-      ("cache_s87_bm25_index",
+      Warm("cache_s87_bm25_index",
         () => { graft.ext.SimilarityOps.bm25Served(spark, sfDir)
           .count(); () },
         () => graft.ext.SimilarityOps.clearSavedIndex("bm25")),
-      ("cache_s88_bm25_incr",
+      Warm("cache_s88_bm25_incr",
         () => { graft.ext.SimilarityOps.bm25Incremental(spark, sfDir)
           .count(); () },
         () => graft.ext.SimilarityOps.clearSavedIndex("bm25incr")),
       // the two compaction rewrites (sparse s96, dense s97): their
       // query line items then time the pure single-segment serve
-      ("cache_s96_compact",
+      Warm("cache_s96_compact",
         () => { graft.ext.SimilarityOps.bm25Compacted(spark, sfDir)
           .count(); () },
         () => graft.ext.SimilarityOps.clearSavedIndex("bm25compact")),
-      ("cache_s97_compact",
+      Warm("cache_s97_compact",
         () => { graft.ext.SimilarityOps.ivfPqCompacted(spark, sfDir)
           .count(); () },
         () => graft.ext.SimilarityOps.clearSavedIndex("ivfpqcompact")),
       // k83's persisted census artifact (base build + batch absorb);
       // the k83 query line item then times the pure serve + eval
-      ("cache_k83_census",
+      Warm("cache_k83_census",
         () => { graft.operators.Sketches.incrSketchCensus(spark, sfDir)
           .count(); () },
         () => graft.operators.Sketches.clearCaches()),
-      // d70's persisted corpus window index (d66's base artifact
-      // written once); the d70 query line item then times the pure
-      // per-batch probe. Targeted clear — the shared dedup frames
-      // stay. (Listed after cache_dedup_frames, whose clearCaches
-      // also drops window indexes.)
-      // extended (not a new line item — the round-12 verdict's
-      // warm-growth rule) with d71's tombstone manifest and d72's
-      // compaction fold: both are O(index) rewrites riding the same
-      // registry, so the d71/d72 query line items time pure serves
-      // the warm now carries five builds (base index+census, tombstone
-      // manifest — the round-13 advice fix: the sidecar write is no
-      // longer inside d71's timed serve — compaction fold, delta
-      // segment, and d74's full LSM fold); per-build sub-times are
-      // recorded under "warm_builds" so composition growth stays
-      // distinguishable from drift (the round-13 verdict's
-      // started-offset discipline one level down)
       // the model-tier segment artifacts (t79's DSIR count segments,
       // t81's reference-LM bigram-count segments): base + delta builds
       // each its own warm_builds sub-time (the cache_d70 discipline),
       // so the t79/t81 query line items time the pure summed-segments
       // serve + scoring pass
-      ("cache_model_segments",
+      Warm("cache_model_segments",
         () => {
           timeBuild("dsir_counts_base") {
             graft.ext.TextOps.dsirCountsBaseDir(spark, sfDir) }
@@ -404,7 +349,7 @@ object Bench {
       // round-15 verdict fix #4: the four entries each re-ran the
       // identical ~5 s pass per call, ~30-45 s of 3-run suite wall
       // with no line item of its own
-      ("cache_ppl_scored",
+      Warm("cache_ppl_scored",
         () => { graft.ext.TextOps.pplScoredDir(spark, sfDir); () },
         () => graft.ext.TextOps.clearPplScored()),
       // the DSIR selection artifacts (lr model table + the full t76
@@ -414,7 +359,7 @@ object Bench {
       // the e125/e129/e135 sidecar derivations each re-ran the
       // identical estimator+scoring pass per call (t74 stays the
       // honest from-scratch line item for that pass)
-      ("cache_dsir_manifest",
+      Warm("cache_dsir_manifest",
         () => {
           timeBuild("dsir_lr_manifest") {
             graft.ext.TextOps.dsirManifestDir(spark, sfDir) }
@@ -423,7 +368,17 @@ object Bench {
           () },
         () => { graft.ext.TextOps.clearDsirManifest()
           graft.ext.TextOps.clearBpeVocab() }),
-      ("cache_d70_window_index",
+      // d70's persisted corpus window index (d66's base artifact
+      // written once); the d70 query line item then times the pure
+      // per-batch probe. Targeted clear — the shared dedup frames
+      // stay. Extended (not a new line item — the round-12 verdict's
+      // warm-growth rule) with the tombstone manifest (d71), the
+      // compaction fold (d72), the delta segment (d73), the full LSM
+      // fold (d74), the second delta (d75) and the substring-cleaned
+      // corpus (d68/t85): O(index) rewrites riding the same registry,
+      // so those query line items time pure serves. Per-build
+      // sub-times keep composition growth distinguishable from drift.
+      Warm("cache_d70_window_index",
         () => {
           timeBuild("windex_base") {
             graft.ext.DedupOps.windowIndexDir(spark, sfDir) }
@@ -443,17 +398,160 @@ object Bench {
             graft.ext.DedupOps.substringCleanDir(spark, sfDir) }
           () },
         () => graft.ext.DedupOps.clearWindowIndexes()))
+
+  /** MIN of 3 clear-and-rebuild cycles of `w` (round-9 lesson:
+    * cache_dedup_frames recorded 6.07 s and 11.85 s across two runs
+    * both self-reporting clean — a one-shot warm has no noise
+    * rejection at all). Queries get median-of-3 because run-to-run
+    * variance is two-sided; a warm is a one-time BUILD whose true cost
+    * is its uncontended floor, so min is the estimator that converges
+    * across machines. Each re-time runs the warm's targeted clear
+    * first and rebuilds from scratch in the same JVM. Returns (the
+    * minimum or -1, succeeded); `once` times one build. */
+  private[graft] def minOf3(w: Warm,
+      once: (String, () => Unit) => (Double, Boolean) = timeOnce)
+      : (Double, Boolean) = {
+    var best = Double.MaxValue
+    var ok = true
+    var i = 0
+    while (i < 3 && ok) {
+      if (i > 0) w.clear()
+      val (t, o) = once(w.name, w.build)
+      if (o) best = math.min(best, t)
+      ok = o
+      i += 1
+    }
+    if (!ok && i > 1) {
+      // a REBUILD threw after its clear: restore the cache so the
+      // (already-recorded) earlier build's time stays an honest line
+      // item — without this the cache would silently rebuild inside
+      // whichever query touches the registry first, double-incurring a
+      // cost no line item shows. If the restore also fails, the item
+      // reports failed like any throwing warm.
+      val (_, restored) = once(w.name, w.build)
+      ok = restored && best < Double.MaxValue
+    }
+    (if (best == Double.MaxValue) -1.0 else best, ok)
+  }
+
+  /** (elapsed, succeeded) — a throwing warm or query must surface in
+    * the JSON (a failed warm's cost re-smears onto whichever query
+    * rebuilds the cache), not vanish into a quiet catch. The cause goes
+    * to stderr as one line. */
+  private[graft] def timeOnce(name: String, f: () => Unit)
+      : (Double, Boolean) = {
+    val t0 = System.nanoTime()
+    val ok = try { f(); true } catch { case e: Throwable =>
+      val msg = Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+        .getOrElse("")
+      System.err.println(s"[bench] $name failed: ${e.getClass.getName}: $msg")
+      false
+    }
+    ((System.nanoTime() - t0) / 1e9, ok)
+  }
+
+  /** Seconds at ms precision: enough for a wall-clock gate, and it
+    * keeps the detail line (300 entries) from bloating past capture
+    * buffers. Locale.ROOT: a comma-decimal default locale would render
+    * 61,234 and silently break the JSON lines. */
+  private[graft] def fmt(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** `{"k":v,...}` with every value through [[fmt]]. */
+  private[graft] def jsonObj(kvs: Seq[(String, Double)]): String =
+    kvs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+      .mkString("{", ",", "}")
+
+  /** Write the record `{<head>,"items":{...}}` to `path` and return
+    * it. Each item is a name with its numeric fields. With `merge` (a
+    * subset run) the file's prior items this run did not re-measure
+    * are kept, their values re-emitted through [[fmt]] so untouched
+    * entries stay byte-stable. A prior record that cannot be read, or
+    * has no "items", aborts the run instead of clobbering the full
+    * record with an empty prior set — the exact outcome merge mode
+    * exists to prevent. A failed write throws. */
+  private[graft] def writeRecord(path: String, head: String,
+      items: Seq[(String, Seq[(String, Double)])], merge: Boolean): String = {
+    import scala.jdk.CollectionConverters._
+    val p = java.nio.file.Paths.get(path)
+    val prior =
+      if (!merge || !java.nio.file.Files.exists(p)) Seq.empty
+      else {
+        val root =
+          try new com.fasterxml.jackson.databind.ObjectMapper()
+            .readTree(java.nio.file.Files.readString(p))
+          catch { case e: Throwable =>
+            sys.error(s"$path unreadable ($e): aborting the subset run " +
+              "rather than clobbering the full record")
+          }
+        val its = Option(root).flatMap(r => Option(r.get("items")))
+          .getOrElse(sys.error(s"$path has no \"items\" field: aborting " +
+            "the subset run rather than clobbering the full record"))
+        val measured = items.map(_._1).toSet
+        its.fieldNames().asScala.filterNot(measured).map { n =>
+          val o = its.get(n)
+          n -> o.fieldNames().asScala.map(f => f -> o.get(f).asDouble()).toSeq
+        }.toSeq
+      }
+    val body = (prior ++ items)
+      .map { case (n, fs) => "\"" + n + "\":" + jsonObj(fs) }
+      .mkString("{", ",", "}")
+    val line = s"""{$head,"items":$body}"""
+    java.nio.file.Files.write(p, (line + "\n").getBytes("UTF-8"))
+    line
+  }
+
+  /** The untimed JIT pre-warm dir of a measurement run: the `sf0.001`
+    * sibling of its scale dir. */
+  private[graft] def jitDir(sfDir: String): String =
+    new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001").getPath
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = Sessions.local()
+    val committed = loadCommittedDetail(sfDir)
+    // warm the JVM/codegen/parquet paths once so first-run JIT and
+    // reader init are not charged to whichever query runs first
+    // (observed ±3s of pure warmup noise on a trivial query)
+    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    // JIT pre-warm at the smallest SF (untimed, standard JMH-style
+    // methodology): the heavy code paths — cache builds and streaming
+    // drains through both sink kinds — compile here instead of inside
+    // the timed line items. Median-of-3 already hides first-run JIT
+    // for ordinary queries, but the cache warms are timed ONCE and
+    // were absorbing ~3.5 s of pure first-build compilation (measured:
+    // dedup warm 9.8 s first build vs 5.1 s rebuilt in the same JVM).
+    // Caches built at the pre-warm SF are cleared so the timed warms
+    // below rebuild everything for the real sfDir from scratch.
+    val jitDir = Bench.jitDir(sfDir)
+    if (canonDir(jitDir) != canonDir(sfDir) &&
+        new java.io.File(jitDir).isDirectory) {
+      try {
+        graft.ext.DedupOps.warm(spark, jitDir)
+        graft.ext.SimilarityOps.warm(spark, jitDir)
+        graft.graph.GraphOps.warm(spark, jitDir)
+        graft.query.FixtureCorpus.store(spark, jitDir).count()
+        // one memory-sink drain, one file-sink drain, one outer-join
+        // eviction drain: covers the streaming machinery variants
+        SparkEntry.queries("e84_stream_tumbling")(spark, jitDir).count()
+        SparkEntry.queries("e101_stream_dedup_activity")(spark, jitDir).count()
+        SparkEntry.queries("e100_stream_unmatched")(spark, jitDir).count()
+        graft.ext.TextOps.pplScoredDir(spark, jitDir)
+        graft.ext.TextOps.dsirManifestDir(spark, jitDir)
+        graft.ext.TextOps.bpeVocabDir(spark, jitDir)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] JIT pre-warm failed (non-fatal): $e")
+      }
+      graft.Registries.clearAll()
+    }
+    shuffleProbeSecs(spark) // discard: first probe run carries its JIT
+    val probeStart = shuffleProbeSecs(spark)
+    // shared caches, each its own line item, timed MIN-of-3 with
+    // targeted clears between cycles (see minOf3). The JIT pre-warm
+    // above has already compiled the heavy paths, so run 1 carries no
+    // first-build compilation bias vs runs 2-3.
+    val builds = new BuildTimes
     val rerun = scala.collection.mutable.ArrayBuffer[String]()
-    // MIN-of-3 for every warm (round-9 lesson: cache_dedup_frames
-    // recorded 6.07 s and 11.85 s across two runs both self-reporting
-    // clean — a one-shot warm has no noise rejection at all). Queries
-    // get median-of-3 because run-to-run variance is two-sided; a warm
-    // is a one-time BUILD whose true cost is its uncontended floor, so
-    // min is the estimator that converges across machines. Each re-time
-    // clears the entry's own caches first (targeted — never the shared
-    // store/models) and rebuilds from scratch in the same JVM; the JIT
-    // pre-warm above has already compiled the heavy paths, so run 1
-    // carries no first-build compilation bias vs runs 2-3.
     // Per-entry start offsets (seconds since this point, monotonic):
     // a driver rerun CLUSTER (round 12: q08–q11+q20, contiguous) could
     // only be read as "one ambient window" by inference; with each
@@ -464,31 +562,11 @@ object Bench {
     val started = scala.collection.mutable.LinkedHashMap[String, Double]()
     def markStart(name: String): Unit =
       started(name) = (System.nanoTime() - benchT0) / 1e9
-    val cacheRuns: Seq[(String, (Double, Boolean))] = cacheDefs.map {
-      case (name, warm, clear) =>
-        markStart(name)
-        var best = Double.MaxValue
-        var ok = true
-        var i = 0
-        while (i < 3 && ok) {
-          if (i > 0) clear()
-          val (t, o) = timeOnce(warm)
-          if (o) best = math.min(best, t)
-          ok = o
-          i += 1
-        }
-        if (!ok && i > 1) {
-          // a REBUILD threw after its clear: restore the cache so the
-          // (already-recorded) earlier build's time stays an honest
-          // line item — without this the cache would silently rebuild
-          // inside whichever query touches the registry first,
-          // double-incurring a cost no line item shows. If the restore
-          // also fails, the item reports failed like any throwing warm.
-          val (_, ok3) = timeOnce(warm)
-          ok = ok3 && best < Double.MaxValue
-        }
-        name -> (if (best == Double.MaxValue) -1.0 else best, ok)
-    }
+    val cacheRuns: Seq[(String, (Double, Boolean))] =
+      warms(spark, sfDir, builds).map { w =>
+        markStart(w.name)
+        w.name -> minOf3(w)
+      }
     // a FAILED warm's elapsed is dropped from the line items entirely:
     // its cost re-lands on whichever query rebuilds the cache, so
     // keeping it would double-count (and contradict the "excluded from
@@ -531,7 +609,7 @@ object Bench {
         markStart(name)
         val run = () => runQuery(name, fn(spark, sfDir))
         val c = committed.getOrElse(name, -1.0)
-        val (t1, ok1) = timeOnce(run)
+        val (t1, ok1) = timeOnce(name, run)
         val accept = c > 0 && ok1 &&
           t1 <= c * math.max(1.3, bandSoFar * 1.2) + 0.15
         if (c > 0 && ok1) firstRatios += t1 / c
@@ -540,12 +618,12 @@ object Bench {
           else if (accept) t1
           else {
             escalated += name
-            val (t2, ok2) = timeOnce(run)
-            val (t3, ok3) = timeOnce(run)
+            val (t2, ok2) = timeOnce(name, run)
+            val (t3, ok3) = timeOnce(name, run)
             if (!ok2 || !ok3) -1.0 else Seq(t1, t2, t3).sorted.apply(1)
           }
         if (inflated(t, c)) {
-          val t2 = median3(run)
+          val t2 = median3(run, name)
           if (t2 >= 0) { rerun += name; t = math.min(t, t2) }
         }
         name -> t
@@ -568,12 +646,6 @@ object Bench {
       System.err.println("[bench] WARNING: failed (excluded from total): " +
         failed.mkString(", "))
     val all = cacheTimes ++ queryTimes
-    // ms precision: enough for a wall-clock gate, and it keeps the
-    // detail line (100+ entries) from bloating past capture buffers.
-    // Locale.ROOT: a comma-decimal default locale would render 61,234
-    // and silently break both JSON lines.
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def strArr(xs: Seq[String]): String =
       xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     val failedJson = strArr(failed)
@@ -616,25 +688,17 @@ object Bench {
     // into unparseable fragments every round (BENCH_r0{1..4}.json all
     // show "parsed": null), so the headline line below is kept compact
     // and printed last.
-    val qsAll = all.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val startedJson = started.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val warmBuildsJson = warmBuilds
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
+    val qsAll = jsonObj(all)
+    val startedJson = jsonObj(started.toSeq)
+    val warmBuildsJson = jsonObj(builds.toSeq)
     val detail =
       s"""{"detail":"per_query_seconds","runs":"adaptive","contended":$contended,"probe_shuffle":${fmt(probeSecs)}$driftJson$baselineJson,"failed":$failedJson,"rerun":$rerunJson,"escalated":$escalatedJson,"warm_builds":$warmBuildsJson,"queries":$qsAll,"started":$startedJson,"sf":"$sfDir"}"""
     println(detail)
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH_DETAIL.json"),
+    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_DETAIL.json"),
       (detail + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
     // Compact headline: total + the slowest entries only, sized to
     // survive a 2000-char tail capture intact.
-    val qsTop = all.sortBy(-_._2).take(20)
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
+    val qsTop = jsonObj(all.sortBy(-_._2).take(20))
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":"adaptive","contended":$contended,"probe_shuffle":${fmt(probeSecs)}$driftJson$baselineJson,"failed":$failedJson,"rerun":$rerunJson,"queries":$qsTop,"sf":"$sfDir"}""")
     graft.Registries.clearAll()
     spark.stop()

@@ -19,9 +19,9 @@ import org.apache.spark.sql.SparkSession
   * and the ratio. */
 object ScaleBench {
 
-  /** The heavy tiers named by the round-8 verdict + their shared cache
-    * warms. Each entry: (line-item name, input-volume ratio key). */
-  private val Heavy = Seq(
+  /** The heavy tiers named by the round-8 verdict. Each entry:
+    * (line-item name, input-volume ratio key). */
+  private[graft] val Heavy = Seq(
     "d51_jaccard_pairs" -> "docs",
     "d52_minhash_lsh" -> "docs",
     "d59_passage_dedup" -> "docs",
@@ -310,173 +310,76 @@ object ScaleBench {
     // contribution branches into one drain
     "e135_stream_release_gate" -> "docs")
 
+  /** The shared cache warms this rehearsal times, picked by name from
+    * [[Bench.warms]] (they are data-proportional too — a super-linear
+    * cache build is as much a scale bug as a super-linear query). Each
+    * entry: (warm name, input-volume ratio key). */
+  private[graft] val Warms = Seq(
+    "cache_dedup_frames" -> "docs",
+    "cache_kmeans_model" -> "emb",
+    "cache_graph_edges" -> "lineitem",
+    // the s81 incremental-index build: base-4/5 training + O(batch)
+    // absorb — its exponent vs embedding growth is the update-path
+    // scale claim (serving is the s80 line item)
+    "cache_s81_incr_index" -> "emb",
+    // the s87 inverted-index build (one corpus scan → postings/df/
+    // stats artifact): the index BUILD-path scale claim (serving is the
+    // s87 query line item, which runs against this warm's artifact)
+    "cache_s87_bm25_index" -> "docs",
+    // em73/em74's store builds are cached per (session, dir) — timed
+    // as min-of-3 builds so the rehearsal measures the store REWRITE
+    // and the partition-drop retention, never a cached-frame read (a
+    // Heavy median-of-3 would time the cache on runs 2-3 and report a
+    // fantasy exponent)
+    "cache_em73_compaction" -> "docs",
+    "cache_em74_retention" -> "docs",
+    // the s96/s97 compaction REWRITES: the honest exponent carriers for
+    // the compact paths (their query line items measure the serve)
+    "cache_s96_compact" -> "docs",
+    "cache_s97_compact" -> "emb",
+    // the shared semantic-CC assignment (g103 + d62 both serve from
+    // it) and the shared media signature frame (m78/m79/e112): their
+    // builds are the honest exponent carriers, the query line items
+    // measure serve-side work
+    "cache_semantic_cc" -> "emb",
+    // the base-label (g104) and base-rank (g105) builds whose absorbs
+    // the g104/g105 line items measure
+    "cache_g104_base_cc" -> "lineitem",
+    "cache_g105_base_pr" -> "lineitem",
+    "cache_media_sigs" -> "docs",
+    // k83's census artifact: the build-path exponent; the k83 line item
+    // times the serve + eval
+    "cache_k83_census" -> "docs",
+    // the substring tier's build-once half (d70..d75 and d68 serve from
+    // it)
+    "cache_d70_window_index" -> "docs",
+    // the model-tier segment builds (t79/t81/t82/t83/t84/t86 serve from
+    // them)
+    "cache_model_segments" -> "docs",
+    // the shared perplexity scoring-pass artifact (t75/t77/t78 and
+    // e130's batch τ serve from it)
+    "cache_ppl_scored" -> "docs")
+
   /** (cache line items, query line items) for one volume. `only`
     * (dev): restrict to named line items — cuts the add-one-operator
-    * rehearsal loop from the full ~30-item suite to the new entries;
-    * the partial result is MERGED into SCALE_DETAIL.json (see main)
-    * so a subset run can never clobber the full record. */
+    * rehearsal loop from the full suite to the new entries; the partial
+    * result is MERGED into SCALE_DETAIL.json (see main) so a subset run
+    * can never clobber the full record. Unselected warms are never
+    * built. */
   private def measure(spark: SparkSession, dir: String,
       only: Option[Set[String]])
       : (Seq[(String, Double)], Seq[(String, Double)]) = {
     graft.Registries.clearAll()
-    // MIN of 3 clear-and-rebuild cycles per warm — the Bench warm
-    // discipline (one-shot build timings swung 2× between clean runs
-    // in round 9, and these numbers feed published exponents). The
-    // clear is the entry's own targeted clear so one warm's re-cycle
-    // cannot evict another's already-measured cache.
-    def minOf3(clear: () => Unit, f: () => Unit): Double = {
-      var best = Double.MaxValue
-      var i = 0
-      while (i < 3) {
-        if (i > 0) clear()
-        val t0 = System.nanoTime()
-        try f() catch { case e: Throwable =>
-          System.err.println(s"[scale] FAILED: $e"); return -1.0 }
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        i += 1
-      }
-      best
+    def want(name: String) = only.forall(_.contains(name))
+    val table = Bench.warms(spark, dir).map(w => w.name -> w).toMap
+    val caches = Warms.collect { case (name, _) if want(name) =>
+      val (t, ok) = Bench.minOf3(table(name))
+      name -> (if (ok) t else -1.0)
     }
-    // (name, clear, build) — built lazily so a subset run skips the
-    // unselected builds entirely, not just their reporting
-    val cacheDefs: Seq[(String, () => Unit, () => Unit)] = Seq(
-      ("cache_dedup_frames",
-        // frames-only targeted clear: clearCaches() would also evict
-        // the d70 window index and make list ORDER load-bearing
-        () => graft.ext.DedupOps.clearFrames(),
-        () => graft.ext.DedupOps.warm(spark, dir)),
-      ("cache_kmeans_model",
-        () => graft.ext.SimilarityOps.clearCaches(),
-        () => graft.ext.SimilarityOps.warm(spark, dir)),
-      ("cache_graph_edges",
-        () => graft.graph.GraphOps.clearCaches(),
-        () => graft.graph.GraphOps.warm(spark, dir)),
-      // the s81 incremental-index build: base-4/5 training + O(batch)
-      // absorb — its exponent vs embedding growth is the update-path
-      // scale claim (serving is the s80 line item)
-      ("cache_s81_incr_index",
-        () => graft.ext.SimilarityOps.clearSavedIndex("incr"),
-        () => {
-          graft.ext.SimilarityOps.ivfPqIncremental(spark, dir).count(); () }),
-      // the s87 inverted-index build (one corpus scan → postings/df/
-      // stats artifact): its exponent vs docs growth is the index
-      // BUILD-path scale claim (serving is the s87 query line item,
-      // which runs against the artifact this warm leaves behind)
-      ("cache_s87_bm25_index",
-        () => graft.ext.SimilarityOps.clearSavedIndex("bm25"),
-        () => {
-          graft.ext.SimilarityOps.bm25Served(spark, dir).count(); () }),
-      // em73's store build + compaction rewrite is cachedAux per
-      // (session, dir) like em71 — timed as its own min-of-3 build
-      // with a targeted clear so the rehearsal measures the store
-      // REWRITE, never a cached-frame read (a Heavy median-of-3 would
-      // time the cache on runs 2-3 and report a fantasy exponent)
-      ("em73_store_compaction",
-        () => graft.query.FixtureCorpus.clearAux("em73"),
-        () => {
-          graft.query.EmailOps.compactedStore(spark, dir).count(); () }),
-      // em74's store build + partition-drop retention, cachedAux like
-      // em73 — the rehearsal times build+retain, whose scale claim is
-      // that the retention step itself is partition-metadata-bounded
-      ("em74_store_retention",
-        () => graft.query.FixtureCorpus.clearAux("em74"),
-        () => {
-          graft.query.EmailOps.retainedStore(spark, dir).count(); () }),
-      // the shared semantic-CC assignment (g103 + d62 both serve from
-      // it) and the shared media signature frame (m78/m79/e112): their
-      // builds are the honest exponent carriers, the query line items
-      // measure serve-side work
-      // the s96 compaction REWRITE (postings anti-join + sidecar
-      // folds into a fresh single-segment artifact): one
-      // postings-scan-bound pass, the honest exponent carrier for
-      // the compact path (the s96 query line item measures the
-      // serve over the result)
-      ("cache_s96_compact",
-        () => graft.ext.SimilarityOps.clearSavedIndex("bm25compact"),
-        () => {
-          graft.ext.SimilarityOps.bm25Compacted(spark, dir).count(); () }),
-      // the s97 ANN compaction rewrite (members/codes anti-join +
-      // frozen-model copy into a fresh artifact)
-      ("cache_s97_compact",
-        () => graft.ext.SimilarityOps.clearSavedIndex("ivfpqcompact"),
-        () => {
-          graft.ext.SimilarityOps.ivfPqCompacted(spark, dir).count(); () }),
-      ("cache_semantic_cc",
-        () => graft.graph.GraphOps.clearSemanticCc(),
-        () => {
-          graft.graph.GraphOps.semanticComponentsCached(spark, dir)
-            .count(); () }),
-      // g104's deployed base-label table (CC over the base 4/5 of the
-      // co-purchase graph) — the build half whose absorb the g104
-      // line item measures
-      ("cache_g104_base_cc",
-        () => graft.graph.GraphOps.clearIncrCcBase(),
-        () => {
-          graft.graph.GraphOps.incrementalComponents(spark, dir)
-            .count(); () }),
-      // the base-rank build (the 10-iteration fixed-point run over
-      // the base graph) — the build half whose warm-start absorb the
-      // g105 line item measures
-      ("cache_g105_base_pr",
-        () => graft.graph.GraphOps.clearIncrPrBase(),
-        () => {
-          graft.graph.GraphOps.warmStartPagerank(spark, dir)
-            .count(); () }),
-      ("cache_media_sigs",
-        () => graft.ext.Multimodal.clearCaches(),
-        () => {
-          graft.ext.Multimodal.cachedSignatures(spark, dir).count(); () }),
-      // k83's census artifact: base-4/5 sketch build + batch-1/5
-      // absorb (one corpus scan each, writes ~#sources rows) — the
-      // build-path exponent; the k83 line item times the serve + eval
-      ("cache_k83_census",
-        () => graft.operators.Sketches.clearCaches(),
-        () => {
-          graft.operators.Sketches.incrSketchCensus(spark, dir)
-            .count(); () }),
-      // d70's persisted window index — the substring tier's
-      // build-once half (the serve is the d70 Heavy entry); extended
-      // with d71's tombstone manifest + d72's compaction fold (same
-      // registry, O(index) rewrites — the d71/d72 Heavy entries then
-      // time pure serves)
-      ("cache_d70_window_index",
-        () => graft.ext.DedupOps.clearWindowIndexes(),
-        () => { graft.ext.DedupOps.windowIndexDir(spark, dir)
-          graft.ext.DedupOps.windexTombstonesDir(spark, dir)
-          graft.ext.DedupOps.compactedWindexDir(spark, dir)
-          graft.ext.DedupOps.windexDeltaDir(spark, dir)
-          graft.ext.DedupOps.foldedWindexDir(spark, dir)
-          graft.ext.DedupOps.windexDelta2Dir(spark, dir); () }),
-      // the model-tier segment builds (t79 DSIR counts, t81 LM c2):
-      // base + delta, each O(its own slice) — the t79/t81 Heavy
-      // entries then time pure summed-segments serves
-      ("cache_model_segments",
-        () => graft.ext.TextOps.clearModelSegs(),
-        () => { graft.ext.TextOps.dsirCountsBaseDir(spark, dir)
-          graft.ext.TextOps.dsirCountsDeltaDir(spark, dir)
-          graft.ext.TextOps.pplC2BaseDir(spark, dir)
-          graft.ext.TextOps.pplC2DeltaDir(spark, dir)
-          graft.ext.TextOps.dsirCountsRetractDir(spark, dir)
-          graft.ext.TextOps.pplC2RetractDir(spark, dir)
-          // the t84/t86 gen-1 folds (read the segments above, never
-          // the corpus — expected exponent ≈ the segment tables')
-          graft.ext.TextOps.dsirCountsFoldedDir(spark, dir)
-          graft.ext.TextOps.pplC2FoldedDir(spark, dir); () }),
-      // the shared perplexity scoring-pass artifact (t75/t77/t78 and
-      // e130's batch τ serve from it) — its build IS the old per-call
-      // scoring cost, now a data-proportional line item of its own
-      ("cache_ppl_scored",
-        () => graft.ext.TextOps.clearPplScored(),
-        () => { graft.ext.TextOps.pplScoredDir(spark, dir); () }))
-    val caches = cacheDefs
-      .filter { case (name, _, _) => only.forall(_.contains(name)) }
-      .map { case (name, clear, build) => name -> minOf3(clear, build) }
-    val queries = Heavy
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, _) =>
-        name -> Bench.median3(
-          () => Bench.runQuery(name, SparkEntry.queries(name)(spark, dir)))
-      }
+    val queries = Heavy.collect { case (name, _) if want(name) =>
+      name -> Bench.median3(
+        () => Bench.runQuery(name, SparkEntry.queries(name)(spark, dir)), name)
+    }
     (caches, queries)
   }
 
@@ -503,7 +406,7 @@ object ScaleBench {
         (rows(dirB, "documents") + rows(dirB, "embeddings")).toDouble /
           (rows(dirA, "documents") + rows(dirA, "embeddings")))
     // JIT pre-warm (untimed): compile the heavy code paths at sf0.001
-    val jit = "/root/testdata/sf0.001"
+    val jit = Bench.jitDir(dirA)
     try {
       graft.ext.DedupOps.warm(spark, jit)
       graft.ext.SimilarityOps.warm(spark, jit)
@@ -522,73 +425,19 @@ object ScaleBench {
     val (cachesB, queriesB) = measure(spark, dirB, only)
     graft.Registries.clearAll()
 
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val volOf: Map[String, Double] =
-      Heavy.map { case (n, k) => n -> vol(k) }.toMap ++ Map(
-        "cache_dedup_frames" -> vol("docs"),
-        "cache_kmeans_model" -> vol("emb"),
-        "cache_graph_edges" -> vol("lineitem"),
-        "cache_s81_incr_index" -> vol("emb"),
-        "cache_s87_bm25_index" -> vol("docs"),
-        "em73_store_compaction" -> vol("docs"),
-        "em74_store_retention" -> vol("docs"),
-        "cache_s96_compact" -> vol("docs"),
-        "cache_s97_compact" -> vol("emb"),
-        "cache_semantic_cc" -> vol("emb"),
-        "cache_g104_base_cc" -> vol("lineitem"),
-        "cache_g105_base_pr" -> vol("lineitem"),
-        "cache_media_sigs" -> vol("docs"),
-        "cache_k83_census" -> vol("docs"),
-        "cache_d70_window_index" -> vol("docs"),
-        "cache_model_segments" -> vol("docs"),
-        "cache_ppl_scored" -> vol("docs"))
+    val volOf = (Heavy ++ Warms).map { case (n, k) => n -> vol(k) }.toMap
     val aMap = (cachesA ++ queriesA).toMap
     val items = (cachesB ++ queriesB).map { case (name, tB) =>
       val tA = aMap.getOrElse(name, -1.0)
       val ratio = if (tA > 0 && tB > 0) tB / tA else -1.0
       // exponent vs the item's own input growth: log(timeRatio)/log(volRatio)
       val expo = if (ratio > 0) math.log(ratio) / math.log(volOf(name)) else -1.0
-      s""""$name":{"a":${fmt(tA)},"b":${fmt(tB)},"ratio":${fmt(ratio)},"vol":${fmt(volOf(name))},"exponent":${fmt(expo)}}"""
+      name -> Seq("a" -> tA, "b" -> tB, "ratio" -> ratio,
+        "vol" -> volOf(name), "exponent" -> expo)
     }
-    val volJson = vol.map { case (k, v) => s""""$k":${fmt(v)}""" }
-      .mkString("{", ",", "}")
-    // subset runs merge into the existing record: re-serialize the
-    // prior items that were NOT re-measured, so a targeted new-operator
-    // probe can never clobber the full rehearsal file
-    val priorItems: Seq[String] = if (only.isEmpty) Seq.empty else {
-      val p = java.nio.file.Paths.get("SCALE_DETAIL.json")
-      if (!java.nio.file.Files.exists(p)) Seq.empty
-      else {
-        // Mirror ScaleDecade: a corrupt/unreadable prior record must ABORT
-        // the subset run, not silently clobber the full rehearsal with an
-        // empty prior set — that is the exact hazard merge mode prevents.
-        val root =
-          try {
-            val om = new com.fasterxml.jackson.databind.ObjectMapper()
-            om.readTree(java.nio.file.Files.readString(p))
-          } catch {
-            case e: Throwable =>
-              sys.error(s"[scale] subset merge: cannot read/parse prior " +
-                s"SCALE_DETAIL.json — aborting so the full record is not " +
-                s"clobbered: $e")
-          }
-        val its = root.get("items")
-        if (its == null)
-          sys.error("[scale] subset merge: prior SCALE_DETAIL.json has no " +
-            "\"items\" field — aborting so the full record is not clobbered")
-        import scala.jdk.CollectionConverters._
-        val measured = (cachesB ++ queriesB).map(_._1).toSet
-        its.fieldNames().asScala.filterNot(measured)
-          .map(n => s""""$n":${its.get(n).toString}""").toSeq
-      }
-    }
-    val line = s"""{"scale":"ratio_rehearsal","dirA":"$dirA","dirB":"$dirB","volumes":$volJson,"items":{${(priorItems ++ items).mkString(",")}}}"""
-    println(line)
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("SCALE_DETAIL.json"),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    println(Bench.writeRecord("SCALE_DETAIL.json",
+      s""""scale":"ratio_rehearsal","dirA":"$dirA","dirB":"$dirB","volumes":${Bench.jsonObj(vol.toSeq)}""",
+      items, merge = only.isDefined))
     spark.stop()
   }
 }

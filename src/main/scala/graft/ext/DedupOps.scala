@@ -182,32 +182,6 @@ object DedupOps {
     ()
   }
 
-  /** Dev-probe: time the warm's component builds SEQUENTIALLY (the
-    * production warm overlaps them) so the cache_dedup_frames line
-    * item is attributable leg by leg. */
-  private[graft] def warmProfileLegs(s: SparkSession, d: String)
-      : Seq[(String, Double)] = {
-    def t(name: String)(f: => Unit): (String, Double) = {
-      val t0 = System.nanoTime()
-      f
-      name -> (System.nanoTime() - t0) / 1e9
-    }
-    Seq(
-      t("shingles")(hashedShingles(s, d).count()),
-      t("simhash")(simhashCached(s, d).count()),
-      t("scored_pairs")(pairEdgesCached(s, d).count()),
-      t("lsh_sigs") {
-        val (sigs, _, _) =
-          lshPipeline(s, d, shardDict = estShingles(s, d) > dictBroadcastCeiling)
-        sigs.count()
-      },
-      t("lsh_verify") {
-        val (_, _, verified) =
-          lshPipeline(s, d, shardDict = estShingles(s, d) > dictBroadcastCeiling)
-        verified.count()
-      })
-  }
-
   /** Estimated distinct-shingle count — upper bound from a one-column
     * parquet aggregate (≈ one shingle per token at ~6 chars/token;
     * total occurrences ≥ distinct). Shared by every dictionary-join
@@ -220,11 +194,7 @@ object DedupOps {
   // per-shingle hash amortization to win back, the extra distinct is a
   // full shuffle of the raw shingle strings. Direct per-row hashing is
   // the right shape for the single-hash frame.
-  /** Probe-only accessor (dev mains). */
-  private[graft] def hashedShinglesForProbe(s: SparkSession, d: String): DataFrame =
-    hashedShingles(s, d)
-
-  private def hashedShingles(s: SparkSession, d: String): DataFrame =
+  private[graft] def hashedShingles(s: SparkSession, d: String): DataFrame =
     frames.cached(s, d, "sh") {
       shingleRows(s, d).select(col("doc_id"), md5Long(col("shingle")).as("sh"))
     }
@@ -309,31 +279,15 @@ object DedupOps {
     * at sf0.1). */
   private def scoredPairsCached(s: SparkSession, d: String): DataFrame =
     frames.cached(s, d, "scored_pairs") {
-      scoredPairsPlan(s, d, broadcastArrays = false)
+      scoredPairsPlan(s, d)
     }
 
-  /** Exact scored-pair computation, two physical strategies with
-    * spec-pinned identical output:
-    *
-    *  - `broadcastArrays = false` (the DEFAULT): the exchange plan —
-    *    postings self-join on hashed shingle, `groupBy(pair).count()`
-    *    for the intersection, join per-doc sizes. Pays one
-    *    candidate-proportional exchange + hash agg, which Spark spills
-    *    gracefully past memory. MEASURED (shingle frame warm,
-    *    local[32]): 1.8 s at sf0.1 / 17.0 s at sf1 — linear-ish in
-    *    candidate volume (×92 candidates → ×9.4 time).
-    *  - `broadcastArrays = true` (kept as the zero-agg-state
-    *    alternative): each doc's sorted shingle array is broadcast and
-    *    a pair is emitted exactly once, on its smallest shared
-    *    shingle, with the exact intersection computed from the two
-    *    arrays — no post-join exchange, no aggregation state at all.
-    *    MEASURED SLOWER on the same conditions (24.5 s at sf0.1 /
-    *    74.1 s at sf1): the per-candidate-ROW `array_intersect`
-    *    (hash-set build + result alloc per row) costs far more than
-    *    the exchange it avoids. It only won in a 4-thread spill-bound
-    *    sandbox (215+ s exchange) — the regime a real cluster sizes
-    *    memory to avoid. Recorded here so the idea isn't retried; not
-    *    auto-selected.
+  /** Exact scored-pair computation: postings self-join on hashed
+    * shingle, `groupBy(pair).count()` for the intersection, join
+    * per-doc sizes. Pays one candidate-proportional exchange + hash
+    * agg, which Spark spills gracefully past memory. MEASURED (shingle
+    * frame warm, local[32]): 1.8 s at sf0.1 / 17.0 s at sf1 —
+    * linear-ish in candidate volume (×92 candidates → ×9.4 time).
     *
     * Candidate-pair volume itself is data-intrinsic for an EXACT
     * similarity join (every qualifying-or-near pair must be examined,
@@ -341,49 +295,25 @@ object DedupOps {
     * ×92 per ×10 docs — worst-case by construction); the DF cap bounds
     * per-shingle fanout, and the corpus-scale near-dup path remains
     * d52's banded LSH (measured exponent 0.01). */
-  private[graft] def scoredPairsPlan(s: SparkSession, d: String,
-      broadcastArrays: Boolean): DataFrame = {
+  private def scoredPairsPlan(s: SparkSession, d: String): DataFrame = {
     // join on 60-bit hashed shingle ids: ~4x smaller shuffle than the
     // raw shingle strings, same counts (md5-family, collision-free
     // here and bit-identical in the oracle); DF-capped vs hot shingles
     val sh = dfCappedShingles(s, d)
     val a = sh.toDF("i", "sh")
     val b = sh.toDF("j", "sh")
-    if (broadcastArrays) {
-      val arrs = sh.groupBy("doc_id")
-        .agg(sort_array(collect_list(col("sh"))).as("arr"),
-          count(lit(1)).as("n"))
-      a.join(b, "sh").filter(col("i") < col("j"))
-        .join(broadcast(arrs.select(col("doc_id").as("i"),
-          col("arr").as("arr_i"), col("n").as("ni"))), "i")
-        .join(broadcast(arrs.select(col("doc_id").as("j"),
-          col("arr").as("arr_j"), col("n").as("nj"))), "j")
-        // one row per (pair, shared shingle) reaches here; keep the row
-        // carrying the SMALLEST shared shingle — dedup without exchange
-        .withColumn("inter_arr", array_intersect(col("arr_i"), col("arr_j")))
-        .filter(col("sh") === array_min(col("inter_arr")))
-        .withColumn("inter", size(col("inter_arr")).cast("long"))
-        .withColumn("jaccard",
-          round(col("inter") / (col("ni") + col("nj") - col("inter")), 4))
-        .withColumn("containment",
-          round(col("inter") / least(col("ni"), col("nj")), 4))
-        .filter(col("jaccard") >= 0.5 || col("containment") >= 0.8)
-        .select(col("i").as("doc_a"), col("j").as("doc_b"),
-          col("jaccard"), col("containment"))
-    } else {
-      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      a.join(b, "sh").filter(col("i") < col("j"))
-        .groupBy("i", "j").agg(count(lit(1)).as("inter"))
-        .join(sizes.toDF("i", "ni"), "i")
-        .join(sizes.toDF("j", "nj"), "j")
-        .withColumn("jaccard",
-          round(col("inter") / (col("ni") + col("nj") - col("inter")), 4))
-        .withColumn("containment",
-          round(col("inter") / least(col("ni"), col("nj")), 4))
-        .filter(col("jaccard") >= 0.5 || col("containment") >= 0.8)
-        .select(col("i").as("doc_a"), col("j").as("doc_b"),
-          col("jaccard"), col("containment"))
-    }
+    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    a.join(b, "sh").filter(col("i") < col("j"))
+      .groupBy("i", "j").agg(count(lit(1)).as("inter"))
+      .join(sizes.toDF("i", "ni"), "i")
+      .join(sizes.toDF("j", "nj"), "j")
+      .withColumn("jaccard",
+        round(col("inter") / (col("ni") + col("nj") - col("inter")), 4))
+      .withColumn("containment",
+        round(col("inter") / least(col("ni"), col("nj")), 4))
+      .filter(col("jaccard") >= 0.5 || col("containment") >= 0.8)
+      .select(col("i").as("doc_a"), col("j").as("doc_b"),
+        col("jaccard"), col("containment"))
   }
 
   def jaccardPairs(s: SparkSession, d: String): DataFrame =

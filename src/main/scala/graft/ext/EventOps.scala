@@ -642,10 +642,10 @@ object EventOps {
     * native skew immunity partial aggregation gives aggregates. An
     * explicit salt decomposition was measured 1.97× SLOWER on a
     * 5M-row 60%-hot corpus and removed (SCALE.md, SKEW_DETAIL.json
-    * topk_window_plain_vs_salted); PlanAudit pins the Partial
-    * group-limit in this entry's executed plan. The ordering (value desc, event_id
-    * asc) is total, so the oracle's single-sort semantics hash-match
-    * exactly. */
+    * topk_window_plain_vs_salted); `graft.Dev audit` shows the
+    * Partial group-limit in this entry's executed plan. The ordering
+    * (value desc, event_id asc) is total, so the oracle's single-sort
+    * semantics hash-match exactly. */
   def topkPerKeyEvents(s: SparkSession, d: String): DataFrame = {
     val ev = graft.Tables.events(s, d)
       .select(col("event_type"), col("event_id"), col("value"))

@@ -1701,24 +1701,6 @@ object SimilarityOps {
     * both its buckets yields no rows (measured 494/500 covered at
     * sf0.001); recall-vs-cost is the band structure, measured on the
     * serving side by s72's recall@3 eval. */
-  /** Exact ordered candidate-pair volume of the s84 band self-join
-    * (Σ n·(n−1) over (band, key) buckets) — the denominator for the
-    * time-per-candidate scale reading (the dedup tier's candidate
-    * honesty applied to the kNN graph: with the band structure FIXED,
-    * candidates grow ~quadratically in corpus size, which is exactly
-    * why production widens the band key as the corpus grows). */
-  private[graft] def knnGraphCandidates(s: SparkSession, d: String): Long = {
-    val sigs = embeddings(s, d)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("sig", signatureCol)
-    val r = sigs.select(explode(array(
-        struct(lit(0L).as("band"), expr("sig % 256").as("key")),
-        struct(lit(1L).as("band"), expr("sig div 256").as("key")))).as("bk"))
-      .groupBy("bk.band", "bk.key").agg(count(lit(1)).as("n"))
-      .agg(sum(expr("n * (n - 1)"))).head()
-    if (r.isNullAt(0)) 0L else r.getLong(0)
-  }
-
   def knnGraph(s: SparkSession, d: String): DataFrame = {
     val sigs = embeddings(s, d)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))

@@ -12,33 +12,6 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Bucketed co-located joins: pre-shuffle both sides of a repeated
-  * fact-fact join ONCE at write time so every subsequent join on the
-  * bucket key runs with zero exchanges (SortMergeJoin over co-located
-  * buckets). The 100 TB answer to "lineitem ⋈ orders shuffles both
-  * sides every query".
-  *
-  * Uses `bucketBy` + `saveAsTable` (bucket metadata lives in the
-  * session catalog; plain parquet paths cannot carry it).
-  */
-object Bucketing {
-
-  /** Write `df` bucketed by `key` into managed table `table`. */
-  def writeBucketed(df: DataFrame, table: String, key: String,
-      numBuckets: Int = 32, sortBy: Option[String] = None): Unit = {
-    val w = df.write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, key)
-    sortBy.fold(w)(s => w.sortBy(s)).saveAsTable(table)
-  }
-
-  /** Join two bucketed tables on their bucket key — plans with no
-    * Exchange when bucket counts match (verify via
-    * `joinBucketed(...).queryExecution`). */
-  def joinBucketed(spark: SparkSession, leftTable: String,
-      rightTable: String, key: String): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), key)
-}
-
 /** Hash-bucketed (dedupe_key → date_month) secondary index — the
   * pruned answer to "which months already hold these keys", which the
   * partitioned upsert previously answered with a 2-column scan of the

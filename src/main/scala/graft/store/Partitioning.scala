@@ -6,23 +6,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Date-partitioned store layout: the 100 TB read-path for Q4-style
-  * range scans (SURVEY §2.5). Rows land under
-  * `date_month=yyyy-MM/` directories (null dates under
+  * range scans (SURVEY §2.5). [[PartitionedEmailStore]] writes rows
+  * under `date_month=yyyy-MM/` directories (null dates under
   * `date_month=unknown`), so a month-bounded query prunes whole
   * partitions at planning time instead of reading and filtering —
   * verify with `PartitionFilters` in the scan plan (ScaleOpsSpec).
   */
 object Partitioning {
-
-  private val monthCol =
-    coalesce(date_format(col("date"), "yyyy-MM"), lit("unknown"))
-
-  /** Write store-schema rows partitioned by month(date). */
-  def writeByMonth(df: DataFrame, path: String): Unit =
-    df.withColumn("date_month", monthCol)
-      .write.mode("overwrite")
-      .partitionBy("date_month")
-      .parquet(path)
 
   /** Month-pruned date-range read: derives the partition predicate from
     * the range (the partition column must appear in the filter for

@@ -90,4 +90,38 @@ class BenchGuardsSpec extends AnyFunSuite {
     val t = Bench.median3(() => { n += 1; if (n == 2) sys.error("boom") })
     assert(t == -1.0, "a single throwing run must poison the median")
   }
+
+  // --------------------------------------------- writeRecord()
+
+  private def item(n: String, a: Double) = n -> Seq("a" -> a, "b" -> 2.0)
+
+  test("the record writer throws when the target's parent is a regular file") {
+    val parent = Files.createTempFile("bench-record", ".json")
+    parent.toFile.deleteOnExit()
+    intercept[java.io.IOException] {
+      Bench.writeRecord(parent.resolve("SCALE_DETAIL.json").toString,
+        "\"scale\":\"t\"", Seq(item("x", 1.0)), merge = false)
+    }
+  }
+
+  test("a subset write keeps the prior items it did not re-measure") {
+    val p = writeTmp(
+      """{"scale":"t","items":{"x":{"a":1.0,"b":2.5},"y":{"a":0.1,"b":0.2}}}""")
+    val line = Bench.writeRecord(p, "\"scale\":\"t\"",
+      Seq(item("x", 3.0)), merge = true)
+    assert(line == """{"scale":"t","items":{"y":{"a":0.100,"b":0.200},""" +
+      """"x":{"a":3.000,"b":2.000}}}""")
+    assert(Files.readString(java.nio.file.Paths.get(p)) == line + "\n")
+  }
+
+  test("a subset write aborts on a prior record it cannot merge") {
+    Seq("not json", """{"scale":"t"}""").foreach { prior =>
+      val p = writeTmp(prior)
+      intercept[RuntimeException] {
+        Bench.writeRecord(p, "\"scale\":\"t\"", Seq(item("x", 1.0)),
+          merge = true)
+      }
+      assert(Files.readString(java.nio.file.Paths.get(p)) == prior)
+    }
+  }
 }
