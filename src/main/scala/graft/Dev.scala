@@ -17,8 +17,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *    their caches stay built, so a warm listed before a query times
   *    the query against that cache. Each run prints its seconds and the
   *    Spark jobs it started; a streaming entry also prints each
-  *    micro-batch's `durationMs`. An unknown name fails before anything
-  *    runs.
+  *    micro-batch's input rows, `durationMs` and every state operator's
+  *    `name:numShufflePartitions`. An unknown name fails before
+  *    anything runs.
   *  - `plan <sfDir> <outDir> <suffix> <q1,q2,...>`: writes each query's
   *    formatted physical plan to `<outDir>/<name>_<suffix>.txt` (the
   *    before/after plan evidence under `plans/`).
@@ -75,7 +76,9 @@ object Dev {
       override def onQueryProgress(
           e: StreamingQueryListener.QueryProgressEvent): Unit =
         println(s"[dev] batch ${e.progress.batchId} " +
-          s"rows=${e.progress.numInputRows} durationMs=${e.progress.durationMs}")
+          s"rows=${e.progress.numInputRows} durationMs=${e.progress.durationMs}" +
+          e.progress.stateOperators
+            .map(o => s" ${o.operatorName}:${o.numShufflePartitions}").mkString)
       override def onQueryTerminated(
           e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     }
