@@ -453,9 +453,12 @@ object Bench {
   /** Seconds at ms precision: enough for a wall-clock gate, and it
     * keeps the detail line (300 entries) from bloating past capture
     * buffers. Locale.ROOT: a comma-decimal default locale would render
-    * 61,234 and silently break the JSON lines. */
+    * 61,234 and silently break the JSON lines. A value that is not a
+    * finite number (a scale exponent whose input volume did not grow)
+    * is written as `null`, since `Infinity` and `NaN` are not JSON. */
   private[graft] def fmt(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    if (v.isNaN || v.isInfinite) "null"
+    else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
   /** `{"k":v,...}` with every value through [[fmt]]. */
   private[graft] def jsonObj(kvs: Seq[(String, Double)]): String =
@@ -466,7 +469,8 @@ object Bench {
     * it. Each item is a name with its numeric fields. With `merge` (a
     * subset run) the file's prior items this run did not re-measure
     * are kept, their values re-emitted through [[fmt]] so untouched
-    * entries stay byte-stable. A prior record that cannot be read, or
+    * entries stay byte-stable (a `null` reads back as NaN and is
+    * written as `null` again). A prior record that cannot be read, or
     * has no "items", aborts the run instead of clobbering the full
     * record with an empty prior set — the exact outcome merge mode
     * exists to prevent. A failed write throws. */
@@ -490,7 +494,10 @@ object Bench {
         val measured = items.map(_._1).toSet
         its.fieldNames().asScala.filterNot(measured).map { n =>
           val o = its.get(n)
-          n -> o.fieldNames().asScala.map(f => f -> o.get(f).asDouble()).toSeq
+          n -> o.fieldNames().asScala.map { f =>
+            val v = o.get(f)
+            f -> (if (v.isNull) Double.NaN else v.asDouble())
+          }.toSeq
         }.toSeq
       }
     val body = (prior ++ items)

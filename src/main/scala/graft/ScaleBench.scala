@@ -430,7 +430,9 @@ object ScaleBench {
     val items = (cachesB ++ queriesB).map { case (name, tB) =>
       val tA = aMap.getOrElse(name, -1.0)
       val ratio = if (tA > 0 && tB > 0) tB / tA else -1.0
-      // exponent vs the item's own input growth: log(timeRatio)/log(volRatio)
+      // exponent vs the item's own input growth: log(timeRatio)/log(volRatio);
+      // ±Infinity or NaN when the volume did not grow (vol 1), which
+      // Bench.fmt writes as null
       val expo = if (ratio > 0) math.log(ratio) / math.log(volOf(name)) else -1.0
       name -> Seq("a" -> tA, "b" -> tB, "ratio" -> ratio,
         "vol" -> volOf(name), "exponent" -> expo)

@@ -685,20 +685,15 @@ object Sketches {
     * memory benefit; the derived value settles anything that fits one
     * task's buffer and a 10B-row group still pays every round on any
     * realistic executor (64 GB / 16 slots ⇒ ~16M-row settle — three
-    * orders of magnitude under the group). Overridable via
-    * `spark.graft.exactRank.settleRows`; the 3-arg [[exactRankStat]]
+    * orders of magnitude under the group). The 3-arg [[exactRankStat]]
     * takes it directly so the unit suite exercises the multi-round
     * bracket path at fixture scale (the round-16 ADVICE gap: a 64k
     * settle left rounds 1–2 covered only by the sf0.1 verify run). */
   private[graft] def exactRankSettleRows(
       s: org.apache.spark.sql.SparkSession): Long = {
-    val conf = s.conf.get("spark.graft.exactRank.settleRows", "")
-    if (conf.nonEmpty) conf.toLong
-    else {
-      val slots = math.max(1, s.sparkContext.defaultParallelism)
-      val perTaskBytes = Runtime.getRuntime.maxMemory / slots / 4
-      math.max(64L * 1024L, perTaskBytes / 64L)
-    }
+    val slots = math.max(1, s.sparkContext.defaultParallelism)
+    val perTaskBytes = Runtime.getRuntime.maxMemory / slots / 4
+    math.max(64L * 1024L, perTaskBytes / 64L)
   }
 
   private[graft] def exactRankStat(rows0: DataFrame,

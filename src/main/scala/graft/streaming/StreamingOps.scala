@@ -1,9 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -27,15 +27,27 @@ object StreamingOps {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** Streaming scratch (checkpoints, sink dirs, staged sources) goes
-    * through the shared scratch policy: tmpfs when available, since
-    * checkpoint commits fsync on every micro-batch (offset log, commit
-    * log, one state delta per store partition), and a recursive delete
-    * at JVM exit for whatever a drain does not delete itself. */
-  private def scratchTempDir(prefix: String): java.nio.file.Path =
-    graft.Fs.scratchTempDir(prefix)
+  /** documents schema for streaming reads. */
+  val documentsSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("text", StringType),
+    StructField("lang", StringType),
+    StructField("source", StringType),
+    StructField("n_chars", LongType)))
 
-  /** Staged stream sources and restart-twin slices per (session, dir):
+  /** embeddings schema for streaming reads. */
+  val embeddingsSchema: StructType = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType)),
+    StructField("label", IntegerType)))
+
+  private def schemaOf(table: String): StructType = table match {
+    case "events" => eventsSchema
+    case "documents" => documentsSchema
+    case "embeddings" => embeddingsSchema
+  }
+
+  /** Staged stream sources and restart slices per (session, dir):
     * entries `stream-src-<file>`, `stream-sentinel`, `restart-slices`
     * and `doc-slices`. */
   private val staged = new graft.ArtifactRegistry
@@ -62,302 +74,44 @@ object StreamingOps {
         graft.Tables.events(spark, d)
           .coalesce(1).write.mode("overwrite").parquet(dir)
       else
-        Files.createSymbolicLink(java.nio.file.Paths.get(dir, name),
-          java.nio.file.Paths.get(d, name).toAbsolutePath)
+        Files.createSymbolicLink(Paths.get(dir, name),
+          Paths.get(d, name).toAbsolutePath)
     }
 
-  /** Input-volume probes cached per (dir, tag): the count only sizes
+  /** Input row counts per (dir, table, predicate): the count only sizes
     * the drain's state partitioning (and is stable per fixture dir), so
     * re-scanning the parquet on every bench re-run of the same query
-    * is pure fixed overhead. */
+    * is pure fixed overhead. The default `lit(true)` predicate is
+    * pruned by the optimizer, so an unfiltered count is answered from
+    * the parquet footers. */
   private val inCounts =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def cachedCount(d: String, tag: String)(count: => Long): Long =
-    inCounts.computeIfAbsent(s"$d|$tag", _ => count).longValue()
+  private def inCount(spark: SparkSession, d: String, table: String,
+      sizedBy: Column): Long =
+    inCounts.computeIfAbsent(s"$d|$table|$sizedBy", _ =>
+      spark.read.parquet(s"$d/$table.parquet").filter(sizedBy).count())
+      .longValue()
 
-  /** Best-effort recursive delete for per-run scratch (checkpoints).
-    * Shared impl: [[graft.Fs.deleteTree]]. */
-  private def deleteRecursively(root: java.nio.file.Path): Unit =
-    graft.Fs.deleteTree(root)
+  /** One entry's stream input. `open` starts a fresh reader over the
+    * staged source (a plan may open it twice: e88/e100 join two
+    * sources); `nIn` is the input row count the drain width is sized
+    * by. A restart feed also carries its fresh source dir and the
+    * phase-2 hook that adds the rest of the input to it. */
+  private final case class Feed(nIn: Long, open: () => DataFrame,
+      restart: Option[(Path, () => Unit)] = None)
 
-  private val drainWidthLock = new Object
+  private def reader(spark: SparkSession, table: String, dir: String)
+      : () => DataFrame =
+    () => spark.readStream.schema(schemaOf(table)).parquet(dir)
 
-  /** Run a drain with the state partitioning sized to `nIn` input
-    * rows (~50k rows per partition, floored at 1, capped at the session
-    * setting), restoring the session value after. Streaming state-store
-    * partitioning is fixed by shuffle.partitions at the first batch and
-    * AQE does not coalesce inside micro-batches, so fixture-scale runs
-    * would otherwise commit 32 near-empty state stores per micro-batch
-    * (a stream-stream join maintains four per side per partition). At
-    * real scale the formula returns the session width unchanged.
-    * (Profiled: raising the drain's partition count 4× does not move
-    * addBatch — the per-drain cost is fixed streaming machinery, not
-    * aggregation parallelism.)
-    *
-    * The setting is session-global, and an overlapping call from
-    * another thread would read the narrowed value as its "previous" and
-    * restore it for good, so the save-set-restore window is serialized.
-    * Batch paths never write this setting; they rely on AQE. */
-  private[graft] def withDrainWidth[T](spark: SparkSession, nIn: Long)
-      (body: => T): T = drainWidthLock.synchronized {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    val p = math.max(1L, math.min(prev.toLong, (nIn + 49999) / 50000))
-    spark.conf.set(key, p.toString)
-    try body finally spark.conf.set(key, prev)
+  /** The feed of `table` (`events`, `documents` or `embeddings`): the
+    * staged file read with the table's schema, the drain sized by the
+    * rows that match `sizedBy`. */
+  private def feed(spark: SparkSession, d: String, table: String,
+      sizedBy: Column = lit(true)): Feed = {
+    val dir = stageFile(spark, d, s"$table.parquet")
+    Feed(inCount(spark, d, table, sizedBy), reader(spark, table, dir))
   }
-
-  /** Drain a streaming frame into a named memory sink, state
-    * partitioning sized by [[withDrainWidth]]. */
-  private def drainToMemorySink(spark: SparkSession, sink: String,
-      mode: String, nIn: Long)(buildQuery: => DataFrame): Unit =
-    withDrainWidth(spark, nIn) {
-      val ckpt = scratchTempDir("graft-ckpt")
-      val q = buildQuery.writeStream
-        .outputMode(mode)
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      try q.processAllAvailable()
-      finally { q.stop(); deleteRecursively(ckpt) }
-    }
-
-  /** Previous file-sink output dir per (dir, query) — each drain writes
-    * a FRESH dir (the bench must time the real write, and a file sink
-    * refuses to restart over a foreign commit log), so the prior run's
-    * files are deleted once the next drain for the SAME (dir, query)
-    * begins; keying by query name alone would let a drain against one
-    * fixture dir invalidate a still-lazy result frame from another.
-    * Keys carry the session UUID (like FrameRegistry): two sessions
-    * draining the same (dir, query) must not delete each other's
-    * still-referenced files. The last dir per key lives until JVM
-    * exit (tmpfs, sink-sized). */
-  private val lastSinkDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
-  /** Session-scoped sink key — see [[lastSinkDirs]]. */
-  private def sinkKey(spark: SparkSession, key: String): String =
-    org.apache.spark.sql.graft.Bridge.sessionUUID(spark) + "|" + key
-
-  /** Read the committed sink files back, tolerating a zero-output
-    * stream: a parquet sink that committed no data files (only
-    * `_spark_metadata`) makes `spark.read.parquet` throw on schema
-    * inference, where the memory sink this path replaced returned a
-    * schema-ful empty frame — recover the schema from the streaming
-    * frame itself. The zero-output case is detected by LISTING the
-    * dir for data files (not by catching AnalysisException, which
-    * would also swallow corrupt-file / bad-path failures as silently
-    * empty results). */
-  private def readSinkOrEmpty(spark: SparkSession, out: java.nio.file.Path,
-      schema: StructType): DataFrame = {
-    val hasData = {
-      val s = java.nio.file.Files.list(out)
-      try s.anyMatch(p => p.getFileName.toString.startsWith("part-"))
-      finally s.close()
-    }
-    if (hasData) spark.read.schema(schema).parquet(out.toString)
-    else spark.createDataFrame(spark.sparkContext
-      .emptyRDD[org.apache.spark.sql.Row], schema)
-  }
-
-  /** Drain an append-mode streaming frame through a parquet FILE sink —
-    * the production serving path: results land as exactly-once
-    * committed files (`_spark_metadata` log), bounded by the cluster's
-    * storage rather than driver memory, and downstream consumers read
-    * them back as an ordinary parquet table. Used by the twins whose
-    * results grow with data volume (closed sessions, per-user activity)
-    * where [[drainToSnapshot]]'s driver-resident memory sink would be
-    * the scale ceiling. Returns the committed files read back. */
-  private def drainToFileSink(spark: SparkSession, key: String, nIn: Long)
-      (buildQuery: => DataFrame): DataFrame =
-    withDrainWidth(spark, nIn) {
-      val ckpt = scratchTempDir("graft-ckpt")
-      val out = scratchTempDir("graft-file-sink")
-      val streamDf = buildQuery
-      val q = streamDf.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      try q.processAllAvailable()
-      finally { q.stop(); deleteRecursively(ckpt) }
-      val prev = lastSinkDirs.put(sinkKey(spark, key), out)
-      if (prev != null) deleteRecursively(prev)
-      readSinkOrEmpty(spark, out, streamDf.schema)
-    }
-
-  /** File-backed drain for UPDATE-mode streams (the file sink itself is
-    * append-only): each micro-batch's update rows are appended as
-    * parquet files via foreachBatch — sound whenever the downstream
-    * read collapses per-key emissions (e95 takes max(reached), which is
-    * monotone), i.e. the standard upsert-log pattern. Same scale story
-    * as [[drainToFileSink]]: nothing driver-resident. */
-  private def drainUpdateToFiles(spark: SparkSession, key: String, nIn: Long)
-      (buildQuery: => DataFrame): DataFrame =
-    withDrainWidth(spark, nIn) {
-      val ckpt = scratchTempDir("graft-ckpt")
-      val out = scratchTempDir("graft-update-sink")
-      val streamDf = buildQuery
-      val q = streamDf.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(out.toString)
-        }
-        .start()
-      try q.processAllAvailable()
-      finally { q.stop(); deleteRecursively(ckpt) }
-      val prev = lastSinkDirs.put(sinkKey(spark, key), out)
-      if (prev != null) deleteRecursively(prev)
-      readSinkOrEmpty(spark, out, streamDf.schema)
-    }
-
-  /** Drain, then SNAPSHOT the sink into a standalone frame and drop
-    * the temp view. A memory sink holds its full result in driver
-    * memory for the JVM's life, and every invocation registers a fresh
-    * one (the bench's median-of-3 runs each streaming query 3×) — by
-    * the time the suite reached the t5x tier the accumulated sinks'
-    * heap pressure was inflating unrelated queries 4×. The snapshot
-    * keeps ONE copy of the result and frees the sink immediately.
-    * Reserved for COMPLETE-mode drains, whose results are aggregate-
-    * bounded by construction (#windows × #types, #segments, …);
-    * anything whose row count grows with data volume (matched pairs,
-    * closed sessions, per-user state) drains through
-    * [[drainToFileSink]]/[[drainUpdateToFiles]] instead and never
-    * passes through the driver. */
-  private def drainToSnapshot(spark: SparkSession, mode: String, nIn: Long)
-      (buildQuery: => DataFrame): DataFrame = {
-    val sink = newSink()
-    drainToMemorySink(spark, sink, mode, nIn)(buildQuery)
-    val out = spark.table(sink)
-    val rows = out.collect()
-    spark.catalog.dropTempView(sink)
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), out.schema)
-  }
-
-  private def newSink(): String =
-    "stream_out_" + UUID.randomUUID.toString.replace("-", "")
-
-  /** e84: the e80 tumbling-window aggregation run as a STREAM — file
-    * source over the same parquet, complete-mode memory sink, drained
-    * synchronously. Output is identical to the batch twin, so it shares
-    * e80's DuckDB oracle: batch/stream parity is oracle-checked. */
-  def streamTumblingCounts(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "events.parquet")
-    // metadata-only count (no filter → answered from parquet footers)
-    val nIn = cachedCount(d, "ev_all") {
-      spark.read.parquet(s"$d/events.parquet").count()
-    }
-    val snap = drainToSnapshot(spark, "complete", nIn) {
-      spark.readStream
-        .schema(eventsSchema)
-        .parquet(stageDir)
-        .withColumn("bucket", expr("(ts div 1000) div 300000000"))
-        .withColumn("cents", expr("CAST(round(value * 100) AS BIGINT)"))
-        .groupBy("bucket", "event_type")
-        .agg(count(lit(1)).as("n_events"),
-          (sum("cents") / 100.0).as("total_value"))
-    }
-    snap
-      .withColumn("window_start", timestamp_seconds(col("bucket") * 300))
-      .select("window_start", "event_type", "n_events", "total_value")
-      .orderBy("window_start", "event_type")
-  }
-
-  /** e92: the e91 trending op as a STREAM — per-(window, type) counts
-    * maintained by a streaming aggregation (complete-mode memory sink),
-    * the per-window argmax computed on the tiny sink table at read
-    * time. That split IS the trending-topics serving design: counters
-    * live in incrementally-updated state, the top-k pick is a stateless
-    * query over the aggregate, so the stream never re-sorts. Output is
-    * identical to the batch twin and shares e91's DuckDB oracle —
-    * stream/batch parity on the trending tier is itself oracle-checked
-    * (the e84/e80 pattern). */
-  def streamWindowTopEvent(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "events.parquet")
-    val nIn = cachedCount(d, "ev_all") {
-      spark.read.parquet(s"$d/events.parquet").count()
-    }
-    val snap = drainToSnapshot(spark, "complete", nIn) {
-      spark.readStream
-        .schema(eventsSchema)
-        .parquet(stageDir)
-        .withColumn("bucket", expr("(ts div 1000) div 300000000"))
-        .groupBy("bucket", "event_type")
-        .agg(count(lit(1)).as("n"))
-    }
-    graft.ext.EventOps.topEventFromCounts(snap)
-  }
-
-  /** documents schema for streaming reads. */
-  val documentsSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
-  /** e85: the d50 exact-dedup aggregation run as a STREAM — the
-    * "dedup a corpus as it arrives" shape: per-fingerprint keeper +
-    * copy count maintained as streaming state (complete-mode memory
-    * sink). Output is identical to the batch twin, so it shares d50's
-    * DuckDB oracle — stream/batch parity on the dedup tier is itself
-    * oracle-checked, the e84/e80 pattern applied to dedup. */
-  /** e88: STREAM-STREAM interval join — clicks joined to errors of the
-    * same user within the 10 minutes before each error, as two
-    * watermarked file-source streams (the canonical stream-stream
-    * inner-join shape: equality key + event-time band, both sides
-    * buffered in watermark-bounded state). Output is the raw matched
-    * pairs in append mode; shares e87's band semantics, so the DuckDB
-    * twin is a plain inequality inner join — the streaming JOIN
-    * operator itself is oracle-checked, like e84/e85 for windows and
-    * dedup. */
-  def streamRangeJoin(spark: SparkSession, d: String): DataFrame = {
-    def src(): DataFrame =
-      spark.readStream.schema(eventsSchema)
-        .parquet(stageFile(spark, d, "events.parquet"))
-        .withColumn("tsus", expr("ts div 1000"))
-        .withColumn("etime", timestamp_micros(col("tsus")))
-    // sized to the JOINED volume: a one-column scan of event_type
-    // (cheap; not footer-only like the unfiltered counts) — the join
-    // state holds only the two filtered streams
-    val nIn = cachedCount(d, "ev_err_click") {
-      spark.read.parquet(s"$d/events.parquet")
-        .filter(col("event_type").isin("error", "click")).count()
-    }
-    // matched pairs grow with data volume → file sink, never the driver
-    val snap = drainToFileSink(spark, s"$d|e88", nIn) {
-      val errors = src().filter(col("event_type") === "error")
-        .select(col("user_id"), col("event_id").as("error_event_id"),
-          col("tsus").as("etsus"), col("etime").as("err_time"))
-        .withWatermark("err_time", "1 hour")
-      val clicks = src().filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("tsus").as("ctsus"),
-          col("etime").as("click_time"))
-        .withWatermark("click_time", "1 hour")
-      errors.join(clicks,
-        col("user_id") === col("c_user") &&
-          col("click_time") >= col("err_time") - expr("INTERVAL 10 MINUTES") &&
-          col("click_time") < col("err_time"))
-    }
-    snap
-      .select(col("user_id"), col("error_event_id"), col("ctsus"))
-      .orderBy("error_event_id", "ctsus")
-  }
-
-  /** DuckDB twin of [[streamRangeJoin]]: inequality-band inner join. */
-  val streamRangeJoinSql: String =
-    """WITH ev AS (SELECT event_id, epoch_us(ts) AS tsus, user_id, event_type
-      |            FROM events)
-      |SELECT e.user_id, e.event_id AS error_event_id, c.tsus AS ctsus
-      |FROM ev e JOIN ev c
-      |  ON e.event_type = 'error' AND c.event_type = 'click'
-      |  AND c.user_id = e.user_id
-      |  AND c.tsus >= e.tsus - 600000000 AND c.tsus < e.tsus
-      |ORDER BY error_event_id, ctsus""".stripMargin
 
   // e100's staging dir: the events parquet PLUS a far-future sentinel
   // batch. LEFT OUTER stream-stream joins emit their null rows only
@@ -369,11 +123,10 @@ object StreamingOps {
   // (session, dir) (bench runs the query 3×).
   private def stageWithSentinel(spark: SparkSession, d: String): String =
     staged.getOrBuild(spark, d, "stream-sentinel") { out =>
-      val dir = java.nio.file.Paths.get(out)
+      val dir = Paths.get(out)
       // reuse the normalized staged file (symlink on the passthrough
       // path) so the sentinel batch and the corpus share one ts clock
-      val staged = java.nio.file.Paths.get(
-        stageFile(spark, d, "events.parquet"))
+      val staged = Paths.get(stageFile(spark, d, "events.parquet"))
       import scala.jdk.CollectionConverters._
       Files.list(staged).iterator().asScala
         // skip _SUCCESS markers and .crc checkpoint siblings — only
@@ -396,6 +149,352 @@ object StreamingOps {
         .coalesce(1).write.mode("append").parquet(out)
     }
 
+  /** The events feed with the e100 sentinel batch staged beside it. */
+  private def sentinelFeed(spark: SparkSession, d: String,
+      sizedBy: Column = lit(true)): Feed = {
+    val dir = stageWithSentinel(spark, d)
+    Feed(inCount(spark, d, "events", sizedBy), reader(spark, "events", dir))
+  }
+
+  /** The two time-slices + sentinel batch as parquet FILES, written
+    * once per (session, dir) and reused by every restart-twin
+    * invocation (bench median-of-3 re-runs each twin 3× — rewriting
+    * ~identical slices each run was pure fixed overhead; the slices
+    * are a deterministic function of the fixture, so symlinking the
+    * cached files preserves every semantic of a fresh write). */
+  private def sliceFiles(spark: SparkSession, d: String)
+      : (Path, Path, Path) = {
+    val dir = staged.getOrBuild(spark, d, "restart-slices") { out =>
+      val ev = graft.Tables.events(spark, d)
+      val r = ev.agg(min("ts"), max("ts")).head()
+      val (mn, mx) = (r.getLong(0), r.getLong(1))
+      // midpoint cut: deterministic arithmetic (no sampling), splits by
+      // EVENT TIME so slice-2 rows always sit above the watermark the
+      // phase-1 drain leaves behind (nothing gets late-dropped that the
+      // batch oracle counts), and both slices are non-empty on every
+      // driver fixture
+      val cut = mn + (mx - mn) / 2
+      def one(sub: String, df: DataFrame): Unit =
+        graft.Fs.writeSingleParquet(df, sliceAt(out, sub))
+      import spark.implicits._
+      val far = mx + 360000000000000L // +100 h in ns (e100 staging)
+      val sentinel = Seq((-1L, far, -1L, "error", 0.0, "{}"),
+          (-2L, far, -2L, "click", 0.0, "{}"))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      one("s1", ev.filter(col("ts") <= cut))
+      one("s2", ev.filter(col("ts") > cut))
+      one("sent", sentinel)
+    }
+    (sliceAt(dir, "s1"), sliceAt(dir, "s2"), sliceAt(dir, "sent"))
+  }
+
+  private def sliceAt(dir: String, sub: String): Path =
+    Paths.get(dir, s"$sub.parquet")
+
+  /** Document slices (doc_id parity split) for the document restart
+    * twins, cached per (session, dir) like [[sliceFiles]]. Parity, not
+    * event time: the proof deliberately uses the harshest arrival
+    * split (interleaved ids, no watermark semantics to lean on). */
+  private def docSliceFiles(spark: SparkSession, d: String)
+      : (Path, Path) = {
+    val dir = staged.getOrBuild(spark, d, "doc-slices") { out =>
+      val docs = spark.read.parquet(s"$d/documents.parquet")
+      graft.Fs.writeSingleParquet(docs.filter(col("doc_id") % 2 === 0),
+        sliceAt(out, "s1"))
+      graft.Fs.writeSingleParquet(docs.filter(col("doc_id") % 2 === 1),
+        sliceAt(out, "s2"))
+    }
+    (sliceAt(dir, "s1"), sliceAt(dir, "s2"))
+  }
+
+  /** A restart feed of `table`: slice 1 is present from the start;
+    * the phase-2 hook links the `later` files into the same source dir.
+    * A FRESH dir per call (it MUTATES mid-drain by design), which the
+    * drain deletes when it finishes; the slice files are symlinked, not
+    * rewritten. */
+  private def restartFeed(spark: SparkSession, d: String, table: String,
+      sizedBy: Column, slice1: Path, later: Seq[(String, Path)]): Feed = {
+    val dir = graft.Fs.scratchTempDir(s"graft-$table-restart")
+    def link(name: String, target: Path): Path =
+      Files.createSymbolicLink(dir.resolve(name), target)
+    link("slice1.parquet", slice1)
+    Feed(inCount(spark, d, table, sizedBy), reader(spark, table, dir.toString),
+      Some(dir -> (() => later.foreach { case (n, p) => link(n, p) })))
+  }
+
+  /** The events restart feed: the two time slices, the e100-style
+    * far-future sentinel rows added with slice 2 when `sentinel`. */
+  private def eventRestartFeed(spark: SparkSession, d: String,
+      sizedBy: Column = lit(true), sentinel: Boolean = false): Feed = {
+    val (s1, s2, sent) = sliceFiles(spark, d)
+    restartFeed(spark, d, "events", sizedBy, s1, Seq("slice2.parquet" -> s2) ++
+      Option.when(sentinel)("sentinel.parquet" -> sent))
+  }
+
+  /** The documents restart feed: the two doc_id parity slices. */
+  private def docRestartFeed(spark: SparkSession, d: String): Feed = {
+    val (s1, s2) = docSliceFiles(spark, d)
+    restartFeed(spark, d, "documents", lit(true), s1,
+      Seq("slice2.parquet" -> s2))
+  }
+
+  private val drainConfLock = new Object
+
+  /** The streaming tier's one scoped conf setter: runs `body` on the
+    * built `plan` with the state partitioning sized to `nIn` input rows
+    * (~50k rows per partition, floored at 1, capped at the session
+    * setting) and, when the plan holds a `transformWithState` operator,
+    * the RocksDB state store provider that operator requires. Both
+    * session values are restored after, an unset provider by unsetting
+    * it.
+    *
+    * Streaming state-store partitioning is fixed by shuffle.partitions
+    * at the first batch and AQE does not coalesce inside micro-batches,
+    * so fixture-scale runs would otherwise commit 32 near-empty state
+    * stores per micro-batch (a stream-stream join maintains four per
+    * side per partition). At real scale the formula returns the session
+    * width unchanged. (Profiled: raising the drain's partition count 4×
+    * does not move addBatch — the per-drain cost is fixed streaming
+    * machinery, not aggregation parallelism.)
+    *
+    * Both settings are session-global, and an overlapping call from
+    * another thread would read the narrowed values as its "previous"
+    * and restore them for good, so the save-set-restore window is
+    * serialized. Other streaming queries started in this session during
+    * the window would pick the values up too; the lock bounds that
+    * exposure. Batch paths never write these settings; they rely on
+    * AQE. */
+  private[graft] def withDrainConf[T](spark: SparkSession, nIn: Long)
+      (plan: => DataFrame)(body: DataFrame => T): T =
+    drainConfLock.synchronized {
+      val widthKey = "spark.sql.shuffle.partitions"
+      val providerKey = "spark.sql.streaming.stateStore.providerClass"
+      val prevWidth = spark.conf.get(widthKey)
+      // the explicit setting only: getOption would report the default
+      // of an unset provider, and restoring that would pin it
+      val prevProvider = spark.conf.getAll.get(providerKey)
+      val p = math.max(1L, math.min(prevWidth.toLong, (nIn + 49999) / 50000))
+      spark.conf.set(widthKey, p.toString)
+      try {
+        val df = plan
+        if (df.queryExecution.logical.exists(_.isInstanceOf[
+            org.apache.spark.sql.catalyst.plans.logical.TransformWithState]))
+          spark.conf.set(providerKey, "org.apache.spark.sql.execution" +
+            ".streaming.state.RocksDBStateStoreProvider")
+        body(df)
+      } finally {
+        spark.conf.set(widthKey, prevWidth)
+        prevProvider.fold(spark.conf.unset(providerKey))(
+          spark.conf.set(providerKey, _))
+      }
+    }
+
+  /** Previous sink output dir per (session, dir, entry) — each append
+    * or update drain writes a FRESH dir (the bench must time the real
+    * write, and a file sink refuses to restart over a foreign commit
+    * log), so the prior run's files are deleted once the next drain for
+    * the SAME key begins. The dir and the session UUID are part of the
+    * key: a drain against another fixture dir, or from another session,
+    * must not delete a still-lazy result frame that reads this one. The
+    * last dir per key lives until JVM exit (tmpfs, sink-sized). */
+  private val lastSinkDirs =
+    new java.util.concurrent.ConcurrentHashMap[String, Path]()
+
+  /** Read the committed sink files back, tolerating a zero-output
+    * stream: a parquet sink that committed no data files (only
+    * `_spark_metadata`) makes `spark.read.parquet` throw on schema
+    * inference, where a memory sink returns a schema-ful empty frame —
+    * recover the schema from the streaming frame itself. The
+    * zero-output case is detected by LISTING the dir for data files
+    * (not by catching AnalysisException, which would also swallow
+    * corrupt-file / bad-path failures as silently empty results). */
+  private def readSinkOrEmpty(spark: SparkSession, out: Path,
+      schema: StructType): DataFrame = {
+    val hasData = {
+      val s = Files.list(out)
+      try s.anyMatch(p => p.getFileName.toString.startsWith("part-"))
+      finally s.close()
+    }
+    if (hasData) spark.read.schema(schema).parquet(out.toString)
+    else spark.createDataFrame(spark.sparkContext
+      .emptyRDD[org.apache.spark.sql.Row], schema)
+  }
+
+  /** The one drain: starts `plan` over `f` under [[withDrainConf]],
+    * processes all available input and returns the result. The output
+    * mode picks the sink:
+    *  - `complete`: a memory sink, SNAPSHOT into a standalone frame and
+    *    dropped. A memory sink holds its full result in driver memory
+    *    for the JVM's life and every run registers a fresh one (the
+    *    bench's median-of-3 runs each query 3×; the accumulated sinks
+    *    once inflated unrelated queries 4×), so the snapshot keeps ONE
+    *    copy and frees the sink at once. Complete-mode results are
+    *    aggregate-bounded by construction (#windows × #types,
+    *    #segments, …).
+    *  - `append`: the exactly-once parquet FILE sink (`_spark_metadata`
+    *    log), for results that grow with data volume (matched pairs,
+    *    closed sessions, per-doc rows): bounded by storage, never by
+    *    driver memory, and read back as an ordinary parquet table.
+    *  - `update`: each micro-batch's update rows appended as parquet
+    *    files via foreachBatch (the file sink itself is append-only) —
+    *    sound whenever the read collapses per-key emissions, the
+    *    standard upsert-log pattern.
+    *
+    * A restart feed drains TWICE from one checkpoint: phase 1 drains
+    * only the first slice, the query is STOPPED (the planned-shutdown
+    * analogue of a crash after the last commit), the phase-2 hook adds
+    * the rest of the input, and a NEW query resumes from the SAME
+    * checkpoint. Exactly-once across the restart is what the shared
+    * batch oracle then proves: the file-source log must not re-read
+    * slice-1 files, the state store must restore, and the sink's
+    * commit log must cover both phases' output exactly once (a
+    * complete-mode sink re-emits the whole aggregate from restored
+    * state). Reference analogue: the Celery pipeline's idempotent
+    * redelivery contract (D7, ingest_enron.py:187-196). The checkpoint
+    * survives between the phases (it is the recovery contract); it and
+    * a restart feed's source dir are deleted when the drain finishes. */
+  private def drain(spark: SparkSession, d: String, name: String, f: Feed,
+      mode: String)(plan: => DataFrame): DataFrame =
+    withDrainConf(spark, f.nIn)(plan) { df =>
+      // streaming scratch goes through the shared scratch policy:
+      // tmpfs when available, since checkpoint commits fsync on every
+      // micro-batch (offset log, commit log, one state delta per store
+      // partition), and a delete at JVM exit for what is left
+      val ckpt = graft.Fs.scratchTempDir("graft-ckpt")
+      val out = Option.when(mode != "complete")(
+        graft.Fs.scratchTempDir("graft-sink"))
+      val memSink = "stream_out_" + UUID.randomUUID.toString.replace("-", "")
+      def once(): Unit = {
+        val w = df.writeStream.outputMode(mode)
+          .option("checkpointLocation", ckpt.toString)
+        val q = out match {
+          case None => w.format("memory").queryName(memSink).start()
+          case Some(o) if mode == "update" =>
+            w.foreachBatch { (batch: DataFrame, _: Long) =>
+              batch.write.mode("append").parquet(o.toString)
+            }.start()
+          case Some(o) => w.format("parquet").option("path", o.toString).start()
+        }
+        try q.processAllAvailable()
+        finally q.stop()
+      }
+      try {
+        once()
+        f.restart.foreach { case (_, addPhase2) => addPhase2(); once() }
+      } finally {
+        graft.Fs.deleteTree(ckpt)
+        f.restart.foreach { case (dir, _) => graft.Fs.deleteTree(dir) }
+      }
+      out match {
+        case None =>
+          val res = spark.table(memSink)
+          val rows = res.collect()
+          spark.catalog.dropTempView(memSink)
+          spark.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
+        case Some(o) =>
+          val key = org.apache.spark.sql.graft.Bridge.sessionUUID(spark) +
+            s"|$d|$name"
+          val prev = lastSinkDirs.put(key, o)
+          if (prev != null) graft.Fs.deleteTree(prev)
+          readSinkOrEmpty(spark, o, df.schema)
+      }
+    }
+
+  /** e84: the e80 tumbling-window aggregation run as a STREAM — file
+    * source over the same parquet, complete-mode memory sink, drained
+    * synchronously. Output is identical to the batch twin, so it shares
+    * e80's DuckDB oracle: batch/stream parity is oracle-checked. */
+  def streamTumblingCounts(spark: SparkSession, d: String): DataFrame = {
+    val f = feed(spark, d, "events")
+    val snap = drain(spark, d, "e84", f, "complete") {
+      f.open()
+        .withColumn("bucket", expr("(ts div 1000) div 300000000"))
+        .withColumn("cents", expr("CAST(round(value * 100) AS BIGINT)"))
+        .groupBy("bucket", "event_type")
+        .agg(count(lit(1)).as("n_events"),
+          (sum("cents") / 100.0).as("total_value"))
+    }
+    snap
+      .withColumn("window_start", timestamp_seconds(col("bucket") * 300))
+      .select("window_start", "event_type", "n_events", "total_value")
+      .orderBy("window_start", "event_type")
+  }
+
+  /** e92: the e91 trending op as a STREAM — per-(window, type) counts
+    * maintained by a streaming aggregation (complete-mode memory sink),
+    * the per-window argmax computed on the tiny sink table at read
+    * time. That split IS the trending-topics serving design: counters
+    * live in incrementally-updated state, the top-k pick is a stateless
+    * query over the aggregate, so the stream never re-sorts. Output is
+    * identical to the batch twin and shares e91's DuckDB oracle —
+    * stream/batch parity on the trending tier is itself oracle-checked
+    * (the e84/e80 pattern). */
+  def streamWindowTopEvent(spark: SparkSession, d: String): DataFrame = {
+    val f = feed(spark, d, "events")
+    val snap = drain(spark, d, "e92", f, "complete") {
+      f.open()
+        .withColumn("bucket", expr("(ts div 1000) div 300000000"))
+        .groupBy("bucket", "event_type")
+        .agg(count(lit(1)).as("n"))
+    }
+    graft.ext.EventOps.topEventFromCounts(snap)
+  }
+
+  /** e88: STREAM-STREAM interval join — clicks joined to errors of the
+    * same user within the 10 minutes before each error, as two
+    * watermarked file-source streams (the canonical stream-stream
+    * inner-join shape: equality key + event-time band, both sides
+    * buffered in watermark-bounded state). Output is the raw matched
+    * pairs in append mode; shares e87's band semantics, so the DuckDB
+    * twin is a plain inequality inner join — the streaming JOIN
+    * operator itself is oracle-checked, like e84/e85 for windows and
+    * dedup. */
+  def streamRangeJoin(spark: SparkSession, d: String): DataFrame = {
+    // sized to the JOINED volume: a one-column scan of event_type
+    // (cheap; not footer-only like the unfiltered counts) — the join
+    // state holds only the two filtered streams
+    val f = feed(spark, d, "events", errorsAndClicks)
+    // matched pairs grow with data volume → file sink, never the driver
+    drain(spark, d, "e88", f, "append")(errorClickJoin(f, "inner"))
+      .select(col("user_id"), col("error_event_id"), col("ctsus"))
+      .orderBy("error_event_id", "ctsus")
+  }
+
+  private val errorsAndClicks = col("event_type").isin("error", "click")
+
+  /** The e88/e100 interval join: each error against the same user's
+    * clicks in the 10 minutes before it, the two sides opened as two
+    * watermarked sources over `f`. */
+  private def errorClickJoin(f: Feed, joinType: String): DataFrame = {
+    def src(): DataFrame = f.open()
+      .withColumn("tsus", expr("ts div 1000"))
+      .withColumn("etime", timestamp_micros(col("tsus")))
+    val errors = src().filter(col("event_type") === "error")
+      .select(col("user_id"), col("event_id").as("error_event_id"),
+        col("tsus").as("etsus"), col("etime").as("err_time"))
+      .withWatermark("err_time", "1 hour")
+    val clicks = src().filter(col("event_type") === "click")
+      .select(col("user_id").as("c_user"), col("tsus").as("ctsus"),
+        col("etime").as("click_time"))
+      .withWatermark("click_time", "1 hour")
+    errors.join(clicks,
+      col("user_id") === col("c_user") &&
+        col("click_time") >= col("err_time") - expr("INTERVAL 10 MINUTES") &&
+        col("click_time") < col("err_time"),
+      joinType)
+  }
+
+  /** DuckDB twin of [[streamRangeJoin]]: inequality-band inner join. */
+  val streamRangeJoinSql: String =
+    """WITH ev AS (SELECT event_id, epoch_us(ts) AS tsus, user_id, event_type
+      |            FROM events)
+      |SELECT e.user_id, e.event_id AS error_event_id, c.tsus AS ctsus
+      |FROM ev e JOIN ev c
+      |  ON e.event_type = 'error' AND c.event_type = 'click'
+      |  AND c.user_id = e.user_id
+      |  AND c.tsus >= e.tsus - 600000000 AND c.tsus < e.tsus
+      |ORDER BY error_event_id, ctsus""".stripMargin
+
   /** e100: watermarked stream-stream LEFT OUTER interval join — errors
     * with NO click in the preceding 10 minutes (the alerting complement
     * of e88's inner join). Exercises the outer-join state-eviction
@@ -404,31 +503,9 @@ object StreamingOps {
     * match predicate. State is watermark-bounded on both sides exactly
     * as e88. */
   def streamUnmatchedErrors(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageWithSentinel(spark, d)
-    def src(): DataFrame =
-      spark.readStream.schema(eventsSchema)
-        .parquet(stageDir)
-        .withColumn("tsus", expr("ts div 1000"))
-        .withColumn("etime", timestamp_micros(col("tsus")))
-    val nIn = cachedCount(d, "ev_err_click") {
-      spark.read.parquet(s"$d/events.parquet")
-        .filter(col("event_type").isin("error", "click")).count()
-    }
-    val snap = drainToFileSink(spark, s"$d|e100", nIn) {
-      val errors = src().filter(col("event_type") === "error")
-        .select(col("user_id"), col("event_id").as("error_event_id"),
-          col("tsus").as("etsus"), col("etime").as("err_time"))
-        .withWatermark("err_time", "1 hour")
-      val clicks = src().filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("tsus").as("ctsus"),
-          col("etime").as("click_time"))
-        .withWatermark("click_time", "1 hour")
-      errors.join(clicks,
-        col("user_id") === col("c_user") &&
-          col("click_time") >= col("err_time") - expr("INTERVAL 10 MINUTES") &&
-          col("click_time") < col("err_time"),
-        "left_outer")
-    }
+    val f = sentinelFeed(spark, d, errorsAndClicks)
+    val snap = drain(spark, d, "e100", f, "append")(
+      errorClickJoin(f, "left_outer"))
     // sentinels are excluded by their RESERVED event_id (-1/-2), not by
     // user_id sign — a fixture with legitimate negative user_ids would
     // silently lose real rows under the old user_id >= 0 filter
@@ -438,29 +515,37 @@ object StreamingOps {
       .orderBy("error_event_id")
   }
 
-  /** The e101 dataflow from a given source frame — shared verbatim by
-    * the one-shot drain (e101) and the restart drain (e104), so the
-    * two entries prove the SAME plan under both lifecycles. */
-  private def dedupActivityPlan(src: DataFrame): DataFrame =
-    src
-      .withColumn("etime", timestamp_micros(expr("ts div 1000")))
-      .withWatermark("etime", "1 hour")
-      // NULL users are excluded so count(1)-after-dedup mirrors the
-      // oracle's NULL-skipping count(DISTINCT user_id). Do NOT
-      // filter the (negative-user) sentinels here: the optimizer
-      // pushes this predicate below the watermark node to the scan,
-      // and dropping sentinels there would stop the watermark from
-      // ever closing the real windows (measured — every window
-      // within 1h+ of the last real event went unemitted). Sentinel
-      // rows instead enter the aggregation and are never emitted:
-      // their window stays OPEN (watermark = sentinel − 1h < its
-      // end), which append mode holds in state — this query's
-      // sentinel exclusion is inherently tied to append mode.
-      .filter(col("user_id").isNotNull)
-      .withColumn("wstart", window(col("etime"), "5 minutes")("start"))
-      .dropDuplicatesWithinWatermark("user_id", "event_type", "wstart")
-      .groupBy(window(col("etime"), "5 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n_active"))
+  /** The e101 dataflow drained from `f` — shared verbatim by the
+    * one-shot drain (e101) and the restart drain (e104), so the two
+    * entries prove the SAME plan under both lifecycles. (Window, type)
+    * activity counts grow with the calendar span of the data → the
+    * file sink (same watermark semantics, the oracle reads the
+    * committed files back). */
+  private def dedupActivity(spark: SparkSession, d: String, name: String,
+      f: Feed): DataFrame =
+    drain(spark, d, name, f, "append") {
+      f.open()
+        .withColumn("etime", timestamp_micros(expr("ts div 1000")))
+        .withWatermark("etime", "1 hour")
+        // NULL users are excluded so count(1)-after-dedup mirrors the
+        // oracle's NULL-skipping count(DISTINCT user_id). Do NOT
+        // filter the (negative-user) sentinels here: the optimizer
+        // pushes this predicate below the watermark node to the scan,
+        // and dropping sentinels there would stop the watermark from
+        // ever closing the real windows (measured — every window
+        // within 1h+ of the last real event went unemitted). Sentinel
+        // rows instead enter the aggregation and are never emitted:
+        // their window stays OPEN (watermark = sentinel − 1h < its
+        // end), which append mode holds in state — this query's
+        // sentinel exclusion is inherently tied to append mode.
+        .filter(col("user_id").isNotNull)
+        .withColumn("wstart", window(col("etime"), "5 minutes")("start"))
+        .dropDuplicatesWithinWatermark("user_id", "event_type", "wstart")
+        .groupBy(window(col("etime"), "5 minutes"), col("event_type"))
+        .agg(count(lit(1)).as("n_active"))
+    }.select(col("window.start").as("window_start"), col("event_type"),
+      col("n_active"))
+      .orderBy("window_start", "event_type")
 
   /** e101: watermark-bounded stream dedup chained into an APPEND-mode
     * windowed aggregation — `dropDuplicatesWithinWatermark` (state
@@ -474,23 +559,8 @@ object StreamingOps {
     * the window bucket, so which physical duplicate survives is
     * irrelevant — the downstream count is deterministic and the batch
     * count-distinct oracle hash-checks it. */
-  def streamDedupActivity(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageWithSentinel(spark, d)
-    val nIn = cachedCount(d, "ev_all") {
-      spark.read.parquet(s"$d/events.parquet").count()
-    }
-    // (window, type) activity counts grow with the calendar span of the
-    // data → production path is the file sink (verified here: same
-    // watermark semantics, oracle reads the committed files back)
-    val snap = drainToFileSink(spark, s"$d|e101", nIn) {
-      dedupActivityPlan(
-        spark.readStream.schema(eventsSchema).parquet(stageDir))
-    }
-    snap
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n_active"))
-      .orderBy("window_start", "event_type")
-  }
+  def streamDedupActivity(spark: SparkSession, d: String): DataFrame =
+    dedupActivity(spark, d, "e101", sentinelFeed(spark, d))
 
   /** DuckDB twin of [[streamDedupActivity]]: count of distinct users
     * per (5-minute window, type). */
@@ -530,6 +600,39 @@ object StreamingOps {
     }
   }
 
+  private val purchases = col("event_type") === "purchase"
+
+  /** The e102 transformWithState dataflow drained from `f` — shared
+    * verbatim by the one-shot drain (e102) and the restart drain
+    * (e106) — then the read-time collapse of the census partials: the
+    * processor emits a RUNNING census per key per micro-batch; a
+    * multi-batch source (maxFilesPerTrigger, extra staged files, a
+    * RESTART) appends stale partials too — keep only each user's final
+    * row (n_purchases grows monotonically, so max(struct) is it). */
+  private def userCensus(spark: SparkSession, d: String, name: String,
+      f: Feed): DataFrame = {
+    import spark.implicits._
+    drain(spark, d, name, f, "append") {
+      f.open()
+        .filter(purchases)
+        .select(col("user_id"),
+          expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
+          expr("ts div 1000").as("tsus"))
+        .as[(Long, Long, Long)]
+        .groupByKey(_._1)
+        .transformWithState(new CensusProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          org.apache.spark.sql.streaming.OutputMode.Append())
+        .toDF("user_id", "n_purchases", "total_cents", "last_tsus")
+    }.groupBy("user_id")
+      .agg(max(struct(col("n_purchases"), col("total_cents"),
+        col("last_tsus"))).as("m"))
+      .select(col("user_id"), col("m.n_purchases").as("n_purchases"),
+        col("m.total_cents").as("total_cents"),
+        col("m.last_tsus").as("last_tsus"))
+      .orderBy("user_id")
+  }
+
   /** e102: per-user purchase census through the `transformWithState`
     * arbitrary-state API (Spark 4.x's successor to
     * flatMapGroupsWithState: typed ValueState handles, TTL support,
@@ -538,78 +641,11 @@ object StreamingOps {
     * ceilings). State here is one 3-long tuple per user; accumulators
     * are order-insensitive so the single-batch drain is deterministic
     * and the batch aggregation oracle hash-checks it. */
-  /** The e102 transformWithState dataflow from a given source frame —
-    * shared verbatim by the one-shot drain (e102) and the restart
-    * drain (e106). */
-  private def userCensusPlan(src: DataFrame): DataFrame = {
-    import src.sparkSession.implicits._
-    src
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
-        expr("ts div 1000").as("tsus"))
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new CensusProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
-      .toDF("user_id", "n_purchases", "total_cents", "last_tsus")
-  }
-
-  /** Run `drain` with the RocksDB state-store provider set for the
-    * session. The provider conf is SESSION-global, so the
-    * set/drain/restore window is serialized — overlapping census calls
-    * would otherwise interleave their reads of `prev` and leak the
-    * override. Other streaming queries started concurrently in this
-    * session during the drain would also pick up RocksDB (correct,
-    * just a different store) — the lock bounds the exposure. */
-  private def withRocksDbProvider(spark: SparkSession)
-      (drain: => DataFrame): DataFrame =
-    providerLock.synchronized {
-      val prevProvider =
-        spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try drain
-      finally prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-
-  /** Read-time collapse of the census partials: the processor emits a
-    * RUNNING census per key per micro-batch; a multi-batch source
-    * (maxFilesPerTrigger, extra staged files, a RESTART) appends stale
-    * partials too — keep only each user's final row (n_purchases grows
-    * monotonically, so max(struct) is it). */
-  private def collapseCensus(snap: DataFrame): DataFrame =
-    snap.groupBy("user_id")
-      .agg(max(struct(col("n_purchases"), col("total_cents"),
-        col("last_tsus"))).as("m"))
-      .select(col("user_id"), col("m.n_purchases").as("n_purchases"),
-        col("m.total_cents").as("total_cents"),
-        col("m.last_tsus").as("last_tsus"))
-      .orderBy("user_id")
-
-  def streamUserCensus(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "events.parquet")
-    val nIn = cachedCount(d, "ev_purchase") {
-      spark.read.parquet(s"$d/events.parquet")
-        .filter(col("event_type") === "purchase").count()
-    }
-    val snap = withRocksDbProvider(spark) {
-      drainToFileSink(spark, s"$d|e102", nIn) {
-        userCensusPlan(
-          spark.readStream.schema(eventsSchema).parquet(stageDir))
-      }
-    }
-    collapseCensus(snap)
-  }
+  def streamUserCensus(spark: SparkSession, d: String): DataFrame =
+    userCensus(spark, d, "e102", feed(spark, d, "events", purchases))
 
   /** e106: e102's transformWithState census (the SAME
-    * [[userCensusPlan]]) stopped mid-input and resumed — the RESTART
+    * [[userCensus]]) stopped mid-input and resumed — the RESTART
     * proof for the RocksDB state backend specifically, the disk-backed
     * provider named as the 100 TB state path. Phase 1 writes each
     * user's partial census into RocksDB and the sink; the restart must
@@ -619,22 +655,8 @@ object StreamingOps {
     * restart it; the read-time max(struct) collapse then yields
     * exactly the one-shot census, hash-checked by e102's batch
     * aggregation oracle. */
-  def streamUserCensusRestart(spark: SparkSession, d: String): DataFrame = {
-    val (stageDir, addPhase2) = stageTwoSlices(spark, d, sentinel = false)
-    val nIn = cachedCount(d, "ev_purchase") {
-      spark.read.parquet(s"$d/events.parquet")
-        .filter(col("event_type") === "purchase").count()
-    }
-    val snap = withRocksDbProvider(spark) {
-      drainFileSinkWithRestart(spark, s"$d|e106", nIn, addPhase2) {
-        userCensusPlan(
-          spark.readStream.schema(eventsSchema).parquet(stageDir))
-      }
-    }
-    collapseCensus(snap)
-  }
-
-  private val providerLock = new Object
+  def streamUserCensusRestart(spark: SparkSession, d: String): DataFrame =
+    userCensus(spark, d, "e106", eventRestartFeed(spark, d, purchases))
 
   /** DuckDB twin of [[streamUserCensus]]: plain per-user aggregation. */
   val streamUserCensusSql: String =
@@ -667,12 +689,9 @@ object StreamingOps {
     * exactly 30 min open — the fixtures contain no exact-gap pair at
     * any SF (verified), so the two formulations agree row-for-row. */
   def streamSessionWindows(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "events.parquet")
-    val nIn = cachedCount(d, "ev_all") {
-      spark.read.parquet(s"$d/events.parquet").count()
-    }
-    val snap = drainToSnapshot(spark, "complete", nIn) {
-      spark.readStream.schema(eventsSchema).parquet(stageDir)
+    val f = feed(spark, d, "events")
+    val snap = drain(spark, d, "e89", f, "complete") {
+      f.open()
         .withColumn("tsus", expr("ts div 1000"))
         .withColumn("etime", timestamp_micros(col("tsus")))
         .groupBy(col("user_id"), session_window(col("etime"), "30 minutes"))
@@ -694,6 +713,25 @@ object StreamingOps {
       .orderBy("user_id")
   }
 
+  /** The e90 dataflow drained from `f` — shared verbatim by the
+    * one-shot drain (e90) and the restart drain (e105). Closed sessions
+    * grow with data volume → file sink, never the driver. */
+  private def closedSessions(spark: SparkSession, d: String, name: String,
+      f: Feed): DataFrame = {
+    import spark.implicits._
+    drain(spark, d, name, f, "append") {
+      val ev = f.open()
+        .select(col("user_id"),
+          expr("ts div 1000").cast("double").as("ts"))
+        .as[SessionEvent]
+      sessionizeStream(ev, gap = 1800e6).toDF() // gap in µs
+    }.select(col("user_id"),
+        col("start").cast("bigint").as("start_us"),
+        col("end").cast("bigint").as("end_us"),
+        col("n_events"))
+      .orderBy("user_id", "start_us")
+  }
+
   /** e90: CLOSED sessions via custom keyed state — the
     * flatMapGroupsWithState sessionizer run as a driver query: a
     * session is emitted only when a later event arrives past the gap,
@@ -704,34 +742,8 @@ object StreamingOps {
     * each user's last. Timestamps flow as integer microseconds carried
     * in doubles (exact below 2^53), so gap comparisons and session
     * bounds are engine-exact. */
-  /** The e90 dataflow from a given source frame — shared verbatim by
-    * the one-shot drain (e90) and the restart drain (e105). */
-  private def closedSessionsPlan(src: DataFrame): DataFrame = {
-    import src.sparkSession.implicits._
-    val ev = src
-      .select(col("user_id"),
-        expr("ts div 1000").cast("double").as("ts"))
-      .as[SessionEvent]
-    sessionizeStream(ev, gap = 1800e6).toDF() // gap in µs
-  }
-
-  def streamClosedSessions(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "events.parquet")
-    val nIn = cachedCount(d, "ev_all") {
-      spark.read.parquet(s"$d/events.parquet").count()
-    }
-    // closed sessions grow with data volume → file sink, never driver
-    val snap = drainToFileSink(spark, s"$d|e90", nIn) {
-      closedSessionsPlan(
-        spark.readStream.schema(eventsSchema).parquet(stageDir))
-    }
-    snap
-      .select(col("user_id"),
-        col("start").cast("bigint").as("start_us"),
-        col("end").cast("bigint").as("end_us"),
-        col("n_events"))
-      .orderBy("user_id", "start_us")
-  }
+  def streamClosedSessions(spark: SparkSession, d: String): DataFrame =
+    closedSessions(spark, d, "e90", feed(spark, d, "events"))
 
   /** DuckDB twin of [[streamClosedSessions]]: e82's lag/flag session
     * derivation, keeping every session except each user's last. */
@@ -761,103 +773,8 @@ object StreamingOps {
       |                  WHERE q.user_id = p.user_id)
       |ORDER BY user_id, start_us""".stripMargin
 
-  // ------------------------------------- restart/recovery twins (e104/e105)
-
-  /** The two time-slices + sentinel batch as parquet FILES, written
-    * once per (session, dir) and reused by every restart-twin
-    * invocation (bench median-of-3 re-runs each twin 3× — rewriting
-    * ~identical slices each run was pure fixed overhead; the slices
-    * are a deterministic function of the fixture, so symlinking the
-    * cached files preserves every semantic of a fresh write). */
-  private def sliceFiles(spark: SparkSession, d: String)
-      : (java.nio.file.Path, java.nio.file.Path, java.nio.file.Path) = {
-    val dir = staged.getOrBuild(spark, d, "restart-slices") { out =>
-      val ev = graft.Tables.events(spark, d)
-      val r = ev.agg(min("ts"), max("ts")).head()
-      val (mn, mx) = (r.getLong(0), r.getLong(1))
-      // midpoint cut: deterministic arithmetic (no sampling), splits by
-      // EVENT TIME so slice-2 rows always sit above the watermark the
-      // phase-1 drain leaves behind (nothing gets late-dropped that the
-      // batch oracle counts), and both slices are non-empty on every
-      // driver fixture
-      val cut = mn + (mx - mn) / 2
-      def one(sub: String, df: DataFrame): Unit =
-        graft.Fs.writeSingleParquet(df, sliceAt(out, sub))
-      import spark.implicits._
-      val far = mx + 360000000000000L // +100 h in ns (e100 staging)
-      val sentinel = Seq((-1L, far, -1L, "error", 0.0, "{}"),
-          (-2L, far, -2L, "click", 0.0, "{}"))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      one("s1", ev.filter(col("ts") <= cut))
-      one("s2", ev.filter(col("ts") > cut))
-      one("sent", sentinel)
-    }
-    (sliceAt(dir, "s1"), sliceAt(dir, "s2"), sliceAt(dir, "sent"))
-  }
-
-  private def sliceAt(dir: String, sub: String): java.nio.file.Path =
-    java.nio.file.Paths.get(dir, s"$sub.parquet")
-
-  /** Two-slice staging for the restart twins: slice 1 is present from
-    * the start; invoking the returned thunk adds slice 2 — plus the
-    * e100-style far-future sentinel rows when `sentinel` — to the same
-    * source dir. A FRESH dir per call (it MUTATES mid-drain by
-    * design); the slice files themselves come from [[sliceFiles]] and
-    * are symlinked, not rewritten. */
-  private def stageTwoSlices(spark: SparkSession, d: String,
-      sentinel: Boolean): (String, () => Unit) = {
-    val (s1, s2, sent) = sliceFiles(spark, d)
-    val dir = scratchTempDir("graft-stream-restart")
-    Files.createSymbolicLink(dir.resolve("slice1.parquet"), s1)
-    val addPhase2 = () => {
-      Files.createSymbolicLink(dir.resolve("slice2.parquet"), s2)
-      if (sentinel)
-        Files.createSymbolicLink(dir.resolve("sentinel.parquet"), sent)
-      ()
-    }
-    (dir.toString, addPhase2)
-  }
-
-  /** Drain through a parquet file sink with a RESTART mid-input: phase
-    * 1 drains only the first staged slice, the query is STOPPED (the
-    * planned-shutdown analogue of a crash after the last commit), more
-    * source files arrive, and a NEW query object resumes from the SAME
-    * checkpoint. Exactly-once across the restart is what the shared
-    * batch oracle then proves: the file-source log must not re-read
-    * slice-1 files, the state store must restore (dedup keys / open
-    * sessions / window partials), and the sink's `_spark_metadata`
-    * commit log must cover both phases' output exactly once. Reference
-    * analogue: the Celery pipeline's idempotent redelivery contract
-    * (D7, ingest_enron.py:187-196) — restart-safety is the streaming
-    * form of the same guarantee. The checkpoint survives BETWEEN the
-    * phases (it is the recovery contract) and is deleted only after
-    * the final drain, like every other per-run scratch. */
-  private def drainFileSinkWithRestart(spark: SparkSession, key: String,
-      nIn: Long, addPhase2: () => Unit)
-      (buildQuery: => DataFrame): DataFrame =
-    withDrainWidth(spark, nIn) {
-      val ckpt = scratchTempDir("graft-ckpt")
-      val out = scratchTempDir("graft-file-sink")
-      val schema = buildQuery.schema
-      def drainOnce(): Unit = {
-        val q = buildQuery.writeStream
-          .outputMode("append")
-          .format("parquet")
-          .option("path", out.toString)
-          .option("checkpointLocation", ckpt.toString)
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-      try { drainOnce(); addPhase2(); drainOnce() }
-      finally deleteRecursively(ckpt)
-      val prev = lastSinkDirs.put(sinkKey(spark, key), out)
-      if (prev != null) deleteRecursively(prev)
-      readSinkOrEmpty(spark, out, schema)
-    }
-
   /** e104: e101's dedup→windowed-agg dataflow (the SAME
-    * [[dedupActivityPlan]]) stopped mid-input and resumed from its
+    * [[dedupActivity]]) stopped mid-input and resumed from its
     * checkpoint — shares e101's batch oracle, so the hash equality
     * proves watermark, dedup-key state, and un-emitted window partials
     * all cross the restart intact. The boundary window (the 5-minute
@@ -866,60 +783,36 @@ object StreamingOps {
     * phase-1 row in that bucket must still be dropped by the RESTORED
     * dedup state (the key's event time is above the restored
     * watermark, so it cannot have been evicted). */
-  def streamDedupActivityRestart(spark: SparkSession, d: String): DataFrame = {
-    val (stageDir, addPhase2) = stageTwoSlices(spark, d, sentinel = true)
-    val nIn = cachedCount(d, "ev_all") {
-      spark.read.parquet(s"$d/events.parquet").count()
-    }
-    val snap = drainFileSinkWithRestart(spark, s"$d|e104", nIn, addPhase2) {
-      dedupActivityPlan(
-        spark.readStream.schema(eventsSchema).parquet(stageDir))
-    }
-    snap
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n_active"))
-      .orderBy("window_start", "event_type")
-  }
+  def streamDedupActivityRestart(spark: SparkSession, d: String): DataFrame =
+    dedupActivity(spark, d, "e104",
+      eventRestartFeed(spark, d, sentinel = true))
 
   /** e105: e90's custom-keyed-state sessionizer (the SAME
-    * [[closedSessionsPlan]]) stopped mid-input and resumed — shares
+    * [[closedSessions]]) stopped mid-input and resumed — shares
     * e90's batch oracle. The sharp case is every session OPEN at the
     * cut: its `SessionState` (start/last/n) lives only in the state
     * store across the restart, and phase-2 events must extend or close
     * it exactly as the one-shot drain does; the time-split staging
     * preserves per-user event order across the phase boundary, so the
     * batch lag-derivation oracle stays row-identical. */
-  def streamClosedSessionsRestart(spark: SparkSession, d: String): DataFrame = {
-    val (stageDir, addPhase2) = stageTwoSlices(spark, d, sentinel = false)
-    val nIn = cachedCount(d, "ev_all") {
-      spark.read.parquet(s"$d/events.parquet").count()
-    }
-    val snap = drainFileSinkWithRestart(spark, s"$d|e105", nIn, addPhase2) {
-      closedSessionsPlan(
-        spark.readStream.schema(eventsSchema).parquet(stageDir))
-    }
-    snap
-      .select(col("user_id"),
-        col("start").cast("bigint").as("start_us"),
-        col("end").cast("bigint").as("end_us"),
-        col("n_events"))
-      .orderBy("user_id", "start_us")
-  }
+  def streamClosedSessionsRestart(spark: SparkSession, d: String): DataFrame =
+    closedSessions(spark, d, "e105", eventRestartFeed(spark, d))
 
+  /** e85: the d50 exact-dedup aggregation run as a STREAM — the
+    * "dedup a corpus as it arrives" shape: per-fingerprint keeper +
+    * copy count maintained as streaming state (complete-mode memory
+    * sink). Output is identical to the batch twin, so it shares d50's
+    * DuckDB oracle — stream/batch parity on the dedup tier is itself
+    * oracle-checked, the e84/e80 pattern applied to dedup. */
   def streamExactDedup(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "documents.parquet")
+    val f = feed(spark, d, "documents")
     // wsClass, not Java "\\s+": RE2 (the oracle engine) excludes \x0B
     // from \s while Java includes it — the shared class keeps stream,
     // batch, and oracle fingerprints identical on \x0B-bearing text
     val normText =
       regexp_replace(trim(lower(col("text"))), graft.ext.TextOps.wsClass, " ")
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
-    val snap = drainToSnapshot(spark, "complete", nIn) {
-      spark.readStream
-        .schema(documentsSchema)
-        .parquet(stageDir)
+    val snap = drain(spark, d, "e85", f, "complete") {
+      f.open()
         .select(col("doc_id"), md5(normText).as("fp"))
         .groupBy("fp")
         .agg(min("doc_id").as("keep_doc_id"), count(lit(1)).as("n_copies"))
@@ -937,15 +830,9 @@ object StreamingOps {
     * the only streaming state is the ≤5-row reason census, so this
     * runs at source throughput with constant state. */
   def streamQualityFilter(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "documents.parquet")
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
-    val snap = drainToSnapshot(spark, "complete", nIn) {
-      graft.ext.TextOps.qualityReasonOf(
-        spark.readStream
-          .schema(documentsSchema)
-          .parquet(stageDir))
+    val f = feed(spark, d, "documents")
+    val snap = drain(spark, d, "e99", f, "complete") {
+      graft.ext.TextOps.qualityReasonOf(f.open())
         .groupBy("reason")
         .agg(count(lit(1)).as("n_docs"), min("doc_id").as("min_doc_id"))
     }
@@ -963,15 +850,9 @@ object StreamingOps {
     * No watermark, no state: at scale this runs at source throughput
     * as a pure per-file map with constant memory. */
   def streamChunkOverlap(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "documents.parquet")
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
-    drainToFileSink(spark, "e107", nIn) {
-      graft.ext.TextOps.chunkOverlapOf(
-        spark.readStream
-          .schema(documentsSchema)
-          .parquet(stageDir))
+    val f = feed(spark, d, "documents")
+    drain(spark, d, "e107", f, "append") {
+      graft.ext.TextOps.chunkOverlapOf(f.open())
     }.orderBy("doc_id", "chunk_idx")
   }
 
@@ -986,36 +867,18 @@ object StreamingOps {
     * sketch bit-for-bit whatever the micro-batch arrival order — the
     * mergeability contract (Round16Spec pins it batch-side) exercised
     * under real incremental arrival. */
-  def streamCmCells(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "documents.parquet")
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
-    drainToSnapshot(spark, "complete", nIn) {
+  def streamCmCells(spark: SparkSession, d: String): DataFrame =
+    cmCells(spark, d, "e120", feed(spark, d, "documents"))
+
+  /** The e120 cell dataflow drained from `f`, shared by e120 and its
+    * e121 restart proof. */
+  private def cmCells(spark: SparkSession, d: String, name: String,
+      f: Feed): DataFrame =
+    drain(spark, d, name, f, "complete") {
       graft.operators.Sketches.cmCellsOf(
-        spark.readStream
-          .schema(documentsSchema)
-          .parquet(stageDir)
+        f.open()
           .select(explode(graft.ext.TextOps.tokens(col("text"))).as("tok")))
     }.orderBy("j", "c")
-  }
-
-  /** Document slices (doc_id parity split) for the sketch restart
-    * twin, cached per (session, dir) like [[sliceFiles]]. Parity, not
-    * event time: the CM aggregate is order-free, so the restart proof
-    * deliberately uses the harshest arrival split (interleaved ids,
-    * no watermark semantics to lean on). */
-  private def docSliceFiles(spark: SparkSession, d: String)
-      : (java.nio.file.Path, java.nio.file.Path) = {
-    val dir = staged.getOrBuild(spark, d, "doc-slices") { out =>
-      val docs = spark.read.parquet(s"$d/documents.parquet")
-      graft.Fs.writeSingleParquet(docs.filter(col("doc_id") % 2 === 0),
-        sliceAt(out, "s1"))
-      graft.Fs.writeSingleParquet(docs.filter(col("doc_id") % 2 === 1),
-        sliceAt(out, "s2"))
-    }
-    (sliceAt(dir, "s1"), sliceAt(dir, "s2"))
-  }
 
   /** e121: e120's CM cell maintenance stopped mid-corpus and RESUMED
     * from its checkpoint — the FIFTH restart state shape (after e104
@@ -1030,44 +893,8 @@ object StreamingOps {
     * The memory sink supports recovery in complete mode exactly
     * because each trigger re-emits the whole aggregate from restored
     * state. */
-  def streamCmCellsRestart(spark: SparkSession, d: String): DataFrame = {
-    val (s1, s2) = docSliceFiles(spark, d)
-    val srcDir = scratchTempDir("graft-doc-restart")
-    Files.createSymbolicLink(srcDir.resolve("slice1.parquet"), s1)
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
-    def plan = graft.operators.Sketches.cmCellsOf(
-      spark.readStream
-        .schema(documentsSchema)
-        .parquet(srcDir.toString)
-        .select(explode(graft.ext.TextOps.tokens(col("text"))).as("tok")))
-    withDrainWidth(spark, nIn) {
-      val ckpt = scratchTempDir("graft-ckpt")
-      def drainOnce(): String = {
-        val sink = newSink()
-        val q = plan.writeStream
-          .outputMode("complete")
-          .format("memory")
-          .queryName(sink)
-          .option("checkpointLocation", ckpt.toString)
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-        sink
-      }
-      try {
-        spark.catalog.dropTempView(drainOnce()) // phase 1: slice 1 only
-        Files.createSymbolicLink(srcDir.resolve("slice2.parquet"), s2)
-        val sink2 = drainOnce() // phase 2: resumed from the checkpoint
-        val out = spark.table(sink2)
-        val rows = out.collect()
-        spark.catalog.dropTempView(sink2)
-        spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-          .orderBy("j", "c")
-      } finally deleteRecursively(ckpt)
-    }
-  }
+  def streamCmCellsRestart(spark: SparkSession, d: String): DataFrame =
+    cmCells(spark, d, "e121", docRestartFeed(spark, d))
 
   /** e108: s85's BM25 retrieval with the SCORING stage run as a
     * STREAM against a FROZEN index — the serving split of a search
@@ -1084,10 +911,7 @@ object StreamingOps {
     * source throughput with constant memory. */
   def streamBm25(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val stageDir = stageFile(spark, d, "documents.parquet")
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
+    val f = feed(spark, d, "documents")
     // pin the sidecars as literal frames so micro-batches don't
     // recompute them (bounded: |query vocab| + 1 rows) — read from the
     // persisted s87 index artifact instead of re-tokenizing the corpus
@@ -1102,12 +926,9 @@ object StreamingOps {
     val statsL = spark.read.parquet(s"$idx/stats")
       .as[(Long, Long)].collect().toSeq
       .toDF("n_docs", "sum_dl")
-    val contribLog = drainToFileSink(spark, "e108", nIn) {
+    val contribLog = drain(spark, d, "e108", f, "append") {
       graft.ext.SimilarityOps.bm25Contrib(
-        graft.ext.SimilarityOps.bm25DocLens(
-          spark.readStream
-            .schema(documentsSchema)
-            .parquet(stageDir)),
+        graft.ext.SimilarityOps.bm25DocLens(f.open()),
         q, dfreqL, statsL)
     }
     graft.ext.SimilarityOps.bm25Finish(
@@ -1131,18 +952,13 @@ object StreamingOps {
     * form of d58's O(batch) absorb contract (and of a crawler's
     * continuous-ingest dedup gate). */
   def streamIncrementalDedup(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "documents.parquet")
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
+    val f = feed(spark, d, "documents")
     val corpSh = graft.ext.DedupOps.dfCappedShingles(spark, d)
       .filter(col("doc_id") % 7 =!= 3).toDF("c_id", "sh")
     val hot = graft.ext.DedupOps.frozenHotShingles(spark, d)
-    val matchLog = drainToFileSink(spark, "e109", nIn) {
+    val matchLog = drain(spark, d, "e109", f, "append") {
       graft.ext.DedupOps.hashedShinglesOf(
-        spark.readStream
-          .schema(documentsSchema)
-          .parquet(stageDir)
+        f.open()
           .filter(col("doc_id") % 7 === 3))
         .join(broadcast(hot), Seq("sh"), "left_anti")
         // the USING join moves `sh` first — restore before renaming
@@ -1152,6 +968,23 @@ object StreamingOps {
     }
     graft.ext.DedupOps.incrDedupFinish(spark, d,
       matchLog.groupBy("n_id", "c_id").agg(count(lit(1)).as("inter")))
+  }
+
+  /** The substring gate dataflow of e122/e123/e126/e131: the feed's
+    * probe docs (`doc_id % mod == mod - 1`, filtered IN the stream)
+    * through the stateless window stage into the stream-static
+    * equi-join with the serving index `idx`, drained to the file sink;
+    * run stitching and the verdicts are the read-time epilogue. */
+  private def substringGate(spark: SparkSession, d: String, name: String,
+      f: Feed, idx: DataFrame, mod: Int): DataFrame = {
+    val probe = col("doc_id") % mod === mod - 1
+    val pairLog = drain(spark, d, name, f, "append") {
+      graft.ext.DedupOps.windowFrame(f.open().filter(probe))
+        .select(col("hw"), col("doc_id"), col("pos").as("pb"))
+        .join(idx, Seq("hw"))
+        .select("doc_id", "base_id", "pb", "pa")
+    }
+    graft.ext.DedupOps.incrSubstringFinish(spark, d, pairLog, probe)
   }
 
   /** e122: d66's STREAMING twin — the exact-substring dedup gate on a
@@ -1169,24 +1002,9 @@ object StreamingOps {
     * index at source throughput — per-batch work is the batch's
     * window fan-out, never corpus size (d58→e109's contract at
     * substring granularity). */
-  def streamSubstringGate(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "documents.parquet")
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
-    val idx = graft.ext.DedupOps.baseWindowIndex(spark, d)
-    val pairLog = drainToFileSink(spark, "e122", nIn) {
-      graft.ext.DedupOps.windowFrame(
-        spark.readStream
-          .schema(documentsSchema)
-          .parquet(stageDir)
-          .filter(col("doc_id") % 5 === 4))
-        .select(col("hw"), col("doc_id"), col("pos").as("pb"))
-        .join(idx, Seq("hw"))
-        .select("doc_id", "base_id", "pb", "pa")
-    }
-    graft.ext.DedupOps.incrSubstringFinish(spark, d, pairLog)
-  }
+  def streamSubstringGate(spark: SparkSession, d: String): DataFrame =
+    substringGate(spark, d, "e122", feed(spark, d, "documents"),
+      graft.ext.DedupOps.baseWindowIndex(spark, d), 5)
 
   /** e123: e122's substring ingest gate stopped MID-FEED and resumed
     * from its checkpoint — the restart proof for the frozen-sidecar +
@@ -1203,31 +1021,9 @@ object StreamingOps {
     * row_number (n_runs / best_run_tokens move); a dropped file loses
     * runs — so sharing d66's oracle hash-checks exactly-once across
     * the restart. */
-  def streamSubstringGateRestart(spark: SparkSession, d: String): DataFrame = {
-    val (s1, s2) = docSliceFiles(spark, d)
-    val srcDir = scratchTempDir("graft-doc-restart")
-    Files.createSymbolicLink(srcDir.resolve("slice1.parquet"), s1)
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
-    val idx = graft.ext.DedupOps.baseWindowIndex(spark, d)
-    val addPhase2 = () => {
-      Files.createSymbolicLink(srcDir.resolve("slice2.parquet"), s2)
-      ()
-    }
-    val pairLog = drainFileSinkWithRestart(spark, s"$d|e123", nIn,
-        addPhase2) {
-      graft.ext.DedupOps.windowFrame(
-        spark.readStream
-          .schema(documentsSchema)
-          .parquet(srcDir.toString)
-          .filter(col("doc_id") % 5 === 4))
-        .select(col("hw"), col("doc_id"), col("pos").as("pb"))
-        .join(idx, Seq("hw"))
-        .select("doc_id", "base_id", "pb", "pa")
-    }
-    graft.ext.DedupOps.incrSubstringFinish(spark, d, pairLog)
-  }
+  def streamSubstringGateRestart(spark: SparkSession, d: String): DataFrame =
+    substringGate(spark, d, "e123", docRestartFeed(spark, d),
+      graft.ext.DedupOps.baseWindowIndex(spark, d), 5)
 
   /** e126: d73's STREAMING twin — the substring ingest gate on a live
     * feed served from the ABSORBED index (base + delta SEGMENTS with
@@ -1243,25 +1039,9 @@ object StreamingOps {
     * and e126 is the SAME gate one generation later, now witnessing
     * runs against the just-absorbed half — zero streaming state
     * throughout. */
-  def streamAbsorbedGate(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "documents.parquet")
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
-    val idx = graft.ext.DedupOps.absorbedWindexIdx(spark, d)
-    val pairLog = drainToFileSink(spark, "e126", nIn) {
-      graft.ext.DedupOps.windowFrame(
-        spark.readStream
-          .schema(documentsSchema)
-          .parquet(stageDir)
-          .filter(col("doc_id") % 10 === 9))
-        .select(col("hw"), col("doc_id"), col("pos").as("pb"))
-        .join(idx, Seq("hw"))
-        .select("doc_id", "base_id", "pb", "pa")
-    }
-    graft.ext.DedupOps.incrSubstringFinish(spark, d, pairLog,
-      seedPred = col("doc_id") % 10 === 9)
-  }
+  def streamAbsorbedGate(spark: SparkSession, d: String): DataFrame =
+    substringGate(spark, d, "e126", feed(spark, d, "documents"),
+      graft.ext.DedupOps.absorbedWindexIdx(spark, d), 10)
 
   /** e131: d75's STREAMING twin — e126's crawler gate one LSM
     * GENERATION later: the serving index is the post-turnover
@@ -1274,24 +1054,45 @@ object StreamingOps {
     * whatever the LSM clock says, the live gate is the same zero-state
     * dataflow against the latest serving assembly. Shares d75's
     * twice-grown rebuild oracle. */
-  def streamRegenGate(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "documents.parquet")
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
+  def streamRegenGate(spark: SparkSession, d: String): DataFrame =
+    substringGate(spark, d, "e131", feed(spark, d, "documents"),
+      graft.ext.DedupOps.regenWindexIdx(spark, d), 20)
+
+  /** The frozen reference LM pinned as LITERAL frames so micro-batches
+    * don't re-derive it from corpus scans (the e108 sidecar
+    * discipline; bounded: |ref vocab|² / |ref vocab| / 1 rows on this
+    * fixture — a web-scale LM dictionary would instead stay a
+    * persisted parquet artifact joined stream-static, the d70 shape).
+    * Shared by e127 and its e128 restart proof, which must score
+    * against the identical sidecar. */
+  private type Lm = (DataFrame, DataFrame, DataFrame)
+
+  private def pplRefLmPinned(spark: SparkSession, d: String): Lm =
+    // served from the persisted ppl-scored artifact's LM tables (same
+    // rows as the per-call reference aggregation; the derive cost is
+    // the attributed cache_ppl_scored warm)
+    pinLm(spark, graft.ext.TextOps.pplRefLmCached(spark, d))
+
+  /** Collects the (c2, c1, V) tables into literal frames. */
+  private def pinLm(spark: SparkSession, lm: Lm): Lm = {
+    import spark.implicits._
+    val (c2r, c1r, vr) = lm
+    (c2r.as[(String, String, Long)].collect().toSeq.toDF("w1", "w2", "c2"),
+      c1r.as[(String, Long)].collect().toSeq.toDF("w1", "c1"),
+      vr.as[Long].collect().toSeq.toDF("v"))
+  }
+
+  /** The per-bigram score contributions of `f`'s docs against the
+    * pinned `lm`, drained to the file sink (e127, e128, e130, e134). */
+  private def pplLog(spark: SparkSession, d: String, name: String, f: Feed,
+      lm: Lm): DataFrame = {
+    val (c2, c1, v) = lm
+    drain(spark, d, name, f, "append") {
+      graft.ext.TextOps.pplScoreRows(
+        graft.ext.TextOps.bigramRowsOf(f.open()),
+        c2, c1, v, df => broadcast(df))
+        .select("doc_id", "lpm")
     }
-    val idx = graft.ext.DedupOps.regenWindexIdx(spark, d)
-    val pairLog = drainToFileSink(spark, "e131", nIn) {
-      graft.ext.DedupOps.windowFrame(
-        spark.readStream
-          .schema(documentsSchema)
-          .parquet(stageDir)
-          .filter(col("doc_id") % 20 === 19))
-        .select(col("hw"), col("doc_id"), col("pos").as("pb"))
-        .join(idx, Seq("hw"))
-        .select("doc_id", "base_id", "pb", "pa")
-    }
-    graft.ext.DedupOps.incrSubstringFinish(spark, d, pairLog,
-      seedPred = col("doc_id") % 20 === 19)
   }
 
   /** e127: t75's STREAMING twin — perplexity filtering of a live doc
@@ -1306,42 +1107,10 @@ object StreamingOps {
     * Shares t75's oracle. At scale this is the crawl-time
     * quality gate: each incoming document scored against a published
     * reference model at source throughput, zero streaming state. */
-  /** The frozen reference LM pinned as LITERAL frames so micro-batches
-    * don't re-derive it from corpus scans (the e108 sidecar
-    * discipline; bounded: |ref vocab|² / |ref vocab| / 1 rows on this
-    * fixture — a web-scale LM dictionary would instead stay a
-    * persisted parquet artifact joined stream-static, the d70 shape).
-    * Shared by e127 and its e128 restart proof, which must score
-    * against the identical sidecar. */
-  private def pplRefLmPinned(spark: SparkSession, d: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-         org.apache.spark.sql.DataFrame) = {
-    import spark.implicits._
-    // served from the persisted ppl-scored artifact's LM tables (same
-    // rows as the per-call reference aggregation; the derive cost is
-    // the attributed cache_ppl_scored warm)
-    val (c2r, c1r, vr) = graft.ext.TextOps.pplRefLmCached(spark, d)
-    (c2r.as[(String, String, Long)].collect().toSeq.toDF("w1", "w2", "c2"),
-      c1r.as[(String, Long)].collect().toSeq.toDF("w1", "c1"),
-      vr.as[Long].collect().toSeq.toDF("v"))
-  }
-
   def streamPplFilter(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "documents.parquet")
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
-    val (c2, c1, v) = pplRefLmPinned(spark, d)
-    val lpLog = drainToFileSink(spark, "e127", nIn) {
-      graft.ext.TextOps.pplScoreRows(
-        graft.ext.TextOps.bigramRowsOf(
-          spark.readStream
-            .schema(documentsSchema)
-            .parquet(stageDir)),
-        c2, c1, v, df => broadcast(df))
-        .select("doc_id", "lpm")
-    }
-    graft.ext.TextOps.pplFinish(spark, d, lpLog)
+    val f = feed(spark, d, "documents")
+    graft.ext.TextOps.pplFinish(spark, d,
+      pplLog(spark, d, "e127", f, pplRefLmPinned(spark, d)))
   }
 
   /** e128: e127 stopped MID-FEED and resumed from its checkpoint — the
@@ -1359,28 +1128,9 @@ object StreamingOps {
     * interleaves docs across the cut (the e121 harshest-arrival
     * rationale). */
   def streamPplFilterRestart(spark: SparkSession, d: String): DataFrame = {
-    val (s1, s2) = docSliceFiles(spark, d)
-    val srcDir = scratchTempDir("graft-ppl-restart")
-    Files.createSymbolicLink(srcDir.resolve("slice1.parquet"), s1)
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
-    val (c2, c1, v) = pplRefLmPinned(spark, d)
-    val addPhase2 = () => {
-      Files.createSymbolicLink(srcDir.resolve("slice2.parquet"), s2)
-      ()
-    }
-    val lpLog = drainFileSinkWithRestart(spark, s"$d|e128", nIn,
-        addPhase2) {
-      graft.ext.TextOps.pplScoreRows(
-        graft.ext.TextOps.bigramRowsOf(
-          spark.readStream
-            .schema(documentsSchema)
-            .parquet(srcDir.toString)),
-        c2, c1, v, df => broadcast(df))
-        .select("doc_id", "lpm")
-    }
-    graft.ext.TextOps.pplFinish(spark, d, lpLog)
+    val f = docRestartFeed(spark, d)
+    graft.ext.TextOps.pplFinish(spark, d,
+      pplLog(spark, d, "e128", f, pplRefLmPinned(spark, d)))
   }
 
   /** e130: t78's STREAMING twin — the CALIBRATED perplexity filter at
@@ -1402,11 +1152,8 @@ object StreamingOps {
     * the feed). */
   def streamPplFilterCalibrated(spark: SparkSession, d: String)
       : DataFrame = {
-    val stageDir = stageFile(spark, d, "documents.parquet")
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
-    val (c2, c1, v) = pplRefLmPinned(spark, d)
+    val f = feed(spark, d, "documents")
+    val lm = pplRefLmPinned(spark, d)
     // the frozen scalar sidecar, guarded like e129's wmax: an EMPTY
     // reference slice derives no τ — batch t78's crossJoin then yields
     // zero rows, so the twin returns the same empty frame without
@@ -1432,18 +1179,16 @@ object StreamingOps {
         lit(null).cast("long")).limit(0)
     else {
       val tauV = tauRows(0).getLong(0)
-      val lpLog = drainToFileSink(spark, "e130", nIn) {
-        graft.ext.TextOps.pplScoreRows(
-          graft.ext.TextOps.bigramRowsOf(
-            spark.readStream
-              .schema(documentsSchema)
-              .parquet(stageDir)),
-          c2, c1, v, df => broadcast(df))
-          .select("doc_id", "lpm")
-      }
-      epilogue(lpLog, lit(tauV))
+      epilogue(pplLog(spark, d, "e130", f, lm), lit(tauV))
     }
   }
+
+  /** The feed's docs scored row-locally against the literal `model`,
+    * drained to the file sink (e125, e132, e133). */
+  private def dsirScore(spark: SparkSession, d: String, name: String,
+      f: Feed, model: Array[Long]): DataFrame =
+    drain(spark, d, name, f, "append")(
+      graft.ext.TextOps.dsirScoreOf(f.open(), model)).orderBy("doc_id")
 
   /** e125: t74's DSIR scorer run as a STREAM against the FROZEN
     * importance model — the production data-selection shape: the
@@ -1457,23 +1202,12 @@ object StreamingOps {
     * broadcast-join + doc_id-exchange plan are two different physical
     * strategies that must produce one hash — model collection is
     * bounded by the bucket count, never the corpus. */
-  def streamDsirScore(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "documents.parquet")
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
+  def streamDsirScore(spark: SparkSession, d: String): DataFrame =
     // served from the persisted lr table (bit-identical to the
     // per-call rebuild — same rows; the derive cost is the attributed
     // cache_dsir_manifest warm)
-    val model = graft.ext.TextOps.dsirModelCached(spark, d)
-    drainToFileSink(spark, "e125", nIn) {
-      graft.ext.TextOps.dsirScoreOf(
-        spark.readStream
-          .schema(documentsSchema)
-          .parquet(stageDir),
-        model)
-    }.orderBy("doc_id")
-  }
+    dsirScore(spark, d, "e125", feed(spark, d, "documents"),
+      graft.ext.TextOps.dsirModelCached(spark, d))
 
   /** e132: e125's crawl-time DSIR gate served from the MAINTAINED
     * estimator — the absorb→pin→serve composition proof (round-15
@@ -1491,21 +1225,9 @@ object StreamingOps {
     * must BOTH hold for the stream's output to match the batch
     * rebuild's hash — s80's save→load closure, applied to the model
     * refresh cadence. */
-  def streamDsirScoreMaintained(spark: SparkSession, d: String)
-      : DataFrame = {
-    val stageDir = stageFile(spark, d, "documents.parquet")
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
-    val model = graft.ext.TextOps.dsirModelAbsorbed(spark, d)
-    drainToFileSink(spark, "e132", nIn) {
-      graft.ext.TextOps.dsirScoreOf(
-        spark.readStream
-          .schema(documentsSchema)
-          .parquet(stageDir),
-        model)
-    }.orderBy("doc_id")
-  }
+  def streamDsirScoreMaintained(spark: SparkSession, d: String): DataFrame =
+    dsirScore(spark, d, "e132", feed(spark, d, "documents"),
+      graft.ext.TextOps.dsirModelAbsorbed(spark, d))
 
   /** e133: the crawl-time DSIR gate one GENERATION later — e132's
     * absorb→pin→serve composition extended through the FOLD: the
@@ -1521,21 +1243,9 @@ object StreamingOps {
     * entry (post-turnover pin), the serving path is proven at every
     * lifecycle state of the model artifact — the e122/e126/e131
     * ladder, closed on the model tier. */
-  def streamDsirScoreTurnover(spark: SparkSession, d: String)
-      : DataFrame = {
-    val stageDir = stageFile(spark, d, "documents.parquet")
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
-    val model = graft.ext.TextOps.dsirModelTurnover(spark, d)
-    drainToFileSink(spark, "e133", nIn) {
-      graft.ext.TextOps.dsirScoreOf(
-        spark.readStream
-          .schema(documentsSchema)
-          .parquet(stageDir),
-        model)
-    }.orderBy("doc_id")
-  }
+  def streamDsirScoreTurnover(spark: SparkSession, d: String): DataFrame =
+    dsirScore(spark, d, "e133", feed(spark, d, "documents"),
+      graft.ext.TextOps.dsirModelTurnover(spark, d))
 
   /** e134: e133's twin on the SECOND model artifact — e127's
     * crawl-time perplexity gate with the reference-LM literal sidecar
@@ -1553,26 +1263,9 @@ object StreamingOps {
     * generations. */
   def streamPplFilterTurnover(spark: SparkSession, d: String)
       : DataFrame = {
-    import spark.implicits._
-    val stageDir = stageFile(spark, d, "documents.parquet")
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
-    val (c2r, c1r, vr) = graft.ext.TextOps.pplLmTurnover(spark, d)
-    val c2 = c2r.as[(String, String, Long)].collect().toSeq
-      .toDF("w1", "w2", "c2")
-    val c1 = c1r.as[(String, Long)].collect().toSeq.toDF("w1", "c1")
-    val v = vr.as[Long].collect().toSeq.toDF("v")
-    val lpLog = drainToFileSink(spark, "e134", nIn) {
-      graft.ext.TextOps.pplScoreRows(
-        graft.ext.TextOps.bigramRowsOf(
-          spark.readStream
-            .schema(documentsSchema)
-            .parquet(stageDir)),
-        c2, c1, v, df => broadcast(df))
-        .select("doc_id", "lpm")
-    }
-    graft.ext.TextOps.pplFinish(spark, d, lpLog)
+    val f = feed(spark, d, "documents")
+    val lm = pinLm(spark, graft.ext.TextOps.pplLmTurnover(spark, d))
+    graft.ext.TextOps.pplFinish(spark, d, pplLog(spark, d, "e134", f, lm))
   }
 
   /** e135: the COMPOSED release gate at crawl time — t85/t87's
@@ -1597,10 +1290,7 @@ object StreamingOps {
     * re-derivation cadence (model refresh, τ re-pin, benchmark
     * update) stays batch-side, exactly the production split. */
   def streamReleaseGate(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "documents.parquet")
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
+    val f = feed(spark, d, "documents")
     // frozen sidecars, all derived batch-side, all bounded: the LM
     // literals (vocab-bounded), the one-scalar τ, the benchmark
     // passage-hash set (bounded by construction), the 256-cell model,
@@ -1630,10 +1320,8 @@ object StreamingOps {
         .withColumn("released", lit(false))
         .limit(0)
     val tauV = tauRows(0).getLong(0)
-    val log = drainToFileSink(spark, "e135", nIn) {
-      val src = spark.readStream
-        .schema(documentsSchema)
-        .parquet(stageDir)
+    val log = drain(spark, d, "e135", f, "append") {
+      val src = f.open()
       val lp = graft.ext.TextOps.pplScoreRows(
           graft.ext.TextOps.bigramRowsOf(src),
           c2, c1, v, df => broadcast(df))
@@ -1693,10 +1381,7 @@ object StreamingOps {
     * literal-threshold stage and the batch broadcast-crossJoin plan
     * must produce one hash. */
   def streamDsirResample(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "documents.parquet")
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
+    val f = feed(spark, d, "documents")
     val model = graft.ext.TextOps.dsirModelCached(spark, d)
     // the batch weight frame feeds both frozen thresholds — served
     // from the persisted selection artifact (same weight rows as the
@@ -1714,13 +1399,9 @@ object StreamingOps {
     val wmaxV = if (wmaxRow.isNullAt(0)) 0L else wmaxRow.getLong(0)
     val cutRow = graft.ext.TextOps.dsirCutFrame(w).collect()(0)
     val (cutW, cutUid) = (cutRow.getLong(0), cutRow.getLong(1))
-    drainToFileSink(spark, "e129", nIn) {
+    drain(spark, d, "e129", f, "append") {
       graft.ext.TextOps.dsirManifestStage(
-        graft.ext.TextOps.dsirScoreOf(
-          spark.readStream
-            .schema(documentsSchema)
-            .parquet(stageDir),
-          model)
+        graft.ext.TextOps.dsirScoreOf(f.open(), model)
           .select("doc_id", "lang", "w_micro"),
         lit(wmaxV), lit(cutW), lit(cutUid))
     }.orderBy("doc_id")
@@ -1741,12 +1422,12 @@ object StreamingOps {
     * constant memory, bad records never kill the stream (D5's
     * error-isolation contract on an unbounded source). */
   def streamJsonlQuarantine(spark: SparkSession, d: String): DataFrame = {
+    // the staged JSONL lines, sized like the documents feed
     val dir = graft.ingest.Validation.stagedJsonl(spark, d)
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
-    val log = drainToFileSink(spark, "e110", nIn) {
-      spark.readStream.text(dir)
+    val f = Feed(inCount(spark, d, "documents", lit(true)),
+      () => spark.readStream.text(dir))
+    val log = drain(spark, d, "e110", f, "append") {
+      f.open()
         .select(from_json(col("value"),
           graft.ingest.Validation.jsonlSchema).as("j"))
         .select(
@@ -1774,20 +1455,15 @@ object StreamingOps {
     * source throughput with constant memory, the same
     * frozen-sidecar-plus-stateless-stage shape as e108/e109/e110. */
   def streamPassageDecontam(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "documents.parquet")
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
+    val f = feed(spark, d, "documents")
     val bench = graft.ext.DedupOps.passageHashes(
         graft.Tables.documents(spark, d))
       .filter(col("doc_id") % 97 === 0)
       .select(col("ph")).distinct()
       .withColumn("is_hit", lit(1L))
-    val log = drainToFileSink(spark, "e111", nIn) {
+    val log = drain(spark, d, "e111", f, "append") {
       graft.ext.DedupOps.passageHashes(
-        spark.readStream
-          .schema(documentsSchema)
-          .parquet(stageDir)
+        f.open()
           .filter(col("doc_id") % 97 =!= 0))
         .join(broadcast(bench), Seq("ph"), "left")
         .select(col("doc_id"), coalesce(col("is_hit"), lit(0L)).as("hit"))
@@ -1818,19 +1494,14 @@ object StreamingOps {
     * docs only between quarantine and their fixed home, never across
     * train/test. */
   def streamContamSplit(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "documents.parquet")
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
+    val f = feed(spark, d, "documents")
     val bench = graft.ext.DedupOps.passageHashes(
         graft.Tables.documents(spark, d))
       .filter(col("doc_id") % 97 === 0)
       .select(col("ph")).distinct()
       .withColumn("is_hit", lit(1L))
-    val log = drainToFileSink(spark, "e115", nIn) {
-      contamRouteLog(spark.readStream
-        .schema(documentsSchema)
-        .parquet(stageDir), bench)
+    val log = drain(spark, d, "e115", f, "append") {
+      contamRouteLog(f.open(), bench)
     }
     contamRouteCensus(log)
   }
@@ -1889,25 +1560,15 @@ object StreamingOps {
     * row per doc, no explode, no stateful operator), and re-freezing
     * the plan after a corpus refresh flips docs in coin order. */
   def streamMixtureRealize(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "documents.parquet")
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
+    val f = feed(spark, d, "documents")
     val plan = graft.ext.TextOps
       .mixturePlanOf(graft.Tables.documents(spark, d))
       .select("source", "target_tokens", "repeat_x1000")
-    val log = drainToFileSink(spark, "e116", nIn) {
-      graft.ext.TextOps.mixtureCopiesWith(
-        spark.readStream.schema(documentsSchema).parquet(stageDir), plan)
+    val log = drain(spark, d, "e116", f, "append") {
+      graft.ext.TextOps.mixtureCopiesWith(f.open(), plan)
     }
     graft.ext.TextOps.mixtureCensusOf(log)
   }
-
-  /** embeddings schema for streaming reads. */
-  val embeddingsSchema: StructType = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("embedding", ArrayType(FloatType)),
-    StructField("label", IntegerType)))
 
   /** e117: d63's STREAMING twin — semantic decontamination as a
     * crawl-time gate: the benchmark embedding set (bounded by
@@ -1924,18 +1585,14 @@ object StreamingOps {
     * re-scores only future arrivals — the e108–e116 shape on the
     * dense tier. */
   def streamSemanticDecontam(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "embeddings.parquet")
-    val nIn = cachedCount(d, "emb_all") {
-      spark.read.parquet(s"$d/embeddings.parquet").count()
-    }
+    val f = feed(spark, d, "embeddings")
     val bench = graft.ext.DedupOps
       .normedVectors(graft.Tables.embeddings(spark, d))
       .filter(col("vec_id") % 37 === 2)
       .toDF("b_id", "bv", "bn")
-    val log = drainToFileSink(spark, "e117", nIn) {
+    val log = drain(spark, d, "e117", f, "append") {
       graft.ext.DedupOps.contamScores(
-        graft.ext.DedupOps.normedVectors(
-          spark.readStream.schema(embeddingsSchema).parquet(stageDir))
+        graft.ext.DedupOps.normedVectors(f.open())
           .filter(col("vec_id") % 37 =!= 2),
         bench)
     }
@@ -1963,18 +1620,14 @@ object StreamingOps {
     * re-freezing the artifact after an s81 absorb re-gates only
     * future arrivals, exactly the batch gate's contract. */
   def streamSemanticGate(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "embeddings.parquet")
-    val nIn = cachedCount(d, "emb_all") {
-      spark.read.parquet(s"$d/embeddings.parquet").count()
-    }
+    val f = feed(spark, d, "embeddings")
     val cut = graft.ext.SimilarityOps.incrBaseCut(spark, d)
     val centSeq = graft.ext.SimilarityOps.gateCentroids(spark, d)
     val base = graft.ext.DedupOps.gateBaseMembers(spark, d)
-    val log = drainToFileSink(spark, "e119", nIn) {
+    val log = drain(spark, d, "e119", f, "append") {
       graft.ext.DedupOps.gateScores(
         graft.ext.SimilarityOps.kmAssignStateless(
-          graft.ext.SimilarityOps.quantizeFrame(
-            spark.readStream.schema(embeddingsSchema).parquet(stageDir))
+          graft.ext.SimilarityOps.quantizeFrame(f.open())
             .filter(col("vec_id") >= cut),
           centSeq)
           .withColumn("nrm",
@@ -2040,15 +1693,17 @@ object StreamingOps {
     * At scale: state is O(users), per-batch work is O(batch), and the
     * matrix itself is |event-type|² — the live "where do users go
     * next" table. */
-  def streamTransitions(spark: SparkSession, d: String): DataFrame = {
+  def streamTransitions(spark: SparkSession, d: String): DataFrame =
+    transitions(spark, d, "e114", feed(spark, d, "events"))
+
+  /** The e114 transition dataflow drained from `f`, shared by e114 and
+    * its e118 restart proof. */
+  private def transitions(spark: SparkSession, d: String, name: String,
+      f: Feed): DataFrame = {
     import spark.implicits._
-    val stageDir = stageFile(spark, d, "events.parquet")
-    val nIn = cachedCount(d, "ev_all") {
-      spark.read.parquet(s"$d/events.parquet").count()
-    }
-    val log = drainToFileSink(spark, "e114", nIn) {
+    val log = drain(spark, d, name, f, "append") {
       transitionStream(
-        spark.readStream.schema(eventsSchema).parquet(stageDir)
+        f.open()
           .select(col("user_id"), expr("ts div 1000").as("ts"),
             col("event_id"), col("event_type").as("tp"))
           .as[TransEvent]).toDF()
@@ -2069,21 +1724,8 @@ object StreamingOps {
     * hash-catch. The time-split staging preserves per-user
     * (ts, event_id) order across the boundary, so e114's in-order
     * delivery contract holds by construction. */
-  def streamTransitionsRestart(spark: SparkSession, d: String): DataFrame = {
-    import spark.implicits._
-    val (stageDir, addPhase2) = stageTwoSlices(spark, d, sentinel = false)
-    val nIn = cachedCount(d, "ev_all") {
-      spark.read.parquet(s"$d/events.parquet").count()
-    }
-    val log = drainFileSinkWithRestart(spark, s"$d|e118", nIn, addPhase2) {
-      transitionStream(
-        spark.readStream.schema(eventsSchema).parquet(stageDir)
-          .select(col("user_id"), expr("ts div 1000").as("ts"),
-            col("event_id"), col("event_type").as("tp"))
-          .as[TransEvent]).toDF()
-    }
-    graft.ext.EventOps.transitionFinish(log)
-  }
+  def streamTransitionsRestart(spark: SparkSession, d: String): DataFrame =
+    transitions(spark, d, "e118", eventRestartFeed(spark, d))
 
   /** e112: m79's STREAMING twin — the media crawler's continuous
     * near-dup gate: the corpus's cold-capped fingerprint band index is
@@ -2100,18 +1742,13 @@ object StreamingOps {
     * tracks the batch's candidate fan-out, never corpus size — the
     * media tier's form of the e109 crawler gate. */
   def streamMediaDedupGate(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "documents.parquet")
-    val nIn = cachedCount(d, "doc_all") {
-      spark.read.parquet(s"$d/documents.parquet").count()
-    }
+    val f = feed(spark, d, "documents")
     val corpIdx = graft.ext.Multimodal.corpusBandIndex(spark, d)
-    val log = drainToFileSink(spark, "e112", nIn) {
+    val log = drain(spark, d, "e112", f, "append") {
       import spark.implicits._
       graft.ext.Multimodal.bandsOf(graft.ext.Multimodal.signaturesOf(
         graft.ext.Multimodal.mediaRowsOf(
-          spark.readStream
-            .schema(documentsSchema)
-            .parquet(stageDir)
+          f.open()
             .filter(col("doc_id") % 7 === 3)
             .select("doc_id", "text").as[(Long, String)])))
         .select(col("kind"), col("band_idx"), col("band"),
@@ -2134,7 +1771,7 @@ object StreamingOps {
       maxFilesPerTrigger: Int = 100, checkpointDir: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val ckpt = checkpointDir.getOrElse(
-      scratchTempDir("graft-ingest-ckpt").toString)
+      graft.Fs.scratchTempDir("graft-ingest-ckpt").toString)
     // same depth-3 contract as the batch scan (EmailIngest.scan): the
     // glob lists only base/<user>/<folder>/<file>, the anchored pattern
     // recovers hierarchy relative to baseDir. The base is escaped, so a
@@ -2255,15 +1892,12 @@ object StreamingOps {
     * state instead of a built-in aggregation). */
   def streamFunnel(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val stageDir = stageFile(spark, d, "events.parquet")
-    val nIn = cachedCount(d, "ev_all") {
-      spark.read.parquet(s"$d/events.parquet").count()
-    }
+    val f = feed(spark, d, "events")
     // per-user progress emissions are user-scale; update mode can't use
     // the file sink directly, so they append as an upsert log (read
     // collapses them via the monotone max)
-    val snap = drainUpdateToFiles(spark, s"$d|e95", nIn) {
-      val ev = spark.readStream.schema(eventsSchema).parquet(stageDir)
+    val snap = drain(spark, d, "e95", f, "update") {
+      val ev = f.open()
         .filter(col("event_type").isin("signup", "view", "click", "purchase"))
         .select(col("user_id"), expr("ts div 1000").as("ts"),
           expr("CASE event_type WHEN 'signup' THEN 0 WHEN 'view' THEN 1" +
@@ -2295,15 +1929,12 @@ object StreamingOps {
     * modulus from the dimension's own row count). Value sums run on
     * exact integer cents (the e80 rule). */
   def streamSegmentEnrichment(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "events.parquet")
-    val nIn = cachedCount(d, "ev_all") {
-      spark.read.parquet(s"$d/events.parquet").count()
-    }
+    val f = feed(spark, d, "events")
     val cust = spark.read.parquet(s"$d/customer.parquet")
       .select("c_custkey", "c_mktsegment")
     val nCust = cust.count()
-    val snap = drainToSnapshot(spark, "complete", nIn) {
-      spark.readStream.schema(eventsSchema).parquet(stageDir)
+    val snap = drain(spark, d, "e98", f, "complete") {
+      f.open()
         .filter(col("event_type") === "purchase")
         .withColumn("c_custkey", expr(s"user_id % $nCust + 1"))
         .withColumn("cents", expr("CAST(round(value * 100) AS BIGINT)"))
@@ -2337,14 +1968,11 @@ object StreamingOps {
     * would carry a watermark to expire closed days; the fixtures are
     * bounded so none is needed for parity. */
   def streamRetention(spark: SparkSession, d: String): DataFrame = {
-    val stageDir = stageFile(spark, d, "events.parquet")
-    val nIn = cachedCount(d, "ev_all") {
-      spark.read.parquet(s"$d/events.parquet").count()
-    }
+    val f = feed(spark, d, "events")
     // the deduped (user, day) pair set is user-scale, not aggregate-
     // bounded → file sink, never the driver
-    val snap = drainToFileSink(spark, s"$d|e96", nIn) {
-      spark.readStream.schema(eventsSchema).parquet(stageDir)
+    val snap = drain(spark, d, "e96", f, "append") {
+      f.open()
         .select(col("user_id"),
           expr("(ts div 1000) div 86400000000").as("day"))
         .dropDuplicates("user_id", "day")

@@ -124,4 +124,20 @@ class BenchGuardsSpec extends AnyFunSuite {
       assert(Files.readString(java.nio.file.Paths.get(p)) == prior)
     }
   }
+
+  test("an item whose volume did not grow round-trips its null exponent through a subset merge") {
+    // ScaleBench's exponent is log(ratio) / log(vol): infinite at vol 1
+    val expo = math.log(1.2) / math.log(1.0)
+    assert(expo.isInfinite)
+    val p = writeTmp("")
+    val first = Bench.writeRecord(p, "\"scale\":\"t\"",
+      Seq("docs_q" -> Seq("a" -> 1.0, "vol" -> 1.0, "exponent" -> expo)),
+      merge = false)
+    assert(first == """{"scale":"t","items":{"docs_q":""" +
+      """{"a":1.000,"vol":1.000,"exponent":null}}}""")
+    val merged = Bench.writeRecord(p, "\"scale\":\"t\"",
+      Seq(item("x", 3.0)), merge = true)
+    assert(merged == """{"scale":"t","items":{"docs_q":""" +
+      """{"a":1.000,"vol":1.000,"exponent":null},"x":{"a":3.000,"b":2.000}}}""")
+  }
 }

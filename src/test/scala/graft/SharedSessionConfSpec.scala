@@ -11,9 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Batch entries share one session without writing its conf: two of
   * them run at once and still return their sequential rows, while
-  * `spark.sql.shuffle.partitions` never moves. The streaming drains'
-  * scoped width setter, the one remaining writer, restores the session
-  * value even when its body throws. */
+  * `spark.sql.shuffle.partitions` never moves. The streaming drain's
+  * scoped conf setter, the one remaining writer, restores the session
+  * width and state store provider even when its body throws. */
 class SharedSessionConfSpec extends AnyFunSuite with SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -46,14 +46,45 @@ class SharedSessionConfSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("the streaming drain width setter restores the session value when the drain throws") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+    implicit val sqlCtx = spark.sqlContext
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val rocksDb =
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    spark.conf.unset(providerKey)
     val original = spark.conf.get(key)
+    val input = MemoryStream[Long]
+    val twsPlan = input.toDS().groupByKey(identity)
+      .transformWithState(new RowCountProcessor, TimeMode.None(),
+        OutputMode.Append()).toDF()
+    // a plan without transformWithState keeps the session's provider
+    graft.streaming.StreamingOps.withDrainConf(spark, 10L)(input.toDF()) { _ =>
+      assert(spark.conf.get(key) == "1")
+      assert(!spark.conf.getAll.contains(providerKey))
+    }
     val e = intercept[IllegalStateException] {
-      graft.streaming.StreamingOps.withDrainWidth(spark, 10L) {
+      graft.streaming.StreamingOps.withDrainConf(spark, 10L)(twsPlan) { _ =>
         assert(spark.conf.get(key) == "1")
+        assert(spark.conf.get(providerKey) == rocksDb)
         throw new IllegalStateException("drain failed")
       }
     }
     assert(e.getMessage == "drain failed")
     assert(spark.conf.get(key) == original)
+    assert(!spark.conf.getAll.contains(providerKey),
+      "an unset provider came back set")
   }
+}
+
+/** The smallest `transformWithState` processor: one row count per key
+  * and micro-batch, no state. */
+private class RowCountProcessor
+    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Long, Long] {
+  import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues}
+  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = ()
+  override def handleInputRows(key: Long, rows: Iterator[Long],
+      timerValues: TimerValues): Iterator[Long] =
+    Iterator.single(rows.size.toLong)
 }

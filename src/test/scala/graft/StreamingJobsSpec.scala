@@ -316,6 +316,90 @@ class StreamingJobsSpec extends AnyFunSuite with SparkSpec {
     assert(out.map(_._3).sum == 3L, s"unexpected census: ${out.mkString(", ")}")
   }
 
+  test("a drain against a second fixture dir keeps the first dir's result readable (e107)") {
+    // each file-sink drain deletes the previous sink dir of its key; the
+    // key holds the fixture dir, so the sf0.01 drain must leave the
+    // still-lazy sf0.001 result alone
+    val first = StreamingOps.streamChunkOverlap(spark, "/root/testdata/sf0.001")
+    val rows = first.collect().toSeq
+    assert(rows.nonEmpty)
+    val second = StreamingOps.streamChunkOverlap(spark, "/root/testdata/sf0.01")
+    assert(second.count() > 0)
+    // a new Dataset re-reads the sink files: collecting `first` again
+    // would reuse its finished sort shuffle instead
+    val again = first.select(first.columns.map(org.apache.spark.sql.functions.col): _*)
+    assert(again.collect().toSeq == rows)
+  }
+
+  test("restart drains delete their fresh source dirs (e104/e121/e123)") {
+    val d = "/root/testdata/sf0.001"
+    val probe = Fs.scratchTempDir("graft-probe")
+    val root = probe.getParent
+    Fs.deleteTree(probe)
+    def restartDirs(): Set[String] = {
+      val s = Files.list(root)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.matches("graft-.*-restart.*")).toSet
+      finally s.close()
+    }
+    val before = restartDirs()
+    StreamingOps.streamDedupActivityRestart(spark, d).collect()
+    StreamingOps.streamCmCellsRestart(spark, d).collect()
+    StreamingOps.streamSubstringGateRestart(spark, d).collect()
+    val left = restartDirs() -- before
+    assert(left.isEmpty, s"restart source dirs left behind: $left")
+  }
+
+  test("drains size every state operator to their input and use RocksDB only for transformWithState") {
+    import org.apache.spark.sql.streaming.{StateOperatorProgress, StreamingQueryListener}
+    val d = "/root/testdata/sf0.001"
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.stateStore.providerClass")
+    val before = keys.map(spark.conf.getAll.get)
+    assert(spark.conf.get(keys.head) == "4")
+    /** The state operators of the progress events of the `queries`
+      * streaming queries that `run` starts and stops. */
+    def stateOps(queries: Int)(run: => Unit): Seq[StateOperatorProgress] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[StateOperatorProgress]()
+      val ended = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new StreamingQueryListener {
+        override def onQueryStarted(
+            e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+        override def onQueryProgress(
+            e: StreamingQueryListener.QueryProgressEvent): Unit =
+          e.progress.stateOperators.foreach(seen.add)
+        override def onQueryTerminated(
+            e: StreamingQueryListener.QueryTerminatedEvent): Unit = {
+          ended.incrementAndGet(); ()
+        }
+      }
+      spark.streams.addListener(listener)
+      try {
+        run
+        // a query's events arrive in order, its termination last
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (ended.get < queries && System.nanoTime() < deadline)
+          Thread.sleep(10)
+        assert(ended.get == queries)
+      } finally spark.streams.removeListener(listener)
+      seen.asScala.toSeq
+    }
+    val e88 = stateOps(1)(StreamingOps.streamRangeJoin(spark, d).collect())
+    val e102 = stateOps(1)(StreamingOps.streamUserCensus(spark, d).collect())
+    val e104 = stateOps(2)(
+      StreamingOps.streamDedupActivityRestart(spark, d).collect())
+    Seq("e88" -> e88, "e102" -> e102, "e104" -> e104).foreach { case (n, ops) =>
+      assert(ops.nonEmpty, s"$n reported no state operator")
+      assert(ops.forall(_.numShufflePartitions == 1),
+        s"$n: ${ops.map(o => o.operatorName -> o.numShufflePartitions)}")
+    }
+    def rocksDb(o: StateOperatorProgress) =
+      o.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb"))
+    assert(e102.forall(rocksDb), e102.map(_.customMetrics))
+    assert(!e88.exists(rocksDb), e88.map(_.customMetrics))
+    assert(keys.map(spark.conf.getAll.get) == before)
+  }
+
   test("fixtures hold no exact-30-minute gap (e89 oracle-sharing invariant)") {
     // session_window closes a session at last+gap EXCLUSIVE while the
     // batch lag-formulation keeps a gap of exactly 30 min open — e89
