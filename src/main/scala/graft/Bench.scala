@@ -142,7 +142,8 @@ object Bench {
     * at a DIFFERENT scale factor than this run (an sf0.01 dev run's
     * detail would make every sf0.1 query look "inflated" and double the
     * suite with pointless re-runs) — every caller treats a missing
-    * reference as "no re-run". */
+    * reference as "no re-run". A file that exists but cannot be read
+    * also prints one `[bench]` stderr line naming it and the cause. */
   private[graft] def loadCommittedDetail(sfDir: String,
       path: String = "BENCH_DETAIL.json"): Map[String, Double] = {
     try {
@@ -160,7 +161,13 @@ object Bench {
           qs.fieldNames().asScala.map(n => n -> qs.get(n).asDouble(-1.0)).toMap
         }
       }
-    } catch { case _: Throwable => Map.empty }
+    } catch { case e: Throwable =>
+      // the file exists but cannot be read: the 2× rerun defense is
+      // off for this run, which must not happen silently
+      System.err.println(s"[bench] committed detail $path unreadable " +
+        s"(no reruns this run): ${e.toString.replace('\n', ' ')}")
+      Map.empty
+    }
   }
 
   /** Inflated vs the committed envelope: >2× the clean value AND >0.3 s
@@ -313,31 +320,26 @@ object Bench {
           .count(); () },
         () => graft.operators.Sketches.clearCaches()),
       // the model-tier segment artifacts (t79's DSIR count segments,
-      // t81's reference-LM bigram-count segments): base + delta builds
-      // each its own warm_builds sub-time (the cache_d70 discipline),
-      // so the t79/t81 query line items time the pure summed-segments
-      // serve + scoring pass
+      // t81's reference-LM bigram-count segments): each table's one
+      // corpus pass writes its base, delta and retract cohort segments,
+      // then the t84/t86 gen-1 folds read those segments (never the
+      // corpus) — each build its own warm_builds sub-time (the
+      // cache_d70 discipline), so the t79–t86 query line items time
+      // the pure summed-segments serve + scoring pass
       Warm("cache_model_segments",
         () => {
           timeBuild("dsir_counts_base") {
-            graft.ext.TextOps.dsirCountsBaseDir(spark, sfDir) }
-          timeBuild("dsir_counts_delta") {
-            graft.ext.TextOps.dsirCountsDeltaDir(spark, sfDir) }
+            graft.ext.TextOps.segmentsDir(spark, sfDir,
+              graft.ext.TextOps.dsirTable) }
           timeBuild("ppl_c2_base") {
-            graft.ext.TextOps.pplC2BaseDir(spark, sfDir) }
-          timeBuild("ppl_c2_delta") {
-            graft.ext.TextOps.pplC2DeltaDir(spark, sfDir) }
-          timeBuild("dsir_counts_retract") {
-            graft.ext.TextOps.dsirCountsRetractDir(spark, sfDir) }
-          timeBuild("ppl_c2_retract") {
-            graft.ext.TextOps.pplC2RetractDir(spark, sfDir) }
-          // the t84/t86 gen-1 folds (read the three segments above,
-          // never the corpus) — their query line items then time the
-          // pure turnover serve
+            graft.ext.TextOps.segmentsDir(spark, sfDir,
+              graft.ext.TextOps.lmTable) }
           timeBuild("dsir_counts_folded") {
-            graft.ext.TextOps.dsirCountsFoldedDir(spark, sfDir) }
+            graft.ext.TextOps.foldedDir(spark, sfDir,
+              graft.ext.TextOps.dsirTable) }
           timeBuild("ppl_c2_folded") {
-            graft.ext.TextOps.pplC2FoldedDir(spark, sfDir) }
+            graft.ext.TextOps.foldedDir(spark, sfDir,
+              graft.ext.TextOps.lmTable) }
           () },
         // full clearModelSegs is safe HERE because this warm is timed
         // before cache_ppl_scored below builds its artifact; the
@@ -391,7 +393,7 @@ object Bench {
           timeBuild("windex_folded") {
             graft.ext.DedupOps.foldedWindexDir(spark, sfDir) }
           timeBuild("windex_delta2") {
-            graft.ext.DedupOps.windexDelta2Dir(spark, sfDir) }
+            graft.ext.DedupOps.windexDeltaDir(spark, sfDir, gen = 2) }
           // the substring-cleaned corpus (d68's apply output — the
           // release payload artifact served to d68 and t85)
           timeBuild("substring_clean") {
@@ -520,7 +522,9 @@ object Bench {
     // warm the JVM/codegen/parquet paths once so first-run JIT and
     // reader init are not charged to whichever query runs first
     // (observed ±3s of pure warmup noise on a trivial query)
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    try SparkEntry.entry(spark).count() catch { case e: Throwable =>
+      System.err.println("[bench] warm-up entry failed (non-fatal): " +
+        e.toString.replace('\n', ' ')) }
     // JIT pre-warm at the smallest SF (untimed, standard JMH-style
     // methodology): the heavy code paths — cache builds and streaming
     // drains through both sink kinds — compile here instead of inside

@@ -322,6 +322,6 @@ object SparkEntry {
         "e128_restart_ppl_filter" -> TextOps.pplFilterSql,
         "e129_stream_dsir_resample" -> TextOps.dsirResampleSql,
         "e130_stream_ppl_calibrated" -> TextOps.pplFilterCalibratedSql,
-        "e131_stream_regen_gate" -> DedupOps.windexRegenGateSql,
+        "e131_stream_regen_gate" -> DedupOps.windexRegenAbsorbSql,
         "e121_restart_cm_cells" -> Sketches.cmCellsSql)
 }

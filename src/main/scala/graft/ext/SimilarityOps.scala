@@ -517,14 +517,21 @@ object SimilarityOps {
       // centroid-mean shuffles
       val q = quantized(s, d)
       val e = q.repartition(q.rdd.getNumPartitions, col("vec_id")).cache()
-      var cent = e.filter(col("vec_id") < kmK)
-        .select(col("vec_id").as("cid"), col("qv").as("cv"))
-      for (_ <- 1 to kmIters) cent = kmMeans(kmAssign(e, cent))
+      val cent = kmTrain(e)
       val model = (cent.cache(), kmAssign(e, cent).cache())
       model._1.count(); model._2.count()
       e.unpersist()
       model
     })
+
+  /** The coarse quantizer trained on a quantized frame `e`: the first
+    * `kmK` vectors seed the centroids, then `kmIters` Lloyd rounds
+    * (integer argmin assign → integer-rounded means). Shared by the
+    * full-corpus model and s81's base-trained frozen artifact. */
+  private def kmTrain(e: DataFrame): DataFrame =
+    (1 to kmIters).foldLeft(e.filter(col("vec_id") < kmK)
+      .select(col("vec_id").as("cid"), col("qv").as("cv"))) {
+      (cent, _) => kmMeans(kmAssign(e, cent)) }
 
   /** Final (post-iteration) assignment of every vector. */
   private def kmFinal(s: SparkSession, d: String): DataFrame =
@@ -709,45 +716,52 @@ object SimilarityOps {
     * encodings). Shared by s69 (codes) and s70 (ADC serving). */
   private def pqParts(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val subs = pqFrames.cached(s, d, "pqsubs") {
-      quantized(s, d)
-        .select(col("vec_id"), explode(array((0 until pqM).map(j =>
-          struct(lit(j).as("j"),
-            slice(col("qv"), j * pqSub + 1, pqSub).as("sv"))): _*)).as("s"))
-        .select(col("vec_id"), col("s.j").as("j"), col("s.sv").as("sv"))
-    }
-    // seeds: the first pqK vectors' subvectors, per subspace
-    val cb = pqFrames.cached(s, d, "pqcb") {
-      val seeds = subs.filter(col("vec_id") < pqK)
-        .select(col("j"), col("vec_id").as("cid"), col("sv").as("cv"))
-      // one Lloyd round: integer argmin assign → integer-rounded means
-      val assigned = subs.join(broadcast(seeds), Seq("j"))
-        .withColumn("d2", dist2(col("sv"), col("cv")))
-        .groupBy("vec_id", "j", "sv")
-        .agg(min(struct(col("d2"), col("cid"))).as("m"))
-        .select(col("vec_id"), col("j"), col("sv"), col("m.cid").as("cid"))
-      assigned
-        .select(col("j"), col("cid"), posexplode(col("sv")).as(Seq("pos", "x")))
-        .groupBy("j", "cid", "pos")
-        .agg(expr("CASE WHEN sum(x) >= 0" +
-        " THEN (2 * sum(x) + count(1)) div (2 * count(1))" +
-        " ELSE -((-2 * sum(x) + count(1)) div (2 * count(1))) END").as("cx"))
-        .groupBy("j", "cid")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
-          p => p.getField("cx")).as("cv"))
-    }
-    // encode: nearest codeword per subspace (the persisted "index" a
-    // real deployment would store — cached for the same reason)
-    val enc = pqFrames.cached(s, d, "pqenc") {
-      subs.join(broadcast(cb), Seq("j"))
-        .withColumn("d2", dist2(col("sv"), col("cv")))
-        .groupBy("vec_id", "j")
-        .agg(min(struct(col("d2"), col("cid"))).as("m"))
-        .select(col("vec_id"), col("j"),
-          col("m.cid").as("cid"), col("m.d2").as("d2"))
-    }
+    val subs = pqFrames.cached(s, d, "pqsubs")(pqSubsOf(quantized(s, d)))
+    val cb = pqFrames.cached(s, d, "pqcb")(pqCodebooksOf(subs))
+    // encode: the persisted "index" a real deployment would store —
+    // cached for the same reason
+    val enc = pqFrames.cached(s, d, "pqenc")(pqEncodeOf(subs, cb))
     (subs, cb, enc)
   }
+
+  /** The (vec_id, j, sv) subvector frame of a quantized frame: `pqM`
+    * slices of `pqSub` dims per vector. */
+  private def pqSubsOf(q: DataFrame): DataFrame =
+    q.select(col("vec_id"), explode(array((0 until pqM).map(j =>
+        struct(lit(j).as("j"),
+          slice(col("qv"), j * pqSub + 1, pqSub).as("sv"))): _*)).as("s"))
+      .select(col("vec_id"), col("s.j").as("j"), col("s.sv").as("sv"))
+
+  /** Per-subspace codebooks (j, cid, cv) trained on a subvector frame:
+    * the first `pqK` vectors' subvectors seed each subspace, then one
+    * Lloyd round (integer argmin assign → integer-rounded means). */
+  private def pqCodebooksOf(subs: DataFrame): DataFrame = {
+    val seeds = subs.filter(col("vec_id") < pqK)
+      .select(col("j"), col("vec_id").as("cid"), col("sv").as("cv"))
+    val assigned = subs.join(broadcast(seeds), Seq("j"))
+      .withColumn("d2", dist2(col("sv"), col("cv")))
+      .groupBy("vec_id", "j", "sv")
+      .agg(min(struct(col("d2"), col("cid"))).as("m"))
+      .select(col("vec_id"), col("j"), col("sv"), col("m.cid").as("cid"))
+    assigned
+      .select(col("j"), col("cid"), posexplode(col("sv")).as(Seq("pos", "x")))
+      .groupBy("j", "cid", "pos")
+      .agg(expr("CASE WHEN sum(x) >= 0" +
+      " THEN (2 * sum(x) + count(1)) div (2 * count(1))" +
+      " ELSE -((-2 * sum(x) + count(1)) div (2 * count(1))) END").as("cx"))
+      .groupBy("j", "cid")
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
+        p => p.getField("cx")).as("cv"))
+  }
+
+  /** Nearest codeword per subspace: (vec_id, j, cid, d2). */
+  private def pqEncodeOf(subs: DataFrame, cb: DataFrame): DataFrame =
+    subs.join(broadcast(cb), Seq("j"))
+      .withColumn("d2", dist2(col("sv"), col("cv")))
+      .groupBy("vec_id", "j")
+      .agg(min(struct(col("d2"), col("cid"))).as("m"))
+      .select(col("vec_id"), col("j"),
+        col("m.cid").as("cid"), col("m.d2").as("d2"))
 
   def pqCodes(s: SparkSession, d: String): DataFrame = {
     // pq_code packs the pqM 2-bit indices via exact integer weights
@@ -1037,41 +1051,12 @@ object SimilarityOps {
       val base = e.filter(col("vec_id") < b)
       val batch = e.filter(col("vec_id") >= b)
       // ---- build on base (the "already deployed" index)
-      var cent = base.filter(col("vec_id") < kmK)
-        .select(col("vec_id").as("cid"), col("qv").as("cv"))
-      for (_ <- 1 to kmIters) cent = kmMeans(kmAssign(base, cent))
-      cent = cent.localCheckpoint() // freeze: 2·kmIters-job lineage
-      def subsOf(df: DataFrame) = df
-        .select(col("vec_id"), explode(array((0 until pqM).map(j =>
-          struct(lit(j).as("j"),
-            slice(col("qv"), j * pqSub + 1, pqSub).as("sv"))): _*)).as("s"))
-        .select(col("vec_id"), col("s.j").as("j"), col("s.sv").as("sv"))
-      val baseSubs = subsOf(base)
-      val seeds = baseSubs.filter(col("vec_id") < pqK)
-        .select(col("j"), col("vec_id").as("cid"), col("sv").as("cv"))
-      val assigned = baseSubs.join(broadcast(seeds), Seq("j"))
-        .withColumn("d2", dist2(col("sv"), col("cv")))
-        .groupBy("vec_id", "j", "sv")
-        .agg(min(struct(col("d2"), col("cid"))).as("m"))
-        .select(col("vec_id"), col("j"), col("sv"), col("m.cid").as("cid"))
-      val cb = assigned
-        .select(col("j"), col("cid"),
-          posexplode(col("sv")).as(Seq("pos", "x")))
-        .groupBy("j", "cid", "pos")
-        .agg(expr("CASE WHEN sum(x) >= 0" +
-          " THEN (2 * sum(x) + count(1)) div (2 * count(1))" +
-          " ELSE -((-2 * sum(x) + count(1)) div (2 * count(1))) END")
-          .as("cx"))
-        .groupBy("j", "cid")
-        .agg(transform(
-          array_sort(collect_list(struct(col("pos"), col("cx")))),
-          p => p.getField("cx")).as("cv"))
-        .localCheckpoint()
-      def encodeWith(subs: DataFrame) = subs.join(broadcast(cb), Seq("j"))
-        .withColumn("d2", dist2(col("sv"), col("cv")))
-        .groupBy("vec_id", "j")
-        .agg(min(struct(col("d2"), col("cid"))).as("m"))
-        .select(col("vec_id"), col("j"), col("m.cid").as("cid"))
+      // freeze: 2·kmIters-job lineage
+      val cent = kmTrain(base).localCheckpoint()
+      val baseSubs = pqSubsOf(base)
+      val cb = pqCodebooksOf(baseSubs).localCheckpoint()
+      def encodeWith(subs: DataFrame) =
+        pqEncodeOf(subs, cb).select("vec_id", "j", "cid")
       cent.write.mode("overwrite").parquet(s"$dir/centroids")
       cb.write.mode("overwrite").parquet(s"$dir/codebooks")
       kmAssign(base, cent).select("vec_id", "cid")
@@ -1082,7 +1067,7 @@ object SimilarityOps {
       // rows only — the four base files above are never rewritten
       kmAssign(batch, cent).select("vec_id", "cid")
         .write.mode("append").parquet(s"$dir/members")
-      encodeWith(subsOf(batch))
+      encodeWith(pqSubsOf(batch))
         .write.mode("append").parquet(s"$dir/codes")
       e.unpersist()
     }
@@ -2125,30 +2110,6 @@ object SimilarityOps {
 
   // ------------------------------------------ s87 served BM25 index
 
-  /** Write the full inverted index as a 3-table parquet artifact:
-    * postings (term, doc_id, tf, dl) over the ENTIRE vocabulary, the
-    * per-term document frequencies, and the 1-row corpus stats. The
-    * "build once" half of a search deployment — everything serving
-    * needs, raw text excluded by design. */
-  def saveBm25Index(s: SparkSession, d: String, out: String): Unit = {
-    val dl = bm25DocLens(graft.Tables.documents(s, d))
-    val postings = dl
-      .select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
-      .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
-    postings.write.mode("overwrite").parquet(s"$out/postings")
-    // derive the sidecars from the just-written postings (round-17:
-    // one tokenize pass instead of three — dfreq re-ran the whole
-    // postings lineage and stats re-tokenized the corpus). Exact:
-    // every dl>0 doc has ≥1 posting row and doc_id is unique, so the
-    // distinct (doc_id, dl) projection is the dl frame's row set.
-    val p = s.read.parquet(s"$out/postings")
-    p.groupBy("term").agg(countDistinct("doc_id").as("df"))
-      .write.mode("overwrite").parquet(s"$out/dfreq")
-    p.select("doc_id", "dl").distinct()
-      .agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
-      .write.mode("overwrite").parquet(s"$out/stats")
-  }
-
   /** s87: s85's BM25 retrieval served entirely from the RELOADED
     * parquet artifact — the text column is never touched at serve
     * time: the query terms prune the postings scan via a pushed
@@ -2164,12 +2125,20 @@ object SimilarityOps {
     serveBm25From(s, bm25IndexDir(s, d),
       sumDeltas = false, dropTombstones = false)
 
-  /** Build-or-get the persisted s87 index dir — also the source of
-    * e108's frozen df/stats sidecars (round 16: the stream twin was
-    * re-running the corpus tokenization per call to derive sidecars
-    * the served artifact already carries). */
+  /** Build-or-get the persisted s87 index dir: the full inverted index
+    * as a 3-table parquet artifact — postings (term, doc_id, tf, dl)
+    * over the ENTIRE vocabulary, the per-term document frequencies,
+    * and the 1-row corpus stats. The "build once" half of a search
+    * deployment — everything serving needs, raw text excluded by
+    * design. Written by [[appendBm25Batch]] as a ONE-segment index:
+    * on a fresh dir the append is an overwrite, with one df row per
+    * term and one stats row, so s87 serves it without sums. Also the
+    * source of e108's frozen df/stats sidecars (round 16: the stream
+    * twin was re-running the corpus tokenization per call to derive
+    * sidecars the served artifact already carries). */
   private[graft] def bm25IndexDir(s: SparkSession, d: String): String =
-    savedIndexes.getOrBuild(s, d, "bm25")(saveBm25Index(s, d, _))
+    savedIndexes.getOrBuild(s, d, "bm25")(
+      appendBm25Batch(graft.Tables.documents(s, d), _))
 
   /** The shared artifact read path behind every served-BM25 variant:
     * query terms prune the postings scan (pushed `In`), df/corpus
@@ -2234,7 +2203,9 @@ object SimilarityOps {
     // postings dir can't be read back (it holds prior segments), so
     // the batch's own segment is checkpointed instead; it is narrower
     // than the token stream it replaces (no toks arrays) and it is
-    // being written out anyway. Exactness per [[saveBm25Index]].
+    // being written out anyway. Exact: every dl>0 doc has ≥1 posting
+    // row and doc_id is unique, so the distinct (doc_id, dl)
+    // projection is the dl frame's row set.
     val postings = dl
       .select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
       .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))

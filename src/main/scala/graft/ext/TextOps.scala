@@ -718,13 +718,7 @@ object TextOps {
       .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
     val c2 = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
     val c1 = bg.groupBy("w1").agg(count(lit(1)).as("c1"))
-    // same dictionary-path guard as d52: distinct bigrams ≤ total
-    // tokens, so the shingle upper bound covers this dictionary too —
-    // broadcast below the ceiling, shuffle_hash sharding above it
-    // (both sides keyed on the dictionary key, no driver ceiling)
-    val bcast = DedupOps.estShingles(s, d) <= DedupOps.dictBroadcastCeiling
-    def dict(df: DataFrame): DataFrame =
-      if (bcast) broadcast(df) else df.hint("shuffle_hash")
+    val dict = dictJoin(s, d)
     bg.join(dict(c2), Seq("w1", "w2")).join(dict(c1), Seq("w1"))
       .withColumn("lp", expr(
         "CAST(round(ln(CAST(c2 AS DOUBLE) / CAST(c1 AS DOUBLE)) * 1000000)" +
@@ -732,6 +726,16 @@ object TextOps {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"), sum("lp").as("sum_lp_micro"))
       .orderBy("doc_id")
+  }
+
+  /** The bigram-dictionary join rule of t61 and the t75 LM tier — the
+    * same dictionary-path guard as d52: distinct bigrams ≤ total
+    * tokens, so the shingle upper bound covers this dictionary too —
+    * broadcast below the ceiling, shuffle_hash sharding above it
+    * (both sides keyed on the dictionary key, no driver ceiling). */
+  private def dictJoin(s: SparkSession, d: String): DataFrame => DataFrame = {
+    val bcast = DedupOps.estShingles(s, d) <= DedupOps.dictBroadcastCeiling
+    df => if (bcast) broadcast(df) else df.hint("shuffle_hash")
   }
 
   val bigramLmSql: String =
@@ -1514,8 +1518,8 @@ object TextOps {
   private def dsirFeatures(s: SparkSession, d: String): DataFrame =
     dsirFeaturesOf(documents(s, d))
 
-  /** [[dsirFeatures]] over any documents-shaped frame — t79's segment
-    * builds feed corpus SLICES through the identical stage. */
+  /** [[dsirFeatures]] over any documents-shaped frame — t79's cohort
+    * segments and the specs' slice references share the stage. */
   private[graft] def dsirFeaturesOf(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), col("lang"), tokens(col("text")).as("__toks"))
@@ -1553,8 +1557,8 @@ object TextOps {
   /** The per-bucket (rcnt, tcnt) count table over a feature stream —
     * the MERGEABLE state of the DSIR estimator (integer counts keyed
     * by bucket, so per-segment tables sum exactly: each document's
-    * features land in exactly one segment). Factored out of [[dsirLr]]
-    * so t79's delta-segment absorb shares the identical aggregation. */
+    * features land in exactly one segment). Factored out of [[dsirLr]];
+    * over a cohort slice it is the reference a t79 segment must equal. */
   private[graft] def dsirCountsOf(feats: DataFrame): DataFrame =
     feats.groupBy("bucket")
       .agg(count(lit(1)).as("rcnt"),
@@ -1715,83 +1719,158 @@ object TextOps {
       |FROM documents d LEFT JOIN w ON w.doc_id = d.doc_id
       |ORDER BY d.doc_id""".stripMargin
 
-  // ------------ t79 DSIR model DELTA ABSORB (O(batch) estimator tier)
+  // ------ t79–t86 the model tier: cohort count segments + signed sums
 
-  /** Registry for the model-tier segment artifacts: t79's DSIR
-    * per-bucket count segments and t81's reference-LM bigram-count
-    * segments (the s88/d73 LSM discipline applied to the two model
-    * artifacts that — round-14 verdict — were the last place the repo
-    * answered a new batch with a full corpus rescan). */
+  /** Registry for the model-tier artifacts: the cohort count segments
+    * of the two maintained count tables (t79's DSIR per-bucket counts,
+    * t81's reference-LM bigram counts) and their folded generations
+    * (the s88/d73 LSM discipline applied to the two model artifacts
+    * that — round-14 verdict — were the last place the repo answered
+    * a new batch with a full corpus rescan), plus the persisted
+    * selection and scoring artifacts below. */
   private val modelSegs = new graft.ArtifactRegistry
   def clearModelSegs(): Unit = modelSegs.clear()
 
-  /** The BASE count segment: [[dsirCountsOf]] over the standing corpus
-    * (doc_id % 5 != 4 — the k83/d58 absorb split), persisted once as a
-    * ≤ m-row parquet table.
-    *
-    * Building the base costs the full corpus featurize pass anyway, so
-    * the SAME pass derives the delta and retract cohorts' segments by
-    * conditional sums and pre-registers them (round-17: the warm paid
-    * the tokenize+bigram-explode stage three times over overlapping
-    * cohorts — base ∪ delta IS the corpus). Per-cohort values are
-    * bit-identical: each feature row lands in exactly the cohorts its
-    * doc_id selects, and a cohort's table keeps exactly the buckets
-    * with a nonzero cohort count (= the groupBy row set of the slice
-    * scan). The standalone delta/retract builders below keep their
-    * O(batch)/O(cohort) slice scans — an absorb-only lifecycle still
-    * never pays a corpus scan. */
-  private[graft] def dsirCountsBaseDir(s: SparkSession, d: String): String = {
-    modelSegs.getOrBuild(s, d, "dsir-base") { dir =>
-      val cohorts = Seq(
-        "base" -> (col("doc_id") % 5 =!= 4),
-        "delta" -> (col("doc_id") % 5 === 4),
-        "retr" -> (col("doc_id") % 10 === 7))
-      val aggCols = cohorts.flatMap { case (tag, p) => Seq(
-        sum(when(p, 1L).otherwise(0L)).as(s"r_$tag"),
-        sum(when(p && col("lang") === "en", 1L).otherwise(0L))
-          .as(s"t_$tag")) }
-      val all = dsirFeaturesOf(documents(s, d))
-        .groupBy("bucket").agg(aggCols.head, aggCols.tail: _*)
-        .localCheckpoint() // ≤ m+? rows; three writes read it
-      def wr(target: String, tag: String): Unit =
-        all.filter(col(s"r_$tag") > 0)
-          .select(col("bucket"), col(s"r_$tag").as("rcnt"),
-            col(s"t_$tag").as("tcnt"))
-          .write.mode("overwrite").parquet(s"$target/counts")
-      wr(dir, "base")
-      modelSegs.getOrBuild(s, d, "dsir-delta")(wr(_, "delta"))
-      modelSegs.getOrBuild(s, d, "dsir-retract")(wr(_, "retr"))
-      ()
+  /** A maintained count table: integer counts per key, the whole
+    * mergeable state of a model (each document's rows land in exactly
+    * the cohorts its doc_id selects, so per-cohort tables sum
+    * exactly). `rows` featurizes a documents-shaped frame; `tally(p)`
+    * is one 0/1 column per value column counting the rows of cohort
+    * `p`; the first value column is nonzero iff a key has rows. */
+  private[graft] final case class CountTable(name: String,
+      keys: Seq[String], vals: Seq[String], rows: DataFrame => DataFrame,
+      tally: Column => Seq[Column])
+
+  /** The DSIR estimator's state: per-bucket raw (rcnt) and target
+    * (tcnt, `lang = 'en'`) feature counts — [[dsirCountsOf]] per
+    * cohort. */
+  private[graft] val dsirTable = CountTable("dsir", Seq("bucket"),
+    Seq("rcnt", "tcnt"), dsirFeaturesOf(_),
+    p => Seq(when(p, 1L).otherwise(0L),
+      when(p && col("lang") === "en", 1L).otherwise(0L)))
+
+  /** The reference LM's state: en-slice (w1, w2) bigram counts — c1
+    * and V are functions of it ([[lmTables]]). */
+  private[graft] val lmTable = CountTable("ppl", Seq("w1", "w2"), Seq("c2"),
+    docs => bigramRowsOf(docs).filter(col("lang") === "en"),
+    p => Seq(when(p, 1L).otherwise(0L)))
+
+  /** The erasure cohort (t82/t83): one erasure request spans every
+    * model artifact its documents contributed to, so both tables'
+    * retract segments share it by design. */
+  private val retractCohort: Column = col("doc_id") % 10 === 7
+
+  /** The three cohort segments of a count table: the standing corpus
+    * (`base`, the k83/d58 absorb split), the new crawl batch
+    * (`delta`) and the erasure cohort (`retract`). */
+  private val modelCohorts: Seq[(String, Column)] = Seq(
+    "base" -> (col("doc_id") % 5 =!= 4),
+    "delta" -> (col("doc_id") % 5 === 4),
+    "retract" -> retractCohort)
+
+  /** The table's three cohort SEGMENTS, written into one artifact
+    * (`base/`, `delta/`, `retract/`) by ONE corpus pass: conditional
+    * per-cohort sums over the featurized corpus (round-17: the warm
+    * paid the featurize stage once per overlapping cohort — base ∪
+    * delta IS the corpus). Per-cohort values are bit-identical to a
+    * slice scan's: each row lands in exactly the cohorts its doc_id
+    * selects, and a segment keeps exactly the keys with a nonzero
+    * cohort count (= the groupBy row set of the slice scan). Each
+    * segment is key-bounded (≤ m buckets, ≤ |ref vocab|² bigrams),
+    * never corpus-text-sized. */
+  private[graft] def segmentsDir(s: SparkSession, d: String,
+      t: CountTable): String =
+    modelSegs.getOrBuild(s, d, s"${t.name}-segments") { dir =>
+      val aggs = modelCohorts.flatMap { case (tag, p) =>
+        t.tally(p).zip(t.vals).map { case (c, v) => sum(c).as(s"${v}_$tag") }
+      }
+      val all = t.rows(documents(s, d))
+        .groupBy(t.keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+        .localCheckpoint() // key-bounded; three writes read it
+      modelCohorts.foreach { case (tag, _) =>
+        all.filter(col(s"${t.vals.head}_$tag") > 0)
+          .select(t.keys.map(col) ++
+            t.vals.map(v => col(s"${v}_$tag").as(v)): _*)
+          .write.mode("overwrite").parquet(s"$dir/$tag")
+      }
     }
+
+  /** One cohort segment (`base`, `delta` or `retract`) of a table. */
+  private[graft] def segment(s: SparkSession, d: String, t: CountTable,
+      cohort: String): DataFrame =
+    s.read.parquet(s"${segmentsDir(s, d, t)}/$cohort")
+
+  /** The one signed per-key sum behind every lifecycle state: `minus`
+    * segments enter negated, and keys whose summed count reaches ZERO
+    * are dropped, so the result's ROW SET equals a from-scratch
+    * rebuild's (a key exists there iff some remaining row produced
+    * it). Exact ≡ rebuild because the counts are integers and the
+    * cohorts are disjoint or nested (the k83/d73 mergeability
+    * contract on the estimator's own state). O(segments · keys) rows,
+    * never a corpus scan. */
+  private def signedSum(t: CountTable, plus: Seq[DataFrame],
+      minus: Seq[DataFrame] = Nil): DataFrame = {
+    val negated = minus.map(_.select(
+      t.keys.map(col) ++ t.vals.map(v => (-col(v)).as(v)): _*))
+    val sums = t.vals.map(v => sum(v).as(v))
+    (plus ++ negated).reduce(_ unionByName _)
+      .groupBy(t.keys.map(col): _*).agg(sums.head, sums.tail: _*)
+      .filter(col(t.vals.head) > 0)
   }
 
-  /** The DELTA count segment: the new crawl batch (doc_id % 5 == 4)
-    * aggregated to its own ≤ m-row count table — the absorb step,
-    * O(batch): the scan reads the batch slice only, the base segment
-    * is never touched. */
-  private[graft] def dsirCountsDeltaDir(s: SparkSession, d: String): String =
-    modelSegs.getOrBuild(s, d, "dsir-delta") { dir =>
-      dsirCountsOf(dsirFeaturesOf(
-        documents(s, d).filter(col("doc_id") % 5 === 4)))
-        .write.mode("overwrite").parquet(s"$dir/counts")
+  /** ABSORBED (t79/t81): base + delta — a new crawl batch lands as its
+    * own O(batch) segment and the serving state is the sum. */
+  private def absorbedCounts(s: SparkSession, d: String,
+      t: CountTable): DataFrame =
+    signedSum(t, Seq(segment(s, d, t, "base"), segment(s, d, t, "delta")))
+
+  /** RETRACTED (t82/t83): base + delta − retract, zeroed keys dropped —
+    * an erasure honored by exact count subtraction. */
+  private def retractedCounts(s: SparkSession, d: String,
+      t: CountTable): DataFrame =
+    signedSum(t, Seq(segment(s, d, t, "base"), segment(s, d, t, "delta")),
+      Seq(segment(s, d, t, "retract")))
+
+  /** The FOLDED generation (t84/t86): the retracted sum written as ONE
+    * fresh gen-1 segment — the compaction step that licenses running
+    * the model-tier cadence indefinitely (em73/s96/s97/d74 closed the
+    * same story on the other artifact tiers; without it the segments
+    * accumulate forever). The zero-key drop is row-set discipline for
+    * the DSIR table (a zero row and an absent row both score the (0,0)
+    * sentinel value) and LOAD-BEARING for the LM table: V counts
+    * distinct w2 among the table's KEYS, so a zero key the cohort
+    * alone contributed would inflate V and shift every add-one-
+    * smoothed score. O(segments · keys) rows, never a corpus scan. */
+  private[graft] def foldedDir(s: SparkSession, d: String,
+      t: CountTable): String =
+    modelSegs.getOrBuild(s, d, s"${t.name}-folded") { dir =>
+      retractedCounts(s, d, t).write.mode("overwrite")
+        .parquet(s"$dir/counts")
     }
 
-  /** The model re-derived from the SUMMED segments: read both ≤ m-row
-    * count tables, sum per bucket, run the identical smoothed
-    * log-ratio tail ([[dsirLrFromCounts]]) and dense collect. Exact ≡
-    * rebuild because the counts are integers and each document's
-    * features land in exactly one segment (disjoint cohorts → per-
-    * bucket sums are additive — the k83/d73 mergeability contract on
-    * the estimator's own state). Model refresh cost: O(segments ·
-    * m) rows, never a corpus scan. */
+  private[graft] def foldedCounts(s: SparkSession, d: String,
+      t: CountTable): DataFrame =
+    s.read.parquet(s"${foldedDir(s, d, t)}/counts")
+
+  /** TURNOVER (t84/t86): folded gen-1 + the re-admitted erasure
+    * cohort — a recrawl re-collects the same documents, so the count
+    * segment a recrawl builds is bit-identical to the retract segment
+    * and the artifact is shared (its build cost stays attributed to
+    * the cache_model_segments warm). The sum must reproduce the FULL
+    * corpus table in values and row set. */
+  private def turnoverCounts(s: SparkSession, d: String,
+      t: CountTable): DataFrame =
+    signedSum(t, Seq(foldedCounts(s, d, t), segment(s, d, t, "retract")))
+
+  /** The DSIR model re-derived from a summed count table: the
+    * identical smoothed log-ratio tail ([[dsirLrFromCounts]]) and dense
+    * collect as the rebuild — identical integer counts → identical
+    * smoothed micro-nat model → identical per-doc weights. The
+    * absorbed model is shared by t79's batch serve and e132's
+    * crawl-time gate. */
   private[graft] def dsirModelAbsorbed(s: SparkSession, d: String)
-      : Array[Long] = {
-    val merged = s.read.parquet(s"${dsirCountsBaseDir(s, d)}/counts")
-      .unionByName(s.read.parquet(s"${dsirCountsDeltaDir(s, d)}/counts"))
-      .groupBy("bucket")
-      .agg(sum("rcnt").as("rcnt"), sum("tcnt").as("tcnt"))
-    dsirModelOf(dsirLrFromCounts(merged))
-  }
+      : Array[Long] =
+    dsirModelOf(dsirLrFromCounts(absorbedCounts(s, d, dsirTable)))
 
   /** t79: t74's scorer served from the INCREMENTALLY-MAINTAINED
     * estimator — the round-14 verdict's top missing rung: every other
@@ -1811,19 +1890,6 @@ object TextOps {
   def dsirWeightsAbsorbed(s: SparkSession, d: String): DataFrame =
     dsirScoreOf(documents(s, d), dsirModelAbsorbed(s, d)).orderBy("doc_id")
 
-  // ----------- t82 DSIR model RETRACTION (erasure at the model tier)
-
-  /** The RETRACT count segment: the erasure cohort's (doc_id % 10 ==
-    * 7) own count table — O(cohort), the d71-tombstone analogue on
-    * the model tier. */
-  private[graft] def dsirCountsRetractDir(s: SparkSession, d: String)
-      : String =
-    modelSegs.getOrBuild(s, d, "dsir-retract") { dir =>
-      dsirCountsOf(dsirFeaturesOf(
-        documents(s, d).filter(col("doc_id") % 10 === 7)))
-        .write.mode("overwrite").parquet(s"$dir/counts")
-    }
-
   /** t82: MODEL RETRACTION — an erasure request honored at the model
     * tier without a corpus rescan, and the designed COUNTERPART of
     * the windex tier's frozen-cap asymmetry: there, deletes
@@ -1831,38 +1897,27 @@ object TextOps {
     * monotone and recomputing it would need the corpus — d71's
     * contract); here the estimator's state IS an integer count
     * table, so a cohort's contribution SUBTRACTS exactly — the
-    * retract segment (O(cohort) to build, the d71-sidecar cost
-    * shape) enters the per-bucket sum with negative sign, and
-    * retract ≡ rebuild-without-cohort is hash-checked by the
-    * full-rebuild oracle over the filtered corpus. The equivalence
-    * has one subtle rung the oracle pins: a bucket whose merged
-    * count reaches ZERO yields the same smoothed log-ratio as a
-    * bucket ABSENT from a from-scratch rebuild (both are the (0,0)
-    * sentinel row's value — add-one smoothing is total), so the
-    * subtracted table and the rebuilt table produce bit-identical
-    * models even where they differ in row sets. Scoring then runs
+    * retract segment (O(cohort), the d71-sidecar cost shape) enters
+    * the per-bucket sum with negative sign, and retract ≡
+    * rebuild-without-cohort is hash-checked by the full-rebuild
+    * oracle over the filtered corpus. The equivalence has one subtle
+    * rung the oracle pins: a bucket whose merged count reaches ZERO
+    * yields the same smoothed log-ratio as a bucket ABSENT from a
+    * from-scratch rebuild (both are the (0,0) sentinel row's value —
+    * add-one smoothing is total), so the subtracted table and the
+    * rebuilt table produce bit-identical models. Scoring then runs
     * over the remaining corpus with the retracted model — the
     * complete post-erasure serving state, reached in O(cohort) +
     * O(segments · m), never O(corpus). */
-  def dsirWeightsRetracted(s: SparkSession, d: String): DataFrame = {
-    val merged = s.read.parquet(s"${dsirCountsBaseDir(s, d)}/counts")
-      .unionByName(s.read.parquet(s"${dsirCountsDeltaDir(s, d)}/counts"))
-      .unionByName(s.read
-        .parquet(s"${dsirCountsRetractDir(s, d)}/counts")
-        .select(col("bucket"),
-          col("rcnt").unary_-.as("rcnt"), col("tcnt").unary_-.as("tcnt")))
-      .groupBy("bucket")
-      .agg(sum("rcnt").as("rcnt"), sum("tcnt").as("tcnt"))
-    dsirScoreOf(
-      documents(s, d).filter(col("doc_id") % 10 =!= 7),
-      dsirModelOf(dsirLrFromCounts(merged)))
+  def dsirWeightsRetracted(s: SparkSession, d: String): DataFrame =
+    dsirScoreOf(documents(s, d).filter(!retractCohort),
+      dsirModelOf(dsirLrFromCounts(retractedCounts(s, d, dsirTable))))
       .orderBy("doc_id")
-  }
 
   /** t82 oracle: the t74 full rebuild with the erasure cohort REMOVED
     * from both the estimator's corpus and the scored output —
     * retract ≡ rebuild-without-cohort. */
-  // lazy (the windexRegenGateSql rule): the require() anchors must
+  // lazy (the windexRegenAbsorbSql rule): the require() anchors must
   // fail only the entries that use this oracle, not every TextOps
   // entry through an ExceptionInInitializerError at object init
   lazy val dsirRetractSql: String = {
@@ -1878,76 +1933,33 @@ object TextOps {
     patched
   }
 
-  // ------- t84 DSIR model FOLD + generation turnover (d74+d75's recipe)
-
-  /** The FOLDED DSIR generation: the three signed segments (base +
-    * delta − retract) summed into ONE fresh base segment — the
-    * compaction step that licenses running the model-tier cadence
-    * indefinitely (em73/s96/s97/d74 closed the same story on the
-    * other artifact tiers; without it t79–t83's segments accumulate
-    * forever). Zeroed buckets (summed rcnt = 0 — the erasure cohort
-    * was a bucket's only contributor) are DROPPED, so the folded
-    * table's ROW SET equals a from-scratch rebuild's over the
-    * post-erasure corpus (a bucket exists there iff some remaining
-    * feature hashed to it); the smoothed tail is indifferent (a zero
-    * row and an absent row both score the (0,0) sentinel value and
-    * contribute nothing to the totals), but row-set equality is the
-    * discipline that keeps segment algebra ≡ rebuild provable at
-    * every later generation. O(segments · m) rows, never a corpus
-    * scan. */
-  private[graft] def dsirCountsFoldedDir(s: SparkSession, d: String)
-      : String =
-    modelSegs.getOrBuild(s, d, "dsir-folded") { dir =>
-      s.read.parquet(s"${dsirCountsBaseDir(s, d)}/counts")
-        .unionByName(s.read.parquet(s"${dsirCountsDeltaDir(s, d)}/counts"))
-        .unionByName(s.read
-          .parquet(s"${dsirCountsRetractDir(s, d)}/counts")
-          .select(col("bucket"),
-            col("rcnt").unary_-.as("rcnt"), col("tcnt").unary_-.as("tcnt")))
-        .groupBy("bucket")
-        .agg(sum("rcnt").as("rcnt"), sum("tcnt").as("tcnt"))
-        .filter(col("rcnt") > 0)
-        .write.mode("overwrite").parquet(s"$dir/counts")
-    }
-
   /** t84: the model-tier GENERATION TURNOVER — the d75 proof shape on
     * the DSIR estimator, closing the last artifact tier without a
     * fold (round-15 verdict missing #1). The lifecycle under test:
     * absorb (t79) → retract (t82) → FOLD (the three signed segments
     * compacted into one fresh gen-1 base, zero-rows dropped) → absorb
     * a NEW batch against the FOLDED generation. The new batch is the
-    * erasure cohort re-admitted (a recrawl re-collects the same
-    * documents — the count segment a recrawl builds is bit-identical
-    * to the retract segment, so the artifact is shared and its build
-    * cost stays attributed to the cache_model_segments warm), which
-    * makes the proof obligation exact and oracle-checkable: gen-1 ⊎
-    * cohort counts, run through the identical smoothing tail, must
-    * reproduce the FULL-corpus model bit for bit — so t84 shares
-    * t74's full-rebuild oracle on the re-grown corpus, and a wrong
-    * fold (a dropped live bucket, a kept zero row miscounted, a sign
-    * error) breaks the hash. Every lifecycle state on the model tier
-    * is now reachable from every other, same as the windex LSM
-    * (d70–d75). Serve cost: O(segments · m) count rows + the t74
-    * codegen'd row-local scoring fold. */
+    * erasure cohort re-admitted ([[turnoverCounts]]), which makes the
+    * proof obligation exact and oracle-checkable: gen-1 ⊎ cohort
+    * counts, run through the identical smoothing tail, must reproduce
+    * the FULL-corpus model bit for bit — so t84 shares t74's
+    * full-rebuild oracle on the re-grown corpus, and a wrong fold (a
+    * dropped live bucket, a kept zero row miscounted, a sign error)
+    * breaks the hash. Every lifecycle state on the model tier is now
+    * reachable from every other, same as the windex LSM (d70–d75).
+    * Serve cost: O(segments · m) count rows + the t74 codegen'd
+    * row-local scoring fold. */
   def dsirWeightsTurnover(s: SparkSession, d: String): DataFrame =
     dsirScoreOf(documents(s, d), dsirModelTurnover(s, d))
       .orderBy("doc_id")
 
-  /** The POST-TURNOVER serving model: folded gen-1 ⊎ the re-admitted
-    * cohort's count segment, summed per bucket and run through the
-    * identical smoothing tail — [[dsirModelAbsorbed]]'s shape one
-    * generation later (O(segments · m) rows, never a corpus scan).
-    * Shared by t84's batch serve and e133's crawl-time gate, so the
-    * fold→absorb→pin→serve composition is pinned by one accessor. */
+  /** The POST-TURNOVER serving model — [[dsirModelAbsorbed]]'s shape
+    * one generation later. Shared by t84's batch serve and e133's
+    * crawl-time gate, so the fold→absorb→pin→serve composition is
+    * pinned by one accessor. */
   private[graft] def dsirModelTurnover(s: SparkSession, d: String)
-      : Array[Long] = {
-    val merged = s.read.parquet(s"${dsirCountsFoldedDir(s, d)}/counts")
-      .unionByName(s.read
-        .parquet(s"${dsirCountsRetractDir(s, d)}/counts"))
-      .groupBy("bucket")
-      .agg(sum("rcnt").as("rcnt"), sum("tcnt").as("tcnt"))
-    dsirModelOf(dsirLrFromCounts(merged))
-  }
+      : Array[Long] =
+    dsirModelOf(dsirLrFromCounts(turnoverCounts(s, d, dsirTable)))
 
   // ------------- t76 DSIR importance RESAMPLE (the selection manifest)
 
@@ -2599,7 +2611,12 @@ object TextOps {
     * each re-running the identical scoring pass per call), which is
     * exactly e127's serving split made explicit. */
   def pplFilter(s: SparkSession, d: String): DataFrame =
-    pplScoredCached(s, d)
+    pplVerdict(pplScoredCached(s, d))
+
+  /** t75's constant-τ verdict and presentation sort over a per-doc
+    * scored frame (t75, the t81/t83/t86 serves, the e127 epilogue). */
+  private def pplVerdict(scored: DataFrame): DataFrame =
+    scored
       .withColumn("keep", col("avg_nlp_micro").isNotNull &&
         col("avg_nlp_micro") <= pplKeepTauMicro)
       .orderBy("doc_id")
@@ -2623,13 +2640,7 @@ object TextOps {
       c2.write.mode("overwrite").parquet(s"$dir/lm_c2")
       c1.write.mode("overwrite").parquet(s"$dir/lm_c1")
       v.write.mode("overwrite").parquet(s"$dir/lm_v")
-      val (c2r, c1r, vr) = pplRefLmCachedFrom(s, dir)
-      val bcast = DedupOps.estShingles(s, d) <= DedupOps.dictBroadcastCeiling
-      def dict(df: DataFrame): DataFrame =
-        if (bcast) broadcast(df) else df.hint("shuffle_hash")
-      pplScoredDocs(s, d,
-        pplScoreRows(bigramRows(s, d), c2r, c1r, vr, dict)
-          .select("doc_id", "lpm"))
+      pplScoredWith(s, d, documents(s, d), pplRefLmCachedFrom(s, dir))
         .write.mode("overwrite").parquet(s"$dir/scored")
     }
 
@@ -2657,18 +2668,23 @@ object TextOps {
 
   /** The UNORDERED per-doc scored frame (doc_id, lang, n_bigrams,
     * avg_nlp_micro) — t75's whole scoring pass without the
-    * presentation sort or the constant-τ verdict, shared by t75 (adds
-    * both) and the calibration tier t77/t78 (derives its own τ): the
+    * presentation sort or the constant-τ verdict, computed directly
+    * (the specs' reference for the persisted artifact): the
     * dsirWeights/dsirWeightFrame split (round-14 advice — feeding
     * pplFilter's orderBy into a localCheckpoint materialized a
     * corpus-wide sort the per-lang work then destroyed). */
-  private[graft] def pplScoreFrame(s: SparkSession, d: String): DataFrame = {
-    val (c2, c1, v) = pplRefLm(s, d)
-    val bcast = DedupOps.estShingles(s, d) <= DedupOps.dictBroadcastCeiling
-    def dict(df: DataFrame): DataFrame =
-      if (bcast) broadcast(df) else df.hint("shuffle_hash")
-    pplScoredDocs(s, d,
-      pplScoreRows(bigramRows(s, d), c2, c1, v, dict)
+  private[graft] def pplScoreFrame(s: SparkSession, d: String): DataFrame =
+    pplScoredWith(s, d, documents(s, d), pplRefLm(s, d))
+
+  /** The t75 scoring pass of `docs` against the LM tables (c2, c1, V):
+    * per-occurrence log-probs with the tables joined by the t61
+    * dictionary rule ([[dictJoin]]), folded per doc by
+    * [[pplScoredDocs]] — unordered and verdict-free. */
+  private def pplScoredWith(s: SparkSession, d: String,
+      docs: DataFrame, lm: (DataFrame, DataFrame, DataFrame)): DataFrame = {
+    val (c2, c1, v) = lm
+    pplScoredDocs(docs,
+      pplScoreRows(bigramRowsOf(docs), c2, c1, v, dictJoin(s, d))
         .select("doc_id", "lpm"))
   }
 
@@ -2677,23 +2693,20 @@ object TextOps {
     * re-attach that keeps zero-bigram docs in the census. */
   private[graft] def pplFinish(s: SparkSession, d: String,
       scored: DataFrame): DataFrame =
-    pplScoredDocs(s, d, scored)
-      .withColumn("keep", col("avg_nlp_micro").isNotNull &&
-        col("avg_nlp_micro") <= pplKeepTauMicro)
-      .orderBy("doc_id")
+    pplVerdict(pplScoredDocs(documents(s, d), scored))
 
   /** The shared epilogue core: per-doc sum over (doc_id, lpm)
-    * contribution rows, exact-integer average, and the corpus
-    * re-attach that keeps zero-bigram docs in the census — UNORDERED
+    * contribution rows, exact-integer average, and the re-attach to
+    * `docs` that keeps zero-bigram docs in the census — UNORDERED
     * and verdict-free (τ attaches differently per consumer: t75/e127
     * pin the recorded constant, t78/e130 the derived scalar). */
-  private[graft] def pplScoredDocs(s: SparkSession, d: String,
+  private[graft] def pplScoredDocs(docs: DataFrame,
       scored: DataFrame): DataFrame = {
     val per = scored
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"), sum("lpm").as("s"))
       .withColumn("avg_nlp_micro", expr("-(s div n_bigrams)"))
-    documents(s, d).select("doc_id", "lang")
+    docs.select("doc_id", "lang")
       .join(per.select("doc_id", "n_bigrams", "avg_nlp_micro"),
         Seq("doc_id"), "left")
       .select(col("doc_id"), col("lang"),
@@ -2737,93 +2750,37 @@ object TextOps {
       |FROM documents d LEFT JOIN per ON per.doc_id = d.doc_id
       |ORDER BY d.doc_id""".stripMargin
 
-  // ------------- t81 reference-LM DELTA ABSORB (O(batch) model tier)
+  // ------- t81/t83/t86 the reference LM served from its count table
 
-  /** The BASE LM segment: en-slice bigram counts of the standing
-    * corpus (doc_id % 5 != 4), persisted once — vocabulary-bounded
-    * (≤ |ref vocab|² rows), never corpus-text-sized. */
-  private[graft] def pplC2BaseDir(s: SparkSession, d: String): String = {
-    // one corpus bigram pass fills all three cohort segments — the
-    // [[dsirCountsBaseDir]] rationale verbatim (the en-filter commutes
-    // with the cohort split; a cohort keeps exactly its nonzero rows)
-    modelSegs.getOrBuild(s, d, "ppl-base") { dir =>
-      val cohorts = Seq(
-        "base" -> (col("doc_id") % 5 =!= 4),
-        "delta" -> (col("doc_id") % 5 === 4),
-        "retr" -> (col("doc_id") % 10 === 7))
-      val aggCols = cohorts.map { case (tag, p) =>
-        sum(when(p, 1L).otherwise(0L)).as(s"c_$tag") }
-      val all = bigramRowsOf(documents(s, d))
-        .filter(col("lang") === "en")
-        .groupBy("w1", "w2").agg(aggCols.head, aggCols.tail: _*)
-        .localCheckpoint() // vocab²-bounded; three writes read it
-      def wr(target: String, tag: String): Unit =
-        all.filter(col(s"c_$tag") > 0)
-          .select(col("w1"), col("w2"), col(s"c_$tag").as("c2"))
-          .write.mode("overwrite").parquet(s"$target/c2")
-      wr(dir, "base")
-      modelSegs.getOrBuild(s, d, "ppl-delta")(wr(_, "delta"))
-      modelSegs.getOrBuild(s, d, "ppl-retract")(wr(_, "retr"))
-      ()
-    }
+  /** The LM's tables from a (w1, w2, c2) count table: c1(w1) = Σ_w2 c2
+    * (every occurrence of w1 as left context lands in exactly one
+    * (w1, w2) group) and V = |distinct w2 among the KEYS| (every ref
+    * occurrence lands in some group) — so a count table summed from
+    * segments reconstructs ALL THREE model tables exactly, and a kept
+    * zero-count key would inflate V ([[signedSum]] drops them).
+    * Checkpointed: the table feeds three consumers (c1, V, the c2
+    * score join) — vocabulary-bounded rows, the t76 lesson. */
+  private def lmTables(c2: DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val merged = c2.localCheckpoint()
+    (merged, merged.groupBy("w1").agg(sum("c2").as("c1")),
+      merged.agg(count_distinct(col("w2")).as("v")))
   }
-
-  /** The DELTA LM segment: the new batch's en-slice bigram counts
-    * (doc_id % 5 == 4) — the absorb step, O(batch). */
-  private[graft] def pplC2DeltaDir(s: SparkSession, d: String): String =
-    modelSegs.getOrBuild(s, d, "ppl-delta") { dir =>
-      bigramRowsOf(documents(s, d).filter(col("doc_id") % 5 === 4))
-        .filter(col("lang") === "en")
-        .groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-        .write.mode("overwrite").parquet(s"$dir/c2")
-    }
 
   /** t81: t75's perplexity filter served from the INCREMENTALLY-
     * MAINTAINED reference LM — t79's recipe on the second model
     * artifact the round-14 verdict named: the LM's ENTIRE state is the
     * (w1, w2, c2) bigram count table, and both derived tables are
-    * functions of it — c1(w1) = Σ_w2 c2(w1, w2) (every occurrence of
-    * w1 as left context lands in exactly one (w1, w2) group) and V =
-    * |distinct w2 among c2 keys| (every ref occurrence lands in some
-    * group) — so summing the base and delta segments per (w1, w2)
-    * reconstructs ALL THREE model tables exactly. A new crawl batch
-    * absorbs as one O(batch) aggregation; the model refresh reads
-    * O(segments · vocab²) count rows, never the corpus text. Shares
-    * t75's oracle on the grown corpus — absorb ≡ rebuild,
-    * hash-checked down to the add-one-smoothed micro-nat scores. */
-  def pplFilterAbsorbed(s: SparkSession, d: String): DataFrame = {
-    // checkpoint: the merged table feeds THREE consumers (c1, V, and
-    // the c2 score join) — vocabulary-bounded rows, the t76 lesson
-    val merged = s.read.parquet(s"${pplC2BaseDir(s, d)}/c2")
-      .unionByName(s.read.parquet(s"${pplC2DeltaDir(s, d)}/c2"))
-      .groupBy("w1", "w2").agg(sum("c2").as("c2"))
-      .localCheckpoint()
-    val c1 = merged.groupBy("w1").agg(sum("c2").as("c1"))
-    val v = merged.agg(count_distinct(col("w2")).as("v"))
-    val bcast = DedupOps.estShingles(s, d) <= DedupOps.dictBroadcastCeiling
-    def dict(df: DataFrame): DataFrame =
-      if (bcast) broadcast(df) else df.hint("shuffle_hash")
-    pplScoredDocs(s, d,
-      pplScoreRows(bigramRows(s, d), merged, c1, v, dict)
-        .select("doc_id", "lpm"))
-      .withColumn("keep", col("avg_nlp_micro").isNotNull &&
-        col("avg_nlp_micro") <= pplKeepTauMicro)
-      .orderBy("doc_id")
-  }
-
-  // ---------- t83 reference-LM RETRACTION (the erasure's second half)
-
-  /** The RETRACT LM segment: the SAME erasure cohort as t82
-    * (doc_id % 10 == 7) — one erasure request spans every model
-    * artifact its documents contributed to, so the two retract
-    * segments share the cohort by design. */
-  private[graft] def pplC2RetractDir(s: SparkSession, d: String): String =
-    modelSegs.getOrBuild(s, d, "ppl-retract") { dir =>
-      bigramRowsOf(documents(s, d).filter(col("doc_id") % 10 === 7))
-        .filter(col("lang") === "en")
-        .groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-        .write.mode("overwrite").parquet(s"$dir/c2")
-    }
+    * functions of it ([[lmTables]]) — so summing the base and delta
+    * segments per (w1, w2) reconstructs ALL THREE model tables
+    * exactly. A new crawl batch absorbs as one O(batch) aggregation;
+    * the model refresh reads O(segments · vocab²) count rows, never
+    * the corpus text. Shares t75's oracle on the grown corpus — absorb
+    * ≡ rebuild, hash-checked down to the add-one-smoothed micro-nat
+    * scores. */
+  def pplFilterAbsorbed(s: SparkSession, d: String): DataFrame =
+    pplVerdict(pplScoredWith(s, d, documents(s, d),
+      lmTables(absorbedCounts(s, d, lmTable))))
 
   /** t83: t82's retraction on the SECOND model artifact — the
     * reference LM forgets the erasure cohort by exact count
@@ -2834,42 +2791,15 @@ object TextOps {
     * among the table's KEYS — a w2 the cohort alone contributed
     * would otherwise survive as a zero-count row and inflate V (c1
     * and the c2 score join are indifferent: a zero row and an absent
-    * row coalesce identically there). With the filter, the
+    * row coalesce identically there). With the drop, the
     * subtracted table's ROW SET equals the rebuilt-without-cohort
     * table's, so all three derived model tables match exactly.
     * Together t79/t81 (absorb) and t82/t83 (retract) give the model
     * tier the full segment algebra the count representation affords:
     * grow and forget, both O(slice), both ≡ rebuild. */
-  def pplFilterRetracted(s: SparkSession, d: String): DataFrame = {
-    val remaining = documents(s, d).filter(col("doc_id") % 10 =!= 7)
-    val merged = s.read.parquet(s"${pplC2BaseDir(s, d)}/c2")
-      .unionByName(s.read.parquet(s"${pplC2DeltaDir(s, d)}/c2"))
-      .unionByName(s.read
-        .parquet(s"${pplC2RetractDir(s, d)}/c2")
-        .select(col("w1"), col("w2"), col("c2").unary_-.as("c2")))
-      .groupBy("w1", "w2").agg(sum("c2").as("c2"))
-      .filter(col("c2") > 0)
-      .localCheckpoint()
-    val c1 = merged.groupBy("w1").agg(sum("c2").as("c1"))
-    val v = merged.agg(count_distinct(col("w2")).as("v"))
-    val bcast = DedupOps.estShingles(s, d) <= DedupOps.dictBroadcastCeiling
-    def dict(df: DataFrame): DataFrame =
-      if (bcast) broadcast(df) else df.hint("shuffle_hash")
-    val per = pplScoreRows(bigramRowsOf(remaining), merged, c1, v, dict)
-      .select("doc_id", "lpm")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"), sum("lpm").as("s"))
-      .withColumn("avg_nlp_micro", expr("-(s div n_bigrams)"))
-    remaining.select("doc_id", "lang")
-      .join(per.select("doc_id", "n_bigrams", "avg_nlp_micro"),
-        Seq("doc_id"), "left")
-      .select(col("doc_id"), col("lang"),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        col("avg_nlp_micro"))
-      .withColumn("keep", col("avg_nlp_micro").isNotNull &&
-        col("avg_nlp_micro") <= pplKeepTauMicro)
-      .orderBy("doc_id")
-  }
+  def pplFilterRetracted(s: SparkSession, d: String): DataFrame =
+    pplVerdict(pplScoredWith(s, d, documents(s, d).filter(!retractCohort),
+      lmTables(retractedCounts(s, d, lmTable))))
 
   /** t83 oracle: the t75 full rebuild with the erasure cohort REMOVED
     * from the corpus (reference slice and scored output both) —
@@ -2889,27 +2819,6 @@ object TextOps {
     patched
   }
 
-  // -------- t86 reference-LM FOLD + generation turnover (t84's twin)
-
-  /** The FOLDED LM generation: base + delta − retract bigram counts
-    * summed into ONE fresh segment, zeroed (w1, w2) rows DROPPED —
-    * here the drop is LOAD-BEARING, not just row-set discipline: V
-    * counts distinct w2 among the table's KEYS (t83's rule), so a
-    * zero-count key the cohort alone contributed would inflate V and
-    * shift every add-one-smoothed score. O(segments · vocab²) count
-    * rows, never the corpus text. */
-  private[graft] def pplC2FoldedDir(s: SparkSession, d: String): String =
-    modelSegs.getOrBuild(s, d, "ppl-folded") { dir =>
-      s.read.parquet(s"${pplC2BaseDir(s, d)}/c2")
-        .unionByName(s.read.parquet(s"${pplC2DeltaDir(s, d)}/c2"))
-        .unionByName(s.read
-          .parquet(s"${pplC2RetractDir(s, d)}/c2")
-          .select(col("w1"), col("w2"), col("c2").unary_-.as("c2")))
-        .groupBy("w1", "w2").agg(sum("c2").as("c2"))
-        .filter(col("c2") > 0)
-        .write.mode("overwrite").parquet(s"$dir/c2")
-    }
-
   /** t86: t84's generation turnover on the SECOND model artifact —
     * the reference LM's fold (base + delta − retract compacted into
     * one gen-1 segment) followed by an absorb of the re-admitted
@@ -2926,37 +2835,17 @@ object TextOps {
     * model tier now has the complete segment algebra on both
     * artifacts: absorb, retract, fold, turnover — each O(slice) or
     * O(segments · state), each ≡ rebuild by shared oracle. */
-  def pplFilterTurnover(s: SparkSession, d: String): DataFrame = {
-    val (merged, c1, v) = pplLmTurnover(s, d)
-    val bcast = DedupOps.estShingles(s, d) <= DedupOps.dictBroadcastCeiling
-    def dict(df: DataFrame): DataFrame =
-      if (bcast) broadcast(df) else df.hint("shuffle_hash")
-    pplScoredDocs(s, d,
-      pplScoreRows(bigramRows(s, d), merged, c1, v, dict)
-        .select("doc_id", "lpm"))
-      .withColumn("keep", col("avg_nlp_micro").isNotNull &&
-        col("avg_nlp_micro") <= pplKeepTauMicro)
-      .orderBy("doc_id")
-  }
+  def pplFilterTurnover(s: SparkSession, d: String): DataFrame =
+    pplVerdict(pplScoredWith(s, d, documents(s, d), pplLmTurnover(s, d)))
 
-  /** The POST-TURNOVER reference-LM tables: folded gen-1 c2 ⊎ the
-    * re-admitted cohort's c2 segment summed per (w1, w2), with c1 and
-    * V derived FROM the merged table (c1(w1) = Σ_w2 c2; V = distinct
-    * w2 among the keys — t83's V-counts-keys rule, which is why the
-    * fold's zero-row drop is load-bearing). Checkpointed: the merged
-    * table feeds three consumers (c1, V, the score join) —
-    * vocabulary-bounded rows, the t76 lesson. Shared by t86's batch
-    * serve and e134's crawl-time gate. */
+  /** The POST-TURNOVER reference-LM tables: [[lmTables]] over folded
+    * gen-1 c2 ⊎ the re-admitted cohort's segment (t83's
+    * V-counts-keys rule is why the fold's zero-row drop is
+    * load-bearing). Shared by t86's batch serve and e134's crawl-time
+    * gate. */
   private[graft] def pplLmTurnover(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val merged = s.read.parquet(s"${pplC2FoldedDir(s, d)}/c2")
-      .unionByName(s.read.parquet(s"${pplC2RetractDir(s, d)}/c2"))
-      .groupBy("w1", "w2").agg(sum("c2").as("c2"))
-      .localCheckpoint()
-    val c1 = merged.groupBy("w1").agg(sum("c2").as("c1"))
-    val v = merged.agg(count_distinct(col("w2")).as("v"))
-    (merged, c1, v)
-  }
+      : (DataFrame, DataFrame, DataFrame) =
+    lmTables(turnoverCounts(s, d, lmTable))
 
   // --------------- t77 τ calibration from the reference-slice scores
 

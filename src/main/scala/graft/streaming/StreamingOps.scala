@@ -1168,7 +1168,8 @@ object StreamingOps {
       graft.ext.TextOps.pplScoredCached(spark, d))
       .collect()
     val epilogue = (scored: DataFrame, tauC: org.apache.spark.sql.Column) =>
-      graft.ext.TextOps.pplScoredDocs(spark, d, scored)
+      graft.ext.TextOps.pplScoredDocs(
+        graft.Tables.documents(spark, d), scored)
         .withColumn("tau_derived", tauC)
         .withColumn("keep", col("avg_nlp_micro").isNotNull &&
           col("avg_nlp_micro") <= col("tau_derived"))
@@ -1339,7 +1340,8 @@ object StreamingOps {
           lit(null).cast("long").as("b"))
       lp.unionByName(rt).unionByName(dc)
     }
-    val keepQ = graft.ext.TextOps.pplScoredDocs(spark, d,
+    val keepQ = graft.ext.TextOps.pplScoredDocs(
+        graft.Tables.documents(spark, d),
         log.filter(col("kind") === "lp")
           .select(col("doc_id"), col("a").as("lpm")))
       .select(col("doc_id"),

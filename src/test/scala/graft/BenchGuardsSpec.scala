@@ -66,6 +66,28 @@ class BenchGuardsSpec extends AnyFunSuite {
       writeTmp("""{"queries":{"q1":1.0}}""")).isEmpty)
   }
 
+  test("an unreadable committed detail says so on stderr; a missing file or another sf stays silent") {
+    def stderrOf(f: => Unit): String = {
+      val buf = new java.io.ByteArrayOutputStream
+      val saved = System.err
+      System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+      try f finally System.setErr(saved)
+      buf.toString("UTF-8")
+    }
+    val bad = writeTmp("not json")
+    val said = stderrOf(
+      assert(Bench.loadCommittedDetail("/data/sf0.1", bad).isEmpty))
+    val lines = said.linesIterator.filter(_.nonEmpty).toSeq
+    assert(lines.size == 1 && lines.head.startsWith("[bench]") &&
+      lines.head.contains(bad) && lines.head.contains("JsonParse"),
+      s"one [bench] line naming the file and the cause, got: $said")
+    assert(stderrOf(assert(Bench.loadCommittedDetail("/data/sf0.1",
+      "/nonexistent/noop.json").isEmpty)).isEmpty)
+    assert(stderrOf(assert(Bench.loadCommittedDetail("/data/sf0.1",
+      writeTmp("""{"sf":"/data/sf0.01","queries":{"q1":0.01}}"""))
+      .isEmpty)).isEmpty)
+  }
+
   test("the COMMITTED repo envelope matches the bench's declared sf") {
     // the re-run defense is inert if the committed BENCH_DETAIL.json
     // ever records a dev sf — assert the repo artifact stays aligned

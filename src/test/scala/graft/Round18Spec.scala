@@ -142,7 +142,8 @@ class Round18Spec extends AnyFunSuite with SparkSpec {
           9L -> "d0 d1 d2 d3 d4 d5")        // batch: must read keep
         .toDF("doc_id", "text")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val served = graft.ext.DedupOps.servedSubstringGate(spark, dir)
+      val served = graft.ext.DedupOps
+        .queries("d70_served_substring_gate")(spark, dir)
         .collect().map(_.toString).toSeq
       val rebuilt = graft.ext.DedupOps.incrSubstringDedup(spark, dir)
         .collect().map(_.toString).toSeq

@@ -142,6 +142,21 @@ class Round19Spec extends AnyFunSuite with SparkSpec {
     assert(resid === 0L, "the compacted artifact may hold no erased rows")
   }
 
+  test("d72: the compacted artifact's rows are the base window index minus the tombstoned base_ids") {
+    import graft.ext.DedupOps
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("hw", "base_id", "pa").collect().map(_.toSeq).toSeq
+        .sortBy(_.toString)
+    val base = spark.read
+      .parquet(s"${DedupOps.windowIndexDir(spark, sf)}/windex")
+    assert(base.filter(col("base_id") % 10 === 3).count() > 0L,
+      "fixture sanity: the tombstone cohort has index rows")
+    assert(rows(spark.read
+        .parquet(s"${DedupOps.compactedWindexDir(spark, sf)}/windex"))
+      === rows(base.filter(col("base_id") % 10 =!= 3)),
+      "compaction keeps every live base row and nothing else")
+  }
+
   test("d71: the tombstones are load-bearing — erasing the cohort changes the gate's census") {
     import graft.ext.DedupOps
     val sf01 = "/root/testdata/sf0.01"

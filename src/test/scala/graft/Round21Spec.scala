@@ -123,10 +123,8 @@ class Round21Spec extends AnyFunSuite with SparkSpec {
 
   test("t81: c2/c1/V all reconstruct exactly from the summed c2 segments") {
     val (c2r, c1r, vr) = TextOps.pplRefLm(spark, sf)
-    val merged = spark.read
-      .parquet(s"${TextOps.pplC2BaseDir(spark, sf)}/c2")
-      .unionByName(spark.read
-        .parquet(s"${TextOps.pplC2DeltaDir(spark, sf)}/c2"))
+    val merged = TextOps.segment(spark, sf, TextOps.lmTable, "base")
+      .unionByName(TextOps.segment(spark, sf, TextOps.lmTable, "delta"))
       .groupBy("w1", "w2").agg(sum("c2").as("c2"))
       .localCheckpoint()
     def set3(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -148,12 +146,9 @@ class Round21Spec extends AnyFunSuite with SparkSpec {
         graft.Tables.documents(spark, sf)
           .filter(col("doc_id") % 10 =!= 7))))
     val rebuilt = TextOps.dsirModelOf(filtered)
-    val merged = spark.read
-      .parquet(s"${TextOps.dsirCountsBaseDir(spark, sf)}/counts")
-      .unionByName(spark.read
-        .parquet(s"${TextOps.dsirCountsDeltaDir(spark, sf)}/counts"))
-      .unionByName(spark.read
-        .parquet(s"${TextOps.dsirCountsRetractDir(spark, sf)}/counts")
+    val merged = TextOps.segment(spark, sf, TextOps.dsirTable, "base")
+      .unionByName(TextOps.segment(spark, sf, TextOps.dsirTable, "delta"))
+      .unionByName(TextOps.segment(spark, sf, TextOps.dsirTable, "retract")
         .select(col("bucket"), col("rcnt").unary_-.as("rcnt"),
           col("tcnt").unary_-.as("tcnt")))
       .groupBy("bucket")
@@ -176,12 +171,9 @@ class Round21Spec extends AnyFunSuite with SparkSpec {
       .filter(col("lang") === "en").select("w1", "w2")
     val c2Rebuilt = refRows.groupBy("w1", "w2")
       .agg(count(lit(1)).as("c2"))
-    val merged = spark.read
-      .parquet(s"${TextOps.pplC2BaseDir(spark, sf)}/c2")
-      .unionByName(spark.read
-        .parquet(s"${TextOps.pplC2DeltaDir(spark, sf)}/c2"))
-      .unionByName(spark.read
-        .parquet(s"${TextOps.pplC2RetractDir(spark, sf)}/c2")
+    val merged = TextOps.segment(spark, sf, TextOps.lmTable, "base")
+      .unionByName(TextOps.segment(spark, sf, TextOps.lmTable, "delta"))
+      .unionByName(TextOps.segment(spark, sf, TextOps.lmTable, "retract")
         .select(col("w1"), col("w2"), col("c2").unary_-.as("c2")))
       .groupBy("w1", "w2").agg(sum("c2").as("c2"))
       .filter(col("c2") > 0)
@@ -198,15 +190,48 @@ class Round21Spec extends AnyFunSuite with SparkSpec {
     assert(vRetracted === vRebuilt)
   }
 
+  // ------------- the one-pass cohort segments ≡ their slice scans
+
+  test("segments: each cohort segment of both count tables equals its cohort's slice aggregation in row set and values") {
+    val docs = graft.Tables.documents(spark, sf)
+    // the cohort predicates spelled out here, not read from TextOps,
+    // so a drifted predicate there cannot also move the reference
+    val cohorts = Seq(
+      "base" -> (col("doc_id") % 5 =!= 4),
+      "delta" -> (col("doc_id") % 5 === 4),
+      "retract" -> (col("doc_id") % 10 === 7))
+    def dsirSlice(p: org.apache.spark.sql.Column) =
+      TextOps.dsirCountsOf(TextOps.dsirFeaturesOf(docs.filter(p)))
+        .select("bucket", "rcnt", "tcnt")
+    def lmSlice(p: org.apache.spark.sql.Column) =
+      TextOps.bigramRowsOf(docs.filter(p)).filter(col("lang") === "en")
+        .groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
+        .select("w1", "w2", "c2")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    for ((tag, p) <- cohorts) {
+      val dsirRef = rows(dsirSlice(p))
+      assert(dsirRef.nonEmpty, s"fixture sanity: dsir/$tag has rows")
+      assert(rows(TextOps.segment(spark, sf, TextOps.dsirTable, tag)
+          .select("bucket", "rcnt", "tcnt")) === dsirRef,
+        s"dsir/$tag segment ≡ its slice scan")
+      val lmRef = rows(lmSlice(p))
+      assert(lmRef.nonEmpty, s"fixture sanity: ppl/$tag has rows")
+      assert(rows(TextOps.segment(spark, sf, TextOps.lmTable, tag)
+          .select("w1", "w2", "c2")) === lmRef,
+        s"ppl/$tag segment ≡ its slice scan")
+    }
+  }
+
   // ------------------------- d75: segment hygiene across the turnover
 
   test("d75: the delta2 segment carries only its own cohort and the gate verdicts only the probe cohort") {
-    val dir = DedupOps.windexDelta2Dir(spark, sf)
+    val dir = DedupOps.windexDeltaDir(spark, sf, gen = 2)
     val segIds = spark.read.parquet(s"$dir/windex")
       .select("base_id").distinct().collect().map(_.getLong(0))
     assert(segIds.forall(_ % 20 == 9),
       "the delta2 segment must hold exactly the %20==9 cohort's windows")
-    val out = DedupOps.windexRegenGate(spark, sf).collect()
+    val out = DedupOps.queries("d75_windex_regen_absorb")(spark, sf).collect()
     assert(out.nonEmpty)
     assert(out.forall(_.getAs[Long]("doc_id") % 20 == 19),
       "the post-turnover gate probes exactly the %20==19 cohort")

@@ -22,8 +22,7 @@ class Round22Spec extends AnyFunSuite with SparkSpec {
   // ----------------------- t84: DSIR fold + turnover at model level
 
   test("t84: the folded DSIR segment equals a rebuild-without-cohort in VALUES and ROW SET, and the turnover model equals the full rebuild") {
-    val folded = spark.read
-      .parquet(s"${TextOps.dsirCountsFoldedDir(spark, sf)}/counts")
+    val folded = TextOps.foldedCounts(spark, sf, TextOps.dsirTable)
     val rebuilt = TextOps.dsirCountsOf(TextOps.dsirFeaturesOf(
       graft.Tables.documents(spark, sf).filter(col("doc_id") % 10 =!= 7)))
     def set3(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -33,8 +32,7 @@ class Round22Spec extends AnyFunSuite with SparkSpec {
         "post-erasure rebuild's count table exactly")
     // turnover: gen-1 ⊎ re-admitted cohort ≡ the full-corpus model
     val merged = folded
-      .unionByName(spark.read
-        .parquet(s"${TextOps.dsirCountsRetractDir(spark, sf)}/counts"))
+      .unionByName(TextOps.segment(spark, sf, TextOps.dsirTable, "retract"))
       .groupBy("bucket")
       .agg(sum("rcnt").as("rcnt"), sum("tcnt").as("tcnt"))
     val turnover = TextOps.dsirModelOf(TextOps.dsirLrFromCounts(merged))
@@ -56,8 +54,7 @@ class Round22Spec extends AnyFunSuite with SparkSpec {
       .filter(col("doc_id") % 10 =!= 7)
     def set3(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-    val folded = spark.read
-      .parquet(s"${TextOps.pplC2FoldedDir(spark, sf)}/c2")
+    val folded = TextOps.foldedCounts(spark, sf, TextOps.lmTable)
     val c2Rebuilt = TextOps.bigramRowsOf(remaining)
       .filter(col("lang") === "en")
       .groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
@@ -65,8 +62,7 @@ class Round22Spec extends AnyFunSuite with SparkSpec {
       "the persisted fold must carry the zero-drop: its row set IS " +
         "what V counts")
     val turnover = folded
-      .unionByName(spark.read
-        .parquet(s"${TextOps.pplC2RetractDir(spark, sf)}/c2"))
+      .unionByName(TextOps.segment(spark, sf, TextOps.lmTable, "retract"))
       .groupBy("w1", "w2").agg(sum("c2").as("c2"))
     val (c2Full, _, _) = TextOps.pplRefLm(spark, sf)
     assert(set3(turnover) === set3(c2Full),
