@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
 /** Loaders for the driver-generated TPC-H-ish parquet tables (TESTDATA.md).
   *
@@ -11,8 +11,19 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType}
   * column pruning against the parquet footers for free.
   */
 object Tables {
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  // Parquet schema inference runs a Spark job per read; each table's
+  // schema is resolved once per (session, path) and later reads pass
+  // it. Released by Registries.clearAll like the frame registries.
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, String), StructType]()
+  Registries.onClearFrames(() => schemas.clear())
+
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val schema = schemas.computeIfAbsent(FrameRegistry.key(spark, dir, name),
+      _ => spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = t(s, d, "nation")

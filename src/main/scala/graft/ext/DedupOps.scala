@@ -1224,9 +1224,9 @@ object DedupOps {
   }
 
   val semanticDedupSql: String = {
-    val cos = SimilarityOps.cosineSqlSnippetForDedup
+    val cos = SimilarityOps.cosineSqlSnippet
       .replace("QV", "a.v").replace("CV", "b.v")
-    s"""${SimilarityOps.kmSqlPrefixForDedup},
+    s"""${SimilarityOps.kmSqlPrefix},
       |dropped AS (
       |  SELECT DISTINCT b.vec_id FROM aF a JOIN aF b
       |  ON a.cid = b.cid AND a.vec_id < b.vec_id
@@ -1298,7 +1298,7 @@ object DedupOps {
   lazy val semanticRepresentativesSql: String = {
     val comp = graft.graph.GraphOps.semanticComponentsSql
       .replaceAll("ORDER BY vec_id$", "")
-    val cos = SimilarityOps.cosineSqlSnippetForDedup
+    val cos = SimilarityOps.cosineSqlSnippet
       .replace("QV", "m.v").replace("CV", "cent.cv")
     s"""WITH comp AS ($comp),
       |e2 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -1353,16 +1353,14 @@ object DedupOps {
     * cosine test. */
   def incrementalSemanticDedup(s: SparkSession, d: String): DataFrame = {
     import graft.functions.VecExprs.dot_d
-    val idx = SimilarityOps.incrIndexDirForDedup(s, d)
-    val b = SimilarityOps.incrBaseCut(s, d)
-    val cent = s.read.parquet(s"$idx/centroids")
-    val qb = SimilarityOps.kmAssignForDedup(
-        SimilarityOps.quantizedForDedup(s, d).filter(col("vec_id") >= b),
-        cent)
+    val base = SimilarityOps.incrSegments(s, d).head.dir
+    val b = SimilarityOps.incrBase(s, d)
+    val cent = s.read.parquet(s"$base/centroids")
+    val qb = SimilarityOps.kmAssign(
+        SimilarityOps.quantized(s, d).filter(col("vec_id") >= b), cent)
       .select(col("vec_id"), col("cid"), col("v"))
       .withColumn("nrm", sqrt(dot_d(col("v"), col("v"))))
-    val base = gateBaseMembers(s, d)
-    val dropped = qb.join(base, "cid")
+    val dropped = qb.join(gateBaseMembers(s, d), "cid")
       .withColumn("cosine",
         round(dot_d(col("v"), col("bv")) / (col("nrm") * col("bn")), 6))
       .filter(col("cosine") >= semTau)
@@ -1375,9 +1373,9 @@ object DedupOps {
   }
 
   val incrementalSemanticDedupSql: String = {
-    val cos = SimilarityOps.cosineSqlSnippetForDedup
+    val cos = SimilarityOps.cosineSqlSnippet
       .replace("QV", "n.v").replace("CV", "o.v")
-    val prefix = SimilarityOps.kmSqlPrefixFromForDedup(
+    val prefix = SimilarityOps.kmSqlPrefixFrom(
       "vec_id < (SELECT 4 * count(*) // 5 FROM embeddings)")
     s"""$prefix,
       |cut AS (SELECT 4 * count(*) // 5 AS b FROM embeddings),
@@ -1399,12 +1397,8 @@ object DedupOps {
     * the static side of the stream-static join). */
   private[graft] def gateBaseMembers(s: SparkSession, d: String): DataFrame = {
     import graft.functions.VecExprs.dot_d
-    val idx = SimilarityOps.incrIndexDirForDedup(s, d)
-    val b = SimilarityOps.incrBaseCut(s, d)
-    s.read.parquet(s"$idx/members")
-      .filter(col("vec_id") < b)
-      .join(SimilarityOps.quantizedForDedup(s, d).select("vec_id", "v"),
-        "vec_id")
+    s.read.parquet(s"${SimilarityOps.incrSegments(s, d).head.dir}/members")
+      .join(SimilarityOps.quantized(s, d).select("vec_id", "v"), "vec_id")
       .select(col("vec_id").as("b_id"), col("cid"), col("v").as("bv"))
       .withColumn("bn", sqrt(dot_d(col("bv"), col("bv"))))
   }
@@ -2249,35 +2243,43 @@ object DedupOps {
     * the d73 serve-time algebra ONCE at write time — the summed
     * censuses re-derive the global hot set, the segment union drops
     * hot rows and tombstoned base_ids — and writes the result as a new
-    * base: one windex, one census, zero sidecars, so the serve is
-    * d70's plain one-scan probe again and the NEXT absorb can start a
-    * fresh delta against it. Costs: O(index) rows read/written, never
-    * O(corpus text); no window recompute, no document rescan.
+    * base: one windex, one census (a one-segment fold keeps its
+    * source's), zero sidecars, so the serve is d70's plain one-scan
+    * probe again and the NEXT absorb can start a fresh delta against
+    * it. Costs: O(index) rows read/written, never O(corpus text); no
+    * window recompute, no document rescan.
     * FROZEN-CAP semantics both ways (the d71 contract): the merged
     * census never decrements on delete, and the folded census keeps
     * tombstoned docs' counts — a capped hash stays capped. */
   private def foldDir(s: SparkSession, d: String, name: String,
       segs: Seq[String]): String =
     windowIndexes.getOrBuild(s, d, name) { dir =>
-      // the census is written FIRST so a reader that races the
-      // registry's publish never sees an index without its mergeable
-      // state — and the hot set is derived by READING IT BACK, so it
-      // comes from exactly the published artifact (and the summing
-      // group-by runs once, not re-evaluated through lazy lineage
-      // for each downstream reference)
-      summedCensus(s, segs).write.mode("overwrite").parquet(s"$dir/census")
-      minusTombstones(s, d,
-        capped(s, segs, s.read.parquet(s"$dir/census")))
+      val rows = segs match {
+        // one segment has nothing to merge: its census stays its own
+        // and its rows already exclude every hash that census marks hot
+        case Seq(one) => windexOf(s, one)
+        // the census is written FIRST so a reader that races the
+        // registry's publish never sees an index without its mergeable
+        // state — and the hot set is derived by READING IT BACK, so it
+        // comes from exactly the published artifact (and the summing
+        // group-by runs once, not re-evaluated through lazy lineage
+        // for each downstream reference)
+        case _ =>
+          summedCensus(s, segs).write.mode("overwrite")
+            .parquet(s"$dir/census")
+          capped(s, segs, s.read.parquet(s"$dir/census"))
+      }
+      minusTombstones(s, d, rows)
         .write.mode("overwrite").parquet(s"$dir/windex")
     }
 
   /** d72: the gate served from the COMPACTED window index — the read
     * path after the fold retires the sidecar (one equi-join fewer per
     * batch). The compaction is the fold with no delta segment: the
-    * base index minus its tombstoned rows (its hot set re-derived from
-    * its own census drops nothing — the base rows already exclude
-    * every hash that census marks hot). Shares d71's oracle:
-    * compaction must preserve the tombstoned gate's verdicts
+    * base index minus its tombstoned rows; its census stays the
+    * base's (a one-segment fold has no hot set to re-derive — the base
+    * rows already exclude every hash its census marks hot). Shares d71's
+    * oracle: compaction must preserve the tombstoned gate's verdicts
     * bit-for-bit, including the frozen-cap semantics (a capped hash
     * must NOT resurrect just because the fold ran). */
   private[graft] def compactedWindexDir(s: SparkSession, d: String): String =

@@ -55,7 +55,9 @@ object SimilarityOps {
         col("it.id").as(idName), col("it.score").as(scoreName),
         (col("pos") + 1).cast("bigint").as("rank")): _*)
 
-  private val cosineSqlSnippet =
+  /** Cosine SQL snippet (replace QV/CV), shared with the semantic-dedup
+    * tier's SQL twins (d61/d62/d64). */
+  private[graft] val cosineSqlSnippet =
     """list_sum(list_transform(range(1, len(QV) + 1), i -> QV[i] * CV[i]))
       | / (sqrt(list_sum(list_transform(QV, x -> x * x)))
       |    * sqrt(list_sum(list_transform(CV, x -> x * x))))""".stripMargin
@@ -295,7 +297,7 @@ object SimilarityOps {
     * loop be DuckDB-oracle-checked bit-for-bit, where fp means would
     * drift with summation order. Quantization error (≤0.0005/dim ≈ 0.1%
     * of the value range) is far below cluster separation. */
-  private def quantized(s: SparkSession, d: String): DataFrame =
+  private[graft] def quantized(s: SparkSession, d: String): DataFrame =
     quantizeFrame(embeddings(s, d))
 
   /** The same fixed-point projection over an arbitrary embeddings
@@ -315,7 +317,7 @@ object SimilarityOps {
     * corpus×k scored rows to one row per vector before the exchange,
     * where the previous per-vec_id row_number window shuffled and
     * sorted all corpus×k rows. */
-  private def kmAssign(e: DataFrame, cent: DataFrame): DataFrame =
+  private[graft] def kmAssign(e: DataFrame, cent: DataFrame): DataFrame =
     e.crossJoin(broadcast(cent))
       .withColumn("d2", dist2(col("qv"), col("cv")))
       .groupBy("vec_id", "v", "qv")
@@ -358,7 +360,7 @@ object SimilarityOps {
     * the quantizer's K rows). */
   private[graft] def gateCentroids(
       s: SparkSession, d: String): Seq[(Long, Seq[Long])] =
-    s.read.parquet(s"${incrIndexDir(s, d)}/centroids")
+    s.read.parquet(s"${incrSegments(s, d).head.dir}/centroids")
       .select("cid", "cv").collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toSeq))
       .sortBy(_._1).toSeq
@@ -386,12 +388,12 @@ object SimilarityOps {
     * Lloyd replay (kmSqlPrefixFrom with the base training predicate)
     * recomputes assignment AND per-member d2 bit-for-bit. */
   def indexHealth(s: SparkSession, d: String): DataFrame = {
-    val idx = incrIndexDir(s, d)
+    val segs = incrSegments(s, d)
     val b = incrBase(s, d)
     val n = embeddings(s, d).count()
-    val scored = s.read.parquet(s"$idx/members")
+    val scored = s.read.parquet(paths(segs, "members"): _*)
       .join(quantized(s, d).select("vec_id", "qv"), "vec_id")
-      .join(broadcast(s.read.parquet(s"$idx/centroids")), "cid")
+      .join(broadcast(s.read.parquet(s"${segs.head.dir}/centroids")), "cid")
       .withColumn("d2", dist2(col("qv"), col("cv")))
       .withColumn("is_base", col("vec_id") < b)
     healthCensusOf(scored, n, kmK)
@@ -544,13 +546,6 @@ object SimilarityOps {
   private[ext] def kmAssignedFull(s: SparkSession, d: String): DataFrame =
     kmFinal(s, d)
 
-  /** The oracle-side twin of the trained model (CTE prefix ending in
-    * the full-corpus assignment `aF`), exposed for d61's SQL twin. */
-  private[ext] def kmSqlPrefixForDedup: String = kmSqlPrefix
-
-  /** Rounded-cosine SQL snippet (replace QV/CV), shared with d61. */
-  private[ext] def cosineSqlSnippetForDedup: String = cosineSqlSnippet
-
   /** s66: k-means cluster census after `kmIters` Lloyd iterations —
     * a REAL trained coarse quantizer (vs s61's label blocking), the
     * index-build half of IVF. Everything incl. the iteration is
@@ -606,7 +601,7 @@ object SimilarityOps {
     * default `TRUE` this is the ordinary full-corpus model, with a base
     * predicate it is the frozen-model shape the incremental index (s81)
     * needs. */
-  private def kmSqlPrefixFrom(trainWhere: String): String = {
+  private[graft] def kmSqlPrefixFrom(trainWhere: String): String = {
     def assignCte(name: String, srcName: String, centName: String) = {
       val dist = kmDistSql.replace("AQ", "q.qv").replace("CV", "c.cv")
       s"""$name AS (
@@ -640,7 +635,9 @@ object SimilarityOps {
       |${assignCte("aF", "q", s"c$kmIters")}""".stripMargin
   }
 
-  private val kmSqlPrefix: String = kmSqlPrefixFrom("TRUE")
+  /** The full-corpus model's CTE prefix (ending in the assignment
+    * `aF`), shared with d61's SQL twin. */
+  private[graft] val kmSqlPrefix: String = kmSqlPrefixFrom("TRUE")
 
   val kmeansCensusSql: String =
     s"""$kmSqlPrefix
@@ -932,25 +929,76 @@ object SimilarityOps {
   /** Saved-index artifact dirs per (session, dir): built + written
     * once, reloaded by every serving call. Entries: `ivfpq` (s80),
     * `incr` (s81), `ivfpqcompact` (s97), `bm25` (s87), `bm25incr`
-    * (s88), `bm25compact` (s96). */
+    * (s88), `bm25compact` (s96). Each holds its segments as subdirs:
+    * `base/`, an absorbed batch's `delta/` and a delete's `del/`. */
   private val savedIndexes = new graft.ArtifactRegistry
 
-  /** Write the trained IVF-PQ index as a 4-table parquet artifact —
-    * coarse centroids, cell membership, PQ codebooks, per-vector
-    * codes. This is the "build once" half of a real ANN deployment:
-    * the artifact is everything serving needs (raw vectors excluded by
-    * design — queries arrive at serve time), so an index built on one
-    * cluster ships to any number of serving readers. */
-  def saveIvfPqIndex(s: SparkSession, d: String, out: String): Unit = {
-    val (cent, assigned) = kmModel(s, d)
-    val (_, cb, enc) = pqParts(s, d)
-    cent.write.mode("overwrite").parquet(s"$out/centroids")
-    assigned.select("vec_id", "cid")
-      .write.mode("overwrite").parquet(s"$out/members")
-    cb.write.mode("overwrite").parquet(s"$out/codebooks")
-    enc.select("vec_id", "j", "cid")
-      .write.mode("overwrite").parquet(s"$out/codes")
+  /** One segment of a served index: the parquet tables under `dir`. An
+    * ADD segment holds index rows (IVF-PQ `members`/`codes`, a base
+    * also the frozen `centroids`/`codebooks`; BM25 `postings` and its
+    * additive `dfreq`/`stats` counts); a DELETE segment the deleted ids
+    * (`tombstones`) and, for BM25, the cohort's counts, summed negated.
+    * A serve reads exactly the segments it is given; a fold writes
+    * what that serve reads as ONE fresh segment. */
+  private[graft] final case class Segment(dir: String, delete: Boolean = false)
+
+  /** The segments `names` (subdirs) of the saved index `name`, which
+    * `build` writes into its artifact dir once per (session, dir). */
+  private def saved(s: SparkSession, d: String, name: String,
+      names: String*)(build: String => Unit): Seq[Segment] = {
+    val dir = savedIndexes.getOrBuild(s, d, name)(build)
+    names.map(n => Segment(s"$dir/$n"))
   }
+
+  /** A list's delete segment: `del/` next to its base. */
+  private def deleteSegment(segs: Seq[Segment]): Segment = Segment(
+    java.nio.file.Paths.get(segs.head.dir).resolveSibling("del").toString,
+    delete = true)
+
+  /** The paths of `table` in the add (or the delete) segments. */
+  private def paths(segs: Seq[Segment], table: String,
+      delete: Boolean = false): Seq[String] =
+    segs.filter(_.delete == delete).map(g => s"${g.dir}/$table")
+
+  /** The ids the delete segments tombstone (one column: vec_id or
+    * doc_id), if the list has any. */
+  private def tombstones(s: SparkSession, segs: Seq[Segment])
+      : Option[DataFrame] = {
+    val t = paths(segs, "tombstones", delete = true)
+    if (t.isEmpty) None else Some(s.read.parquet(t: _*).distinct())
+  }
+
+  /** The live rows of `table`: the add segments' rows minus the `dead`
+    * ids, anti-joined BEFORE anything ranks (a deleted vector or
+    * document can neither rank nor displace a survivor). */
+  private def live(s: SparkSession, segs: Seq[Segment], table: String,
+      dead: Option[DataFrame]): DataFrame = {
+    val rows = s.read.parquet(paths(segs, table): _*)
+    dead.fold(rows)(t =>
+      rows.join(broadcast(t), t.columns.toSeq, "left_anti"))
+  }
+
+  /** The one IVF-PQ segment writer: cell `members` (vec_id, cid), PQ
+    * `codes` (vec_id, j, cid) and — for a base — the frozen `model`
+    * (centroids, codebooks). A base is everything serving needs (raw
+    * vectors excluded by design — queries arrive at serve time). */
+  private def writeAdcSegment(seg: String, members: DataFrame,
+      codes: DataFrame, model: Option[(DataFrame, DataFrame)]): Unit = {
+    model.foreach { case (cent, cb) =>
+      cent.write.mode("overwrite").parquet(s"$seg/centroids")
+      cb.write.mode("overwrite").parquet(s"$seg/codebooks")
+    }
+    members.select("vec_id", "cid")
+      .write.mode("overwrite").parquet(s"$seg/members")
+    codes.select("vec_id", "j", "cid")
+      .write.mode("overwrite").parquet(s"$seg/codes")
+  }
+
+  /** A segment list's frozen model: its base's (centroids, codebooks). */
+  private def adcModel(s: SparkSession, segs: Seq[Segment])
+      : (DataFrame, DataFrame) =
+    (s.read.parquet(s"${segs.head.dir}/centroids"),
+      s.read.parquet(s"${segs.head.dir}/codebooks"))
 
   /** s80: s75's IVF-PQ serving run entirely from the RELOADED parquet
     * artifact — no touch of the in-session trained model: the "serve
@@ -960,32 +1008,29 @@ object SimilarityOps {
     * and the result shares s75's oracle — proving the save/load round
     * trip preserves the index bit-for-bit. */
   def ivfPqKnnServed(s: SparkSession, d: String): DataFrame =
-    serveAdcFromArtifact(s, d, builtIndexDir(s, d))
+    serveAdc(s, d, ivfPqBase(s, d))
 
-  /** Build-or-get the saved serving artifact for (session, dir) —
-    * shared by s80 and s94 (the tombstone op must mutate the SAME
-    * artifact s80 serves from for the sidecar-invisibility claim to
-    * mean anything). */
-  private def builtIndexDir(s: SparkSession, d: String): String =
-    savedIndexes.getOrBuild(s, d, "ivfpq")(saveIvfPqIndex(s, d, _))
+  /** s80's artifact: [base], ONE segment over the trained full-corpus
+    * model — shared by s80 and s94 (the delete must land in the SAME
+    * artifact s80 serves from for the invisibility claim to mean
+    * anything). */
+  private def ivfPqBase(s: SparkSession, d: String): Seq[Segment] =
+    saved(s, d, "ivfpq", "base") { dir =>
+      val (cent, assigned) = kmModel(s, d)
+      val (_, cb, enc) = pqParts(s, d)
+      writeAdcSegment(s"$dir/base", assigned, enc, Some((cent, cb)))
+    }
 
-  /** The "serve many" half shared by s80/s81/s94: probe + LUT + ADC
-    * top-k run entirely from a saved artifact dir. With
-    * `dropTombstones` the `tombstones` sidecar is anti-joined against
-    * cell members BEFORE the top-k heap, so a deleted vector can
-    * neither rank nor displace a survivor. */
-  private def serveAdcFromArtifact(s: SparkSession, d: String,
-      idx: String, dropTombstones: Boolean = false): DataFrame = {
-    val cent = s.read.parquet(s"$idx/centroids")
-    val members0 = s.read.parquet(s"$idx/members")
+  /** The one IVF-PQ serve (s80/s81/s94/s97): probe + LUT + ADC top-k
+    * run entirely from the segments `segs` — the base segment's frozen
+    * model, the add segments' members and codes, the delete segments'
+    * tombstones anti-joined against cell members ([[live]]). */
+  private def serveAdc(s: SparkSession, d: String,
+      segs: Seq[Segment]): DataFrame = {
+    val (cent, cb) = adcModel(s, segs)
+    val members = live(s, segs, "members", tombstones(s, segs))
       .select(col("vec_id").as("c_id"), col("cid"))
-    val members =
-      if (dropTombstones)
-        members0.join(s.read.parquet(s"$idx/tombstones").distinct(),
-          Seq("c_id"), "left_anti")
-      else members0
-    val cb = s.read.parquet(s"$idx/codebooks")
-    val codes = s.read.parquet(s"$idx/codes")
+    val codes = s.read.parquet(paths(segs, "codes"): _*)
       .select(col("vec_id").as("c_id"), col("j"), col("cid").as("code"))
     // queries are runtime input: quantize, probe the loaded coarse
     // quantizer, build the ADC lookup tables from the loaded codebooks
@@ -1023,68 +1068,43 @@ object SimilarityOps {
 
   /** Training predicate for the incremental rehearsal: the FIRST 4/5 of
     * the corpus is the "already indexed" base; the rest arrives later. */
-  private def incrBase(s: SparkSession, d: String): Long =
+  private[graft] def incrBase(s: SparkSession, d: String): Long =
     embeddings(s, d).count() * 4 / 5
 
   /** s81: INCREMENTAL index maintenance — the ANN analogue of the
     * reference's incremental upsert (parsing_agent.py:67-86). The
-    * artifact is built from the BASE 4/5 of the corpus only (coarse
-    * quantizer and codebooks trained on base), then the remaining batch
-    * is absorbed WITHOUT retraining: each new vector is assigned to its
-    * nearest FROZEN coarse centroid and encoded against the FROZEN
-    * codebooks, and only member/code ROWS are appended (parquet append
-    * — centroids and codebooks untouched on disk, the update cost is
-    * O(batch), never O(corpus)). Serving then runs the s80 dataflow
-    * over the updated artifact; the DuckDB twin recomputes the same
-    * base-trained frozen-model ADC over the unioned corpus, so
-    * assignment, encoding, append, and serving all hash-check. */
+    * base segment is built from the BASE 4/5 of the corpus only
+    * (coarse quantizer and codebooks trained on base), then the
+    * remaining batch is absorbed WITHOUT retraining: each new vector
+    * is assigned to its nearest FROZEN coarse centroid and encoded
+    * against the FROZEN codebooks, and only its member/code rows are
+    * written, as a delta segment (the base segment is never rewritten,
+    * the update cost is O(batch), never O(corpus)). Serving then runs
+    * the s80 dataflow over [base, delta]; the DuckDB twin recomputes
+    * the same base-trained frozen-model ADC over the unioned corpus,
+    * so assignment, encoding, absorb, and serving all hash-check. */
   def ivfPqIncremental(s: SparkSession, d: String): DataFrame =
-    serveAdcFromArtifact(s, d, incrIndexDir(s, d))
+    serveAdc(s, d, incrSegments(s, d))
 
-  /** Build-or-get the incremental artifact (base-4/5-trained frozen
-    * model + absorbed batch rows) — shared by s81's serving and d64's
-    * ingest-time semantic-dedup gate. */
-  private def incrIndexDir(s: SparkSession, d: String): String =
-    savedIndexes.getOrBuild(s, d, "incr") { dir =>
+  /** The incremental artifact's [base, delta] segments (base-4/5-
+    * trained frozen model + absorbed batch rows) — shared by s81's
+    * serving, s99's census and d64's ingest-time semantic-dedup gate. */
+  private[graft] def incrSegments(s: SparkSession, d: String): Seq[Segment] =
+    saved(s, d, "incr", "base", "delta") { dir =>
       val b = incrBase(s, d)
       val e = quantized(s, d).cache()
       val base = e.filter(col("vec_id") < b)
       val batch = e.filter(col("vec_id") >= b)
-      // ---- build on base (the "already deployed" index)
       // freeze: 2·kmIters-job lineage
       val cent = kmTrain(base).localCheckpoint()
       val baseSubs = pqSubsOf(base)
       val cb = pqCodebooksOf(baseSubs).localCheckpoint()
-      def encodeWith(subs: DataFrame) =
-        pqEncodeOf(subs, cb).select("vec_id", "j", "cid")
-      cent.write.mode("overwrite").parquet(s"$dir/centroids")
-      cb.write.mode("overwrite").parquet(s"$dir/codebooks")
-      kmAssign(base, cent).select("vec_id", "cid")
-        .write.mode("overwrite").parquet(s"$dir/members")
-      encodeWith(baseSubs)
-        .write.mode("overwrite").parquet(s"$dir/codes")
-      // ---- absorb the new batch against the FROZEN model: appended
-      // rows only — the four base files above are never rewritten
-      kmAssign(batch, cent).select("vec_id", "cid")
-        .write.mode("append").parquet(s"$dir/members")
-      encodeWith(pqSubsOf(batch))
-        .write.mode("append").parquet(s"$dir/codes")
+      writeAdcSegment(s"$dir/base", kmAssign(base, cent),
+        pqEncodeOf(baseSubs, cb), Some((cent, cb)))
+      writeAdcSegment(s"$dir/delta", kmAssign(batch, cent),
+        pqEncodeOf(pqSubsOf(batch), cb), None)
       e.unpersist()
     }
-
-  // --- helpers exposed for d64 (registered in DedupOps): the
-  // ingest-time semantic-dedup gate runs against the SAME frozen
-  // artifact s81 maintains
-  private[graft] def incrIndexDirForDedup(s: SparkSession, d: String): String =
-    incrIndexDir(s, d)
-  private[graft] def incrBaseCut(s: SparkSession, d: String): Long =
-    incrBase(s, d)
-  private[graft] def quantizedForDedup(s: SparkSession, d: String): DataFrame =
-    quantized(s, d)
-  private[graft] def kmAssignForDedup(
-      e: DataFrame, cent: DataFrame): DataFrame = kmAssign(e, cent)
-  private[ext] def kmSqlPrefixFromForDedup(trainWhere: String): String =
-    kmSqlPrefixFrom(trainWhere)
 
   // ------------------------- s94 tombstone deletes on the served index
 
@@ -1093,76 +1113,60 @@ object SimilarityOps {
     * dedup decision (d57), or a takedown order removes vectors from a
     * SERVED index. The delete cohort (every vector with
     * vec_id % 13 == 5 — the quarantined-cohort stand-in) is written as
-    * a TOMBSTONE sidecar under the saved artifact; the four base
-    * tables are never rewritten (delete cost O(delete set), the s81
-    * discipline applied to removal), and serving anti-joins the
-    * sidecar against cell members BEFORE the ADC top-k heap, so a
-    * deleted vector can neither rank nor displace a survivor — the
-    * k-th result is always a retained vector, not a hole. Queries are
-    * runtime input and stay servable even when their own vector is
-    * tombstoned (deleting from the index ≠ losing the right to ask).
-    * The sidecar is invisible to readers that don't opt in — s80's
-    * serving over the same artifact is byte-identical before and
-    * after the delete (spec-pinned). At scale the tombstone set rides
-    * an equi-anti-join on vec_id: AQE broadcasts it while small and
-    * shuffles a mass purge; periodic compaction (em73's discipline)
-    * folds tombstones into the base tables offline. */
-  def ivfPqTombstoned(s: SparkSession, d: String): DataFrame = {
-    val idx = builtIndexDir(s, d)
-    ivfPqDeleteCohort(s, idx)
-    serveAdcFromArtifact(s, d, idx, dropTombstones = true)
+    * a DELETE segment of the saved artifact; the base segment is never
+    * rewritten (delete cost O(delete set)), and serving [base, del]
+    * anti-joins the tombstones against cell members BEFORE the ADC
+    * top-k heap, so the k-th result is always a retained vector, not a
+    * hole. Queries stay servable even when their own vector is
+    * tombstoned. s80 serves [base] of the same artifact, byte-identical
+    * before and after the delete (spec-pinned); compaction (s97) folds
+    * the delete into a fresh base offline. */
+  def ivfPqTombstoned(s: SparkSession, d: String): DataFrame =
+    serveAdc(s, d, ivfPqDeleted(s, d))
+
+  /** s94's segments: s80's base plus the delete segment, rewritten on
+    * each call (its cost stays on the s94 line item). */
+  private def ivfPqDeleted(s: SparkSession, d: String): Seq[Segment] = {
+    val base = ivfPqBase(s, d)
+    base :+ ivfPqDeleteCohort(s, base)
   }
 
-  /** The s94 delete step: idempotent tombstone manifest for the
-    * rehearsal cohort (production appends delete batches; serving
-    * reads DISTINCT either way). Shared with s97's compaction. */
-  private[graft] def ivfPqDeleteCohort(s: SparkSession, idx: String): Unit =
-    s.read.parquet(s"$idx/members")
-      .select(col("vec_id").as("c_id"))
-      .filter(col("c_id") % 13 === 5)
-      .write.mode("overwrite").parquet(s"$idx/tombstones")
+  /** The s94 delete step: the rehearsal cohort of the add segments'
+    * members, written as the delete segment `del/` next to the base —
+    * idempotent (mode overwrite; serving reads DISTINCT either way). */
+  private def ivfPqDeleteCohort(s: SparkSession,
+      segs: Seq[Segment]): Segment = {
+    val seg = deleteSegment(segs)
+    s.read.parquet(paths(segs, "members"): _*)
+      .select("vec_id")
+      .filter(col("vec_id") % 13 === 5)
+      .write.mode("overwrite").parquet(s"${seg.dir}/tombstones")
+    seg
+  }
 
   // ------------------------- s97 ANN artifact compaction
 
   /** s97: the DENSE twin of s96 — the offline fold that retires s94's
-    * tombstone sidecar: members and codes are rewritten minus the
-    * tombstoned vectors into a FRESH artifact, the frozen model
-    * (centroids, codebooks) is carried over unchanged, and no sidecar
-    * dirs exist afterwards — serving is s80's plain read path with
+    * delete segment: what s94 serves is written as ONE fresh base
+    * segment ([[foldAdc]]), and serving is s80's plain read path with
     * zero anti-join work per query. Compact-to-new-directory + pointer
     * swap (the em73/s96 discipline): the source artifact is never
-    * touched, so s80/s94 readers of the old artifact are never broken
-    * and the swap is atomic. Shares s94's oracle — compaction must
-    * preserve the tombstoned ranking bit-for-bit. Unlike BM25 (s96),
-    * ADC scores are per-vector — deleting a member changes no other
-    * vector's score — so the fold is pure row removal with no
-    * statistics to correct; at scale, members/codes partitioned by
-    * cell id confine the rewrite to the cells the delete cohort
-    * actually touches (the em73 affected-partition discipline). */
-  def ivfPqCompacted(s: SparkSession, d: String): DataFrame = {
-    val src = builtIndexDir(s, d)
-    val idx = savedIndexes.getOrBuild(s, d, "ivfpqcompact") { dir =>
-      ivfPqDeleteCohort(s, src)
-      compactIvfPq(s, src, dir)
-    }
-    serveAdcFromArtifact(s, d, idx, dropTombstones = false)
-  }
+    * touched. Shares s94's oracle. Unlike BM25 (s96), ADC scores are
+    * per-vector, so the fold is pure row removal with no statistics to
+    * correct; at scale, members/codes partitioned by cell id confine
+    * the rewrite to the cells the delete cohort touches. */
+  def ivfPqCompacted(s: SparkSession, d: String): DataFrame =
+    serveAdc(s, d, saved(s, d, "ivfpqcompact", "base")(dir =>
+      foldAdc(s, ivfPqDeleted(s, d), s"$dir/base")))
 
-  /** The s97 fold itself: rewrite `src` minus its tombstones as a
-    * fresh sidecar-free artifact at `out` (frozen model copied). */
-  private[graft] def compactIvfPq(
-      s: SparkSession, src: String, out: String): Unit = {
-    val tomb = s.read.parquet(s"$src/tombstones").distinct()
-    s.read.parquet(s"$src/members")
-      .join(broadcast(tomb.toDF("vec_id")), Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$out/members")
-    s.read.parquet(s"$src/codes")
-      .join(broadcast(tomb.toDF("vec_id")), Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$out/codes")
-    s.read.parquet(s"$src/centroids")
-      .write.mode("overwrite").parquet(s"$out/centroids")
-    s.read.parquet(s"$src/codebooks")
-      .write.mode("overwrite").parquet(s"$out/codebooks")
+  /** The one IVF-PQ fold: what [[serveAdc]] reads from `segs` — the
+    * live members and codes, the base's frozen model — written as one
+    * fresh base segment at `out`. */
+  private[graft] def foldAdc(s: SparkSession, segs: Seq[Segment],
+      out: String): Unit = {
+    val dead = tombstones(s, segs)
+    writeAdcSegment(out, live(s, segs, "members", dead),
+      live(s, segs, "codes", dead), Some(adcModel(s, segs)))
   }
 
   val ivfPqTombstonedSql: String =
@@ -2122,64 +2126,49 @@ object SimilarityOps {
     * tier, completing the hybrid stack's build-once/serve-many
     * story). */
   def bm25Served(s: SparkSession, d: String): DataFrame =
-    serveBm25From(s, bm25IndexDir(s, d),
-      sumDeltas = false, dropTombstones = false)
+    serveBm25(s, bm25Segments(s, d))
 
-  /** Build-or-get the persisted s87 index dir: the full inverted index
-    * as a 3-table parquet artifact — postings (term, doc_id, tf, dl)
+  /** The persisted s87 index: [base], the full inverted index as ONE
+    * segment ([[writeBm25Segment]]) — postings (term, doc_id, tf, dl)
     * over the ENTIRE vocabulary, the per-term document frequencies,
     * and the 1-row corpus stats. The "build once" half of a search
     * deployment — everything serving needs, raw text excluded by
-    * design. Written by [[appendBm25Batch]] as a ONE-segment index:
-    * on a fresh dir the append is an overwrite, with one df row per
-    * term and one stats row, so s87 serves it without sums. Also the
-    * source of e108's frozen df/stats sidecars (round 16: the stream
-    * twin was re-running the corpus tokenization per call to derive
-    * sidecars the served artifact already carries). */
-  private[graft] def bm25IndexDir(s: SparkSession, d: String): String =
-    savedIndexes.getOrBuild(s, d, "bm25")(
-      appendBm25Batch(graft.Tables.documents(s, d), _))
+    * design. Also the source of e108's frozen df/stats sidecars. */
+  private[graft] def bm25Segments(s: SparkSession, d: String): Seq[Segment] =
+    saved(s, d, "bm25", "base")(dir =>
+      writeBm25Segment(documents(s, d), s"$dir/base"))
 
-  /** The shared artifact read path behind every served-BM25 variant:
-    * query terms prune the postings scan (pushed `In`), df/corpus
-    * stats ride as broadcast sidecars, scoring + top-5 reuse the s85
-    * stages. `sumDeltas` re-derives the sidecars by summing per-batch
-    * delta rows (s88's segment discipline — exact, since df and Σdl
-    * are additive over disjoint doc sets); `dropTombstones` opts into
-    * the delete segment (s95): postings anti-join the tombstone list
-    * BEFORE scoring and the sidecar sums include the NEGATIVE
-    * correction rows the delete step wrote. A reader that doesn't opt
-    * in never touches the sidecar dirs — s87/s88 serving is untouched
-    * by a pending delete, exactly the s80/s94 invisibility contract. */
-  private[graft] def serveBm25From(s: SparkSession, idx: String,
-      sumDeltas: Boolean, dropTombstones: Boolean): DataFrame = {
-    import s.implicits._
-    val terms = bm25Queries.map(_._2).distinct
-    val q = bm25Queries.toDF("query_id", "term")
-    val post0 = s.read.parquet(s"$idx/postings")
+  /** The df and corpus-stats sidecars of a BM25 segment list: per-term
+    * and global [[Segments.signedSum]]s over the add segments' counts
+    * with the delete segments' counts negated — exact, since df and
+    * Σdl are additive over disjoint doc sets. A lone segment already
+    * holds one row per term and one stats row, and is read as is. The
+    * delete segments are read with the add segments' schema. */
+  private[graft] def bm25Sums(s: SparkSession, segs: Seq[Segment])
+      : (DataFrame, DataFrame) = {
+    def summed(table: String, keys: Seq[String], vals: String*) = {
+      val plus = s.read.parquet(paths(segs, table): _*)
+      if (segs.size == 1) plus
+      else Segments.signedSum(keys, vals, Seq(plus),
+        paths(segs, table, delete = true)
+          .map(s.read.schema(plus.schema).parquet(_)))
+    }
+    (summed("dfreq", Seq("term"), "df"),
+      summed("stats", Nil, "n_docs", "sum_dl"))
+  }
+
+  /** The one BM25 serve (s87/s88/s95/s96): query terms prune the live
+    * postings scan (pushed `In`, tombstoned docs anti-joined BEFORE
+    * scoring), the summed df/stats ride as broadcast sidecars, and
+    * scoring + top-5 reuse the s85 stages. */
+  private[graft] def serveBm25(s: SparkSession, segs: Seq[Segment])
+      : DataFrame = {
+    val terms = bm25QueryTerms
+    val (dfreq, stats) = bm25Sums(s, segs)
+    bm25Finish(live(s, segs, "postings", tombstones(s, segs))
       .filter(col("term").isin(terms: _*))
-    val post =
-      if (dropTombstones)
-        post0.join(broadcast(s.read.parquet(s"$idx/tombstones").distinct()),
-          Seq("doc_id"), "left_anti")
-      else post0
-    val dfreq0 =
-      (if (dropTombstones) s.read.parquet(s"$idx/dfreq", s"$idx/dfreq_del")
-       else s.read.parquet(s"$idx/dfreq"))
-        .filter(col("term").isin(terms: _*))
-    val dfreq =
-      if (sumDeltas) dfreq0.groupBy("term").agg(sum("df").as("df"))
-      else dfreq0
-    val stats0 =
-      if (dropTombstones) s.read.parquet(s"$idx/stats", s"$idx/stats_del")
-      else s.read.parquet(s"$idx/stats")
-    val stats =
-      if (sumDeltas)
-        stats0.agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl"))
-      else stats0
-    bm25Finish(post
-      .join(broadcast(q), "term")
-      .join(broadcast(dfreq), "term")
+      .join(broadcast(bm25QueryFrame(s)), "term")
+      .join(broadcast(dfreq.filter(col("term").isin(terms: _*))), "term")
       .crossJoin(broadcast(stats))
       .transform(bm25Score)
       .select("query_id", "doc_id", "contrib_u"))
@@ -2187,61 +2176,55 @@ object SimilarityOps {
 
   // ------------------------------------ s88 incremental BM25 index
 
-  /** Append-absorb one document batch into a BM25 index artifact:
-    * the batch's postings rows APPEND to `postings/`, and the batch's
-    * OWN df/stats rows append to `dfreq/` and `stats/` — nothing on
-    * disk is ever rewritten. Document frequencies and corpus stats
-    * are additive across disjoint doc sets, so serve time re-derives
-    * the exact sidecars by summing the (one row per term per batch /
-    * one row per batch) deltas. Update cost is O(batch) postings +
-    * O(batch vocab) sidecar rows; building the base index IS the
-    * first batch. */
-  private[graft] def appendBm25Batch(docs: DataFrame, out: String): Unit = {
-    val dl = bm25DocLens(docs)
-    // one tokenize pass per segment (round-17): the sidecar deltas
-    // derive from the materialized postings segment — the appended
-    // postings dir can't be read back (it holds prior segments), so
-    // the batch's own segment is checkpointed instead; it is narrower
-    // than the token stream it replaces (no toks arrays) and it is
-    // being written out anyway. Exact: every dl>0 doc has ≥1 posting
-    // row and doc_id is unique, so the distinct (doc_id, dl)
-    // projection is the dl frame's row set.
-    val postings = dl
+  /** Write one BM25 add segment at `seg` from a document batch: its
+    * postings plus its OWN df/stats counts ([[writeBm25Counts]]).
+    * Update cost is O(batch) postings + O(batch vocab) count rows;
+    * building the base index IS the first segment. One tokenize pass
+    * per segment (round-17): the counts derive from the materialized
+    * postings, which are narrower than the token stream they replace
+    * (no toks arrays) and are being written out anyway. */
+  private[graft] def writeBm25Segment(docs: DataFrame, seg: String): Unit = {
+    val postings = bm25DocLens(docs)
       .select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
       .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
       .localCheckpoint()
-    postings.write.mode("append").parquet(s"$out/postings")
+    postings.write.mode("overwrite").parquet(s"$seg/postings")
+    writeBm25Counts(postings, seg)
+  }
+
+  /** A segment's additive counts over its postings rows: one `dfreq`
+    * row per term and one `stats` (n_docs, sum_dl) row. Exact: every
+    * dl>0 doc has ≥1 posting row and doc_id is unique, so the distinct
+    * (doc_id, dl) projection is the segment's doc set. */
+  private def writeBm25Counts(postings: DataFrame, seg: String): Unit = {
     postings.groupBy("term").agg(countDistinct("doc_id").as("df"))
-      .write.mode("append").parquet(s"$out/dfreq")
+      .write.mode("overwrite").parquet(s"$seg/dfreq")
     postings.select("doc_id", "dl").distinct()
       .agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
-      .write.mode("append").parquet(s"$out/stats")
+      .write.mode("overwrite").parquet(s"$seg/stats")
   }
 
   /** s88: INCREMENTAL maintenance of the sparse index — the BM25
-    * twin of s81. The artifact is built from the BASE 4/5 of the
-    * corpus (the "already deployed" index), then the remaining batch
-    * is absorbed by [[appendBm25Batch]]: postings and sidecar DELTA
-    * rows parquet-APPEND, the base files are never touched, so the
-    * update is O(batch) like a search engine's segment write.
-    * Serving reuses the s87 read path with one addition: the term
-    * and corpus sidecars are summed across their per-batch delta
-    * rows (exact — df and Σdl are additive over disjoint doc sets).
-    * Shares s85's full-corpus oracle: the absorbed index must rank
-    * bit-identically to an index built from scratch on the union. */
+    * twin of s81. The base segment covers the BASE 4/5 of the corpus
+    * (the "already deployed" index), then the remaining batch is
+    * absorbed as a delta segment ([[writeBm25Segment]]) — the base is
+    * never touched, so the update is O(batch) like a search engine's
+    * segment write. Serving [base, delta] sums the segments' df/stats
+    * counts ([[bm25Sums]]). Shares s85's full-corpus oracle: the
+    * absorbed index must rank bit-identically to an index built from
+    * scratch on the union. */
   def bm25Incremental(s: SparkSession, d: String): DataFrame =
-    serveBm25From(s, bm25IncrDir(s, d),
-      sumDeltas = true, dropTombstones = false)
+    serveBm25(s, bm25IncrSegments(s, d))
 
-  /** The two-segment incremental artifact (base 4/5 + absorbed 1/5),
+  /** The incremental artifact's [base 4/5, absorbed 1/5] segments,
     * built once per (session, dir) — shared by s88 (delta serving),
-    * s95 (tombstone deletes) and s96 (compaction). */
-  private def bm25IncrDir(s: SparkSession, d: String): String =
-    savedIndexes.getOrBuild(s, d, "bm25incr") { dir =>
-      val docs = graft.Tables.documents(s, d)
+    * s95 (tombstone deletes), s96 (compaction) and s100 (census). */
+  private def bm25IncrSegments(s: SparkSession, d: String): Seq[Segment] =
+    saved(s, d, "bm25incr", "base", "delta") { dir =>
+      val docs = documents(s, d)
       val b = docs.count() * 4 / 5
-      appendBm25Batch(docs.filter(col("doc_id") < b), dir)
-      appendBm25Batch(docs.filter(col("doc_id") >= b), dir)
+      writeBm25Segment(docs.filter(col("doc_id") < b), s"$dir/base")
+      writeBm25Segment(docs.filter(col("doc_id") >= b), s"$dir/delta")
     }
 
   // ------------------------------- s100 BM25 index health census
@@ -2266,7 +2249,7 @@ object SimilarityOps {
     * one postings scan aggregated map-side to vocab rows + a 1-row
     * broadcast totals frame (the q22 grand-total pattern). */
   def bm25Health(s: SparkSession, d: String): DataFrame =
-    bm25HealthOf(s.read.parquet(s"${bm25IncrDir(s, d)}/postings")
+    bm25HealthOf(s.read.parquet(paths(bm25IncrSegments(s, d), "postings"): _*)
       .select("term", "doc_id", "tf"))
 
   /** The s100 aggregate over a (term, doc_id, tf) postings frame —
@@ -2308,31 +2291,23 @@ object SimilarityOps {
 
   // ------------------------- s95 tombstone deletes on the BM25 index
 
-  /** The s95 delete step: write the delete cohort's segment sidecars
-    * under `idx`. Everything is derived FROM THE INDEX ITSELF — a
-    * takedown needs no access to the raw corpus text:
-    *  - `tombstones/`  the deleted doc_ids (the anti-join list),
-    *  - `dfreq_del/`   one NEGATIVE df row per term the cohort's
-    *                   postings touch (−#deleted docs containing it),
-    *  - `stats_del/`   one NEGATIVE (n_docs, sum_dl) correction row
-    *                   from the cohort's distinct (doc_id, dl) pairs.
-    * BM25's sidecars are additive over disjoint doc sets, so a delete
-    * is just a segment with negative counts — the base and append
+  /** The s95 delete step: the delete cohort's segment `del/` next to
+    * the base, derived FROM THE INDEX ITSELF (a takedown needs no raw
+    * corpus text): the deleted doc_ids (`tombstones`) plus the
+    * cohort's own df/stats counts ([[writeBm25Counts]] over its
+    * postings rows), which the serve's sums enter negated. The add
     * segments are never rewritten, and the step costs O(delete set)
     * postings rows. Idempotent (mode overwrite): re-running a delete
-    * batch re-derives the same sidecars, the D7 retry discipline. */
-  private[graft] def bm25DeleteCohort(s: SparkSession, idx: String): Unit = {
-    val dead = s.read.parquet(s"$idx/postings")
+    * batch re-derives the same segment, the D7 retry discipline. */
+  private[graft] def bm25DeleteCohort(s: SparkSession,
+      segs: Seq[Segment]): Segment = {
+    val seg = deleteSegment(segs)
+    val dead = s.read.parquet(paths(segs, "postings"): _*)
       .filter(col("doc_id") % 10 === 3)
     dead.select("doc_id").distinct()
-      .write.mode("overwrite").parquet(s"$idx/tombstones")
-    dead.groupBy("term")
-      .agg((countDistinct("doc_id") * -1L).as("df"))
-      .write.mode("overwrite").parquet(s"$idx/dfreq_del")
-    dead.select("doc_id", "dl").distinct()
-      .agg((count(lit(1)) * -1L).as("n_docs"),
-        (sum("dl") * -1L).as("sum_dl"))
-      .write.mode("overwrite").parquet(s"$idx/stats_del")
+      .write.mode("overwrite").parquet(s"${seg.dir}/tombstones")
+    writeBm25Counts(dead, seg.dir)
+    seg
   }
 
   /** s95: document DELETES on the served BM25 index — s94's lifecycle
@@ -2343,20 +2318,21 @@ object SimilarityOps {
     * Σdl), so dropping the postings alone would serve stale idf/avgdl
     * weights computed over documents that no longer exist. The delete
     * step ([[bm25DeleteCohort]]) therefore writes a delete SEGMENT:
-    * the tombstone list plus negative df/stats correction rows derived
-    * from the cohort's own postings. Serving opts in: postings
-    * anti-join the tombstones before scoring, and the s88 delta sums
-    * simply include the negative rows — after which every weight is
+    * the tombstone list plus the cohort's own df/stats counts. Serving
+    * [base, delta, del] anti-joins the tombstones before scoring and
+    * subtracts the cohort's counts — after which every weight is
     * EXACTLY the from-scratch value on the filtered corpus, which is
-    * what the oracle checks (s85's SQL with the cohort removed).
-    * Non-opt-in readers (s87/s88) are untouched — spec-pinned. At
-    * scale: delete cost is O(delete set), the tombstone anti-join
-    * rides AQE broadcast while small, and s96's compaction folds the
-    * segment into the base offline. */
-  def bm25Tombstoned(s: SparkSession, d: String): DataFrame = {
-    val idx = bm25IncrDir(s, d)
-    bm25DeleteCohort(s, idx)
-    serveBm25From(s, idx, sumDeltas = true, dropTombstones = true)
+    * what the oracle checks (s85's SQL with the cohort removed). s88
+    * serves [base, delta] of the same artifact, untouched —
+    * spec-pinned; s96's compaction folds the delete offline. */
+  def bm25Tombstoned(s: SparkSession, d: String): DataFrame =
+    serveBm25(s, bm25Deleted(s, d))
+
+  /** s95's segments: s88's [base, delta] plus the delete segment,
+    * rewritten on each call (its cost stays on the s95 line item). */
+  private def bm25Deleted(s: SparkSession, d: String): Seq[Segment] = {
+    val segs = bm25IncrSegments(s, d)
+    segs :+ bm25DeleteCohort(s, segs)
   }
 
   val bm25TombstonedSql: String = bm25TopKSqlWhere("doc_id % 10 <> 3")
@@ -2364,47 +2340,32 @@ object SimilarityOps {
   // ------------------------------- s96 BM25 segment compaction
 
   /** s96: COMPACTION — the offline fold that closes the segment
-    * lifecycle s88 (append deltas) and s95 (delete segments) open.
-    * The accumulated artifact state (base + absorbed batch + negative
-    * delete segment) is rewritten into a FRESH single-segment
-    * artifact: postings minus the tombstoned docs, ONE df row per
-    * surviving term (the delta sum, ≤0 rows dropped), ONE corpus
-    * stats row, and no sidecar dirs at all — after which serving uses
-    * the plain s87 single-segment read path with zero per-query merge
-    * work (no delta sums, no anti-join). The source artifact is never
-    * touched (compact-to-new-directory + pointer swap — the em73
-    * discipline, so concurrent readers of the old artifact are never
-    * broken and the swap is atomic). Shares s95's filtered-corpus
-    * oracle: compaction must preserve ranking bit-for-bit, and the
-    * spec additionally pins the layout (one row per term, no cohort
-    * doc in postings, no tombstone sidecar). At scale the rewrite is
-    * one corpus-of-postings scan — amortized over every query it
-    * saves the merge work for, the classic LSM/search-engine segment
-    * merge. */
-  def bm25Compacted(s: SparkSession, d: String): DataFrame = {
-    val src = bm25IncrDir(s, d)
-    val idx = savedIndexes.getOrBuild(s, d, "bm25compact") { dir =>
-      bm25DeleteCohort(s, src)
-      compactBm25(s, src, dir)
-    }
-    serveBm25From(s, idx, sumDeltas = false, dropTombstones = false)
-  }
+    * lifecycle s88 (delta segments) and s95 (delete segments) open.
+    * What s95 serves (base + absorbed batch − delete segment) is
+    * written as ONE fresh base segment ([[foldBm25]]): postings minus
+    * the tombstoned docs, ONE df row per surviving term (the signed
+    * sum, zeroed terms dropped), ONE corpus stats row, and no delete
+    * segment — after which serving is the plain s87 single-segment
+    * read path with zero per-query merge work (no sums, no anti-join).
+    * The source artifact is never touched (compact-to-new-directory +
+    * pointer swap — the em73 discipline). Shares s95's filtered-corpus
+    * oracle; the spec additionally pins the layout (one row per term,
+    * no cohort doc in postings, no tombstones). At scale the rewrite
+    * is one corpus-of-postings scan, the classic LSM segment merge. */
+  def bm25Compacted(s: SparkSession, d: String): DataFrame =
+    serveBm25(s, saved(s, d, "bm25compact", "base")(dir =>
+      foldBm25(s, bm25Deleted(s, d), s"$dir/base")))
 
-  /** The s96 fold itself: rewrite `src` (base + deltas + delete
-    * segment) as a fresh single-segment artifact at `out`. */
-  private[graft] def compactBm25(
-      s: SparkSession, src: String, out: String): Unit = {
-    s.read.parquet(s"$src/postings")
-      .join(broadcast(s.read.parquet(s"$src/tombstones").distinct()),
-        Seq("doc_id"), "left_anti")
+  /** The one BM25 fold: what [[serveBm25]] reads from `segs` — live
+    * postings, summed df/stats — written as one fresh base segment at
+    * `out`. */
+  private[graft] def foldBm25(s: SparkSession, segs: Seq[Segment],
+      out: String): Unit = {
+    val (dfreq, stats) = bm25Sums(s, segs)
+    live(s, segs, "postings", tombstones(s, segs))
       .write.mode("overwrite").parquet(s"$out/postings")
-    s.read.parquet(s"$src/dfreq", s"$src/dfreq_del")
-      .groupBy("term").agg(sum("df").as("df"))
-      .filter(col("df") > 0)
-      .write.mode("overwrite").parquet(s"$out/dfreq")
-    s.read.parquet(s"$src/stats", s"$src/stats_del")
-      .agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl"))
-      .write.mode("overwrite").parquet(s"$out/stats")
+    dfreq.write.mode("overwrite").parquet(s"$out/dfreq")
+    stats.write.mode("overwrite").parquet(s"$out/stats")
   }
 
   /** s85's oracle SQL with a document-cohort filter injected — `TRUE`

@@ -1800,35 +1800,19 @@ object TextOps {
       cohort: String): DataFrame =
     s.read.parquet(s"${segmentsDir(s, d, t)}/$cohort")
 
-  /** The one signed per-key sum behind every lifecycle state: `minus`
-    * segments enter negated, and keys whose summed count reaches ZERO
-    * are dropped, so the result's ROW SET equals a from-scratch
-    * rebuild's (a key exists there iff some remaining row produced
-    * it). Exact ≡ rebuild because the counts are integers and the
-    * cohorts are disjoint or nested (the k83/d73 mergeability
-    * contract on the estimator's own state). O(segments · keys) rows,
-    * never a corpus scan. */
-  private def signedSum(t: CountTable, plus: Seq[DataFrame],
-      minus: Seq[DataFrame] = Nil): DataFrame = {
-    val negated = minus.map(_.select(
-      t.keys.map(col) ++ t.vals.map(v => (-col(v)).as(v)): _*))
-    val sums = t.vals.map(v => sum(v).as(v))
-    (plus ++ negated).reduce(_ unionByName _)
-      .groupBy(t.keys.map(col): _*).agg(sums.head, sums.tail: _*)
-      .filter(col(t.vals.head) > 0)
-  }
-
   /** ABSORBED (t79/t81): base + delta — a new crawl batch lands as its
     * own O(batch) segment and the serving state is the sum. */
   private def absorbedCounts(s: SparkSession, d: String,
       t: CountTable): DataFrame =
-    signedSum(t, Seq(segment(s, d, t, "base"), segment(s, d, t, "delta")))
+    Segments.signedSum(t.keys, t.vals,
+      Seq(segment(s, d, t, "base"), segment(s, d, t, "delta")))
 
   /** RETRACTED (t82/t83): base + delta − retract, zeroed keys dropped —
     * an erasure honored by exact count subtraction. */
   private def retractedCounts(s: SparkSession, d: String,
       t: CountTable): DataFrame =
-    signedSum(t, Seq(segment(s, d, t, "base"), segment(s, d, t, "delta")),
+    Segments.signedSum(t.keys, t.vals,
+      Seq(segment(s, d, t, "base"), segment(s, d, t, "delta")),
       Seq(segment(s, d, t, "retract")))
 
   /** The FOLDED generation (t84/t86): the retracted sum written as ONE
@@ -1860,7 +1844,8 @@ object TextOps {
     * corpus table in values and row set. */
   private def turnoverCounts(s: SparkSession, d: String,
       t: CountTable): DataFrame =
-    signedSum(t, Seq(foldedCounts(s, d, t), segment(s, d, t, "retract")))
+    Segments.signedSum(t.keys, t.vals,
+      Seq(foldedCounts(s, d, t), segment(s, d, t, "retract")))
 
   /** The DSIR model re-derived from a summed count table: the
     * identical smoothed log-ratio tail ([[dsirLrFromCounts]]) and dense
@@ -2757,7 +2742,7 @@ object TextOps {
     * (w1, w2) group) and V = |distinct w2 among the KEYS| (every ref
     * occurrence lands in some group) — so a count table summed from
     * segments reconstructs ALL THREE model tables exactly, and a kept
-    * zero-count key would inflate V ([[signedSum]] drops them).
+    * zero-count key would inflate V ([[Segments.signedSum]] drops them).
     * Checkpointed: the table feeds three consumers (c1, V, the c2
     * score join) — vocabulary-bounded rows, the t76 lesson. */
   private def lmTables(c2: DataFrame)

@@ -918,13 +918,12 @@ object StreamingOps {
     // (same values: the artifact's df/stats are the same aggregation
     // over the same doc set, restricted here to the query vocabulary)
     val q = graft.ext.SimilarityOps.bm25QueryFrame(spark)
-    val idx = graft.ext.SimilarityOps.bm25IndexDir(spark, d)
+    val (dfreq, stats) = graft.ext.SimilarityOps.bm25Sums(spark,
+      graft.ext.SimilarityOps.bm25Segments(spark, d))
     val terms = graft.ext.SimilarityOps.bm25QueryTerms
-    val dfreqL = spark.read.parquet(s"$idx/dfreq")
-      .filter(col("term").isin(terms: _*))
+    val dfreqL = dfreq.filter(col("term").isin(terms: _*))
       .as[(String, Long)].collect().toSeq.toDF("term", "df")
-    val statsL = spark.read.parquet(s"$idx/stats")
-      .as[(Long, Long)].collect().toSeq
+    val statsL = stats.as[(Long, Long)].collect().toSeq
       .toDF("n_docs", "sum_dl")
     val contribLog = drain(spark, d, "e108", f, "append") {
       graft.ext.SimilarityOps.bm25Contrib(
@@ -1623,7 +1622,7 @@ object StreamingOps {
     * future arrivals, exactly the batch gate's contract. */
   def streamSemanticGate(spark: SparkSession, d: String): DataFrame = {
     val f = feed(spark, d, "embeddings")
-    val cut = graft.ext.SimilarityOps.incrBaseCut(spark, d)
+    val cut = graft.ext.SimilarityOps.incrBase(spark, d)
     val centSeq = graft.ext.SimilarityOps.gateCentroids(spark, d)
     val base = graft.ext.DedupOps.gateBaseMembers(spark, d)
     val log = drain(spark, d, "e119", f, "append") {

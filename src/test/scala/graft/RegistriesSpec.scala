@@ -119,7 +119,7 @@ class RegistriesSpec extends AnyFunSuite with SparkSpec {
         d => rows(spark.read.text(d))),
       ("census", () => graft.operators.Sketches.censusDir(spark, sf),
         d => rows(spark.read.parquet(s"$d/census"))),
-      ("bm25", () => graft.ext.SimilarityOps.bm25IndexDir(spark, sf),
+      ("bm25", () => graft.ext.SimilarityOps.bm25Segments(spark, sf).head.dir,
         d => rows(spark.read.parquet(s"$d/postings"))),
       ("windex", () => graft.ext.DedupOps.windowIndexDir(spark, sf),
         d => rows(spark.read.parquet(s"$d/windex"))),

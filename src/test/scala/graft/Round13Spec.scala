@@ -27,15 +27,17 @@ class Round13Spec extends AnyFunSuite with SparkSpec {
       .createTempDirectory("graft-s88-spec").toString
     val mk = (ids: Seq[Long]) =>
       ids.map(i => (i, s"alpha beta gamma tok$i")).toDF("doc_id", "text")
-    graft.ext.SimilarityOps.appendBm25Batch(mk(0L to 7L), dir)
-    def census(sub: String): Map[String, Long] = {
-      val base = new java.io.File(s"$dir/$sub")
-      base.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> f.length()).toMap
-    }
+    graft.ext.SimilarityOps.writeBm25Segment(mk(0L to 7L), s"$dir/base")
+    // every segment's files of one table
+    def census(sub: String): Map[String, Long] =
+      Seq("base", "delta").flatMap { seg =>
+        Option(new java.io.File(s"$dir/$seg/$sub").listFiles()).toSeq
+          .flatten.filter(_.getName.endsWith(".parquet"))
+          .map(f => s"$seg/${f.getName}" -> f.length())
+      }.toMap
     val before =
       Seq("postings", "dfreq", "stats").map(s => s -> census(s)).toMap
-    graft.ext.SimilarityOps.appendBm25Batch(mk(8L to 9L), dir)
+    graft.ext.SimilarityOps.writeBm25Segment(mk(8L to 9L), s"$dir/delta")
     Seq("postings", "dfreq", "stats").foreach { sub =>
       val after = census(sub)
       before(sub).foreach { case (name, len) =>
@@ -46,11 +48,11 @@ class Round13Spec extends AnyFunSuite with SparkSpec {
         s"$sub gained no files — absorb did not append")
     }
     // delta-sidecar aggregation reconstructs full-corpus statistics
-    val stats = spark.read.parquet(s"$dir/stats")
+    val stats = spark.read.parquet(s"$dir/base/stats", s"$dir/delta/stats")
       .agg(sum("n_docs"), sum("sum_dl")).head()
     assert(stats.getLong(0) == 10L)
     assert(stats.getLong(1) == 40L) // 10 docs x 4 tokens
-    val df = spark.read.parquet(s"$dir/dfreq")
+    val df = spark.read.parquet(s"$dir/base/dfreq", s"$dir/delta/dfreq")
       .groupBy("term").agg(sum("df").as("df"))
       .filter(col("term") === "alpha").head().getLong(1)
     assert(df == 10L, "df deltas must sum to the full-corpus df")

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 operators: the sparse-index lifecycle closure — s95
   * tombstone deletes on the served BM25 index (the delete SEGMENT:
-  * tombstone list + negative df/stats correction rows) and s96
+  * tombstone list + the cohort's df/stats counts, summed negated) and s96
   * segment compaction (base + append deltas + delete segment folded
   * into a fresh single-segment artifact). The oracle gate proves both
   * rank bit-identically to a from-scratch BM25 over the surviving
@@ -34,39 +34,48 @@ class Round15Spec extends AnyFunSuite with SparkSpec {
   private def freshArtifact(): String = {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-s95-spec").toString
-    SimilarityOps.appendBm25Batch(mkDocs(0L to 9L), dir)
-    SimilarityOps.appendBm25Batch(mkDocs(10L to 13L), dir)
+    SimilarityOps.writeBm25Segment(mkDocs(0L to 9L), s"$dir/base")
+    SimilarityOps.writeBm25Segment(mkDocs(10L to 13L), s"$dir/delta")
     dir
   }
 
-  private def serve(idx: String, sumDeltas: Boolean, tomb: Boolean) =
-    SimilarityOps.serveBm25From(spark, idx, sumDeltas, tomb)
+  /** The artifact's add segments: [base, delta]. */
+  private def segs(dir: String) = Seq("base", "delta")
+    .map(n => SimilarityOps.Segment(s"$dir/$n"))
+
+  /** The s95 delete step on the artifact: its delete segment. */
+  private def deleteCohort(dir: String) =
+    SimilarityOps.bm25DeleteCohort(spark, segs(dir))
+
+  private def serve(segs: Seq[SimilarityOps.Segment]) =
+    SimilarityOps.serveBm25(spark, segs)
       .collect().map(_.toSeq).toSeq
 
-  private def fileCensus(dir: String, sub: String): Map[String, Long] = {
-    val base = new java.io.File(s"$dir/$sub")
-    base.listFiles().filter(_.getName.endsWith(".parquet"))
-      .map(f => f.getName -> f.length()).toMap
-  }
+  private def fileCensus(dir: String, sub: String): Map[String, Long] =
+    Seq("base", "delta").flatMap { seg =>
+      new java.io.File(s"$dir/$seg/$sub").listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+        .map(f => s"$seg/${f.getName}" -> f.length())
+    }.toMap
 
   test("s95 delete: cohort gone, stats exact, non-opt-in serving untouched") {
     val dir = freshArtifact()
-    val before = serve(dir, sumDeltas = true, tomb = false)
+    val before = serve(segs(dir))
     val census = Seq("postings", "dfreq", "stats")
       .map(s => s -> fileCensus(dir, s)).toMap
 
-    SimilarityOps.bm25DeleteCohort(spark, dir)
+    val delSeg = deleteCohort(dir)
 
-    // base + append segments survive byte-identical (delete = new
-    // sidecar dirs only, never a rewrite)
+    // base + append segments survive byte-identical (delete = a new
+    // segment only, never a rewrite)
     Seq("postings", "dfreq", "stats").foreach { sub =>
       assert(fileCensus(dir, sub) == census(sub),
         s"$sub was rewritten by the delete step")
     }
     // a reader that doesn't opt in sees NO change
-    assert(serve(dir, sumDeltas = true, tomb = false) == before)
+    assert(serve(segs(dir)) == before)
 
-    val del = serve(dir, sumDeltas = true, tomb = true)
+    val del = serve(segs(dir) :+ delSeg)
     def cohort(rows: Seq[Seq[Any]]) =
       rows.filter(_(2).asInstanceOf[Long] % 10 == 3)
     assert(cohort(before).nonEmpty, "cohort never ranked — vacuous test")
@@ -77,32 +86,32 @@ class Round15Spec extends AnyFunSuite with SparkSpec {
     // hence bit-identical scores (not just the same doc set)
     val scratch = java.nio.file.Files
       .createTempDirectory("graft-s95-scratch").toString
-    SimilarityOps.appendBm25Batch(
+    SimilarityOps.writeBm25Segment(
       mkDocs((0L to 13L).filter(_ % 10 != 3)), scratch)
-    assert(del == serve(scratch, sumDeltas = true, tomb = false))
+    assert(del == serve(Seq(SimilarityOps.Segment(scratch))))
   }
 
   test("s95 delete is idempotent (D7 retry discipline)") {
     val dir = freshArtifact()
-    SimilarityOps.bm25DeleteCohort(spark, dir)
-    val once = serve(dir, sumDeltas = true, tomb = true)
-    val tombOnce = spark.read.parquet(s"$dir/tombstones")
+    val delSeg = deleteCohort(dir)
+    val once = serve(segs(dir) :+ delSeg)
+    val tombOnce = spark.read.parquet(s"$dir/del/tombstones")
       .collect().map(_.getLong(0)).sorted.toSeq
-    SimilarityOps.bm25DeleteCohort(spark, dir)
-    assert(serve(dir, sumDeltas = true, tomb = true) == once)
-    val tombTwice = spark.read.parquet(s"$dir/tombstones")
+    deleteCohort(dir)
+    assert(serve(segs(dir) :+ delSeg) == once)
+    val tombTwice = spark.read.parquet(s"$dir/del/tombstones")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(tombTwice == tombOnce && tombOnce == Seq(3L, 13L))
   }
 
   test("s96 compaction: layout pinned, ranking preserved, source intact") {
     val dir = freshArtifact()
-    SimilarityOps.bm25DeleteCohort(spark, dir)
-    val tombServe = serve(dir, sumDeltas = true, tomb = true)
+    val deleted = segs(dir) :+ deleteCohort(dir)
+    val tombServe = serve(deleted)
 
     val out = java.nio.file.Files
       .createTempDirectory("graft-s96-spec").toString
-    SimilarityOps.compactBm25(spark, dir, out)
+    SimilarityOps.foldBm25(spark, deleted, out)
 
     // layout contract: single segment — exactly one df row per term,
     // all positive; no sidecar dirs; no tombstoned doc in postings
@@ -125,10 +134,10 @@ class Round15Spec extends AnyFunSuite with SparkSpec {
 
     // the plain single-segment read path over the compacted artifact
     // ranks exactly like the delta+tombstone path over the source
-    assert(serve(out, sumDeltas = false, tomb = false) == tombServe)
+    assert(serve(Seq(SimilarityOps.Segment(out))) == tombServe)
 
     // the source artifact is never touched by compaction
-    assert(serve(dir, sumDeltas = true, tomb = true) == tombServe)
+    assert(serve(deleted) == tombServe)
   }
 
   test("s97 compaction: sidecar retired, serving preserved, source intact") {
@@ -165,11 +174,14 @@ class Round15Spec extends AnyFunSuite with SparkSpec {
       .toDF("cid", "cv").write.parquet(s"$src/centroids")
     Seq((0, 0L, Seq(1.0)), (1, 1L, Seq(2.0)))
       .toDF("j", "cid", "cv").write.parquet(s"$src/codebooks")
-    Seq(5L, 18L).toDF("c_id").write.parquet(s"$src/tombstones")
+    val del = java.nio.file.Files
+      .createTempDirectory("graft-s97-del").toString
+    Seq(5L, 18L).toDF("vec_id").write.parquet(s"$del/tombstones")
 
     val out = java.nio.file.Files
       .createTempDirectory("graft-s97-out").toString
-    SimilarityOps.compactIvfPq(spark, src, out)
+    SimilarityOps.foldAdc(spark, Seq(SimilarityOps.Segment(src),
+      SimilarityOps.Segment(del, delete = true)), out)
 
     assert(spark.read.parquet(s"$out/members")
       .collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 4L, 7L, 20L))
@@ -284,7 +296,7 @@ class Round15Spec extends AnyFunSuite with SparkSpec {
     val cent = centE.select(col("vec_id").as("cid"), col("qv").as("cv"))
     val centSeq = centE.select("vec_id", "qv").collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toSeq)).sortBy(_._1).toSeq
-    val viaAgg = SimilarityOps.kmAssignForDedup(e, cent)
+    val viaAgg = SimilarityOps.kmAssign(e, cent)
       .select("vec_id", "cid").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val viaFold = SimilarityOps.kmAssignStateless(e, centSeq)
