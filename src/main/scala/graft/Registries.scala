@@ -14,8 +14,8 @@ object Registries {
 
   /** Register a clear that unpersists cached frames. Besides the frame
     * registries, only SimilarityOps' jointly built k-means pair (kept
-    * in its own map) and the table schema memo ([[Tables]]) use this
-    * directly. */
+    * in its own map), the parquet schema memo ([[Tables]]) and
+    * StreamingOps' input counts use this directly. */
   private[graft] def onClearFrames(clear: () => Unit): Unit = {
     frameClears.add(clear); ()
   }

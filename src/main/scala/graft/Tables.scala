@@ -11,19 +11,26 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
   * column pruning against the parquet footers for free.
   */
 object Tables {
-  // Parquet schema inference runs a Spark job per read; each table's
-  // schema is resolved once per (session, path) and later reads pass
+  // Parquet schema inference runs a Spark job per read; the schema at
+  // a path is resolved once per (session, path) and later reads pass
   // it. Released by Registries.clearAll like the frame registries.
   private val schemas = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String), StructType]()
+    (String, String), StructType]()
   Registries.onClearFrames(() => schemas.clear())
 
-  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val schema = schemas.computeIfAbsent(FrameRegistry.key(spark, dir, name),
-      _ => spark.read.parquet(path).schema)
-    spark.read.schema(schema).parquet(path)
+  /** The parquet data at `paths`, read with the schema of the first.
+    * For the driver tables and the engine's artifact tables alike: each
+    * is written with one fixed schema, which every segment of a
+    * multi-path read shares. */
+  def parquet(spark: SparkSession, paths: String*): DataFrame = {
+    val schema = schemas.computeIfAbsent(
+      (org.apache.spark.sql.graft.Bridge.sessionUUID(spark), paths.head),
+      _ => spark.read.parquet(paths.head).schema)
+    spark.read.schema(schema).parquet(paths: _*)
   }
+
+  def t(spark: SparkSession, dir: String, name: String): DataFrame =
+    parquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = t(s, d, "nation")

@@ -147,7 +147,7 @@ object DedupOps {
 
   private[graft] def substringCleanCached(s: SparkSession, d: String)
       : DataFrame =
-    s.read.parquet(s"${substringCleanDir(s, d)}/clean")
+    parquet(s, s"${substringCleanDir(s, d)}/clean")
 
   // the cached-frame builders are shared between the query sites and
   // warm(): warm re-stating the build expressions under the same keys
@@ -1355,7 +1355,7 @@ object DedupOps {
     import graft.functions.VecExprs.dot_d
     val base = SimilarityOps.incrSegments(s, d).head.dir
     val b = SimilarityOps.incrBase(s, d)
-    val cent = s.read.parquet(s"$base/centroids")
+    val cent = parquet(s, s"$base/centroids")
     val qb = SimilarityOps.kmAssign(
         SimilarityOps.quantized(s, d).filter(col("vec_id") >= b), cent)
       .select(col("vec_id"), col("cid"), col("v"))
@@ -1397,7 +1397,7 @@ object DedupOps {
     * the static side of the stream-static join). */
   private[graft] def gateBaseMembers(s: SparkSession, d: String): DataFrame = {
     import graft.functions.VecExprs.dot_d
-    s.read.parquet(s"${SimilarityOps.incrSegments(s, d).head.dir}/members")
+    parquet(s, s"${SimilarityOps.incrSegments(s, d).head.dir}/members")
       .join(SimilarityOps.quantized(s, d).select("vec_id", "v"), "vec_id")
       .select(col("vec_id").as("b_id"), col("cid"), col("v").as("bv"))
       .withColumn("bn", sqrt(dot_d(col("bv"), col("bv"))))
@@ -2118,7 +2118,7 @@ object DedupOps {
 
   /** The index rows of a window-index segment or generation dir. */
   private def windexOf(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/windex")
+    parquet(s, s"$dir/windex")
 
   /** The d71 delete step: idempotent tombstone manifest on d70's
     * persisted window index — the s94 discipline applied to the
@@ -2194,7 +2194,7 @@ object DedupOps {
     * contract; deletes by contrast deliberately do NOT decrement the
     * census — d71's frozen-cap scaladoc). */
   private def summedCensus(s: SparkSession, segs: Seq[String]): DataFrame =
-    segs.map(g => s.read.parquet(s"$g/census")).reduce(_ unionByName _)
+    segs.map(g => parquet(s, s"$g/census")).reduce(_ unionByName _)
       .groupBy("hw").agg(sum("nd").as("nd"))
 
   /** The segment union with the hot set of `census` (> [[runDocCap]]
@@ -2267,7 +2267,7 @@ object DedupOps {
         case _ =>
           summedCensus(s, segs).write.mode("overwrite")
             .parquet(s"$dir/census")
-          capped(s, segs, s.read.parquet(s"$dir/census"))
+          capped(s, segs, parquet(s, s"$dir/census"))
       }
       minusTombstones(s, d, rows)
         .write.mode("overwrite").parquet(s"$dir/windex")

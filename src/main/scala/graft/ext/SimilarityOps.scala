@@ -360,7 +360,7 @@ object SimilarityOps {
     * the quantizer's K rows). */
   private[graft] def gateCentroids(
       s: SparkSession, d: String): Seq[(Long, Seq[Long])] =
-    s.read.parquet(s"${incrSegments(s, d).head.dir}/centroids")
+    parquet(s, s"${incrSegments(s, d).head.dir}/centroids")
       .select("cid", "cv").collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toSeq))
       .sortBy(_._1).toSeq
@@ -391,9 +391,9 @@ object SimilarityOps {
     val segs = incrSegments(s, d)
     val b = incrBase(s, d)
     val n = embeddings(s, d).count()
-    val scored = s.read.parquet(paths(segs, "members"): _*)
+    val scored = parquet(s, paths(segs, "members"): _*)
       .join(quantized(s, d).select("vec_id", "qv"), "vec_id")
-      .join(broadcast(s.read.parquet(s"${segs.head.dir}/centroids")), "cid")
+      .join(broadcast(parquet(s, s"${segs.head.dir}/centroids")), "cid")
       .withColumn("d2", dist2(col("qv"), col("cv")))
       .withColumn("is_base", col("vec_id") < b)
     healthCensusOf(scored, n, kmK)
@@ -965,7 +965,7 @@ object SimilarityOps {
   private def tombstones(s: SparkSession, segs: Seq[Segment])
       : Option[DataFrame] = {
     val t = paths(segs, "tombstones", delete = true)
-    if (t.isEmpty) None else Some(s.read.parquet(t: _*).distinct())
+    if (t.isEmpty) None else Some(parquet(s, t: _*).distinct())
   }
 
   /** The live rows of `table`: the add segments' rows minus the `dead`
@@ -973,7 +973,7 @@ object SimilarityOps {
     * document can neither rank nor displace a survivor). */
   private def live(s: SparkSession, segs: Seq[Segment], table: String,
       dead: Option[DataFrame]): DataFrame = {
-    val rows = s.read.parquet(paths(segs, table): _*)
+    val rows = parquet(s, paths(segs, table): _*)
     dead.fold(rows)(t =>
       rows.join(broadcast(t), t.columns.toSeq, "left_anti"))
   }
@@ -997,8 +997,8 @@ object SimilarityOps {
   /** A segment list's frozen model: its base's (centroids, codebooks). */
   private def adcModel(s: SparkSession, segs: Seq[Segment])
       : (DataFrame, DataFrame) =
-    (s.read.parquet(s"${segs.head.dir}/centroids"),
-      s.read.parquet(s"${segs.head.dir}/codebooks"))
+    (parquet(s, s"${segs.head.dir}/centroids"),
+      parquet(s, s"${segs.head.dir}/codebooks"))
 
   /** s80: s75's IVF-PQ serving run entirely from the RELOADED parquet
     * artifact — no touch of the in-session trained model: the "serve
@@ -1030,7 +1030,7 @@ object SimilarityOps {
     val (cent, cb) = adcModel(s, segs)
     val members = live(s, segs, "members", tombstones(s, segs))
       .select(col("vec_id").as("c_id"), col("cid"))
-    val codes = s.read.parquet(paths(segs, "codes"): _*)
+    val codes = parquet(s, paths(segs, "codes"): _*)
       .select(col("vec_id").as("c_id"), col("j"), col("cid").as("code"))
     // queries are runtime input: quantize, probe the loaded coarse
     // quantizer, build the ADC lookup tables from the loaded codebooks
@@ -1137,7 +1137,7 @@ object SimilarityOps {
   private def ivfPqDeleteCohort(s: SparkSession,
       segs: Seq[Segment]): Segment = {
     val seg = deleteSegment(segs)
-    s.read.parquet(paths(segs, "members"): _*)
+    parquet(s, paths(segs, "members"): _*)
       .select("vec_id")
       .filter(col("vec_id") % 13 === 5)
       .write.mode("overwrite").parquet(s"${seg.dir}/tombstones")
@@ -2142,16 +2142,14 @@ object SimilarityOps {
     * and global [[Segments.signedSum]]s over the add segments' counts
     * with the delete segments' counts negated — exact, since df and
     * Σdl are additive over disjoint doc sets. A lone segment already
-    * holds one row per term and one stats row, and is read as is. The
-    * delete segments are read with the add segments' schema. */
+    * holds one row per term and one stats row, and is read as is. */
   private[graft] def bm25Sums(s: SparkSession, segs: Seq[Segment])
       : (DataFrame, DataFrame) = {
     def summed(table: String, keys: Seq[String], vals: String*) = {
-      val plus = s.read.parquet(paths(segs, table): _*)
+      val plus = parquet(s, paths(segs, table): _*)
       if (segs.size == 1) plus
       else Segments.signedSum(keys, vals, Seq(plus),
-        paths(segs, table, delete = true)
-          .map(s.read.schema(plus.schema).parquet(_)))
+        paths(segs, table, delete = true).map(parquet(s, _)))
     }
     (summed("dfreq", Seq("term"), "df"),
       summed("stats", Nil, "n_docs", "sum_dl"))
@@ -2249,7 +2247,7 @@ object SimilarityOps {
     * one postings scan aggregated map-side to vocab rows + a 1-row
     * broadcast totals frame (the q22 grand-total pattern). */
   def bm25Health(s: SparkSession, d: String): DataFrame =
-    bm25HealthOf(s.read.parquet(paths(bm25IncrSegments(s, d), "postings"): _*)
+    bm25HealthOf(parquet(s, paths(bm25IncrSegments(s, d), "postings"): _*)
       .select("term", "doc_id", "tf"))
 
   /** The s100 aggregate over a (term, doc_id, tf) postings frame —
@@ -2302,7 +2300,7 @@ object SimilarityOps {
   private[graft] def bm25DeleteCohort(s: SparkSession,
       segs: Seq[Segment]): Segment = {
     val seg = deleteSegment(segs)
-    val dead = s.read.parquet(paths(segs, "postings"): _*)
+    val dead = parquet(s, paths(segs, "postings"): _*)
       .filter(col("doc_id") % 10 === 3)
     dead.select("doc_id").distinct()
       .write.mode("overwrite").parquet(s"${seg.dir}/tombstones")

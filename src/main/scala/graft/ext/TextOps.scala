@@ -1798,7 +1798,7 @@ object TextOps {
   /** One cohort segment (`base`, `delta` or `retract`) of a table. */
   private[graft] def segment(s: SparkSession, d: String, t: CountTable,
       cohort: String): DataFrame =
-    s.read.parquet(s"${segmentsDir(s, d, t)}/$cohort")
+    parquet(s, s"${segmentsDir(s, d, t)}/$cohort")
 
   /** ABSORBED (t79/t81): base + delta — a new crawl batch lands as its
     * own O(batch) segment and the serving state is the sum. */
@@ -1834,7 +1834,7 @@ object TextOps {
 
   private[graft] def foldedCounts(s: SparkSession, d: String,
       t: CountTable): DataFrame =
-    s.read.parquet(s"${foldedDir(s, d, t)}/counts")
+    parquet(s, s"${foldedDir(s, d, t)}/counts")
 
   /** TURNOVER (t84/t86): folded gen-1 + the re-admitted erasure
     * cohort — a recrawl re-collects the same documents, so the count
@@ -2053,7 +2053,7 @@ object TextOps {
     * release tier's selection stage (t85/t87/e135). */
   private[graft] def dsirManifestFrame(s: SparkSession, d: String)
       : DataFrame =
-    s.read.parquet(s"${dsirManifestDir(s, d)}/manifest")
+    parquet(s, s"${dsirManifestDir(s, d)}/manifest")
 
   /** The persisted DSIR SELECTION artifacts per (session, dir): the
     * smoothed log-ratio model table (≤ m+1 rows, `lr/`) and the full
@@ -2072,7 +2072,7 @@ object TextOps {
       dsirLr(s, d).write.mode("overwrite").parquet(s"$dir/lr")
       // score with the model collected from the just-written lr
       // table — one estimator pass feeds both artifacts
-      val model = dsirModelOf(s.read.parquet(s"$dir/lr"))
+      val model = dsirModelOf(parquet(s, s"$dir/lr"))
       // checkpoint: the weight frame feeds THREE consumers (the
       // manifest rows, the normalization max, and the sketch's
       // segment pass), and the references prune to different columns
@@ -2093,7 +2093,7 @@ object TextOps {
     * — the stream twins' (e125/e129/e135) sidecar pin, bit-identical
     * to the per-call rebuild (same lr rows). */
   private[graft] def dsirModelCached(s: SparkSession, d: String): Array[Long] =
-    dsirModelOf(s.read.parquet(s"${dsirManifestDir(s, d)}/lr"))
+    dsirModelOf(parquet(s, s"${dsirManifestDir(s, d)}/lr"))
 
   /** Targeted clear for the selection artifact alone (the warm
     * re-time contract — see [[clearPplScored]]). */
@@ -2113,7 +2113,7 @@ object TextOps {
     }
 
   private[graft] def bpeVocabCached(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${bpeVocabDir(s, d)}/vocab")
+    parquet(s, s"${bpeVocabDir(s, d)}/vocab")
 
   /** Targeted clear for the vocabulary artifact alone. */
   def clearBpeVocab(): Unit = modelSegs.clear("bpe-vocab")
@@ -2631,8 +2631,8 @@ object TextOps {
 
   private def pplRefLmCachedFrom(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
-    (s.read.parquet(s"$dir/lm_c2"), s.read.parquet(s"$dir/lm_c1"),
-      s.read.parquet(s"$dir/lm_v"))
+    (parquet(s, s"$dir/lm_c2"), parquet(s, s"$dir/lm_c1"),
+      parquet(s, s"$dir/lm_v"))
 
   /** The reference LM tables served from the persisted artifact —
     * same rows as [[pplRefLm]] (Round22Spec pins the scored frame's
@@ -2644,7 +2644,7 @@ object TextOps {
 
   /** Serve the persisted scored frame (building it on first touch). */
   private[graft] def pplScoredCached(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${pplScoredDir(s, d)}/scored")
+    parquet(s, s"${pplScoredDir(s, d)}/scored")
 
   /** Targeted clear for the scored artifact alone — the warm re-time
     * contract (a full [[clearModelSegs]] would also drop the t79/t81

@@ -115,14 +115,6 @@ object EmailGraph {
   private def msgIdTokens(c: org.apache.spark.sql.Column) =
     regexp_extract_all(c, lit("<[^>]+>"), lit(0))
 
-  /** Assign `thread_id` by connected components over reply edges:
-    * a message links to every message-id in its In-Reply-To and
-    * References headers (ref: X4 — thread_id placeholder
-    * ingest_enron.py:138, headers map ingest_enron.py:106-111).
-    *
-    * thread_id = lexicographically smallest dedupe_key in the
-    * component (deterministic, human-readable root).
-    */
   /** Partition count for a Pregel job over `n` edge/vertex rows: ~50k
     * rows per partition, floored at 1, capped at session parallelism.
     * Pregel pays per-TASK overhead on every iteration, so a 5k-edge
@@ -133,8 +125,16 @@ object EmailGraph {
     math.max(1, math.min(spark.sparkContext.defaultParallelism,
       ((n + 49999) / 50000).toInt))
 
+  /** Assign `thread_id` by connected components over reply edges:
+    * a message links to every message-id in its In-Reply-To and
+    * References headers (ref: X4 — thread_id placeholder
+    * ingest_enron.py:138, headers map ingest_enron.py:106-111).
+    *
+    * thread_id = lexicographically smallest dedupe_key in the
+    * component (deterministic, human-readable root); a message with no
+    * resolvable reply link is a thread of its own.
+    */
   def assignThreadIds(spark: SparkSession, store: DataFrame): DataFrame = {
-    import spark.implicits._
     val msgs = store.select(col("dedupe_key"), col("message_id"),
       col("headers"))
     // (dedupe_key, referenced message-id) pairs
@@ -147,21 +147,16 @@ object EmailGraph {
     val targets = msgs.filter(col("message_id").isNotNull)
       .select(col("message_id").as("ref"), col("dedupe_key").as("ref_key"))
     val links = refs.join(targets, "ref")
-      .select(col("dedupe_key").as("a"), col("ref_key").as("b"))
-      .filter(col("a") =!= col("b"))
-
+      .filter(col("dedupe_key") =!= col("ref_key"))
+      .select(xxhash64(col("dedupe_key")).as("src"),
+        xxhash64(col("ref_key")).as("dst"))
+    // every message also links to itself (a self-loop carries no CC
+    // message), so a message on no reply link is a component of its own
     val vids = msgs.select(col("dedupe_key"))
       .withColumn("vid", xxhash64(col("dedupe_key")))
-    val p = pregelParts(spark, store.count())
-    val edgeRdd = links
-      .withColumn("va", xxhash64(col("a")))
-      .withColumn("vb", xxhash64(col("b")))
-      .select("va", "vb").as[(Long, Long)].rdd.coalesce(p)
-      .map { case (a, b) => Edge(a: VertexId, b: VertexId, 1) }
-    val vertexRdd = vids.select("vid").as[Long].rdd.coalesce(p).map(v => (v, 1))
-    val graph = Graph(vertexRdd, edgeRdd, defaultVertexAttr = 1)
-    val cc = graph.connectedComponents().vertices // (vid, componentVid)
-    val comp = spark.createDataFrame(cc).toDF("vid", "comp")
+    val comp = components(spark, links.union(
+      vids.select(col("vid").as("src"), col("vid").as("dst"))))
+      .toDF("vid", "comp")
 
     val withComp = vids.join(comp, "vid")
     val roots = withComp.groupBy("comp")
@@ -179,10 +174,12 @@ object EmailGraph {
     * exactly what a transitive-closure SQL oracle can recompute). */
   def components(spark: SparkSession, edgeDf: DataFrame): DataFrame = {
     import spark.implicits._
-    val edges = edgeDf.select(col("src").cast("long"), col("dst").cast("long"))
-    val p = pregelParts(spark, edges.count())
-    val edgeRdd = edges
-      .as[(Long, Long)].rdd.coalesce(p).map { case (s, d) => Edge(s: VertexId, d, 1) }
+    // counted as the RDD the graph is built from: the plan's shuffle
+    // stages run once, when the RDD is taken, and the count reuses them
+    val rows = edgeDf.select(col("src").cast("long"), col("dst").cast("long"))
+      .as[(Long, Long)].rdd
+    val p = pregelParts(spark, rows.count())
+    val edgeRdd = rows.coalesce(p).map { case (s, d) => Edge(s: VertexId, d, 1) }
     val graph = Graph.fromEdges(edgeRdd, defaultValue = 1)
     spark.createDataFrame(graph.connectedComponents().vertices)
       .toDF("id", "component")

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
@@ -48,22 +48,54 @@ object GraphOps {
   }
 
   private def copurchaseEdges(s: SparkSession, d: String): DataFrame =
-    frames.cached(s, d, "edges") {
-      val hi = lineitem(s, d).filter(col("l_quantity") >= 48)
-        .select("l_orderkey", "l_partkey")
-      hi.toDF("l_orderkey", "p1")
-        .join(hi.toDF("l_orderkey", "p2"), "l_orderkey")
-        .filter(col("p1") < col("p2"))
-        .select("p1", "p2").distinct()
-    }
+    frames.cached(s, d, "edges")(copurchaseEdgesWhere(s, d))
 
-  private val copurchaseEdgesSql =
-    """SELECT DISTINCT a.l_partkey p1, b.l_partkey p2
+  /** The one edge builder: co-purchase edges (p1 < p2, distinct) over
+    * the orders matching `pred`. [[copurchaseEdges]] takes every order;
+    * g104/g105's base graph and batch take the [[batchOrders]] split. */
+  private def copurchaseEdgesWhere(s: SparkSession, d: String,
+      pred: Column = lit(true)): DataFrame = {
+    val hi = lineitem(s, d).filter(col("l_quantity") >= 48)
+      .filter(pred).select("l_orderkey", "l_partkey")
+    hi.toDF("l_orderkey", "p1")
+      .join(hi.toDF("l_orderkey", "p2"), "l_orderkey")
+      .filter(col("p1") < col("p2"))
+      .select("p1", "p2").distinct()
+  }
+
+  /** g104/g105's new day of orders; the base graph is every other
+    * order (the 4/5 discipline of s81/s88/d58). */
+  private def batchOrders: Column = col("l_orderkey") % 5 === 0
+
+  /** Per-vertex degree (v, deg) of an undirected edge frame (p1, p2),
+    * read by g93, g95/g101, g96 and g100. */
+  private def degrees(e: DataFrame): DataFrame =
+    e.select(col("p1").as("v")).union(e.select(col("p2").as("v")))
+      .groupBy("v").agg(count(lit(1)).as("deg"))
+
+  /** Both orientations (v, u) of every undirected edge (p1, p2): the
+    * adjacency g98, g99 and g100 walk. */
+  private def adjacency(e: DataFrame): DataFrame =
+    e.select(col("p1").as("v"), col("p2").as("u"))
+      .union(e.select(col("p2").as("v"), col("p1").as("u")))
+
+  /** The oracle twin of [[copurchaseEdgesWhere]]: `cond` is an
+    * `AND ...` suffix of the quantity filter. */
+  private def edgesSql(cond: String = ""): String =
+    s"""SELECT DISTINCT a.l_partkey p1, b.l_partkey p2
       |  FROM (SELECT l_orderkey, l_partkey FROM lineitem
-      |        WHERE l_quantity >= 48) a
+      |        WHERE l_quantity >= 48$cond) a
       |  JOIN (SELECT l_orderkey, l_partkey FROM lineitem
-      |        WHERE l_quantity >= 48) b
+      |        WHERE l_quantity >= 48$cond) b
       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey""".stripMargin
+
+  private val withEdgesSql = s"WITH edges AS (${edgesSql()})"
+
+  /** The oracle twin of [[adjacency]]. */
+  private val withAdjacencySql =
+    s"""$withEdgesSql,
+      |ue AS (SELECT p1 v, p2 u FROM edges UNION ALL SELECT p2, p1 FROM edges)"""
+      .stripMargin
 
   /** g92: connected components of the co-purchase graph — GraphX
     * (iterative Pregel fixpoint) checked against a recursive
@@ -88,7 +120,7 @@ object GraphOps {
       .orderBy("part_id")
 
   val copurchaseComponentsSql: String =
-    s"""WITH RECURSIVE edges AS ($copurchaseEdgesSql),
+    s"""WITH RECURSIVE edges AS (${edgesSql()}),
       |ue AS (SELECT p1 a, p2 b FROM edges UNION SELECT p2, p1 FROM edges),
       |reach(a, b) AS (
       |  SELECT p1, p1 FROM (SELECT p1 FROM edges UNION SELECT p2 FROM edges) t(p1)
@@ -99,37 +131,19 @@ object GraphOps {
 
   /** g93: degree centrality on the co-purchase graph (DataFrame-land
     * graph query — no GraphX needed for one-hop shapes). */
-  def copurchaseDegrees(s: SparkSession, d: String): DataFrame = {
-    val e = copurchaseEdges(s, d)
-    e.select(col("p1").as("part_id"))
-      .union(e.select(col("p2").as("part_id")))
-      .groupBy("part_id")
-      .agg(count(lit(1)).as("degree"))
+  def copurchaseDegrees(s: SparkSession, d: String): DataFrame =
+    degrees(copurchaseEdges(s, d)).toDF("part_id", "degree")
       .orderBy(col("degree").desc, col("part_id"))
       .limit(25)
-  }
 
   val copurchaseDegreesSql: String =
-    s"""WITH edges AS ($copurchaseEdgesSql)
+    s"""$withEdgesSql
       |SELECT part_id, count(*) AS degree FROM (
       |  SELECT p1 AS part_id FROM edges
       |  UNION ALL SELECT p2 FROM edges)
       |GROUP BY part_id ORDER BY degree DESC, part_id LIMIT 25""".stripMargin
 
   // ---------------------------- g104 incremental component maintenance
-
-  /** Co-purchase edges restricted to an order predicate — the
-    * base/batch split behind g104 (the shared [[copurchaseEdges]]
-    * frame is the unrestricted union). */
-  private def copurchaseEdgesWhere(s: SparkSession, d: String,
-      pred: org.apache.spark.sql.Column): DataFrame = {
-    val hi = lineitem(s, d).filter(col("l_quantity") >= 48)
-      .filter(pred).select("l_orderkey", "l_partkey")
-    hi.toDF("l_orderkey", "p1")
-      .join(hi.toDF("l_orderkey", "p2"), "l_orderkey")
-      .filter(col("p1") < col("p2"))
-      .select("p1", "p2").distinct()
-  }
 
   /** The BASE-graph edge frame (orders with l_orderkey % 5 != 0),
     * registry-cached: g104's base CC and g105's base PR each ran the
@@ -141,7 +155,7 @@ object GraphOps {
     * and the edge build's cost stays attributed to cache_graph_edges. */
   private def baseEdges(s: SparkSession, d: String): DataFrame =
     frames.cached(s, d, "base_edges") {
-      copurchaseEdgesWhere(s, d, col("l_orderkey") % 5 =!= 0)
+      copurchaseEdgesWhere(s, d, !batchOrders)
     }
 
   /** The "already deployed" component-label table: CC of the BASE
@@ -209,13 +223,14 @@ object GraphOps {
     * edge pair arising in both cohorts is idempotent under union). */
   def incrementalComponents(s: SparkSession, d: String): DataFrame =
     absorbEdgesIntoCc(s, incrCcBase(s, d),
-      copurchaseEdgesWhere(s, d, col("l_orderkey") % 5 === 0))
+      copurchaseEdgesWhere(s, d, batchOrders))
       .select(col("id").as("part_id"), col("component"))
       .orderBy("part_id")
 
   // --------------------------------------- g94 fixed-point PageRank
 
   private val prScale = 1000000L // rank 1.0 == 1e6
+  private val teleMass = prScale * 15 / 100
   private val prIters = 10
 
   /** Registry-cached PageRank operands shared by g94 and g97: the
@@ -227,17 +242,24 @@ object GraphOps {
     * query. `rank div deg` per edge equals the per-source contribution
     * joined onto each edge, so results are bit-identical. */
   private def prVerts(s: SparkSession, d: String): DataFrame =
-    frames.cached(s, d, "prverts") {
-      val e = copurchaseEdges(s, d)
-      e.select(col("p1").as("id")).union(e.select(col("p2"))).distinct()
-    }
+    frames.cached(s, d, "prverts")(prOperands(copurchaseEdges(s, d))._1)
 
   private def prEdgeDeg(s: SparkSession, d: String): DataFrame =
-    frames.cached(s, d, "predgedeg") {
-      val e = copurchaseEdges(s, d).toDF("src", "dst")
-      e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
-        .select("src", "dst", "deg")
-    }
+    frames.cached(s, d, "predgedeg")(prOperands(copurchaseEdges(s, d))._2)
+
+  /** The PageRank operands of an edge frame (p1, p2): its vertex set
+    * (id) and its edges (src, dst) joined with the source out-degree
+    * (deg). */
+  private def prOperands(e: DataFrame): (DataFrame, DataFrame) = {
+    val ed = e.toDF("src", "dst")
+    (ed.select(col("src").as("id")).union(ed.select(col("dst"))).distinct(),
+      ed.join(ed.groupBy("src").agg(count(lit(1)).as("deg")), "src")
+        .select("src", "dst", "deg"))
+  }
+
+  /** The uniform start: every vertex of `verts` at rank 1.0. */
+  private def uniformRanks(verts: DataFrame): DataFrame =
+    verts.withColumn("rank", lit(prScale)).localCheckpoint(true)
 
   /** The fixed-point PR iteration loop shared by g94/g97/g105/g106:
     * from a (id, rank) frame, `iters` exact-integer steps over the
@@ -247,8 +269,7 @@ object GraphOps {
     * fixture scale); a 5-deep iteration lineage is still a small
     * plan. */
   private[graft] def prSteps(r0: DataFrame, ed: DataFrame, iters: Int,
-      teleport: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
-      : DataFrame =
+      teleport: Column => Column): DataFrame =
     prStepsTap(r0, ed, iters, teleport, -1)._1
 
   /** [[prSteps]] that additionally returns the (checkpointed) iterate
@@ -258,8 +279,8 @@ object GraphOps {
     * re-running the first `tapAt` iterations. Checkpointing the tap
     * does not change values, only lineage. */
   private[graft] def prStepsTap(r0: DataFrame, ed: DataFrame, iters: Int,
-      teleport: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-      tapAt: Int): (DataFrame, Option[DataFrame]) = {
+      teleport: Column => Column, tapAt: Int)
+      : (DataFrame, Option[DataFrame]) = {
     var r = r0
     var tap: Option[DataFrame] = None
     for (i <- 1 to iters) {
@@ -278,9 +299,7 @@ object GraphOps {
     (r, tap)
   }
 
-  private def uniformTeleport(
-      id: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    lit(prScale * 15 / 100)
+  private def uniformTeleport(id: Column): Column = lit(teleMass)
 
   /** g94: PageRank over the co-purchase graph in FIXED-POINT integer
     * arithmetic — contributions use integer division by out-degree and
@@ -298,8 +317,8 @@ object GraphOps {
   def pagerankFixed(s: SparkSession, d: String): DataFrame =
     // registry-cached shared operands; the rename projection on top is
     // free — a second .cache() here held a duplicate copy
-    prSteps(prVerts(s, d).withColumn("rank", lit(prScale))
-        .localCheckpoint(true), prEdgeDeg(s, d), prIters, uniformTeleport)
+    prSteps(uniformRanks(prVerts(s, d)), prEdgeDeg(s, d), prIters,
+        uniformTeleport)
       .select(col("id").as("part_id"), col("rank").as("rank_fp"))
       .orderBy("part_id")
 
@@ -310,8 +329,8 @@ object GraphOps {
     * arithmetic and checkpointed DataFrame loop as g94, so the whole
     * 10-iteration personalized walk is oracle-checked bit-for-bit. */
   def personalizedPagerankFixed(s: SparkSession, d: String): DataFrame = {
-    def teleport(id: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      when(id % 50 === 0, lit(prScale * 15 / 100)).otherwise(lit(0L))
+    def teleport(id: Column): Column =
+      when(id % 50 === 0, lit(teleMass)).otherwise(lit(0L))
     prSteps(prVerts(s, d).withColumn("rank",
           when(col("id") % 50 === 0, lit(prScale)).otherwise(lit(0L)))
         .localCheckpoint(true),
@@ -320,48 +339,50 @@ object GraphOps {
       .orderBy("part_id")
   }
 
-  val personalizedPagerankSql: String = {
-    val tele = "CASE WHEN v.id % 50 = 0 THEN " + (prScale * 15 / 100) +
-      " ELSE 0 END"
-    val iters = (1 to prIters).map { k =>
-      s"""pp$k AS (
+  /** The oracle's PR graph `g` (a CTE name prefix): its edges over the
+    * orders matching `cond` (see [[edgesSql]]), vertex set and source
+    * out-degree. */
+  private def prGraphSql(g: String = "", cond: String = ""): String =
+    s"""${g}edges AS (${edgesSql(cond)}),
+      |${g}verts AS (SELECT p1 id FROM ${g}edges UNION SELECT p2 FROM ${g}edges),
+      |${g}outdeg AS (SELECT p1 src, count(*) deg FROM ${g}edges GROUP BY 1)"""
+      .stripMargin
+
+  /** The oracle twin of [[uniformRanks]]: step 0 of chain `name`. */
+  private def prInitSql(name: String, g: String = ""): String =
+    s"${name}0 AS (SELECT id, CAST($prScale AS BIGINT) rank FROM ${g}verts)"
+
+  /** The oracle twin of [[prSteps]]: CTEs `name`1..`name``iters` over
+    * PR graph `g`, each from its predecessor (`name`0 is the caller's),
+    * with per-vertex teleport mass `tele` (SQL over `v.id`). */
+  private def prIterSqlChain(name: String, iters: Int, g: String = "",
+      tele: String = teleMass.toString): String =
+    (1 to iters).map { k =>
+      s"""$name$k AS (
         |  SELECT v.id,
         |    $tele + (coalesce(c.s, 0) * 85) // 100 AS rank
-        |  FROM verts v LEFT JOIN (
+        |  FROM ${g}verts v LEFT JOIN (
         |    SELECT e.p2 id, sum(p.rank // d.deg) s
-        |    FROM pp${k - 1} p JOIN edges e ON e.p1 = p.id
-        |    JOIN outdeg d ON d.src = p.id GROUP BY 1) c ON c.id = v.id)"""
+        |    FROM $name${k - 1} p JOIN ${g}edges e ON e.p1 = p.id
+        |    JOIN ${g}outdeg d ON d.src = p.id GROUP BY 1) c ON c.id = v.id)"""
         .stripMargin
     }.mkString(",\n")
-    s"""WITH edges AS ($copurchaseEdgesSql),
-      |verts AS (SELECT p1 id FROM edges UNION SELECT p2 FROM edges),
-      |outdeg AS (SELECT p1 src, count(*) deg FROM edges GROUP BY 1),
+
+  val personalizedPagerankSql: String =
+    s"""WITH ${prGraphSql()},
       |pp0 AS (SELECT id, CAST(CASE WHEN id % 50 = 0 THEN $prScale ELSE 0 END
       |  AS BIGINT) rank FROM verts),
-      |$iters
+      |${prIterSqlChain("pp", prIters,
+          tele = s"CASE WHEN v.id % 50 = 0 THEN $teleMass ELSE 0 END")}
       |SELECT id AS part_id, CAST(rank AS BIGINT) AS pprank_fp
       |FROM pp$prIters ORDER BY part_id""".stripMargin
-  }
 
-  val pagerankFixedSql: String = {
-    val iters = (1 to prIters).map { k =>
-      s"""pr$k AS (
-        |  SELECT v.id,
-        |    ${prScale * 15 / 100} + (coalesce(c.s, 0) * 85) // 100 AS rank
-        |  FROM verts v LEFT JOIN (
-        |    SELECT e.p2 id, sum(p.rank // d.deg) s
-        |    FROM pr${k - 1} p JOIN edges e ON e.p1 = p.id
-        |    JOIN outdeg d ON d.src = p.id GROUP BY 1) c ON c.id = v.id)"""
-        .stripMargin
-    }.mkString(",\n")
-    s"""WITH edges AS ($copurchaseEdgesSql),
-      |verts AS (SELECT p1 id FROM edges UNION SELECT p2 FROM edges),
-      |outdeg AS (SELECT p1 src, count(*) deg FROM edges GROUP BY 1),
-      |pr0 AS (SELECT id, CAST($prScale AS BIGINT) rank FROM verts),
-      |$iters
+  val pagerankFixedSql: String =
+    s"""WITH ${prGraphSql()},
+      |${prInitSql("pr")},
+      |${prIterSqlChain("pr", prIters)}
       |SELECT id AS part_id, CAST(rank AS BIGINT) AS rank_fp
       |FROM pr$prIters ORDER BY part_id""".stripMargin
-  }
 
   // -------------------------- g105/g106 warm-start PageRank maintenance
 
@@ -375,13 +396,8 @@ object GraphOps {
     * ABSORB over the updated graph. */
   private def incrPrBase(s: SparkSession, d: String): DataFrame =
     frames.cached(s, d, "incr_pr_base") {
-      val e = baseEdges(s, d).toDF("src", "dst")
-      val ed = e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
-        .select("src", "dst", "deg")
-      val verts = e.select(col("src").as("id"))
-        .union(e.select(col("dst"))).distinct()
-      prSteps(verts.withColumn("rank", lit(prScale)).localCheckpoint(true),
-        ed, prIters, uniformTeleport)
+      val (verts, ed) = prOperands(baseEdges(s, d))
+      prSteps(uniformRanks(verts), ed, prIters, uniformTeleport)
     }
 
   private[graft] def clearIncrPrBase(): Unit = frames.drop("incr_pr_base")
@@ -433,8 +449,7 @@ object GraphOps {
     * numbers, and a regression ships loudly). */
   def warmStartGain(s: SparkSession, d: String): DataFrame = {
     val ed = prEdgeDeg(s, d)
-    val uni = prVerts(s, d).withColumn("rank", lit(prScale))
-      .localCheckpoint(true)
+    val uni = uniformRanks(prVerts(s, d))
     // cold (warmIters from uniform) IS the reference chain's
     // warmIters-th iterate — tap it instead of paying those
     // iterations twice (round-16: 4 of 23 iterations removed,
@@ -455,46 +470,17 @@ object GraphOps {
       .orderBy("strategy")
   }
 
-  /** Generated iteration CTEs for the oracle replays (the
-    * pagerankFixedSql block parameterized by CTE names). */
-  private def prIterSqlChain(prefix: String, from: Int, to: Int,
-      vertsN: String, edgesN: String, outdegN: String): String =
-    (from to to).map { k =>
-      val prev = if (k == from) s"${prefix}0" else s"$prefix${k - 1}"
-      s"""$prefix$k AS (
-        |  SELECT v.id,
-        |    ${prScale * 15 / 100} + (coalesce(c.s, 0) * 85) // 100 AS rank
-        |  FROM $vertsN v LEFT JOIN (
-        |    SELECT e.p2 id, sum(p.rank // d.deg) s
-        |    FROM $prev p JOIN $edgesN e ON e.p1 = p.id
-        |    JOIN $outdegN d ON d.src = p.id GROUP BY 1) c ON c.id = v.id)"""
-        .stripMargin
-    }.mkString(",\n")
-
-  private val baseEdgesSql =
-    """SELECT DISTINCT a.l_partkey p1, b.l_partkey p2
-      |  FROM (SELECT l_orderkey, l_partkey FROM lineitem
-      |        WHERE l_quantity >= 48 AND l_orderkey % 5 <> 0) a
-      |  JOIN (SELECT l_orderkey, l_partkey FROM lineitem
-      |        WHERE l_quantity >= 48 AND l_orderkey % 5 <> 0) b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey"""
-      .stripMargin
-
   /** Shared oracle prefix: full + base graphs, the base-10 run, and
     * the warmIters-iteration warm run from the coalesced init. */
   private lazy val warmSqlPrefix: String =
-    s"""WITH edges AS ($copurchaseEdgesSql),
-      |verts AS (SELECT p1 id FROM edges UNION SELECT p2 FROM edges),
-      |outdeg AS (SELECT p1 src, count(*) deg FROM edges GROUP BY 1),
-      |bedges AS ($baseEdgesSql),
-      |bverts AS (SELECT p1 id FROM bedges UNION SELECT p2 FROM bedges),
-      |boutdeg AS (SELECT p1 src, count(*) deg FROM bedges GROUP BY 1),
-      |bp0 AS (SELECT id, CAST($prScale AS BIGINT) rank FROM bverts),
-      |${prIterSqlChain("bp", 1, prIters, "bverts", "bedges", "boutdeg")},
+    s"""WITH ${prGraphSql()},
+      |${prGraphSql("b", " AND l_orderkey % 5 <> 0")},
+      |${prInitSql("bp", "b")},
+      |${prIterSqlChain("bp", prIters, "b")},
       |wp0 AS (
       |  SELECT v.id, CAST(coalesce(b.rank, $prScale) AS BIGINT) rank
       |  FROM verts v LEFT JOIN bp$prIters b ON b.id = v.id),
-      |${prIterSqlChain("wp", 1, warmIters, "verts", "edges", "outdeg")}"""
+      |${prIterSqlChain("wp", warmIters)}"""
       .stripMargin
 
   lazy val warmStartPagerankSql: String =
@@ -504,10 +490,10 @@ object GraphOps {
 
   lazy val warmStartGainSql: String =
     s"""$warmSqlPrefix,
-      |rp0 AS (SELECT id, CAST($prScale AS BIGINT) rank FROM verts),
-      |${prIterSqlChain("rp", 1, refIters, "verts", "edges", "outdeg")},
-      |cp0 AS (SELECT id, CAST($prScale AS BIGINT) rank FROM verts),
-      |${prIterSqlChain("cp", 1, warmIters, "verts", "edges", "outdeg")},
+      |${prInitSql("rp")},
+      |${prIterSqlChain("rp", refIters)},
+      |${prInitSql("cp")},
+      |${prIterSqlChain("cp", warmIters)},
       |l1 AS (
       |  SELECT CAST(sum(abs(c.rank - r.rank)) AS BIGINT) AS cold_l1,
       |    CAST(sum(abs(w.rank - r.rank)) AS BIGINT) AS warm_l1
@@ -673,17 +659,11 @@ object GraphOps {
       frames.cached(s, d, "tri.counts")(built._2))
   }
 
-  /** Degree-ordered triangle counting over (p1, p2) undirected distinct
-    * edges with p1 < p2. */
-  private[graft] def trianglesFrom(e: DataFrame): DataFrame =
-    trianglesWithDeg(e)._2
-
   /** The triangle pipeline with its per-vertex degree frame exposed —
     * g101 divides by exactly the degree the orientation used, so the
     * two can never drift (and the union+groupBy runs once). */
   private[graft] def trianglesWithDeg(e: DataFrame): (DataFrame, DataFrame) = {
-    val deg = e.select(col("p1").as("v")).union(e.select(col("p2").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("deg"))
+    val deg = degrees(e)
     val withDeg = e
       .join(deg.toDF("p1", "da"), "p1")
       .join(deg.toDF("p2", "db"), "p2")
@@ -704,8 +684,10 @@ object GraphOps {
     (deg, counts)
   }
 
-  val triangleCountsSql: String =
-    s"""WITH edges AS ($copurchaseEdgesSql),
+  /** The oracle's degree-ordered triangle CTEs (deg, o, od, tri) over
+    * the co-purchase edges, read by g95 and g101. */
+  private val trianglesSql: String =
+    s"""$withEdgesSql,
       |deg AS (
       |  SELECT v, count(*) AS deg FROM (
       |    SELECT p1 AS v FROM edges UNION ALL SELECT p2 FROM edges)
@@ -722,7 +704,10 @@ object GraphOps {
       |  SELECT w1.src AS a, w1.dst AS b, w2.dst AS c
       |  FROM od w1 JOIN od w2 ON w1.src = w2.src
       |    AND (w1.ddeg, w1.dst) < (w2.ddeg, w2.dst)
-      |  JOIN o cl ON cl.src = w1.dst AND cl.dst = w2.dst)
+      |  JOIN o cl ON cl.src = w1.dst AND cl.dst = w2.dst)""".stripMargin
+
+  val triangleCountsSql: String =
+    s"""$trianglesSql
       |SELECT part_id, count(*) AS n_triangles FROM (
       |  SELECT a AS part_id FROM tri
       |  UNION ALL SELECT b FROM tri
@@ -748,18 +733,12 @@ object GraphOps {
     // measured 39s at sf0.1 unchecked vs ~1s checkpointed
     var e = copurchaseEdges(s, d).localCheckpoint()
     for (_ <- 1 to coreRounds) {
-      val keep = e.select(col("p1").as("v"))
-        .union(e.select(col("p2").as("v")))
-        .groupBy("v").agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= 2)
+      val keep = degrees(e).filter(col("deg") >= 2)
       e = e.join(keep.select(col("v").as("p1")), Seq("p1"), "left_semi")
         .join(keep.select(col("v").as("p2")), Seq("p2"), "left_semi")
         .localCheckpoint()
     }
-    e.select(col("p1").as("part_id"))
-      .union(e.select(col("p2").as("part_id")))
-      .groupBy("part_id").agg(count(lit(1)).as("core_degree"))
-      .orderBy("part_id")
+    degrees(e).toDF("part_id", "core_degree").orderBy("part_id")
   }
 
   val twoCoreSql: String = {
@@ -772,7 +751,7 @@ object GraphOps {
         |  SELECT e.p1, e.p2 FROM e$i e
         |  JOIN deg$i a ON a.v = e.p1 AND a.deg >= 2
         |  JOIN deg$i b ON b.v = e.p2 AND b.deg >= 2)""".stripMargin
-    s"""WITH e0 AS ($copurchaseEdgesSql),
+    s"""WITH e0 AS (${edgesSql()}),
       |${(0 until coreRounds).map(peel).mkString(",\n")}
       |SELECT part_id, count(*) AS core_degree FROM (
       |  SELECT p1 AS part_id FROM e$coreRounds
@@ -797,9 +776,7 @@ object GraphOps {
     * tree otherwise). Scale: each round shuffles edges once on the
     * neighbor key — the Pregel message pattern in DataFrame form. */
   def labelPropagation(s: SparkSession, d: String): DataFrame = {
-    val e = copurchaseEdges(s, d)
-    val ue = e.select(col("p1").as("v"), col("p2").as("u"))
-      .union(e.select(col("p2").as("v"), col("p1").as("u")))
+    val ue = adjacency(copurchaseEdges(s, d))
     var labels = ue.select(col("v").as("id")).distinct()
       .withColumn("lbl", col("id"))
     for (_ <- 1 to lpaIters) {
@@ -825,8 +802,7 @@ object GraphOps {
         |    FROM ue JOIN l${i - 1} l ON l.id = ue.u
         |    GROUP BY ue.v, l.lbl)
         |  WHERE rn = 1)""".stripMargin
-    s"""WITH edges AS ($copurchaseEdgesSql),
-      |ue AS (SELECT p1 v, p2 u FROM edges UNION ALL SELECT p2, p1 FROM edges),
+    s"""$withAdjacencySql,
       |l0 AS (SELECT DISTINCT v AS id, v AS lbl FROM ue),
       |${(1 to lpaIters).map(step).mkString(",\n")}
       |SELECT id AS part_id, lbl AS community FROM l$lpaIters
@@ -849,9 +825,7 @@ object GraphOps {
     * round's shuffle is bounded by edges incident to reached vertices —
     * the property that keeps early BFS rounds cheap at 100×. */
   def bfsHops(s: SparkSession, d: String): DataFrame = {
-    val e = copurchaseEdges(s, d)
-    val ue = e.select(col("p1").as("v"), col("p2").as("u"))
-      .union(e.select(col("p2").as("v"), col("p1").as("u")))
+    val ue = adjacency(copurchaseEdges(s, d))
     var dist = ue.select(col("v")).distinct()
       .withColumn("dist",
         when(col("v") % 97 === 0, 0L).otherwise(lit(bfsInf)))
@@ -878,8 +852,7 @@ object GraphOps {
         |d$i AS (
         |  SELECT d.v, least(d.dist, coalesce(p.nd, $bfsInf)) AS dist
         |  FROM d${i - 1} d LEFT JOIN p$i p USING (v))""".stripMargin
-    s"""WITH edges AS ($copurchaseEdgesSql),
-      |ue AS (SELECT p1 v, p2 u FROM edges UNION ALL SELECT p2, p1 FROM edges),
+    s"""$withAdjacencySql,
       |d0 AS (SELECT v, CASE WHEN v % 97 = 0 THEN 0 ELSE $bfsInf END AS dist
       |       FROM (SELECT DISTINCT v FROM ue)),
       |${(1 to bfsRounds).map(step).mkString(",\n")}
@@ -901,9 +874,8 @@ object GraphOps {
     * narrow agg; the degree frame is vertex-sized. */
   def edgeJaccard(s: SparkSession, d: String): DataFrame = {
     val e = copurchaseEdges(s, d)
-    val ue = e.select(col("p1").as("v"), col("p2").as("u"))
-      .union(e.select(col("p2").as("v"), col("p1").as("u")))
-    val deg = ue.groupBy("v").agg(count(lit(1)).as("deg"))
+    val ue = adjacency(e)
+    val deg = degrees(e)
     val oriented = e
       .join(deg.toDF("p1", "deg1"), "p1")
       .join(deg.toDF("p2", "deg2"), "p2")
@@ -924,8 +896,7 @@ object GraphOps {
   }
 
   val edgeJaccardSql: String =
-    s"""WITH edges AS ($copurchaseEdgesSql),
-      |ue AS (SELECT p1 v, p2 u FROM edges UNION ALL SELECT p2, p1 FROM edges),
+    s"""$withAdjacencySql,
       |deg AS (SELECT v, count(*) AS deg FROM ue GROUP BY v),
       |o AS (
       |  SELECT e.p1, e.p2, da.deg AS deg1, db.deg AS deg2,
@@ -969,24 +940,7 @@ object GraphOps {
   }
 
   val clusteringCoefficientSql: String =
-    s"""WITH edges AS ($copurchaseEdgesSql),
-      |deg AS (
-      |  SELECT v, count(*) AS deg FROM (
-      |    SELECT p1 AS v FROM edges UNION ALL SELECT p2 FROM edges)
-      |  GROUP BY 1),
-      |o AS (
-      |  SELECT CASE WHEN (da.deg, e.p1) < (db.deg, e.p2)
-      |              THEN e.p1 ELSE e.p2 END AS src,
-      |         CASE WHEN (da.deg, e.p1) < (db.deg, e.p2)
-      |              THEN e.p2 ELSE e.p1 END AS dst
-      |  FROM edges e JOIN deg da ON da.v = e.p1 JOIN deg db ON db.v = e.p2),
-      |od AS (SELECT o.src, o.dst, dd.deg AS ddeg
-      |       FROM o JOIN deg dd ON dd.v = o.dst),
-      |tri AS (
-      |  SELECT w1.src AS a, w1.dst AS b, w2.dst AS c
-      |  FROM od w1 JOIN od w2 ON w1.src = w2.src
-      |    AND (w1.ddeg, w1.dst) < (w2.ddeg, w2.dst)
-      |  JOIN o cl ON cl.src = w1.dst AND cl.dst = w2.dst),
+    s"""$trianglesSql,
       |tc AS (
       |  SELECT part_id, count(*) AS n_triangles FROM (
       |    SELECT a AS part_id FROM tri

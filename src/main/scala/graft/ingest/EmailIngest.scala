@@ -80,17 +80,22 @@ object EmailIngest {
     // failure throws rather than record an EMPTY job for data that was
     // never ingested
     if (roots.isEmpty) return emptyScan(spark)
-    spark.read.format("binaryFile")
+    depth3(spark.read.format("binaryFile")
       .option("recursiveFileLookup", "true")
-      .load(roots: _*)
-      .filter(col("path").rlike(pat))
+      .load(roots: _*), pat)
+  }
+
+  /** The `binaryFile` rows of `files` at exactly depth 3 under the base
+    * `pat` anchors ([[depth3Pattern]]), with the hierarchy recovered
+    * from the path — the batch [[scan]] and the stream ingest's scan. */
+  private[graft] def depth3(files: DataFrame, pat: String): DataFrame =
+    files.filter(col("path").rlike(pat))
       .select(
         col("path"),
         regexp_extract(col("path"), pat, 1).as("user"),
         regexp_extract(col("path"), pat, 2).as("folder"),
         regexp_extract(col("path"), pat, 3).as("filename"),
         col("content"))
-  }
 
   /** The depth-3 files `scanned`, a [[scan]] of `baseDir`, reads,
     * counted on the driver from the listing its file relation already

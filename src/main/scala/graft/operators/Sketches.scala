@@ -495,7 +495,7 @@ object Sketches {
     val bottomK = udaf(
       new graft.functions.BoundedAggs.BottomKDistinct(censusK),
       Encoders.scalaLong)
-    val segs = s.read.parquet(s"$dir/census")
+    val segs = Tables.parquet(s, s"$dir/census")
     val counts = segs.groupBy("source")
       .agg(sum("token_cnt").as("token_cnt"), sum("doc_cnt").as("doc_cnt"))
     val regs = segs.select(col("source"), explode(col("kmv.items")).as("h"))

@@ -51,19 +51,24 @@ class PartitionedEmailStore(spark: SparkSession, root: String)
     * kept so month predicates prune at planning time). */
   def read(): DataFrame = spark.read.parquet(root)
 
-  /** The stored rows of `months`, without the partition column. One
-    * driver listing of the root picks the month dirs that exist, read
-    * with the fixed store schema: [[read]] would infer the schema with a
-    * job of its own. */
+  /** The month partition dirs of a non-empty store, by month: one
+    * driver listing of the root. */
+  private def monthDirs(): Seq[(String, Path)] =
+    fs.listStatus(new Path(root)).toSeq
+      .filter(st => st.isDirectory &&
+        st.getPath.getName.startsWith("date_month="))
+      .map(st => st.getPath.getName.stripPrefix("date_month=") -> st.getPath)
+
+  /** The stored rows of `months`, without the partition column. The
+    * month dirs that exist are read with the fixed store schema:
+    * [[read]] would infer the schema with a job of its own. */
   private def readMonths(months: Seq[String]): DataFrame = {
-    val dirs = months.map(m => s"date_month=$m").toSet
-    val present = fs.listStatus(new Path(root))
-      .filter(st => st.isDirectory && dirs(st.getPath.getName))
-      .map(_.getPath.toString)
+    val present = monthDirs().collect {
+      case (m, p) if months.contains(m) => p.toString }
     if (present.isEmpty)
       spark.createDataFrame(java.util.Collections.emptyList[Row](),
         EmailDoc.schema)
-    else spark.read.schema(EmailDoc.schema).parquet(present.toIndexedSeq: _*)
+    else spark.read.schema(EmailDoc.schema).parquet(present: _*)
   }
 
   /** Month-pruned date-range scan (Q4 read path). */
@@ -164,13 +169,10 @@ class PartitionedEmailStore(spark: SparkSession, root: String)
     * compaction contract. */
   def fileCensus(): Map[String, Int] =
     if (isEmpty) Map.empty
-    else fs.listStatus(new Path(root))
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("date_month="))
-      .map(p => p.getPath.getName.stripPrefix("date_month=") ->
-        fs.listStatus(p.getPath).count(f =>
-          f.isFile && f.getPath.getName.endsWith(".parquet")))
-      .toMap
+    else monthDirs().map { case (m, p) =>
+      m -> fs.listStatus(p).count(f =>
+        f.isFile && f.getPath.getName.endsWith(".parquet"))
+    }.toMap
 
   /** Per-month compaction report row: how many data files the month
     * held before the rewrite and the file-count budget it was packed
@@ -205,20 +207,14 @@ class PartitionedEmailStore(spark: SparkSession, root: String)
     * re-listing. */
   def compact(targetBytes: Long = 128L << 20): Seq[CompactionPlan] = {
     if (isEmpty) return Seq.empty
-    val plan = fs.listStatus(new Path(root))
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("date_month="))
-      .flatMap { p =>
-        val files = fs.listStatus(p.getPath)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        val want = math.max(1L, math.ceil(
-          files.map(_.getLen).sum.toDouble / targetBytes).toLong).toInt
-        if (files.length > want)
-          Some(CompactionPlan(
-            p.getPath.getName.stripPrefix("date_month="),
-            files.length, want))
-        else None
-      }.toSeq
+    val plan = monthDirs().flatMap { case (m, p) =>
+      val files = fs.listStatus(p)
+        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      val want = math.max(1L, math.ceil(
+        files.map(_.getLen).sum.toDouble / targetBytes).toLong).toInt
+      if (files.length > want) Some(CompactionPlan(m, files.length, want))
+      else None
+    }
     if (plan.nonEmpty) {
       import spark.implicits._
       val wants = plan.map(p => (p.month, p.want))
@@ -264,17 +260,12 @@ class PartitionedEmailStore(spark: SparkSession, root: String)
     * assert the expiry contract without re-listing. */
   def retain(cutoffMonth: String): Seq[String] = {
     if (isEmpty) return Seq.empty
-    val dropped = fs.listStatus(new Path(root))
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("date_month="))
-      .map(_.getPath)
-      .filter { p =>
-        val m = p.getName.stripPrefix("date_month=")
-        m != "unknown" && m < cutoffMonth
-      }
-    val months = dropped.map(_.getName.stripPrefix("date_month=")).sorted.toSeq
+    val dropped = monthDirs()
+      .filter { case (m, _) => m != "unknown" && m < cutoffMonth }
+    val months = dropped.map(_._1).sorted
     if (months.nonEmpty)
-      index.dropMonths(months)(dropped.foreach { p => fs.delete(p, true); () })
+      index.dropMonths(months)(dropped.foreach { case (_, p) =>
+        fs.delete(p, true); () })
     months
   }
 

@@ -78,18 +78,21 @@ object StreamingOps {
           Paths.get(d, name).toAbsolutePath)
     }
 
-  /** Input row counts per (dir, table, predicate): the count only sizes
-    * the drain's state partitioning (and is stable per fixture dir), so
-    * re-scanning the parquet on every bench re-run of the same query
-    * is pure fixed overhead. The default `lit(true)` predicate is
-    * pruned by the optimizer, so an unfiltered count is answered from
-    * the parquet footers. */
-  private val inCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  /** Input row counts per (session, dir, table, predicate): the count
+    * only sizes the drain's state partitioning (and is stable per
+    * fixture dir), so re-scanning the parquet on every bench re-run of
+    * the same query is pure fixed overhead. The default `lit(true)`
+    * predicate is pruned by the optimizer, so an unfiltered count is
+    * answered from the parquet footers. Released by
+    * [[graft.Registries.clearAll]]. */
+  private val inCounts = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, String), java.lang.Long]()
+  graft.Registries.onClearFrames(() => inCounts.clear())
   private def inCount(spark: SparkSession, d: String, table: String,
       sizedBy: Column): Long =
-    inCounts.computeIfAbsent(s"$d|$table|$sizedBy", _ =>
-      spark.read.parquet(s"$d/$table.parquet").filter(sizedBy).count())
+    inCounts.computeIfAbsent(
+      graft.FrameRegistry.key(spark, d, s"$table|$sizedBy"), _ =>
+        graft.Tables.t(spark, d, table).filter(sizedBy).count())
       .longValue()
 
   /** One entry's stream input. `open` starts a fresh reader over the
@@ -198,7 +201,7 @@ object StreamingOps {
   private def docSliceFiles(spark: SparkSession, d: String)
       : (Path, Path) = {
     val dir = staged.getOrBuild(spark, d, "doc-slices") { out =>
-      val docs = spark.read.parquet(s"$d/documents.parquet")
+      val docs = graft.Tables.documents(spark, d)
       graft.Fs.writeSingleParquet(docs.filter(col("doc_id") % 2 === 0),
         sliceAt(out, "s1"))
       graft.Fs.writeSingleParquet(docs.filter(col("doc_id") % 2 === 1),
@@ -1777,8 +1780,7 @@ object StreamingOps {
     // glob lists only base/<user>/<folder>/<file>, the anchored pattern
     // recovers hierarchy relative to baseDir. The base is escaped, so a
     // dir named like `in[1]` is read as itself, not as a pattern.
-    val pat = EmailIngest.depth3Pattern(spark, baseDir)
-    val scanned = spark.readStream
+    val scanned = EmailIngest.depth3(spark.readStream
       .format("binaryFile")
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .schema(StructType(Seq(
@@ -1786,14 +1788,8 @@ object StreamingOps {
         StructField("modificationTime", TimestampType),
         StructField("length", LongType),
         StructField("content", BinaryType))))
-      .load(EmailIngest.escapeGlob(baseDir) + "/*/*")
-      .filter(col("path").rlike(pat))
-      .select(
-        col("path"),
-        regexp_extract(col("path"), pat, 1).as("user"),
-        regexp_extract(col("path"), pat, 2).as("folder"),
-        regexp_extract(col("path"), pat, 3).as("filename"),
-        col("content"))
+      .load(EmailIngest.escapeGlob(baseDir) + "/*/*"),
+      EmailIngest.depth3Pattern(spark, baseDir))
     scanned.writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -1931,7 +1927,7 @@ object StreamingOps {
     * exact integer cents (the e80 rule). */
   def streamSegmentEnrichment(spark: SparkSession, d: String): DataFrame = {
     val f = feed(spark, d, "events")
-    val cust = spark.read.parquet(s"$d/customer.parquet")
+    val cust = graft.Tables.customer(spark, d)
       .select("c_custkey", "c_mktsegment")
     val nCust = cust.count()
     val snap = drain(spark, d, "e98", f, "complete") {

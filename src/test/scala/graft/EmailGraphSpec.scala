@@ -88,7 +88,7 @@ class EmailGraphSpec extends AnyFunSuite with SparkSpec {
     val edges = Seq(
       (1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
       (4L, 5L), (6L, 7L), (6L, 8L)).toDF("p1", "p2")
-    val got = GraphOps.trianglesFrom(edges)
+    val got = GraphOps.trianglesWithDeg(edges)._2
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
   }

@@ -114,16 +114,15 @@ class Round15Spec extends AnyFunSuite with SparkSpec {
     SimilarityOps.foldBm25(spark, deleted, out)
 
     // layout contract: single segment — exactly one df row per term,
-    // all positive; no sidecar dirs; no tombstoned doc in postings
+    // all positive; exactly the three base tables; no tombstoned doc
+    // in postings
     val dfreq = spark.read.parquet(s"$out/dfreq")
     assert(dfreq.groupBy("term").count().filter(col("count") > 1).count() == 0)
     assert(dfreq.filter(col("df") <= 0).count() == 0)
     assert(!dfreq.select("term").collect().map(_.getString(0))
       .contains("query"), "a fully-deleted term must leave the dfreq")
-    Seq("tombstones", "dfreq_del", "stats_del").foreach { sub =>
-      assert(!new java.io.File(s"$out/$sub").exists(),
-        s"compacted artifact must not carry $sub")
-    }
+    assert(new java.io.File(out).listFiles().filter(_.isDirectory)
+      .map(_.getName).toSet == Set("postings", "dfreq", "stats"))
     assert(spark.read.parquet(s"$out/postings")
       .filter(col("doc_id") % 10 === 3).count() == 0)
     assert(spark.read.parquet(s"$out/stats").count() == 1)
