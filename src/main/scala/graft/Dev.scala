@@ -55,8 +55,8 @@ object Dev {
   }
 
   /** The named query entries; an unknown name fails here, before any
-    * entry runs. */
-  private def entries(names: Seq[String])
+    * entry runs (also Verify's check of its query subset). */
+  private[graft] def entries(names: Seq[String])
       : Seq[(String, (SparkSession, String) => DataFrame)] = {
     val all = SparkEntry.queries
     val unknown = names.filterNot(all.contains)

@@ -11,6 +11,9 @@ object Verify {
       case Array(a, b)    => (a, b, Option.empty[Set[String]])
       case Array(a, b, f) => (a, b, Some(f.split(",").toSet))
     }
+    // Dev's rule: an unknown name fails here, before the session starts,
+    // instead of leaving a partial dump and oracle_sql.json behind
+    only.foreach(names => Dev.entries(names.toSeq))
     val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.ext.SimilarityOps.{dot, norm}
 import graft.ext.TextOps.{md5Long, shingles3, tokens}
 
 /** Deduplication operators over `documents`/`embeddings` — the core
@@ -26,17 +27,22 @@ object DedupOps {
 
   private val normText = regexp_replace(trim(lower(col("text"))), TextOps.wsClass, " ")
 
-  /** (doc_id, shingle) distinct pairs — the shared input of the
-    * Jaccard/minhash family. The token array is materialized through a
-    * projection boundary first: Spark does NOT common-subexpression-
-    * eliminate inside higher-order-function lambdas, so inlining
-    * `tokens(text)` into `shingles3` re-runs the split per element_at
-    * (measured 20x slower). */
-  private[ext] def shingleRows(s: SparkSession, d: String): DataFrame =
-    documents(s, d)
+  /** (doc_id, shingle) distinct pairs of any (doc_id, text) frame — the
+    * shared input of the Jaccard/minhash family. Stateless column
+    * expressions only, so it applies unchanged to a STREAMING frame
+    * (e109). The token array is materialized through a projection
+    * boundary first: Spark does NOT common-subexpression-eliminate
+    * inside higher-order-function lambdas, so inlining `tokens(text)`
+    * into `shingles3` re-runs the split per element_at (measured 20x
+    * slower). */
+  private def shingleRowsOf(docs: DataFrame): DataFrame =
+    docs
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"),
         explode(array_distinct(shingles3(col("toks")))).as("shingle"))
+
+  private[ext] def shingleRows(s: SparkSession, d: String): DataFrame =
+    shingleRowsOf(documents(s, d))
 
   private[ext] val shingleRowsSql =
     """SELECT doc_id, unnest(list_distinct(list_transform(
@@ -118,9 +124,7 @@ object DedupOps {
       // d73's absorb maintains (hot-cap re-derivation over segment
       // sums); the index rows alone cannot serve this: capped hashes
       // have no rows left but their counts must keep accumulating
-      corpusWindows(s, d).filter(col("doc_id") % 5 =!= 4)
-        .groupBy("hw")
-        .agg(count_distinct(col("doc_id")).as("nd"))
+      census(corpusWindows(s, d).filter(col("doc_id") % 5 =!= 4))
         .write.mode("overwrite").parquet(s"$dir/census")
     }
 
@@ -144,10 +148,6 @@ object DedupOps {
       substringCleanDerive(s, d).write.mode("overwrite")
         .parquet(s"$dir/clean")
     }
-
-  private[graft] def substringCleanCached(s: SparkSession, d: String)
-      : DataFrame =
-    parquet(s, s"${substringCleanDir(s, d)}/clean")
 
   // the cached-frame builders are shared between the query sites and
   // warm(): warm re-stating the build expressions under the same keys
@@ -180,11 +180,10 @@ object DedupOps {
     hashedShingles(s, d).count()
     val sig = Future { simhashCached(s, d).count() }
     val pairs = Future { pairEdgesCached(s, d).count() }
-    // the d52/d60-shared LSH frames (same auto dict-path decision as
-    // the query sites, so the cache keys line up)
+    // the d52/d60-shared LSH frames (the query sites' own dict-path
+    // decision, so the cache keys line up)
     val lsh = Future {
-      val (sigs, _, verified) =
-        lshPipeline(s, d, shardDict = estShingles(s, d) > dictBroadcastCeiling)
+      val (sigs, verified) = lshPipeline(s, d)
       sigs.count(); verified.count()
     }
     // await ALL before propagating a failure: bailing on the first
@@ -203,15 +202,20 @@ object DedupOps {
   private[graft] def estShingles(s: SparkSession, d: String): Long =
     documents(s, d).agg(sum("n_chars")).head().getLong(0) / 6
 
+  /** The one dictionary-path decision (d52/d60/d67, the warm and
+    * TextOps' bigram dictionaries): shard the dictionary join iff the
+    * distinct-shingle upper bound exceeds `ceiling`. */
+  private[graft] def shardDict(s: SparkSession, d: String,
+      ceiling: Long = dictBroadcastCeiling): Boolean =
+    estShingles(s, d) > ceiling
+
   // NOTE: d52's dictionary trick (md5 distinct shingles once, join
   // back) was tried here and measured SLOWER (+3.3s at sf0.1): with no
   // per-shingle hash amortization to win back, the extra distinct is a
   // full shuffle of the raw shingle strings. Direct per-row hashing is
   // the right shape for the single-hash frame.
   private[graft] def hashedShingles(s: SparkSession, d: String): DataFrame =
-    frames.cached(s, d, "sh") {
-      shingleRows(s, d).select(col("doc_id"), md5Long(col("shingle")).as("sh"))
-    }
+    frames.cached(s, d, "sh")(hashedShinglesOf(documents(s, d)))
 
   /** Document-frequency cap for the inverted-index self-joins (d51/d55):
     * a shingle present in n docs emits n² candidate rows, so one
@@ -244,19 +248,28 @@ object DedupOps {
     sh.groupBy("sh").agg(count(lit(1)).as("df"))
       .filter(col("df") > cap).select("sh")
 
-  /** Corpus-frozen hot set for the streaming twin (see [[hotSet]]). */
-  private[graft] def frozenHotShingles(s: SparkSession, d: String): DataFrame =
-    hotSet(hashedShingles(s, d))
-
-  /** The (doc_id, sh) hashed-shingle transform of an arbitrary frame
-    * with (doc_id, text) — stateless column expressions only, so it
-    * applies unchanged to a STREAMING frame (e109). */
+  /** The (doc_id, sh) hashed-shingle transform of a (doc_id, text)
+    * frame ([[shingleRowsOf]] plus the 60-bit md5) — also e109's
+    * stream stage. */
   private[graft] def hashedShinglesOf(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"),
-        explode(array_distinct(shingles3(col("toks")))).as("shingle"))
-      .select(col("doc_id"), md5Long(col("shingle")).as("sh"))
+    shingleRowsOf(docs).select(col("doc_id"), md5Long(col("shingle")).as("sh"))
+
+  /** Per-doc row counts (doc_id, n) of a (doc_id, key) frame. */
+  private def docSizes(rows: DataFrame): DataFrame =
+    rows.groupBy("doc_id").agg(count(lit(1)).as("n"))
+
+  /** The one Jaccard scorer: an (`a`, `b`, inter) intersection-count
+    * frame joined to the per-doc sizes (`ni`, `nj`) of the shingle
+    * frame `sh` it was counted over, plus the round-4 `jaccard` — a
+    * ratio of ints, exact on both engines. d51/d55, the LSH verify and
+    * d58/e109 each pass their own shingle frame and join hints. */
+  private def jaccardScored(inter: DataFrame, a: String, b: String,
+      sh: DataFrame): DataFrame = {
+    val sizes = docSizes(sh)
+    inter.join(sizes.toDF(a, "ni"), a).join(sizes.toDF(b, "nj"), b)
+      .withColumn("jaccard",
+        round(col("inter") / (col("ni") + col("nj") - col("inter")), 4))
+  }
 
   // ------------------------------------------------------ d50 exact
 
@@ -316,13 +329,8 @@ object DedupOps {
     val sh = dfCappedShingles(s, d)
     val a = sh.toDF("i", "sh")
     val b = sh.toDF("j", "sh")
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    a.join(b, "sh").filter(col("i") < col("j"))
-      .groupBy("i", "j").agg(count(lit(1)).as("inter"))
-      .join(sizes.toDF("i", "ni"), "i")
-      .join(sizes.toDF("j", "nj"), "j")
-      .withColumn("jaccard",
-        round(col("inter") / (col("ni") + col("nj") - col("inter")), 4))
+    jaccardScored(a.join(b, "sh").filter(col("i") < col("j"))
+        .groupBy("i", "j").agg(count(lit(1)).as("inter")), "i", "j", sh)
       .withColumn("containment",
         round(col("inter") / least(col("ni"), col("nj")), 4))
       .filter(col("jaccard") >= 0.5 || col("containment") >= 0.8)
@@ -343,20 +351,38 @@ object DedupOps {
       .filter(col("jaccard") >= 0.5)
       .select("doc_a", "doc_b")
 
-  val jaccardPairsSql: String =
+  /** The oracle's Jaccard of an `inter` count against the `n` columns
+    * of the size rows aliased `a` and `b` ([[jaccardScored]]). */
+  private def jaccardSql(a: String, b: String): String =
+    s"round(inter * 1.0 / ($a.n + $b.n - inter), 4)"
+
+  /** The hashed-shingle oracle head of d51/d55/d58: `sh` (doc_id, 60-bit
+    * shingle hash), per-doc `sizes` and the `inter` counts of the
+    * `a`/`b` self-join on `sh` — `cols` names its two id columns and
+    * `cond` carries the pair predicate. */
+  private def shingleInterSql(cols: String, cond: String): String =
     s"""WITH shs AS ($shingleRowsSql),
       |sh AS (SELECT doc_id,
       |  ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS sh FROM shs),
       |sizes AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
       |inter AS (
-      |  SELECT a.doc_id i, b.doc_id j, count(*) inter
-      |  FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2)
+      |  SELECT $cols, count(*) inter
+      |  FROM sh a JOIN sh b ON a.sh = b.sh$cond
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** d51/d55's oracle: every shingle-sharing pair scored by `score` and
+    * kept at `score` ≥ `min` as column `name`. */
+  private def scoredPairsSql(score: String, name: String, min: Double)
+      : String =
+    s"""${shingleInterSql("a.doc_id i, b.doc_id j", " AND a.doc_id < b.doc_id")}
       |SELECT i AS doc_a, j AS doc_b,
-      |  round(inter * 1.0 / (sa.n + sb.n - inter), 4) AS jaccard
+      |  $score AS $name
       |FROM inter JOIN sizes sa ON sa.doc_id = i JOIN sizes sb ON sb.doc_id = j
-      |WHERE round(inter * 1.0 / (sa.n + sb.n - inter), 4) >= 0.5
+      |WHERE $score >= $min
       |ORDER BY doc_a, doc_b""".stripMargin
+
+  val jaccardPairsSql: String =
+    scoredPairsSql(jaccardSql("sa", "sb"), "jaccard", 0.5)
 
   // --------------------------------------------- d52 minhash + LSH
 
@@ -373,45 +399,31 @@ object DedupOps {
   /** d52: MinHash signatures + banded LSH candidates + exact verify.
     * Identical md5-derived hash family on both engines, so the whole
     * approximate pipeline is oracle-checked, not just smoke-tested.
-    *
-    * The dictionary join auto-selects broadcast vs sharded by an upper
-    * bound on the distinct-shingle count — `sum(n_chars)/6` (≈ one
-    * shingle per token, ≥ distinct): a single-column parquet aggregate,
-    * far cheaper than counting the dictionary it sizes. */
-  def minhashLsh(s: SparkSession, d: String): DataFrame =
-    minhashLshAuto(s, d)
-
-  private[graft] def minhashLshAuto(s: SparkSession, d: String,
+    * The dictionary path is [[lshPipeline]]'s; `ceiling` is exposed for
+    * the spec (0 forces the sharded path on any corpus). */
+  def minhashLsh(s: SparkSession, d: String,
       ceiling: Long = dictBroadcastCeiling): DataFrame =
-    minhashLshImpl(s, d, shardDict = estShingles(s, d) > ceiling)
-
-  /** The 100 TB dictionary path: instead of broadcasting the distinct-
-    * shingle dictionary (driver-memory-bound at scale), shard it by
-    * shingle hash — a plain shuffled hash join keyed on shingle, so
-    * both sides partition by the same key and no single node ever holds
-    * the whole dictionary. Same results as the broadcast path
-    * (spec-asserted); the broadcast stays the small-SF fast path. */
-  def minhashLshSharded(s: SparkSession, d: String): DataFrame =
-    minhashLshImpl(s, d, shardDict = true)
-
-  private def minhashLshImpl(s: SparkSession, d: String,
-      shardDict: Boolean): DataFrame = {
-    val (_, _, verified) = lshPipeline(s, d, shardDict)
-    verified
+    lshPipeline(s, d, ceiling)._2
       .filter(col("jaccard") >= 0.5)
       .select(col("i").as("doc_a"), col("j").as("doc_b"), col("jaccard"))
       .orderBy("doc_a", "doc_b")
-  }
 
   /** The shared MinHash/LSH pipeline: returns (per-doc signatures,
-    * per-row (doc_id, sh) hashes, exact-verified candidate pairs with
-    * true jaccard, UNFILTERED) — d52 applies the ≥0.5 dedup threshold,
-    * d60 keeps the whole candidate set to measure the sketch. The
-    * signature and verified frames are registry-cached per
-    * (session, dir, dict path) so d52 and d60 run the expensive
+    * exact-verified candidate pairs with true jaccard, UNFILTERED) —
+    * d52 applies the ≥0.5 dedup threshold, d60 keeps the whole
+    * candidate set to measure the sketch, d67 rebands the signatures.
+    * The dictionary join auto-selects broadcast vs sharded by
+    * [[shardDict]] — an upper bound on the distinct-shingle count
+    * (`sum(n_chars)/6`, ≈ one shingle per token, ≥ distinct): a
+    * single-column parquet aggregate, far cheaper than counting the
+    * dictionary it sizes. Every caller and the warm decide here, so
+    * the cache keys line up and no corpus ever forces a broadcast the
+    * ceiling exists to prevent. Both frames are registry-cached per
+    * (session, dir, dict path) so d52, d60 and d67 run the expensive
     * stages once between them. */
-  private def lshPipeline(s: SparkSession, d: String, shardDict: Boolean)
-      : (DataFrame, DataFrame, DataFrame) = {
+  private def lshPipeline(s: SparkSession, d: String,
+      ceiling: Long = dictBroadcastCeiling): (DataFrame, DataFrame) = {
+    val shard = shardDict(s, d, ceiling)
     // cache the SIGNATURE frame first and build the verify stage from
     // the cached frame (round-17): the old shape built `verified` from
     // the raw signature lineage, so one `verified` materialization
@@ -420,11 +432,10 @@ object DedupOps {
     // signatures and the registry (doc_id, sh) frame already hold
     // every input it needs. Identical values: hashedShingles' per-row
     // md5Long(shingle) IS the dictionary's `sh` column.
-    val tag = if (shardDict) "lsh_sh" else "lsh_bc"
-    val sigsC = frames.cached(s, d, s"$tag.sigs")(lshSigsRaw(s, d, shardDict))
+    val tag = if (shard) "lsh_sh" else "lsh_bc"
+    val sigsC = frames.cached(s, d, s"$tag.sigs")(lshSigsRaw(s, d, shard))
     val shh = hashedShingles(s, d)
-    (sigsC, shh,
-      frames.cached(s, d, s"$tag.verified")(lshVerifyRaw(sigsC, shh)))
+    (sigsC, frames.cached(s, d, s"$tag.verified")(lshVerifyRaw(sigsC, shh)))
   }
 
   /** The signature half of the pipeline: per-doc 8-component MinHash
@@ -441,16 +452,24 @@ object DedupOps {
     * d51/d55 intersections, the DF cap and the verify stage all join
     * on it, and the oracle computes the same 60-bit md5 — so keying
     * the dictionary by it is the established semantics, not a new
-    * approximation. */
+    * approximation.
+    *
+    * `shard` is the 100 TB dictionary path: instead of
+    * broadcasting the distinct-shingle dictionary (driver-memory-bound
+    * at scale), shard it by shingle hash — a plain shuffled hash join
+    * keyed on `sh`, so both sides partition by the same key and no
+    * single node ever holds the whole dictionary. Same results as the
+    * broadcast path (spec-asserted); the broadcast stays the small-SF
+    * fast path. */
   private[graft] def lshSigsRaw(s: SparkSession, d: String,
-      shardDict: Boolean): DataFrame = {
+      shard: Boolean): DataFrame = {
     val dict = shingleRows(s, d).select("shingle").distinct()
       .select(md5Long(col("shingle")).as("sh") +:
         (1 to numHashes).map(j =>
           md5Long(concat(lit(s"$j:"), col("shingle"))).as(s"hs$j")): _*)
     val sh = hashedShingles(s, d)
     val hashed =
-      if (shardDict) sh.join(dict.hint("shuffle_hash"), "sh")
+      if (shard) sh.join(dict.hint("shuffle_hash"), "sh")
       else sh.join(broadcast(dict), "sh")
     val sigCols = (1 to numHashes).map(j => min(col(s"hs$j")).as(s"h$j"))
     hashed.groupBy("doc_id").agg(sigCols.head, sigCols.tail: _*)
@@ -475,22 +494,9 @@ object DedupOps {
       .join(buckets.toDF("j", "band", "x", "y"), Seq("band", "x", "y"))
       .filter(col("i") < col("j"))
       .select("i", "j").distinct()
-    val sizes = shh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val candA = cand.join(shh.toDF("i", "sh"), "i")
-    val inter = candA.join(shh.toDF("j", "sh"), Seq("j", "sh"))
-      .groupBy("i", "j").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.toDF("i", "ni"), "i")
-      .join(sizes.toDF("j", "nj"), "j")
-      .withColumn("jaccard",
-        round(col("inter") / (col("ni") + col("nj") - col("inter")), 4))
-  }
-
-  private[graft] def lshPipelineRaw(s: SparkSession, d: String, shardDict: Boolean)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val sigs = lshSigsRaw(s, d, shardDict)
-    val shh = hashedShingles(s, d)
-    (sigs, shh, lshVerifyRaw(sigs, shh))
+    jaccardScored(candA.join(shh.toDF("j", "sh"), Seq("j", "sh"))
+      .groupBy("i", "j").agg(count(lit(1)).as("inter")), "i", "j", shh)
   }
 
   // ------------------------------------ d60 minhash sketch quality
@@ -507,11 +513,7 @@ object DedupOps {
     * join of the candidate pairs against the 8-column signature frame
     * — no new corpus-wide stage. */
   def minhashEstimate(s: SparkSession, d: String): DataFrame = {
-    // same auto dictionary-path decision as d52/warm(), so the shared
-    // cache keys line up and no corpus ever forces a broadcast the
-    // ceiling exists to prevent
-    val (sigs, _, verified) =
-      lshPipeline(s, d, shardDict = estShingles(s, d) > dictBroadcastCeiling)
+    val (sigs, verified) = lshPipeline(s, d)
     val a = sigs.toDF("i" +: (1 to numHashes).map(j => s"a$j"): _*)
     val b = sigs.toDF("j" +: (1 to numHashes).map(j => s"b$j"): _*)
     val matches = (1 to numHashes)
@@ -524,19 +526,24 @@ object DedupOps {
       .orderBy("doc_a", "doc_b")
   }
 
-  val minhashEstimateSql: String = {
+  /** The oracle's MinHash signature head — `sh` (the shingle rows) and
+    * `sigs` (doc_id, h1..h8) — shared by d52, d60 and d67. */
+  private val sigsSql: String = {
     val hashExprs = (1 to numHashes).map { j =>
       s"min(('0x' || substr(md5('$j:' || shingle), 1, 15))::BIGINT) AS h$j"
     }.mkString(", ")
+    s"""WITH sh AS ($shingleRowsSql),
+      |sigs AS (SELECT doc_id, $hashExprs FROM sh GROUP BY doc_id)""".stripMargin
+  }
+
+  /** The d52/d60 oracle chain: [[sigsSql]], the (4, 2) band buckets,
+    * distinct candidates, shingle sizes and verified intersections. */
+  private val lshChainSql: String = {
     val bandSelects = (1 to numHashes / bandSize).map { bnd =>
       s"SELECT doc_id, $bnd AS band, h${bandSize * bnd - 1} AS x, " +
         s"h${bandSize * bnd} AS y FROM sigs"
     }.mkString(" UNION ALL ")
-    val matchSum = (1 to numHashes)
-      .map(j => s"CASE WHEN sa.h$j = sb.h$j THEN 1 ELSE 0 END")
-      .mkString(" + ")
-    s"""WITH sh AS ($shingleRowsSql),
-      |sigs AS (SELECT doc_id, $hashExprs FROM sh GROUP BY doc_id),
+    s"""$sigsSql,
       |bkts AS ($bandSelects),
       |cand AS (
       |  SELECT DISTINCT a.doc_id i, b.doc_id j
@@ -548,10 +555,17 @@ object DedupOps {
       |  FROM (SELECT cand.i, cand.j, a.shingle FROM cand
       |        JOIN sh a ON a.doc_id = cand.i) ca
       |  JOIN sh b ON b.doc_id = ca.j AND b.shingle = ca.shingle
-      |  GROUP BY 1, 2)
+      |  GROUP BY 1, 2)""".stripMargin
+  }
+
+  val minhashEstimateSql: String = {
+    val matchSum = (1 to numHashes)
+      .map(j => s"CASE WHEN sa.h$j = sb.h$j THEN 1 ELSE 0 END")
+      .mkString(" + ")
+    s"""$lshChainSql
       |SELECT cand.i AS doc_a, cand.j AS doc_b,
       |  round(($matchSum) / $numHashes.0, 4) AS est_jaccard,
-      |  round(inter * 1.0 / (sa2.n + sb2.n - inter), 4) AS true_jaccard
+      |  ${jaccardSql("sa2", "sb2")} AS true_jaccard
       |FROM cand JOIN inter ON inter.i = cand.i AND inter.j = cand.j
       |JOIN sigs sa ON sa.doc_id = cand.i JOIN sigs sb ON sb.doc_id = cand.j
       |JOIN sizes sa2 ON sa2.doc_id = cand.i
@@ -559,35 +573,14 @@ object DedupOps {
       |ORDER BY doc_a, doc_b""".stripMargin
   }
 
-  val minhashLshSql: String = {
-    val hashExprs = (1 to numHashes).map { j =>
-      s"min(('0x' || substr(md5('$j:' || shingle), 1, 15))::BIGINT) AS h$j"
-    }.mkString(", ")
-    val bandSelects = (1 to numHashes / bandSize).map { bnd =>
-      s"SELECT doc_id, $bnd AS band, h${bandSize * bnd - 1} AS x, " +
-        s"h${bandSize * bnd} AS y FROM sigs"
-    }.mkString(" UNION ALL ")
-    s"""WITH sh AS ($shingleRowsSql),
-      |sigs AS (SELECT doc_id, $hashExprs FROM sh GROUP BY doc_id),
-      |bkts AS ($bandSelects),
-      |cand AS (
-      |  SELECT DISTINCT a.doc_id i, b.doc_id j
-      |  FROM bkts a JOIN bkts b
-      |    ON a.band = b.band AND a.x = b.x AND a.y = b.y AND a.doc_id < b.doc_id),
-      |sizes AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
-      |inter AS (
-      |  SELECT ca.i, ca.j, count(*) inter
-      |  FROM (SELECT cand.i, cand.j, a.shingle FROM cand
-      |        JOIN sh a ON a.doc_id = cand.i) ca
-      |  JOIN sh b ON b.doc_id = ca.j AND b.shingle = ca.shingle
-      |  GROUP BY 1, 2)
+  val minhashLshSql: String =
+    s"""$lshChainSql
       |SELECT cand.i AS doc_a, cand.j AS doc_b,
-      |  round(inter * 1.0 / (sa.n + sb.n - inter), 4) AS jaccard
+      |  ${jaccardSql("sa", "sb")} AS jaccard
       |FROM cand JOIN inter ON inter.i = cand.i AND inter.j = cand.j
       |JOIN sizes sa ON sa.doc_id = cand.i JOIN sizes sb ON sb.doc_id = cand.j
-      |WHERE round(inter * 1.0 / (sa.n + sb.n - inter), 4) >= 0.5
+      |WHERE ${jaccardSql("sa", "sb")} >= 0.5
       |ORDER BY doc_a, doc_b""".stripMargin
-  }
 
   // ------------------------------------------- d55 containment
 
@@ -603,20 +596,8 @@ object DedupOps {
       .select("doc_a", "doc_b", "containment")
       .orderBy("doc_a", "doc_b")
 
-  val containmentPairsSql: String =
-    s"""WITH shs AS ($shingleRowsSql),
-      |sh AS (SELECT doc_id,
-      |  ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS sh FROM shs),
-      |sizes AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
-      |inter AS (
-      |  SELECT a.doc_id i, b.doc_id j, count(*) inter
-      |  FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2)
-      |SELECT i AS doc_a, j AS doc_b,
-      |  round(inter * 1.0 / least(sa.n, sb.n), 4) AS containment
-      |FROM inter JOIN sizes sa ON sa.doc_id = i JOIN sizes sb ON sb.doc_id = j
-      |WHERE round(inter * 1.0 / least(sa.n, sb.n), 4) >= 0.8
-      |ORDER BY doc_a, doc_b""".stripMargin
+  val containmentPairsSql: String = scoredPairsSql(
+    "round(inter * 1.0 / least(sa.n, sb.n), 4)", "containment", 0.8)
 
   // ------------------------------------------------------ d53 simhash
 
@@ -644,24 +625,23 @@ object DedupOps {
       .orderBy("doc_id")
   }
 
-  val simhashSql: String =
-    s"""WITH tok AS (
-      |  SELECT doc_id, unnest(list_distinct(list_transform(
-      |    range(1, greatest(len(toks) - 1, 1)),
-      |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS token
-      |  FROM (SELECT doc_id, list_filter(
-      |        regexp_split_to_array(lower(text), '\\s+'), x -> x <> '') AS toks
-      |        FROM documents)),
+  /** The d53/d53b oracle's signature: md5 bit votes of the distinct
+    * shingles ([[shingleRowsSql]]) summed per (doc, bit), set bits
+    * summed into one BIGINT per doc. */
+  private val simhashSigSql: String =
+    s"""WITH tok AS ($shingleRowsSql),
       |votes AS (
       |  SELECT doc_id, k,
-      |    sum(CASE WHEN (('0x' || substr(md5(token), 1, 15))::BIGINT >> k) % 2 = 1
+      |    sum(CASE WHEN (('0x' || substr(md5(shingle), 1, 15))::BIGINT >> k) % 2 = 1
       |        THEN 1 ELSE -1 END) AS v
       |  FROM tok, generate_series(0, ${simhashBits - 1}) AS g(k)
       |  GROUP BY doc_id, k)
       |SELECT doc_id,
       |  CAST(sum(CASE WHEN v > 0 THEN CAST(2 ** k AS BIGINT) ELSE 0 END)
       |       AS BIGINT) AS simhash
-      |FROM votes GROUP BY doc_id ORDER BY doc_id""".stripMargin
+      |FROM votes GROUP BY doc_id""".stripMargin
+
+  val simhashSql: String = s"$simhashSigSql ORDER BY doc_id"
 
   /** d53b: near-dup pairs by SimHash hamming distance ≤ 3. Candidate
     * generation is an equi-join on byte bands, never n²: hamming ≤ 3
@@ -692,23 +672,7 @@ object DedupOps {
   }
 
   val simhashPairsSql: String =
-    s"""WITH tok AS (
-      |  SELECT doc_id, unnest(list_distinct(list_transform(
-      |    range(1, greatest(len(toks) - 1, 1)),
-      |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS token
-      |  FROM (SELECT doc_id, list_filter(
-      |        regexp_split_to_array(lower(text), '\\s+'), x -> x <> '') AS toks
-      |        FROM documents)),
-      |votes AS (
-      |  SELECT doc_id, k,
-      |    sum(CASE WHEN (('0x' || substr(md5(token), 1, 15))::BIGINT >> k) % 2 = 1
-      |        THEN 1 ELSE -1 END) AS v
-      |  FROM tok, generate_series(0, ${simhashBits - 1}) AS g(k)
-      |  GROUP BY doc_id, k),
-      |sig AS (
-      |  SELECT doc_id,
-      |    sum(CASE WHEN v > 0 THEN CAST(2 ** k AS BIGINT) ELSE 0 END) AS simhash
-      |  FROM votes GROUP BY doc_id)
+    s"""WITH sig AS ($simhashSigSql)
       |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
       |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
       |FROM sig a JOIN sig b ON a.doc_id < b.doc_id
@@ -733,29 +697,32 @@ object DedupOps {
   def embeddingDupPairs(s: SparkSession, d: String): DataFrame =
     embeddingPairsFrom(embeddings(s, d), maxBlock)
 
-  private[graft] def embeddingPairsFrom(emb: DataFrame, cap: Int): DataFrame = {
-    // norms precomputed per VECTOR (n rows), not per pair (n²/blocks):
-    // the pair stage then runs one fold (dot) instead of three
-    val e = emb
-      .select(col("vec_id"), col("label"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-      .withColumn("nrm",
-        sqrt(graft.functions.VecExprs.dot_d(col("v"), col("v"))))
-    // block-size guard: sub-split oversized labels (see maxBlock)
-    val blockSizes = e.groupBy("label").agg(count(lit(1)).as("bn"))
-    val eb = e.join(broadcast(blockSizes), "label")
+  private[graft] def embeddingPairsFrom(emb: DataFrame, cap: Int): DataFrame =
+    blockedCosine(normedVectors(emb, "label"), "label", cap, 0.4)
+      .orderBy("vec_a", "vec_b")
+
+  /** The one blocked cosine self-join (d54 by `label`, d61 by k-means
+    * `cid`): a (vec_id, `block`, v, nrm) frame — norms precomputed per
+    * VECTOR (n rows), not per pair (n²/blocks), so the pair stage runs
+    * one fold (dot) instead of three — paired within its block,
+    * oversized blocks sub-split by a vec_id hash into
+    * ceil(n/cap) sub-blocks first (see [[maxBlock]]), and kept at
+    * round-6 cosine ≥ `tau`: (`block`, vec_a, vec_b, cosine), vec_a <
+    * vec_b. */
+  private[graft] def blockedCosine(e: DataFrame, block: String, cap: Long,
+      tau: Double): DataFrame = {
+    val sizes = e.groupBy(block).agg(count(lit(1)).as("bn"))
+    val eb = e.join(broadcast(sizes), block)
       .withColumn("nsub", greatest(ceil(col("bn") / cap).cast("long"), lit(1L)))
       .withColumn("sub", pmod(xxhash64(col("vec_id")), col("nsub")))
-      .select("vec_id", "label", "sub", "v", "nrm")
-    val a = eb.toDF("vec_a", "label", "sub", "va", "na")
-    val b = eb.toDF("vec_b", "label", "sub", "vb", "nb")
-    a.join(b, Seq("label", "sub")).filter(col("vec_a") < col("vec_b"))
-      .withColumn("dot",
-        graft.functions.VecExprs.dot_d(col("va"), col("vb")))
-      .withColumn("cosine", round(col("dot") / (col("na") * col("nb")), 6))
-      .filter(col("cosine") >= 0.4)
-      .select("label", "vec_a", "vec_b", "cosine")
-      .orderBy("vec_a", "vec_b")
+      .select(block, "sub", "vec_id", "v", "nrm")
+    val a = eb.toDF(block, "sub", "vec_a", "va", "na")
+    val b = eb.toDF(block, "sub", "vec_b", "vb", "nb")
+    a.join(b, Seq(block, "sub")).filter(col("vec_a") < col("vec_b"))
+      .withColumn("cosine", round(
+        dot(col("va"), col("vb")) / (col("na") * col("nb")), 6))
+      .filter(col("cosine") >= tau)
+      .select(block, "vec_a", "vec_b", "cosine")
   }
 
   val embeddingDupPairsSql: String =
@@ -843,24 +810,45 @@ object DedupOps {
     * the benchmark side broadcast (eval sets are small by nature), so
     * the corpus never shuffles — the right 100 TB shape for "check the
     * whole training set against the eval suite". */
-  def decontamination(s: SparkSession, d: String): DataFrame = {
-    val sh = hashedShingles(s, d)
-    val bench = sh.filter(col("doc_id") % 97 === 0).select("sh").distinct()
-    val train = sh.filter(col("doc_id") % 97 =!= 0)
-    val sizes = train.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    train.join(broadcast(bench), Seq("sh"), "left_semi")
-      .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
-      .join(sizes, "doc_id")
+  def decontamination(s: SparkSession, d: String): DataFrame =
+    shingleContam(s, d)
       .withColumn("contamination", round(col("n_hit") / col("n"), 4))
       .select("doc_id", "n_hit", "contamination")
       .orderBy("doc_id")
+
+  /** The benchmark cohort: the deterministic doc_id % 97 slice that
+    * t49/t57 (shingles), t68/t70 and e111/e115/e135 (passages) treat as
+    * the eval set. */
+  private[graft] val inBench = col("doc_id") % 97 === 0
+
+  /** The distinct `key` values of the benchmark cohort's rows — the
+    * broadcast side of every contamination probe. */
+  private[graft] def benchKeys(rows: DataFrame, key: String): DataFrame =
+    rows.filter(inBench).select(key).distinct()
+
+  /** The whole-document contamination probe of t49 and t57: every
+    * training doc with at least one benchmark shingle, as (doc_id,
+    * n_hit, n) — hits and distinct-shingle size. The benchmark side
+    * broadcasts (eval sets are small by nature), so the corpus never
+    * shuffles for the membership test. */
+  private def shingleContam(s: SparkSession, d: String): DataFrame = {
+    val sh = hashedShingles(s, d)
+    val train = sh.filter(!inBench)
+    train.join(broadcast(benchKeys(sh, "sh")), Seq("sh"), "left_semi")
+      .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
+      .join(docSizes(train), "doc_id")
   }
 
-  val decontaminationSql: String =
-    s"""WITH shs AS ($shingleRowsSql),
+  /** t49/t57's oracle head: the shingle rows, the benchmark's distinct
+    * shingles, the training rows and their sizes. */
+  private val shingleContamSql: String =
+    s"""shs AS ($shingleRowsSql),
       |bench AS (SELECT DISTINCT shingle FROM shs WHERE doc_id % 97 = 0),
       |train AS (SELECT * FROM shs WHERE doc_id % 97 <> 0),
-      |sizes AS (SELECT doc_id, count(*) n FROM train GROUP BY 1),
+      |sizes AS (SELECT doc_id, count(*) n FROM train GROUP BY 1)""".stripMargin
+
+  val decontaminationSql: String =
+    s"""WITH $shingleContamSql,
       |hits AS (
       |  SELECT t.doc_id, count(*) n_hit FROM train t
       |  JOIN bench b ON t.shingle = b.shingle GROUP BY 1)
@@ -897,13 +885,8 @@ object DedupOps {
     * (big at scale) on both joins. */
   private[graft] def incrDedupFinish(s: SparkSession, d: String,
       inter: DataFrame): DataFrame = {
-    val sizes = dfCappedShingles(s, d)
-      .groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val scored = broadcast(inter)
-      .join(sizes.toDF("n_id", "nn"), "n_id")
-      .join(sizes.toDF("c_id", "nc"), "c_id")
-      .withColumn("jaccard",
-        round(col("inter") / (col("nn") + col("nc") - col("inter")), 4))
+    val scored = jaccardScored(broadcast(inter), "n_id", "c_id",
+        dfCappedShingles(s, d))
       .filter(col("jaccard") >= 0.5)
     val best = scored.groupBy("n_id")
       .agg(min(struct((-col("jaccard")).as("nj"), col("c_id").as("cid"))).as("m"))
@@ -918,22 +901,15 @@ object DedupOps {
   }
 
   val incrementalDedupSql: String =
-    s"""WITH shs AS ($shingleRowsSql),
-      |sh AS (SELECT doc_id,
-      |  ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS sh FROM shs),
-      |sizes AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
-      |inter AS (
-      |  SELECT b.doc_id n_id, a.doc_id c_id, count(*) inter
-      |  FROM sh a JOIN sh b ON a.sh = b.sh
-      |  WHERE a.doc_id % 7 <> 3 AND b.doc_id % 7 = 3
-      |  GROUP BY 1, 2),
+    s"""${shingleInterSql("b.doc_id n_id, a.doc_id c_id",
+          "\n  WHERE a.doc_id % 7 <> 3 AND b.doc_id % 7 = 3")},
       |scored AS (
       |  SELECT n_id, c_id,
-      |    round(inter * 1.0 / (sn.n + sc.n - inter), 4) AS j
+      |    ${jaccardSql("sn", "sc")} AS j
       |  FROM inter
       |    JOIN sizes sn ON sn.doc_id = n_id
       |    JOIN sizes sc ON sc.doc_id = c_id
-      |  WHERE round(inter * 1.0 / (sn.n + sc.n - inter), 4) >= 0.5),
+      |  WHERE ${jaccardSql("sn", "sc")} >= 0.5),
       |best AS (
       |  SELECT n_id, c_id, j FROM scored
       |  QUALIFY row_number() OVER (PARTITION BY n_id
@@ -963,13 +939,7 @@ object DedupOps {
     * is never shuffled; every stage decision is deterministic, so
     * re-runs and backfills produce the identical funnel. */
   def corpusFunnel(s: SparkSession, d: String): DataFrame = {
-    val sh = hashedShingles(s, d)
-    val bench = sh.filter(col("doc_id") % 97 === 0).select("sh").distinct()
-    val train = sh.filter(col("doc_id") % 97 =!= 0)
-    val sizes = train.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val contam = train.join(broadcast(bench), Seq("sh"), "left_semi")
-      .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
-      .join(sizes, "doc_id")
+    val contam = shingleContam(s, d)
       .filter(col("n_hit") * 20 >= col("n"))
       .select(col("doc_id"), lit(1L).as("contaminated"))
     val clusters = dedupClusters(s, d).select("doc_id", "cluster_rep")
@@ -980,7 +950,7 @@ object DedupOps {
       .withColumn("p1", col("reason") === "kept")
       .withColumn("p2", col("p1") &&
         (col("cluster_rep").isNull || col("cluster_rep") === col("doc_id")))
-      .withColumn("p3", col("p2") && col("doc_id") % 97 =!= 0 &&
+      .withColumn("p3", col("p2") && !inBench &&
         col("contaminated").isNull)
       .withColumn("p4", col("p3") &&
         TextOps.md5Long(concat(lit("split:"), col("doc_id").cast("string")))
@@ -1003,10 +973,7 @@ object DedupOps {
   val corpusFunnelSql: String =
     s"""WITH ${TextOps.qualityReasonCte},
       |clusters AS ($dedupClustersSql),
-      |shs AS ($shingleRowsSql),
-      |bench AS (SELECT DISTINCT shingle FROM shs WHERE doc_id % 97 = 0),
-      |train AS (SELECT * FROM shs WHERE doc_id % 97 <> 0),
-      |sizes AS (SELECT doc_id, count(*) n FROM train GROUP BY 1),
+      |$shingleContamSql,
       |contam AS (
       |  SELECT t.doc_id FROM (
       |    SELECT tr.doc_id, count(*) n_hit FROM train tr
@@ -1094,7 +1061,10 @@ object DedupOps {
       .orderBy("doc_id")
   }
 
-  val passageDedupSql: String =
+  /** The passage oracle head of d59, t68 and t70: the token lists `t`,
+    * the consecutive 10-token passages `px` and their 60-bit hashes `p`
+    * (doc_id, ph) — [[passageHashes]]' spelling. */
+  private[graft] val passageSql: String =
     """WITH t AS (
       |  SELECT doc_id, list_filter(
       |    regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS toks
@@ -1106,7 +1076,10 @@ object DedupOps {
       |  FROM t WHERE len(toks) > 0),
       |p AS (
       |  SELECT doc_id, ('0x' || substr(md5(passage), 1, 15))::BIGINT AS ph
-      |  FROM px),
+      |  FROM px)""".stripMargin
+
+  val passageDedupSql: String =
+    s"""$passageSql,
       |c AS (SELECT ph, count(*) AS cnt FROM p GROUP BY ph)
       |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pass,
       |  CAST(sum(CASE WHEN cnt >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup
@@ -1135,9 +1108,8 @@ object DedupOps {
     * passage at sf0.01, so the oracle alone exercises only zeros). */
   private[graft] def passageDecontamOf(docs: DataFrame): DataFrame = {
     val p = passageHashes(docs)
-    val bench = p.filter(col("doc_id") % 97 === 0).select("ph").distinct()
-    val train = p.filter(col("doc_id") % 97 =!= 0)
-    val hits = train.join(broadcast(bench), Seq("ph"), "left_semi")
+    val train = p.filter(!inBench)
+    val hits = train.join(broadcast(benchKeys(p, "ph")), Seq("ph"), "left_semi")
       .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
     train.groupBy("doc_id").agg(count(lit(1)).as("n_pass"))
       .join(broadcast(hits), Seq("doc_id"), "left")
@@ -1148,18 +1120,7 @@ object DedupOps {
   }
 
   val passageDecontamSql: String =
-    """WITH t AS (
-      |  SELECT doc_id, list_filter(
-      |    regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS toks
-      |  FROM documents),
-      |px AS (
-      |  SELECT doc_id, unnest(list_transform(
-      |    range(0, (len(toks)-1)//10 + 1),
-      |    i -> array_to_string(toks[i*10+1 : i*10+10], ' '))) AS passage
-      |  FROM t WHERE len(toks) > 0),
-      |p AS (
-      |  SELECT doc_id, ('0x' || substr(md5(passage), 1, 15))::BIGINT AS ph
-      |  FROM px),
+    s"""$passageSql,
       |bench AS (SELECT DISTINCT ph FROM p WHERE doc_id % 97 = 0),
       |train AS (SELECT * FROM p WHERE doc_id % 97 <> 0),
       |hits AS (
@@ -1199,22 +1160,8 @@ object DedupOps {
     * to the model's fixed-point integer arithmetic. */
   def semanticDedup(s: SparkSession, d: String): DataFrame = {
     val a = SimilarityOps.kmAssignedFull(s, d)
-      .withColumn("nrm",
-        sqrt(graft.functions.VecExprs.dot_d(col("v"), col("v"))))
-    val sizes = a.groupBy("cid").agg(count(lit(1)).as("bn"))
-    val ab = a.join(broadcast(sizes), "cid")
-      .withColumn("nsub",
-        greatest(ceil(col("bn") / maxBlock).cast("long"), lit(1L)))
-      .withColumn("sub", pmod(xxhash64(col("vec_id")), col("nsub")))
-      .select("cid", "sub", "vec_id", "v", "nrm")
-    val x = ab.toDF("cid", "sub", "vec_a", "va", "na")
-    val y = ab.toDF("cid", "sub", "vec_b", "vb", "nb")
-    val dropped = x.join(y, Seq("cid", "sub"))
-      .filter(col("vec_a") < col("vec_b"))
-      .withColumn("cosine",
-        round(graft.functions.VecExprs.dot_d(col("va"), col("vb"))
-          / (col("na") * col("nb")), 6))
-      .filter(col("cosine") >= semTau)
+      .withColumn("nrm", norm(col("v")))
+    val dropped = blockedCosine(a, "cid", maxBlock, semTau)
       .select(col("vec_b").as("vec_id")).distinct()
     a.select("vec_id", "cid")
       .join(broadcast(dropped.withColumn("dropped", lit(true))),
@@ -1256,7 +1203,6 @@ object DedupOps {
     * s60-family discipline). No pairwise stage anywhere: cost is
     * O(members·dim), not O(cluster²). */
   def semanticRepresentatives(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.VecExprs.dot_d
     val members = graft.graph.GraphOps.semanticComponentsCached(s, d)
       .join(SimilarityOps.kmAssignedFull(s, d).select("vec_id", "v"),
         "vec_id")
@@ -1281,9 +1227,8 @@ object DedupOps {
         p => p.getField("cx")).as("cv"))
     members.join(cent, "component")
       .withColumn("cosine", round(
-        dot_d(col("v"), col("cv")) /
-          (sqrt(dot_d(col("v"), col("v"))) *
-            sqrt(dot_d(col("cv"), col("cv")))), 6))
+        dot(col("v"), col("cv")) /
+          (norm(col("v")) * norm(col("cv"))), 6))
       .groupBy("component")
       .agg(count(lit(1)).as("n_members"),
         min(struct((-col("cosine")).as("nc"), col("vec_id").as("id")))
@@ -1352,17 +1297,16 @@ object DedupOps {
     * quantizer hash-checks), then the same cell-blocked batch×base
     * cosine test. */
   def incrementalSemanticDedup(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.VecExprs.dot_d
     val base = SimilarityOps.incrSegments(s, d).head.dir
     val b = SimilarityOps.incrBase(s, d)
     val cent = parquet(s, s"$base/centroids")
     val qb = SimilarityOps.kmAssign(
         SimilarityOps.quantized(s, d).filter(col("vec_id") >= b), cent)
       .select(col("vec_id"), col("cid"), col("v"))
-      .withColumn("nrm", sqrt(dot_d(col("v"), col("v"))))
+      .withColumn("nrm", norm(col("v")))
     val dropped = qb.join(gateBaseMembers(s, d), "cid")
       .withColumn("cosine",
-        round(dot_d(col("v"), col("bv")) / (col("nrm") * col("bn")), 6))
+        round(dot(col("v"), col("bv")) / (col("nrm") * col("bn")), 6))
       .filter(col("cosine") >= semTau)
       .select("vec_id").distinct()
     qb.select("vec_id", "cid")
@@ -1396,11 +1340,10 @@ object DedupOps {
     * shared by d64's batch gate and e119's streaming gate (where it is
     * the static side of the stream-static join). */
   private[graft] def gateBaseMembers(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.VecExprs.dot_d
     parquet(s, s"${SimilarityOps.incrSegments(s, d).head.dir}/members")
       .join(SimilarityOps.quantized(s, d).select("vec_id", "v"), "vec_id")
       .select(col("vec_id").as("b_id"), col("cid"), col("v").as("bv"))
-      .withColumn("bn", sqrt(dot_d(col("bv"), col("bv"))))
+      .withColumn("bn", norm(col("bv")))
   }
 
   /** The STATELESS e119 scoring stage: each batch vector (already
@@ -1413,10 +1356,9 @@ object DedupOps {
     * Row-local against cell-bounded static partners: append-legal,
     * no stateful operator. */
   private[graft] def gateScores(batch: DataFrame, base: DataFrame): DataFrame = {
-    import graft.functions.VecExprs.dot_d
     batch.join(base,
         base("cid") === batch("cid") &&
-          round(dot_d(batch("v"), base("bv")) / (batch("nrm") * base("bn")),
+          round(dot(batch("v"), base("bv")) / (batch("nrm") * base("bn")),
             6) >= semTau,
         "left_outer")
       .select(batch("vec_id"), batch("cid"), base("b_id"))
@@ -1463,12 +1405,13 @@ object DedupOps {
       e.filter(col("vec_id") % 37 === 2).toDF("b_id", "bv", "bn")))
   }
 
-  /** (vec_id, v, nrm) with the norm precomputed per vector. */
-  private[graft] def normedVectors(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-      .withColumn("nrm",
-        sqrt(graft.functions.VecExprs.dot_d(col("v"), col("v"))))
+  /** (vec_id, `keep`…, v, nrm) of an embeddings frame, the norm
+    * precomputed per vector. */
+  private[graft] def normedVectors(emb: DataFrame, keep: String*)
+      : DataFrame =
+    emb.select(col("vec_id") +: keep.map(col) :+
+        transform(col("embedding"), x => x.cast("double")).as("v"): _*)
+      .withColumn("nrm", norm(col("v")))
 
   /** The stateless d63 scoring stage: (vec_id, b_id, cos_u) for every
     * (corpus vector, benchmark member) pair — row-local against the
@@ -1479,7 +1422,7 @@ object DedupOps {
     corpus.crossJoin(broadcast(bench))
       .select(col("vec_id"), col("b_id"),
         // integer micro-cosine (the d62 fixed-point discipline)
-        round(graft.functions.VecExprs.dot_d(col("v"), col("bv"))
+        round(dot(col("v"), col("bv"))
             / (col("nrm") * col("bn")) * 1000000)
           .cast("bigint").as("cos_u"))
 
@@ -1495,18 +1438,15 @@ object DedupOps {
           .otherwise("clean").as("verdict"))
       .orderBy("vec_id")
 
-  private val contamCosSql =
-    """list_sum(list_transform(range(1, len(c.v) + 1), i -> c.v[i] * b.bv[i]))
-      | / (sqrt(list_sum(list_transform(c.v, x -> x * x)))
-      |    * sqrt(list_sum(list_transform(b.bv, x -> x * x))))""".stripMargin
-
-  val semanticDecontamSql: String =
+  val semanticDecontamSql: String = {
+    val cos = SimilarityOps.cosineSqlSnippet
+      .replace("QV", "c.v").replace("CV", "b.bv")
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
       |b AS (SELECT vec_id AS b_id, v AS bv FROM e WHERE vec_id % 37 = 2),
       |c AS (SELECT vec_id, v FROM e WHERE vec_id % 37 <> 2),
       |sc AS (
       |  SELECT c.vec_id, b.b_id,
-      |    CAST(round(($contamCosSql) * 1000000) AS BIGINT) AS cos_u
+      |    CAST(round(($cos) * 1000000) AS BIGINT) AS cos_u
       |  FROM c, b),
       |rk AS (
       |  SELECT vec_id, b_id, cos_u, row_number() OVER (
@@ -1516,11 +1456,23 @@ object DedupOps {
       |  CASE WHEN cos_u >= 360000 THEN 'contaminated' ELSE 'clean' END
       |    AS verdict
       |FROM rk WHERE rn = 1 ORDER BY vec_id""".stripMargin
+  }
 
   // ----------------------- d65 arbitrary-offset exact substring dedup
 
   private[ext] val runWindow = 5   // tokens per window
   private[ext] val runDocCap = 16  // max distinct docs per window hash
+
+  /** The per-hash doc-count census (hw, nd) of a (doc_id, pos, hw)
+    * window frame. */
+  private def census(wins: DataFrame): DataFrame =
+    wins.groupBy("hw").agg(count_distinct(col("doc_id")).as("nd"))
+
+  /** The hot-window cap: the hashes of a census held by more than
+    * [[runDocCap]] docs — anti-joined away before any window pairing
+    * (d65/d69's runs, the base index, every serve or fold). */
+  private def hotWindows(census: DataFrame): DataFrame =
+    census.filter(col("nd") > runDocCap).select("hw")
 
   /** d65: cross-document repeated substrings at ARBITRARY alignment —
     * the standard exact-substring pass an LLM corpus runs before
@@ -1590,10 +1542,7 @@ object DedupOps {
     val wins =
       if (w == runWindow) corpusWindows(s, d)
       else windowFrameW(documents(s, d), w)
-    val hot = wins.groupBy("hw")
-      .agg(count_distinct(col("doc_id")).as("nd"))
-      .filter(col("nd") > runDocCap).select("hw")
-    val ok = wins.join(hot, Seq("hw"), "left_anti")
+    val ok = wins.join(hotWindows(census(wins)), Seq("hw"), "left_anti")
     val a = ok.select(col("hw"), col("doc_id").as("doc_a"), col("pos").as("pa"))
     val b = ok.select(col("hw"), col("doc_id").as("doc_b"), col("pos").as("pb"))
     val pairs = a.join(b, Seq("hw")).filter(col("doc_a") < col("doc_b"))
@@ -1636,19 +1585,30 @@ object DedupOps {
       |      (a, b) -> (a * 31) % 18446744073709551616::HUGEINT)) AS pwts
       |  FROM tk)""".stripMargin
 
-  /** The wins→hot→ok→pairs→isl CTE chain at window length `w`, names
-    * suffixed `sfx` so d69 can stack three chains in one query (d65 /
-    * d68 use the unsuffixed w = 5 chain). */
-  private def substringWindowCtesSql(w: Int, sfx: String): String =
+  /** The oracle's every-offset window hashes `wins<sfx>` (doc_id,
+    * pos, hw) at length `w`, composed from the `tok` folds. */
+  private def winsSql(w: Int, sfx: String): String =
     s"""wins$sfx AS (
       |  SELECT doc_id, i AS pos,
       |    list_reduce(list_prepend(hts[i], range(i + 1, i + $w)),
       |      (a, k) -> (a * pwts[CAST(k AS BIGINT)] + hsts[CAST(k AS BIGINT)])
       |                % 18446744073709551616::HUGEINT) AS hw
-      |  FROM tok, unnest(range(1, n - ${w - 2})) AS t(i)),
-      |hot$sfx AS (
+      |  FROM tok, unnest(range(1, n - ${w - 2})) AS t(i))""".stripMargin
+
+  /** The oracle's hot-window cap ([[hotWindows]]): CTE `hot<sfx>` of
+    * the hashes held by more than [[runDocCap]] docs of window CTE
+    * `from`. */
+  private def hotSql(sfx: String, from: String): String =
+    s"""hot$sfx AS (
       |  SELECT hw FROM (SELECT hw, count(DISTINCT doc_id) AS nd
-      |                  FROM wins$sfx GROUP BY 1) WHERE nd > 16),
+      |                  FROM $from GROUP BY 1) WHERE nd > $runDocCap)""".stripMargin
+
+  /** The wins→hot→ok→pairs→isl CTE chain at window length `w`, names
+    * suffixed `sfx` so d69 can stack three chains in one query (d65 /
+    * d68 use the unsuffixed w = 5 chain). */
+  private def substringWindowCtesSql(w: Int, sfx: String): String =
+    s"""${winsSql(w, sfx)},
+      |${hotSql(sfx, s"wins$sfx")},
       |ok$sfx AS (SELECT * FROM wins$sfx
       |           WHERE hw NOT IN (SELECT hw FROM hot$sfx)),
       |pairs$sfx AS (
@@ -1697,8 +1657,7 @@ object DedupOps {
     * candidate count column is the cost axis because candidates are
     * exactly what the downstream verify stage pays for. */
   def lshBandingEval(s: SparkSession, d: String): DataFrame = {
-    val (sigs, _, _) = lshPipeline(s, d,
-      shardDict = estShingles(s, d) > dictBroadcastCeiling)
+    val (sigs, _) = lshPipeline(s, d)
     // every stage after the cached signature frame is fixture-tiny
     // (15 bucket rows per doc); AQE partition coalescing narrows those
     // shuffles, so the plan runs as built, under the session's conf
@@ -1749,9 +1708,6 @@ object DedupOps {
   }
 
   lazy val lshBandingEvalSql: String = {
-    val hashExprs = (1 to numHashes).map { j =>
-      s"min(('0x' || substr(md5('$j:' || shingle), 1, 15))::BIGINT) AS h$j"
-    }.mkString(", ")
     val bucketSelects = bandingSettings.flatMap { case (b, r) =>
       (1 to b).map { bnd =>
         val comps = ((bnd - 1) * r + 1 to bnd * r)
@@ -1762,8 +1718,7 @@ object DedupOps {
     }.mkString(" UNION ALL ")
     val settingRows = bandingSettings
       .map { case (b, r) => s"('b${b}r$r', $b, $r)" }.mkString(", ")
-    s"""WITH sh AS ($shingleRowsSql),
-      |sigs AS (SELECT doc_id, $hashExprs FROM sh GROUP BY doc_id),
+    s"""$sigsSql,
       |bkts AS ($bucketSelects),
       |cand AS (SELECT DISTINCT a.skey, a.doc_id i, b.doc_id j
       |  FROM bkts a JOIN bkts b ON a.skey = b.skey AND a.band = b.band
@@ -1795,10 +1750,7 @@ object DedupOps {
     * discipline; here rebuilt per call, the em70 honesty rule). */
   private[graft] def baseWindowIndex(s: SparkSession, d: String): DataFrame = {
     val baseW = corpusWindows(s, d).filter(col("doc_id") % 5 =!= 4)
-    val hot = baseW.groupBy("hw")
-      .agg(count_distinct(col("doc_id")).as("nd"))
-      .filter(col("nd") > runDocCap).select("hw")
-    baseW.join(hot, Seq("hw"), "left_anti")
+    baseW.join(hotWindows(census(baseW)), Seq("hw"), "left_anti")
       .select(col("hw"), col("doc_id").as("base_id"), col("pos").as("pa"))
   }
 
@@ -1855,35 +1807,10 @@ object DedupOps {
     * folds composed by H(A⧺B) = H(A)·31^|B| + H(B)), split
     * asymmetrically into base index / batch probe. */
   val incrSubstringDedupSql: String =
-    """WITH tk AS (
-      |  SELECT doc_id,
-      |    list_filter(regexp_split_to_array(lower(text), '\s+'),
-      |                x -> x <> '') AS ts
-      |  FROM documents),
-      |tok AS (
-      |  SELECT doc_id, len(ts) AS n,
-      |    list_transform(ts, t -> list_reduce(list_prepend(0::HUGEINT,
-      |        list_transform(range(1, length(t) + 1),
-      |          i -> ord(substring(t, CAST(i AS INT), 1))::HUGEINT)),
-      |      (a, b) -> (a * 31 + b) % 18446744073709551616::HUGEINT)) AS hts,
-      |    list_transform(ts, t -> list_reduce(list_prepend(32::HUGEINT,
-      |        list_transform(range(1, length(t) + 1),
-      |          i -> ord(substring(t, CAST(i AS INT), 1))::HUGEINT)),
-      |      (a, b) -> (a * 31 + b) % 18446744073709551616::HUGEINT)) AS hsts,
-      |    list_transform(ts, t -> list_reduce(
-      |        list_prepend(1::HUGEINT, range(1, length(t) + 2)),
-      |      (a, b) -> (a * 31) % 18446744073709551616::HUGEINT)) AS pwts
-      |  FROM tk),
-      |wins AS (
-      |  SELECT doc_id, i AS pos,
-      |    list_reduce(list_prepend(hts[i], range(i + 1, i + 5)),
-      |      (a, k) -> (a * pwts[CAST(k AS BIGINT)] + hsts[CAST(k AS BIGINT)])
-      |                % 18446744073709551616::HUGEINT) AS hw
-      |  FROM tok, unnest(range(1, n - 3)) AS t(i)),
+    s"""WITH $substringTokCtesSql,
+      |${winsSql(runWindow, "")},
       |basew AS (SELECT * FROM wins WHERE doc_id % 5 <> 4),
-      |hot AS (
-      |  SELECT hw FROM (SELECT hw, count(DISTINCT doc_id) AS nd
-      |                  FROM basew GROUP BY 1) WHERE nd > 16),
+      |${hotSql("", "basew")},
       |idx AS (SELECT hw, doc_id AS base_id, pos AS pa FROM basew
       |        WHERE hw NOT IN (SELECT hw FROM hot)),
       |batchw AS (SELECT hw, doc_id, pos AS pb FROM wins
@@ -1956,7 +1883,7 @@ object DedupOps {
     * (t85), the pplScoredCached split. */
   private[graft] def substringCleanFrame(s: SparkSession, d: String)
       : DataFrame =
-    substringCleanCached(s, d)
+    parquet(s, s"${substringCleanDir(s, d)}/clean")
 
   /** The from-scratch derive behind [[substringCleanDir]]: d65's run
     * detection + span merge + the per-doc re-cut. */
@@ -2182,9 +2109,7 @@ object DedupOps {
       batchW.select(col("hw"), col("doc_id").as("base_id"),
         col("pos").as("pa"))
         .write.mode("overwrite").parquet(s"$dir/windex")
-      batchW.groupBy("hw")
-        .agg(count_distinct(col("doc_id")).as("nd"))
-        .write.mode("overwrite").parquet(s"$dir/census")
+      census(batchW).write.mode("overwrite").parquet(s"$dir/census")
     }
   }
 
@@ -2202,8 +2127,7 @@ object DedupOps {
   private def capped(s: SparkSession, segs: Seq[String],
       census: DataFrame): DataFrame =
     segs.map(windexOf(s, _)).reduce(_ unionByName _)
-      .join(census.filter(col("nd") > runDocCap).select("hw"),
-        Seq("hw"), "left_anti")
+      .join(hotWindows(census), Seq("hw"), "left_anti")
 
   /** The GROWN serving index: the segment union anti-joined by the hot
     * set re-derived from the summed segment censuses. Monotonicity
@@ -2401,7 +2325,7 @@ object DedupOps {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "d50_exact_dedup"    -> exactDedup _,
     "d51_jaccard_pairs"  -> jaccardPairs _,
-    "d52_minhash_lsh"    -> minhashLsh _,
+    "d52_minhash_lsh"    -> ((s: SparkSession, d: String) => minhashLsh(s, d)),
     "d53_simhash"        -> simhash _,
     "d53b_simhash_pairs" -> simhashPairs _,
     "d54_embedding_dups" -> embeddingDupPairs _,

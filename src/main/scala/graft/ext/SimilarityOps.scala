@@ -30,10 +30,10 @@ object SimilarityOps {
 
   // codegen'd native kernels (VecExprs) — bit-identical to the HOF
   // left folds they replaced (same index-ascending summation order)
-  private def dot(a: Column, b: Column): Column =
+  private[graft] def dot(a: Column, b: Column): Column =
     graft.functions.VecExprs.dot_d(a, b)
 
-  private def norm(a: Column): Column =
+  private[graft] def norm(a: Column): Column =
     sqrt(graft.functions.VecExprs.dot_d(a, a))
 
   private def asDouble(c: Column): Column = transform(c, _.cast("double"))

@@ -734,7 +734,7 @@ object TextOps {
     * broadcast below the ceiling, shuffle_hash sharding above it
     * (both sides keyed on the dictionary key, no driver ceiling). */
   private def dictJoin(s: SparkSession, d: String): DataFrame => DataFrame = {
-    val bcast = DedupOps.estShingles(s, d) <= DedupOps.dictBroadcastCeiling
+    val bcast = !DedupOps.shardDict(s, d)
     df => if (bcast) broadcast(df) else df.hint("shuffle_hash")
   }
 
@@ -1274,10 +1274,9 @@ object TextOps {
     * routing stage under t70's census, factored out so the release
     * pipeline (t85) can consume the verdict column directly. */
   private[graft] def docSplitsOf(docs: DataFrame): DataFrame = {
-    val p = graft.ext.DedupOps.passageHashes(docs)
-    val bench = p.filter(col("doc_id") % 97 === 0).select("ph").distinct()
-    val contam = p.filter(col("doc_id") % 97 =!= 0)
-      .join(broadcast(bench), Seq("ph"), "left_semi")
+    val p = DedupOps.passageHashes(docs)
+    val contam = p.filter(!DedupOps.inBench)
+      .join(broadcast(DedupOps.benchKeys(p, "ph")), Seq("ph"), "left_semi")
       .select("doc_id").distinct()
       .withColumn("bad", lit(true))
     docs
@@ -1285,7 +1284,7 @@ object TextOps {
         md5Long(concat(lit("split:"), col("doc_id").cast("string"))) % 100)
       .join(broadcast(contam), Seq("doc_id"), "left")
       .withColumn("split",
-        when(col("doc_id") % 97 === 0, "benchmark")
+        when(DedupOps.inBench, "benchmark")
           .when(col("bad"), "quarantined")
           .when(col("bucket") < 80, "train")
           .when(col("bucket") < 90, "validation")
@@ -1293,19 +1292,8 @@ object TextOps {
       .select("doc_id", "n_chars", "split")
   }
 
-  val contamSafeSplitSql: String =
-    """WITH t AS (
-      |  SELECT doc_id, list_filter(
-      |    regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS toks
-      |  FROM documents),
-      |px AS (
-      |  SELECT doc_id, unnest(list_transform(
-      |    range(0, (len(toks)-1)//10 + 1),
-      |    i -> array_to_string(toks[i*10+1 : i*10+10], ' '))) AS passage
-      |  FROM t WHERE len(toks) > 0),
-      |p AS (
-      |  SELECT doc_id, ('0x' || substr(md5(passage), 1, 15))::BIGINT AS ph
-      |  FROM px),
+  lazy val contamSafeSplitSql: String =
+    s"""${DedupOps.passageSql},
       |bench AS (SELECT DISTINCT ph FROM p WHERE doc_id % 97 = 0),
       |contam AS (
       |  SELECT DISTINCT p.doc_id FROM p JOIN bench b ON p.ph = b.ph

@@ -397,7 +397,13 @@ object GraphOps {
   private def incrPrBase(s: SparkSession, d: String): DataFrame =
     frames.cached(s, d, "incr_pr_base") {
       val (verts, ed) = prOperands(baseEdges(s, d))
-      prSteps(uniformRanks(verts), ed, prIters, uniformTeleport)
+      // the degree-joined edges materialized once per build (g94's
+      // prEdgeDeg is its registry-cached twin): as lineage, every step
+      // re-plans the edge build under AQE, and how many of its shuffle
+      // stages run before the broadcast conversion depends on
+      // stage-completion order, so the build's job count varied
+      prSteps(uniformRanks(verts), ed.localCheckpoint(true), prIters,
+        uniformTeleport)
     }
 
   private[graft] def clearIncrPrBase(): Unit = frames.drop("incr_pr_base")

@@ -957,7 +957,8 @@ object StreamingOps {
     val f = feed(spark, d, "documents")
     val corpSh = graft.ext.DedupOps.dfCappedShingles(spark, d)
       .filter(col("doc_id") % 7 =!= 3).toDF("c_id", "sh")
-    val hot = graft.ext.DedupOps.frozenHotShingles(spark, d)
+    val hot = graft.ext.DedupOps.hotSet(
+      graft.ext.DedupOps.hashedShingles(spark, d))
     val matchLog = drain(spark, d, "e109", f, "append") {
       graft.ext.DedupOps.hashedShinglesOf(
         f.open()
@@ -1301,11 +1302,7 @@ object StreamingOps {
     val (c2, c1, v) = pplRefLmPinned(spark, d)
     val tauRows = graft.ext.TextOps.pplTauFrame(
       graft.ext.TextOps.pplScoredCached(spark, d)).collect()
-    val bench = graft.ext.DedupOps.passageHashes(
-        graft.Tables.documents(spark, d))
-      .filter(col("doc_id") % 97 === 0)
-      .select(col("ph")).distinct()
-      .withColumn("is_hit", lit(1L))
+    val bench = benchPassageHits(spark, d)
     // model and normalization max pinned from the persisted selection
     // artifact (same lr rows / same weight rows as the per-call derive)
     val model = graft.ext.TextOps.dsirModelCached(spark, d)
@@ -1352,7 +1349,7 @@ object StreamingOps {
     val routed = log.filter(col("kind") === "rt")
       .groupBy("doc_id").agg(max("b").as("bad"), max("a").as("bucket"))
       .withColumn("split",
-        when(col("doc_id") % 97 === 0, "benchmark")
+        when(graft.ext.DedupOps.inBench, "benchmark")
           .when(col("bad") === 1L, "quarantined")
           .when(col("bucket") < 80, "train")
           .when(col("bucket") < 90, "validation")
@@ -1445,6 +1442,15 @@ object StreamingOps {
       .orderBy("source")
   }
 
+  /** The frozen benchmark passage-hash set (t68/t70's, built
+    * batch-side) tagged `is_hit` = 1 — the broadcast sidecar that
+    * e111, e115 and e135 LEFT-join their streamed passages against. */
+  private def benchPassageHits(spark: SparkSession, d: String): DataFrame =
+    graft.ext.DedupOps.benchKeys(
+        graft.ext.DedupOps.passageHashes(graft.Tables.documents(spark, d)),
+        "ph")
+      .withColumn("is_hit", lit(1L))
+
   /** e111: t68's STREAMING twin — passage-level benchmark
     * decontamination of a live document feed: the benchmark's
     * 10-token passage-hash set is built batch-side (tiny by
@@ -1460,15 +1466,11 @@ object StreamingOps {
     * frozen-sidecar-plus-stateless-stage shape as e108/e109/e110. */
   def streamPassageDecontam(spark: SparkSession, d: String): DataFrame = {
     val f = feed(spark, d, "documents")
-    val bench = graft.ext.DedupOps.passageHashes(
-        graft.Tables.documents(spark, d))
-      .filter(col("doc_id") % 97 === 0)
-      .select(col("ph")).distinct()
-      .withColumn("is_hit", lit(1L))
+    val bench = benchPassageHits(spark, d)
     val log = drain(spark, d, "e111", f, "append") {
       graft.ext.DedupOps.passageHashes(
         f.open()
-          .filter(col("doc_id") % 97 =!= 0))
+          .filter(!graft.ext.DedupOps.inBench))
         .join(broadcast(bench), Seq("ph"), "left")
         .select(col("doc_id"), coalesce(col("is_hit"), lit(0L)).as("hit"))
     }
@@ -1499,11 +1501,7 @@ object StreamingOps {
     * train/test. */
   def streamContamSplit(spark: SparkSession, d: String): DataFrame = {
     val f = feed(spark, d, "documents")
-    val bench = graft.ext.DedupOps.passageHashes(
-        graft.Tables.documents(spark, d))
-      .filter(col("doc_id") % 97 === 0)
-      .select(col("ph")).distinct()
-      .withColumn("is_hit", lit(1L))
+    val bench = benchPassageHits(spark, d)
     val log = drain(spark, d, "e115", f, "append") {
       contamRouteLog(f.open(), bench)
     }
@@ -1539,7 +1537,7 @@ object StreamingOps {
     log.groupBy("doc_id", "n_chars", "bucket")
       .agg(max("hit").as("bad"))
       .withColumn("split",
-        when(col("doc_id") % 97 === 0, "benchmark")
+        when(graft.ext.DedupOps.inBench, "benchmark")
           .when(col("bad") === 1L, "quarantined")
           .when(col("bucket") < 80, "train")
           .when(col("bucket") < 90, "validation")
@@ -1634,8 +1632,7 @@ object StreamingOps {
           graft.ext.SimilarityOps.quantizeFrame(f.open())
             .filter(col("vec_id") >= cut),
           centSeq)
-          .withColumn("nrm",
-            sqrt(graft.functions.VecExprs.dot_d(col("v"), col("v")))),
+          .withColumn("nrm", graft.ext.SimilarityOps.norm(col("v"))),
         base)
     }
     graft.ext.DedupOps.gateVerdict(log)

@@ -7,8 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The dev runner on the shared session: `time` over a query entry and
-  * a warm of the one warm table, `plan`, the up-front name check, and
-  * the table [[ScaleBench]] picks its warms from. */
+  * a warm of the one warm table, `plan`, the up-front name check (also
+  * Verify's), and the table [[ScaleBench]] picks its warms from. */
 class DevSpec extends AnyFunSuite with SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -54,6 +54,17 @@ class DevSpec extends AnyFunSuite with SparkSpec {
     }
     assert(!buf.toString("UTF-8").contains("[dev]"))
     intercept[IllegalArgumentException](Dev.run(spark, Array("time", sf)))
+  }
+
+  test("Verify names its unknown entries and fails before writing a dump") {
+    val out = Files.createTempDirectory("graft-verify").resolve("dump")
+    val e = intercept[IllegalArgumentException](Verify.main(Array(sf,
+      out.toString, "q01_pricing_summary,no_such_entry,d99_nothing")))
+    assert(e.getMessage.contains("no_such_entry"), e.getMessage)
+    assert(e.getMessage.contains("d99_nothing"), e.getMessage)
+    assert(!e.getMessage.contains("q01_pricing_summary"), e.getMessage)
+    assert(!Files.exists(out))
+    assert(!spark.sparkContext.isStopped)
   }
 
   test("plan writes <name>_<suffix>.txt") {

@@ -44,11 +44,18 @@ class Round2Spec extends AnyFunSuite with SparkSpec {
     // cap 10 → ceil(40/10)=4 sub-blocks → only within-sub-block pairs
     val split = DedupOps.embeddingPairsFrom(vecs, cap = 10).count()
     assert(split < uncapped && split > 0)
+    // d61's call of the same blocked self-join: blocked by k-means `cid`
+    val cells = DedupOps.normedVectors(
+      vecs.withColumnRenamed("label", "cid"), "cid")
+    def cellPairs(cap: Long) =
+      DedupOps.blockedCosine(cells, "cid", cap, DedupOps.semTau).count()
+    assert(cellPairs(1024) == uncapped)
+    assert(cellPairs(10) == split)
   }
 
   test("sharded-dictionary minhash LSH matches the broadcast path") {
     val a = DedupOps.minhashLsh(spark, sf).collect().toSeq
-    val b = DedupOps.minhashLshSharded(spark, sf).collect().toSeq
+    val b = DedupOps.minhashLsh(spark, sf, ceiling = 0L).collect().toSeq
     assert(a == b && a.nonEmpty)
   }
 
@@ -59,18 +66,22 @@ class Round2Spec extends AnyFunSuite with SparkSpec {
     // canonical form) to the InMemoryRelation, so drop the cached
     // frames first to see the real join shapes
     DedupOps.clearCaches()
-    val (_, _, small) = DedupOps.lshPipelineRaw(spark, sf, shardDict = false)
+    val small = DedupOps.lshVerifyRaw(
+      DedupOps.lshSigsRaw(spark, sf, shard = false),
+      DedupOps.hashedShingles(spark, sf))
     small.collect()
     val smallPlan = small.queryExecution.executedPlan.toString
     assert(smallPlan.contains("BroadcastHashJoin"))
     assert(!smallPlan.contains("ShuffledHashJoin"))
-    val (_, _, big) = DedupOps.lshPipelineRaw(spark, sf, shardDict = true)
+    val big = DedupOps.lshVerifyRaw(
+      DedupOps.lshSigsRaw(spark, sf, shard = true),
+      DedupOps.hashedShingles(spark, sf))
     big.collect()
     assert(big.queryExecution.executedPlan.toString.contains("ShuffledHashJoin"))
     // the auto decision: fixture corpus is far below the ceiling →
     // broadcast; ceiling 0 → sharded; results identical either way
     assert(DedupOps.estShingles(spark, sf) <= DedupOps.dictBroadcastCeiling)
-    assert(DedupOps.minhashLshAuto(spark, sf, ceiling = 0L).collect().toSeq ==
+    assert(DedupOps.minhashLsh(spark, sf, ceiling = 0L).collect().toSeq ==
       DedupOps.minhashLsh(spark, sf).collect().toSeq)
   }
 

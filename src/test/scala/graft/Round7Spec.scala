@@ -102,6 +102,31 @@ class Round7Spec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("one Jaccard scorer: d52 and d58 scores equal d51's at sf0.01") {
+    import graft.ext.DedupOps
+    val sf01 = "/root/testdata/sf0.01"
+    val d51 = DedupOps.jaccardPairs(spark, sf01).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(d51.nonEmpty)
+    // every verified LSH pair is a d51 pair, scored identically
+    val d52 = DedupOps.minhashLsh(spark, sf01).collect()
+    assert(d52.nonEmpty)
+    d52.foreach { r =>
+      val k = (r.getLong(0), r.getLong(1))
+      assert(d51.get(k).contains(r.getDouble(2)), s"d52 $k ${r.getDouble(2)}")
+    }
+    // every d58 verdict's best match is a d51 pair with d51's jaccard
+    val dups = DedupOps.incrementalDedup(spark, sf01)
+      .filter("is_dup = 1").collect()
+    assert(dups.nonEmpty)
+    dups.foreach { r =>
+      val (n, c) = (r.getLong(0), r.getLong(1))
+      val k = (math.min(n, c), math.max(n, c))
+      assert(d51.get(k).contains(r.getDouble(2)), s"d58 $k ${r.getDouble(2)}")
+    }
+    DedupOps.clearCaches()
+  }
+
   test("s71 reranks only banded candidates with exact cosines") {
     val res = graft.ext.SimilarityOps.lshRerankKnn(spark, d)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
